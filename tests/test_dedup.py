@@ -433,3 +433,39 @@ def test_oph_minhash_recall_and_estimate(spark, corpus):
     assert len(found) >= len(near) * 0.7
     for p in found:
         assert pairs[p] >= 0.5, (p, pairs[p])
+
+
+#: Row digests of the rows-only LSH keys at ``SF_SMOKE``: (row count,
+#: sha256 of the sorted row reprs). Recorded before the LSH kernel was
+#: factored out of the per-family copies; the kernel must reproduce every
+#: row. Identical at 8 and 3 shuffle partitions.
+_LSH_ROW_DIGESTS = {
+    "dedup_incremental_neardup": (
+        8, "83fa423a2b7a403ffc318acadbafa5c732b473a192e65fac4f70925b342a07cc"),
+    "dedup_minhash_neardup_pairs": (
+        28, "11e8ddf732db8fa88ba17ef986bfdfb2bb1d7fa01cb64c16dbab915e5b972dd4"),
+    "dedup_simhash_neardup_pairs": (
+        1148, "30fda3d336b164bcc0f360e858cef6d52417a3e90b1f2dd1236d875ffa7d2e98"),
+    "dedup_minhash_weighted_pairs": (
+        28, "617ae6fc5656cc224bac343da6201e621da59f55a9738e254a180837969b157a"),
+    "dedup_minhash_oph_pairs": (
+        28, "c696ca7ef43e3fd1ddcbf0a3c759d373669bbc25194cad72564eceb5a8401369"),
+    "dedup_lsh_exact_jaccard_pairs": (
+        28, "5cae81a80cdbc235d94008b3a54868bcc2896b5c0c03a6a0238ee9813eb43ef4"),
+    "dedup_lsh_components": (
+        45, "4c6555257cc2ac70f91ed00647d1372824429ba6ec5f9db0d583d442ce8e6270"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LSH_ROW_DIGESTS))
+def test_rows_only_lsh_key_digest(spark, name):
+    """The xxhash64 LSH keys have no SQL oracle, so their exact rows are
+    pinned instead: an order-independent digest (sorted row reprs) of
+    the registry output on the smoke fixture."""
+    import hashlib
+
+    from redis_dataflow_realtime_analytics_spark import registry
+
+    rows = registry.QUERIES[name](spark, SF_SMOKE).collect()
+    digest = hashlib.sha256("\n".join(sorted(repr(r) for r in rows)).encode())
+    assert (len(rows), digest.hexdigest()) == _LSH_ROW_DIGESTS[name]
