@@ -27,6 +27,20 @@ family (:func:`portable_minhash_signatures` + the ``*_portable`` pair
 ops) swaps xxhash64 for md5-derived affine permutations both engines can
 compute, making the banded pipeline fully SQL-oracled — it exists to
 externally verify the banding logic; xxhash64 stays the scale path.
+
+Every LSH key runs one private kernel, which has two axes: the
+signature family (set / weighted / one-permutation MinHash, xxhash64
+or portable) and the band bucket key (``_xxhash_key`` or
+``_concat_key``). A key is a signature builder, then the kernel, then
+a final projection. The kernel's stages are ``_band`` (signature →
+(doc_id, band, bucket)), ``_band_pairs`` / ``_band_probe`` (bucket
+self-join / incoming-vs-existing probe), ``_agree`` (slot agreement
+``n_agree``, of which ``est_jaccard`` / ``est_wjaccard`` are
+projections), ``_best_match`` (one row per probed doc) and
+``_verify_jaccard`` (exact Jaccard of candidates). SimHash blocks on
+bit chunks instead of bands: ``_chunk_pairs``. The streaming probe
+(``streaming.pipeline.stream_neardup_probe``) runs the same kernel per
+micro-batch.
 """
 
 from __future__ import annotations
@@ -133,9 +147,14 @@ def _shingle_array(k: int = NGRAM_K) -> F.Column:
     two-projection variant (materialize ``toks``, then slide) benches
     ~6× SLOWER for the explode-only path (0.5 s → 3.4 s): the split is
     cheap relative to materializing the token array between projections."""
-    return F.expr(
-        f"array_distinct(transform(sequence(0, greatest(size(split(trim(text), '{TOKEN_EXPR}')) - {k}, 0)), "
-        f"i -> concat_ws(' ', slice(split(trim(text), '{TOKEN_EXPR}'), i + 1, {k}))))"
+    return F.expr(f"array_distinct({_shingle_seq(k)})")
+
+
+def _shingle_seq(k: int = NGRAM_K) -> str:
+    """SQL for the k-token shingle sequence of ``text``, duplicates kept."""
+    return (
+        f"transform(sequence(0, greatest(size(split(trim(text), '{TOKEN_EXPR}')) - {k}, 0)), "
+        f"i -> concat_ws(' ', slice(split(trim(text), '{TOKEN_EXPR}'), i + 1, {k})))"
     )
 
 
@@ -168,6 +187,12 @@ def ngram_jaccard_pairs(
     integer set sizes, so the double division is bit-deterministic and
     oracle-checkable.
 
+    Exact up to hash identity: shingles are compared by their 64-bit
+    ``xxhash64``, not their strings. Two different shingles with the same
+    hash would over-count |A∩B|. Even odds of any such collision need
+    ~2^32 distinct shingles; at sf0.1 (~10⁶ distinct) the odds are about
+    3e-8, and the string-keyed SQL oracle would flag one.
+
     Plan shape: the per-doc set size |A| is ``size()`` of the shingle array
     (computed in the same map-side projection as the explode) and rides
     along each inverted-index row, so the whole query is ONE self-join on
@@ -180,8 +205,8 @@ def ngram_jaccard_pairs(
     Set sizes |A|/|B| stay TRUE sizes, so capped Jaccard only ever
     *under*-counts the intersection: the output is a subset of the exact
     pairs (precision 1, bounded recall loss on pairs whose overlap is
-    mostly stop-shingles). Default ``None`` = exact (the oracle-gated
-    configuration).
+    mostly stop-shingles). Default ``None`` = exact up to hash identity
+    (the oracle-gated configuration).
     """
     docs = _spread(load(spark, sf_dir, "documents"))
     # Keep the explode SINGLE-referenced: when size() and explode() both
@@ -894,50 +919,258 @@ SELECT doc_id,
 FROM marked GROUP BY doc_id"""
 
 
+# --- LSH kernel ---------------------------------------------------------------
+def _xxhash_key(b: int, slots: list[F.Column]) -> F.Column:
+    """Bucket key of the xxhash64 families: a band-seeded hash of the slots."""
+    return F.xxhash64(F.lit(b), *slots)
+
+
+def _concat_key(b: int, slots: list[F.Column]) -> F.Column:
+    """Bucket key of the portable families: the slot values joined by
+    ``-`` — a string both engines build identically (the values ARE the
+    key, no second hash)."""
+    return F.concat_ws("-", *slots)
+
+
+def _band(sig: DataFrame, n_perms: int, rows: int, bucket) -> DataFrame:
+    """(doc_id, band, bucket) rows: the slots ``h0..h{n_perms-1}`` cut into
+    bands of ``rows`` consecutive slots, each band keyed by
+    ``bucket(band, slots)``."""
+    keys = [
+        bucket(b, [F.col(f"h{b * rows + r}") for r in range(rows)])
+        for b in range(n_perms // rows)
+    ]
+    return sig.select(
+        "doc_id", F.posexplode(F.array(*keys)).alias("band", "bucket")
+    )
+
+
+def _band_pairs(banded: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, sharing a band bucket — the
+    only pairs LSH ever scores; no all-pairs formulation exists."""
+    return (
+        banded.alias("a")
+        .join(banded.alias("b"), ["band", "bucket"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _band_probe(inc: DataFrame, ex: DataFrame) -> DataFrame:
+    """Distinct (doc_id, neardup_of): incoming band rows ``inc`` sharing a
+    bucket with existing band rows ``ex``. The join touches only the
+    (band, bucket) groups the incoming side occupies."""
+    ex = ex.select(F.col("doc_id").alias("neardup_of"), "band", "bucket")
+    return inc.join(ex, ["band", "bucket"]).select("doc_id", "neardup_of").distinct()
+
+
+def _agree(
+    cands: DataFrame,
+    sig: DataFrame,
+    n_perms: int,
+    left: str,
+    right: str,
+    right_sig: DataFrame | None = None,
+) -> DataFrame:
+    """``cands`` joined to the signatures of its ``left`` and ``right`` doc
+    columns, plus ``n_agree`` (bigint): the number of agreeing slots.
+    ``right_sig`` holds the right side's signatures when they are not in
+    ``sig`` (a batch probing a persisted index)."""
+    a = sig.select(
+        F.col("doc_id").alias(left), *[F.col(f"h{i}").alias(f"a{i}") for i in range(n_perms)]
+    )
+    b = (sig if right_sig is None else right_sig).select(
+        F.col("doc_id").alias(right), *[F.col(f"h{i}").alias(f"b{i}") for i in range(n_perms)]
+    )
+    n_agree = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(n_perms)
+    )
+    return cands.join(a, left).join(b, right).withColumn("n_agree", n_agree.cast("bigint"))
+
+
+def _est(n_perms: int) -> F.Column:
+    """Estimated (weighted) Jaccard: the agreeing fraction of the slots."""
+    return F.col("n_agree").cast("double") / float(n_perms)
+
+
+def _best_match(scored: DataFrame) -> DataFrame:
+    """One row per doc_id: the highest ``n_agree``, then the smallest
+    ``neardup_of``. Orders by the integer, never by a float."""
+    w = Window.partitionBy("doc_id").orderBy(F.desc("n_agree"), "neardup_of")
+    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
+
+
+def _verify_jaccard(cands: DataFrame, docs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for candidates whose EXACT shingle Jaccard
+    is ≥ ``threshold``: one row-local ``array_intersect`` per candidate;
+    integer set sizes ⇒ one correctly-rounded double division."""
+    arr = _shingle_docs(docs)
+    a = arr.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
+    b = arr.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
+    inter = F.size(F.array_intersect("arr_a", "arr_b"))
+    union = F.size("arr_a") + F.size("arr_b") - inter
+    return (
+        cands.join(a, "doc_a")
+        .join(b, "doc_b")
+        .withColumn("jaccard", inter / union)
+        .where(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+def _neardup_probe(sig: DataFrame, n_perms: int, rows: int, bucket) -> DataFrame:
+    """Incoming docs (``doc_id % 10 = 0``) probing the existing corpus's
+    bands: (doc_id, neardup_of, a*, b*, n_agree) per candidate."""
+    banded = _band(sig, n_perms, rows, bucket)
+    cands = _band_probe(
+        banded.where(F.col("doc_id") % 10 == 0), banded.where(F.col("doc_id") % 10 != 0)
+    )
+    return _agree(cands, sig, n_perms, "doc_id", "neardup_of")
+
+
+# --- Signature builders -------------------------------------------------------
+def _xxhash_mins(rows: DataFrame, col: str) -> DataFrame:
+    """(doc_id, h0..h31): per-doc min of ``xxhash64(seed_i, col)``. The 32
+    min-aggregates stay inside whole-stage codegen (an array-fold
+    formulation benches ~4× slower: higher-order-function lambdas
+    evaluate interpreted), and partial aggregation collapses the rows
+    back to one per doc before the shuffle."""
+    return rows.groupBy("doc_id").agg(
+        *[F.min(F.xxhash64(F.lit(i), F.col(col))).alias(f"h{i}") for i in range(N_HASHES)]
+    )
+
+
+def _md5_key(col: str) -> F.Column:
+    """28-bit portable key: the first 7 hex chars of md5, parsed base-16."""
+    return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
+
+
+def _affine_mins(rows: DataFrame, col: str) -> DataFrame:
+    """(doc_id, h0..h15): per-doc min of the portable affine permutations
+    ``(a_i · x + b_i) mod (2^31 − 1)`` over ``x = _md5_key(col)`` — one md5
+    per row, shared by all 16 permutations."""
+    x = _md5_key(col)
+    return rows.groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(a) * x + F.lit(b)) % F.lit(PORTABLE_P)).alias(f"h{i}")
+            for i, (a, b) in enumerate(_PORT_COEF)
+        ]
+    )
+
+
+def _tf_replicas(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, r) tf-replication rows: a shingle with tf = n contributes
+    ``shingle#1 .. shingle#n``, so a set MinHash over ``r`` estimates the
+    WEIGHTED Jaccard Σmin(tf)/Σmax(tf). One explode + a map-side-combined
+    tf count, then one replica explode; replica volume equals the total
+    (non-distinct) shingle count."""
+    return (
+        docs.select("doc_id", F.explode(F.expr(_shingle_seq(k))).alias("shingle"))
+        .groupBy("doc_id", "shingle")
+        .agg(F.count("*").alias("tf"))
+        .select("doc_id", "shingle", F.explode(F.expr("sequence(1, tf)")).alias("rep"))
+        .select("doc_id", F.concat_ws("#", "shingle", F.col("rep").cast("string")).alias("r"))
+    )
+
+
+def _oph_bins(hashed: DataFrame, bin_col: F.Column, n: int) -> DataFrame:
+    """One-permutation binning of (doc_id, h) rows: ONE per-doc groupBy of
+    ``n`` conditional mins ``b0..b{n-1}`` (null = empty bin)."""
+    return hashed.groupBy("doc_id").agg(
+        *[F.min(F.when(bin_col == i, F.col("h"))).alias(f"b{i}") for i in range(n)]
+    )
+
+
+def _densify(n: int) -> list[F.Column]:
+    """Rotation densification (Shrivastava 2017): slot i takes the nearest
+    non-empty bin clockwise — a static unrolled coalesce, pure codegen."""
+    return [F.coalesce(*[F.col(f"b{(i + j) % n}") for j in range(n)]) for i in range(n)]
+
+
+def _simhash(token_hash: str, bits: int) -> F.Column:
+    """``bits``-bit SimHash of ``text``: per-bit majority vote over the
+    distinct tokens' ``token_hash`` values (ties resolve to 1).
+
+    Computed per row as ONE nested higher-order-function fold: token
+    hashes → vote counters (array accumulator) → bit assembly. No
+    explode, no shuffle, and — unlike a column-per-bit formulation — a
+    small generated-code footprint, so the first run isn't dominated by
+    Janino compilation."""
+    return F.expr(
+        f"aggregate("
+        f"  zip_with("
+        f"    aggregate("
+        f"      transform(array_distinct(split(trim(text), '{TOKEN_EXPR}')), t -> {token_hash}),"
+        f"      array_repeat(0, {bits}),"
+        f"      (acc, h) -> zip_with(acc, sequence(0, {bits - 1}),"
+        f"                           (a, i) -> a + IF(((h >> i) & 1) = 1, 1, -1))),"
+        f"    sequence(0, {bits - 1}),"
+        f"    (v, i) -> IF(v >= 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),"
+        f"  CAST(0 AS BIGINT),"
+        f"  (s, bit) -> s | bit)"
+    ).alias("simhash")
+
+
+def _chunk_pairs(
+    sig: DataFrame, bits: int, chunks: int, max_hamming: int, hamming_type: str
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) for SimHash pairs within ``max_hamming``.
+
+    Blocking: split the ``bits``-bit signature into ``chunks`` equal
+    chunks and join on any equal chunk — by pigeonhole, every pair within
+    Hamming distance ``chunks − 1`` shares at least one chunk, so recall
+    is exact for that bound. Candidates only surface from shared chunk
+    buckets, never all-pairs."""
+    w = bits // chunks
+    parts = sig.select(
+        "doc_id",
+        "simhash",
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftrightunsigned(F.col("simhash"), j * w).bitwiseAND((1 << w) - 1)
+                    for j in range(chunks)
+                ]
+            )
+        ).alias("chunk_idx", "chunk_val"),
+    )
+    pairs = (
+        parts.alias("a")
+        .join(parts.alias("b"), ["chunk_idx", "chunk_val"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.simhash").alias("sim_a"),
+            F.col("b.simhash").alias("sim_b"),
+        )
+        .distinct()
+    )
+    return (
+        pairs.withColumn(
+            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast(hamming_type)
+        )
+        .where(F.col("hamming") <= max_hamming)
+        .select("doc_a", "doc_b", "hamming")
+    )
+
+
 # --- MinHash + LSH -----------------------------------------------------------
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """32-permutation MinHash signature per doc over 3-token shingles.
 
     Each "permutation" is ``xxhash64(seed_i, shingle)``; the signature
     column ``h0..h31`` is the per-seed min, computed by one explode +
-    groupBy. The 32 min-aggregates stay inside whole-stage codegen (an
-    array-fold formulation benches ~4× slower: higher-order-function
-    lambdas evaluate interpreted), and partial aggregation collapses the
-    exploded rows back to one per doc before the shuffle."""
-    sh = _shingles(docs)
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    groupBy (:func:`_xxhash_mins`)."""
+    return _xxhash_mins(_shingles(docs), "shingle")
 
 
 def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs via LSH banding: docs sharing any of the
     8 band buckets (band = hash of 4 consecutive signature slots)."""
     sig = minhash_signatures(docs)
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-        ).alias(f"band{b}")
-        for b in range(N_BANDS)
-    ]
-    banded = sig.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
-            "band", "bucket"
-        ),
-    )
-    return (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
+    return _band_pairs(_band(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key))
 
 
 def incremental_neardup_candidates(
@@ -957,50 +1190,12 @@ def incremental_neardup_candidates(
     Rows-only (xxhash64 signatures are engine-specific); planted-replica
     recall asserted in tests.
     """
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = minhash_signatures(docs)
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-        ).alias(f"band{b}")
-        for b in range(N_BANDS)
-    ]
-    banded = sig.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
-            "band", "bucket"
-        ),
+    sig = minhash_signatures(_spread(load(spark, sf_dir, "documents")))
+    scored = _neardup_probe(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key).where(
+        F.col("n_agree") >= math.ceil(threshold * N_HASHES)
     )
-    inc = banded.where(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id"), "band", "bucket"
-    )
-    ex = banded.where(F.col("doc_id") % 10 != 0).select(
-        F.col("doc_id").alias("neardup_of"), "band", "bucket"
-    )
-    cands = inc.join(ex, ["band", "bucket"]).select("doc_id", "neardup_of").distinct()
-    a = sig.select(F.col("doc_id"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)])
-    b = sig.select(
-        F.col("doc_id").alias("neardup_of"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)],
-    )
-    est = (
-        sum(
-            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-            for i in range(N_HASHES)
-        )
-        / float(N_HASHES)
-    )
-    scored = (
-        cands.join(a, "doc_id")
-        .join(b, "neardup_of")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= threshold)
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("est_jaccard"), "neardup_of")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", "neardup_of", "est_jaccard")
+    return _best_match(scored).select(
+        "doc_id", "neardup_of", _est(N_HASHES).alias("est_jaccard")
     )
 
 
@@ -1010,22 +1205,14 @@ def minhash_neardup_pairs(
     """LSH candidates refined by estimated Jaccard (fraction of matching
     signature slots) ≥ threshold. Sub-quadratic: no pair outside a shared
     band bucket is ever scored."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    # no .cache(): the three references to sig share one exchange via
+    # no .cache(): the references to sig share one exchange via
     # ReuseExchange; caching benched 4.3 s vs 1.1 s cold at sf0.1
-    sig = minhash_signatures(docs)
-    cands = minhash_lsh_candidates(docs)
-    a = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)])
-    b = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)])
-    est = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(N_HASHES)
-    ) / float(N_HASHES)
+    sig = minhash_signatures(_spread(load(spark, sf_dir, "documents")))
+    cands = _band_pairs(_band(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key))
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("est_jaccard", est)
+        _agree(cands, sig, N_HASHES, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", _est(N_HASHES).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
     )
 
 
@@ -1082,18 +1269,9 @@ def portable_minhash_signatures(docs: DataFrame) -> DataFrame:
     near-dup pipeline becomes hash-checkable end to end (prototype match
     verified cross-engine before landing).
 
-    Plan shape is identical to the xxhash64 family: one explode + one
-    groupBy with 16 min-aggregates inside whole-stage codegen; partial
-    aggregation collapses exploded shingles map-side. The md5 costs more
-    per shingle than xxhash64 — acceptable for a verification twin, and
-    it is computed once and shared by all 16 permutations (the xxhash64
-    family hashes per permutation)."""
-    sh = _shingles(docs)
-    x = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long")
-    aggs = [
-        F.min((F.lit(a) * x + F.lit(b)) % F.lit(PORTABLE_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(_PORT_COEF)
-    ]
+    The md5 costs more per shingle than xxhash64 — acceptable for a
+    verification twin, and it is computed once and shared by all 16
+    permutations (the xxhash64 family hashes per permutation)."""
     # No materialization: consumers reference this frame 3-4× (banded
     # self-join sides + the a/b est-join projections), but the printed
     # plan's apparent duplication is collapsed at runtime by AQE's
@@ -1102,25 +1280,7 @@ def portable_minhash_signatures(docs: DataFrame) -> DataFrame:
     # optimization pass and measured NEUTRAL-to-worse (min floors 2.5/2.0/
     # 2.0/1.7 s → 2.8/2.3/3.1/1.7 s across the four portable bench keys):
     # the barrier serializes what ReuseExchange already shares.
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def _portable_banded(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) rows — bucket is the concat of the band's
-    signature slots (a string both engines build identically; no second
-    hash needed, the values ARE the key)."""
-    band_cols = [
-        F.concat_ws(
-            "-", *[F.col(f"h{b * PORTABLE_ROWS + r}") for r in range(PORTABLE_ROWS)]
-        ).alias(f"band{b}")
-        for b in range(PORTABLE_BANDS)
-    ]
-    return sig.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(PORTABLE_BANDS)])
-        ).alias("band", "bucket"),
-    )
+    return _affine_mins(_shingles(docs), "shingle")
 
 
 def minhash_portable_pairs(
@@ -1138,43 +1298,14 @@ def minhash_portable_pairs(
     exists nowhere in the engine (the oracle may do as it likes; it also
     band-joins, keeping sf0.1 checks fast).
 
-    100-TB note: identical plan shape to the xxhash64 family — banded
-    bucket join, est-join on two signature projections sharing one
-    exchange. The banding math (4 bands × 4 rows ⇒ P(candidate) =
-    1 − (1 − j^4)^4) trades recall for bucket size the same way."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = portable_minhash_signatures(docs)
-    banded = _portable_banded(sig)
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(PORTABLE_PERMS)],
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(PORTABLE_PERMS)],
-    )
-    n_agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(PORTABLE_PERMS)
-    )
+    Differs from the scale twin in signature and bucket key only; 4 bands
+    × 4 rows ⇒ P(candidate) = 1 − (1 − j^4)^4."""
+    sig = portable_minhash_signatures(_spread(load(spark, sf_dir, "documents")))
+    cands = _band_pairs(_band(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key))
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_agree", n_agree.cast("bigint"))
-        .withColumn(
-            "est_jaccard", F.col("n_agree").cast("double") / float(PORTABLE_PERMS)
-        )
+        _agree(cands, sig, PORTABLE_PERMS, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", "n_agree", _est(PORTABLE_PERMS).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_agree", "est_jaccard")
     )
 
 
@@ -1186,54 +1317,18 @@ def incremental_neardup_portable(
     against the existing corpus's banded signature index, now externally
     hash-checkable: (doc_id, neardup_of, n_agree, est_jaccard) with the
     best (highest agreement, smallest id) existing match per incoming doc.
-
-    Same O(batch × bucket occupancy) probe shape as the scale twin. The
-    best-match window orders by the INTEGER ``n_agree`` (descending) with
-    the id as tie-break — no float ordering anywhere; the DOUBLE
-    ``est_jaccard`` is derived from the winner's integer afterwards."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = portable_minhash_signatures(docs)
-    banded = _portable_banded(sig)
-    inc = banded.where(F.col("doc_id") % 10 == 0)
-    ex = banded.where(F.col("doc_id") % 10 != 0).select(
-        F.col("doc_id").alias("neardup_of"), "band", "bucket"
+    The DOUBLE ``est_jaccard`` is derived from the winner's integer
+    ``n_agree`` afterwards."""
+    sig = portable_minhash_signatures(_spread(load(spark, sf_dir, "documents")))
+    # ceil, not floor: n_agree >= ceil(t*P) <=> n_agree/P >= t for
+    # integer n_agree, so this integer cutoff admits exactly the same
+    # pairs as the sibling twins' est_jaccard >= threshold filter at
+    # EVERY threshold, not just ones where t*P is whole.
+    scored = _neardup_probe(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key).where(
+        F.col("n_agree") >= math.ceil(threshold * PORTABLE_PERMS)
     )
-    cands = (
-        inc.join(ex, ["band", "bucket"]).select("doc_id", "neardup_of").distinct()
-    )
-    a = sig.select(
-        "doc_id", *[F.col(f"h{i}").alias(f"a{i}") for i in range(PORTABLE_PERMS)]
-    )
-    b = sig.select(
-        F.col("doc_id").alias("neardup_of"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(PORTABLE_PERMS)],
-    )
-    n_agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(PORTABLE_PERMS)
-    )
-    scored = (
-        cands.join(a, "doc_id")
-        .join(b, "neardup_of")
-        .withColumn("n_agree", n_agree.cast("bigint"))
-        # ceil, not floor: n_agree >= ceil(t*P) <=> n_agree/P >= t for
-        # integer n_agree, so this integer cutoff admits exactly the
-        # same pairs as the sibling twins' est_jaccard >= threshold
-        # filter at EVERY threshold, not just ones where t*P is whole.
-        .where(F.col("n_agree") >= math.ceil(threshold * PORTABLE_PERMS))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("n_agree"), "neardup_of")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "neardup_of",
-            "n_agree",
-            (F.col("n_agree").cast("double") / float(PORTABLE_PERMS)).alias(
-                "est_jaccard"
-            ),
-        )
+    return _best_match(scored).select(
+        "doc_id", "neardup_of", "n_agree", _est(PORTABLE_PERMS).alias("est_jaccard")
     )
 
 
@@ -1333,36 +1428,12 @@ def lsh_exact_jaccard_portable(
     :func:`lsh_exact_jaccard_pairs` is rows-only): DuckDB re-derives the
     candidate set from raw text AND re-verifies each candidate's exact
     Jaccard, so both stages are externally hash-checked, not just the
-    final pair list.
-
-    Same verify mechanics as the twin: one row-local ``array_intersect``
-    per candidate; integer set sizes ⇒ one correctly-rounded double
-    division, bit-equal across engines. The quadratic formulation exists
-    nowhere — candidates only surface from shared band buckets."""
+    final pair list. Verification (:func:`_verify_jaccard`) is bit-equal
+    across engines: integer set sizes, one double division."""
     docs = _spread(load(spark, sf_dir, "documents"))
     sig = portable_minhash_signatures(docs)
-    banded = _portable_banded(sig)
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    arr = _shingle_docs(docs)
-    a = arr.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
-    b = arr.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    union = F.size("arr_a") + F.size("arr_b") - inter
-    return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    cands = _band_pairs(_band(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key))
+    return _verify_jaccard(cands, docs, threshold)
 
 
 def oracle_lsh_exact_jaccard_portable(threshold: float = 0.5) -> str:
@@ -1446,8 +1517,11 @@ def _persisted_portable_index(
             )
             sig = portable_minhash_signatures(docs)
             sig.write.mode("overwrite").parquet(os.path.join(out, "sig"))
-            _portable_banded(
-                spark.read.parquet(os.path.join(out, "sig"))
+            _band(
+                spark.read.parquet(os.path.join(out, "sig")),
+                PORTABLE_PERMS,
+                PORTABLE_ROWS,
+                _concat_key,
             ).write.mode("overwrite").parquet(os.path.join(out, "bands"))
         _PORTABLE_INDEX_CACHE[key] = out
     out = _PORTABLE_INDEX_CACHE[key]
@@ -1464,29 +1538,9 @@ CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash per doc: per-bit majority vote over distinct-token
-    ``xxhash64`` values (tie votes resolve to 1 — deterministic).
-
-    Computed entirely per-row as ONE nested higher-order-function fold:
-    token hashes → 64 vote counters (array accumulator) → bit assembly.
-    No explode, no shuffle, and — unlike a 64-column formulation — a small
-    generated-code footprint, so the first run isn't dominated by Janino
-    compilation."""
-    b = SIMHASH_BITS
-    sim = F.expr(
-        f"aggregate("
-        f"  zip_with("
-        f"    aggregate("
-        f"      transform(array_distinct(split(trim(text), '{TOKEN_EXPR}')), t -> xxhash64(t)),"
-        f"      array_repeat(0, {b}),"
-        f"      (acc, h) -> zip_with(acc, sequence(0, {b - 1}),"
-        f"                           (a, i) -> a + IF(((h >> i) & 1) = 1, 1, -1))),"
-        f"    sequence(0, {b - 1}),"
-        f"    (v, i) -> IF(v >= 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),"
-        f"  CAST(0 AS BIGINT),"
-        f"  (s, bit) -> s | bit)"
-    )
-    return docs.select("doc_id", sim.alias("simhash"))
+    """64-bit SimHash per doc (:func:`_simhash`) over distinct-token
+    ``xxhash64`` values."""
+    return docs.select("doc_id", _simhash("xxhash64(t)", SIMHASH_BITS))
 
 
 def simhash_neardup_pairs(
@@ -1494,44 +1548,11 @@ def simhash_neardup_pairs(
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
 
-    Blocking: split the 64-bit signature into 4 × 16-bit chunks and join on
-    any equal chunk — by pigeonhole, every pair within Hamming distance 3
-    shares at least one chunk, so recall is exact for the distance bound.
+    Blocking (:func:`_chunk_pairs`): 4 × 16-bit chunks, so recall is
+    exact for Hamming distance ≤ 3. ``hamming`` is an int.
     """
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = simhash_signatures(docs)  # per-row projection; nothing to cache
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), j * CHUNK_BITS)
-                    .bitwiseAND((1 << CHUNK_BITS) - 1)
-                    for j in range(SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    pairs = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), ["chunk_idx", "chunk_val"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.withColumn(
-            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int")
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    sig = simhash_signatures(_spread(load(spark, sf_dir, "documents")))
+    return _chunk_pairs(sig, SIMHASH_BITS, SIMHASH_CHUNKS, max_hamming, "int")
 
 
 #: Portable SimHash width: 48 bits (md5-prefix-derived token keys), 4
@@ -1548,31 +1569,16 @@ _SPB_CHUNK = SIMHASH_PORTABLE_BITS // SIMHASH_PORTABLE_CHUNKS
 
 def simhash_portable_signatures(docs: DataFrame) -> DataFrame:
     """SimHash with ENGINE-PORTABLE token hashes — the md5-based twin of
-    :func:`simhash_signatures`, completing the portable conversion for the
-    second hash family (MinHash got its portable twin first): the token
-    key is the first 12 md5 hex chars (48 bits), per-bit majority vote
-    with ties to 1, identical to what the DuckDB oracle re-derives from
-    raw text with 48 conditional sums.
+    :func:`simhash_signatures`: the token key is the first 12 md5 hex
+    chars (48 bits), per-bit majority vote with ties to 1, identical to
+    what the DuckDB oracle re-derives from raw text with 48 conditional
+    sums.
 
     Engine formulation stays the per-row nested HOF fold (no explode, no
     shuffle) — formulation and verification are independent axes: the
     oracle may explode; the engine doesn't have to."""
-    b = SIMHASH_PORTABLE_BITS
-    sim = F.expr(
-        f"aggregate("
-        f"  zip_with("
-        f"    aggregate("
-        f"      transform(array_distinct(split(trim(text), '{TOKEN_EXPR}')),"
-        f"                t -> CAST(conv(substr(md5(t), 1, 12), 16, 10) AS BIGINT)),"
-        f"      array_repeat(0, {b}),"
-        f"      (acc, h) -> zip_with(acc, sequence(0, {b - 1}),"
-        f"                           (a, i) -> a + IF(((h >> i) & 1) = 1, 1, -1))),"
-        f"    sequence(0, {b - 1}),"
-        f"    (v, i) -> IF(v >= 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),"
-        f"  CAST(0 AS BIGINT),"
-        f"  (s, bit) -> s | bit)"
-    )
-    return docs.select("doc_id", sim.alias("simhash"))
+    token_key = "CAST(conv(substr(md5(t), 1, 12), 16, 10) AS BIGINT)"
+    return docs.select("doc_id", _simhash(token_key, SIMHASH_PORTABLE_BITS))
 
 
 def simhash_portable_pairs(
@@ -1580,44 +1586,11 @@ def simhash_portable_pairs(
 ) -> DataFrame:
     """Near-dup pairs at Hamming ≤ ``max_hamming`` over the PORTABLE
     SimHash — fully SQL-oracled (the xxhash64 family stays rows-only as
-    the scale path). Same pigeonhole blocking: SIMHASH_PORTABLE_CHUNKS=4
-    chunks of 12 bits each (48-bit signature), a pair within distance 3
-    must share a chunk; candidates only surface from shared chunk
-    buckets, never all-pairs."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = simhash_portable_signatures(docs)
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), j * _SPB_CHUNK)
-                    .bitwiseAND((1 << _SPB_CHUNK) - 1)
-                    for j in range(SIMHASH_PORTABLE_CHUNKS)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    pairs = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), ["chunk_idx", "chunk_val"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("bigint"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+    the scale path). Blocking on 4 chunks of 12 bits (48-bit signature);
+    ``hamming`` is a bigint."""
+    sig = simhash_portable_signatures(_spread(load(spark, sf_dir, "documents")))
+    return _chunk_pairs(
+        sig, SIMHASH_PORTABLE_BITS, SIMHASH_PORTABLE_CHUNKS, max_hamming, "bigint"
     )
 
 
@@ -1951,19 +1924,7 @@ def lsh_exact_jaccard_pairs(
     row-local array intersection.
     """
     docs = _spread(load(spark, sf_dir, "documents"))
-    cands = minhash_lsh_candidates(docs)
-    arr = _shingle_docs(docs)
-    a = arr.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
-    b = arr.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    union = F.size("arr_a") + F.size("arr_b") - inter
-    return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verify_jaccard(minhash_lsh_candidates(docs), docs, threshold)
 
 
 def cluster_size_histogram(
@@ -2542,7 +2503,9 @@ def containment_pairs(
     self-join on the shingle + one aggregation, cost ∝ co-shingled pairs;
     both directions are emitted from the single undirected pair scan
     (src/dst and dst/src rows), so nothing is computed twice. Integer
-    sizes → the division is bit-deterministic.
+    sizes → the division is bit-deterministic. Exact up to the same hash
+    identity as :func:`ngram_jaccard_pairs`: shingles are compared by
+    64-bit ``xxhash64`` (collision odds about 3e-8 at sf0.1).
 
     The exploded index is MATERIALIZED once (localCheckpoint), for the
     same reason as :func:`ngram_jaccard_pairs`: un-pinned, the planner
@@ -3306,99 +3269,36 @@ FROM audit"""
 
 
 # --- Weighted MinHash (bag similarity) ----------------------------------------
-def _shingles_with_tf(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
-    """k-token shingles WITH multiplicity: (doc_id, shingle, tf). The
-    non-distinct sibling of :func:`_shingles` — one explode + one
-    map-side-combined count."""
-    arr = F.expr(
-        f"transform(sequence(0, greatest(size(split(trim(text), '{TOKEN_EXPR}')) - {k}, 0)), "
-        f"i -> concat_ws(' ', slice(split(trim(text), '{TOKEN_EXPR}'), i + 1, {k})))"
-    )
-    return (
-        docs.select("doc_id", F.explode(arr).alias("shingle"))
-        .groupBy("doc_id", "shingle")
-        .agg(F.count("*").alias("tf"))
-    )
-
-
 def weighted_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
-    """Integer-weight MinHash by tf-replication: a shingle with tf = n
-    contributes replicas ``shingle#1 .. shingle#n`` to the hashed set, so
-    the per-seed min estimates WEIGHTED Jaccard Σmin(tf)/Σmax(tf) — the
-    bag-similarity near-dup signal plain (set) MinHash is blind to
-    (keyword-stuffed or loop-generated docs share the vocabulary of
-    their source but not its token distribution).
+    """Integer-weight MinHash by tf-replication (:func:`_tf_replicas`):
+    the per-seed min over replicas ``shingle#1 .. shingle#tf`` estimates
+    WEIGHTED Jaccard Σmin(tf)/Σmax(tf) — the bag-similarity near-dup
+    signal plain (set) MinHash is blind to (keyword-stuffed or
+    loop-generated docs share the vocabulary of their source but not its
+    token distribution).
 
     Plan: explode shingles → tf count (map-side combined) → explode
-    ``sequence(1, tf)`` replicas → 32 codegen min-aggregates. Replica
-    volume equals total (non-distinct) shingle count, i.e. the same
-    row count :func:`duplicate_spans` already explodes — not a new cost
+    replicas → 32 codegen min-aggregates. Replica volume is the same row
+    count :func:`duplicate_spans` already explodes — not a new cost
     class. Seeded xxhash64 ⇒ engine-specific ⇒ rows-only; gated by the
     recall/bag-sensitivity suite in tests/test_dedup.py.
     """
-    reps = (
-        _shingles_with_tf(docs, k)
-        .select(
-            "doc_id",
-            "shingle",
-            F.explode(F.expr("sequence(1, tf)")).alias("rep"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws("#", F.col("shingle"), F.col("rep").cast("string")).alias("r"),
-        )
-    )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("r"))).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    return reps.groupBy("doc_id").agg(*aggs)
+    return _xxhash_mins(_tf_replicas(docs, k), "r")
 
 
 def weighted_minhash_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5
 ) -> DataFrame:
-    """Near-dup pairs under WEIGHTED Jaccard via LSH banding over the
-    tf-replicated signatures: same 8×4 banding as the set-MinHash path,
-    same shuffle shape (band/bucket equi-join, never all-pairs); the
-    signature-agreement estimate gates pairs at ``threshold``.
+    """Near-dup pairs under WEIGHTED Jaccard: the set-MinHash pipeline
+    over the tf-replicated signatures.
 
     Output: (doc_a, doc_b, est_wjaccard).
     """
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = weighted_minhash_signatures(docs)
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-        ).alias(f"band{b}")
-        for b in range(N_BANDS)
-    ]
-    banded = sig.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
-            "band", "bucket"
-        ),
-    )
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)])
-    sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)])
-    est = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(N_HASHES)
-    ) / float(N_HASHES)
+    sig = weighted_minhash_signatures(_spread(load(spark, sf_dir, "documents")))
+    cands = _band_pairs(_band(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key))
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_wjaccard"))
+        _agree(cands, sig, N_HASHES, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", _est(N_HASHES).alias("est_wjaccard"))
         .where(F.col("est_wjaccard") >= threshold)
     )
 
@@ -3432,81 +3332,33 @@ def oph_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
     Output: (doc_id, sig array<long> of length 32, n_filled).
     """
     n = N_HASHES
-    sh = _shingles(docs, k)
-    binned = sh.select(
+    hashed = _shingles(docs, k).select(
         "doc_id", F.xxhash64(F.lit(0), F.col("shingle")).alias("h")
     )
-    bin_col = F.pmod(F.col("h"), F.lit(n))
-    raw = binned.groupBy("doc_id").agg(
-        *[
-            F.min(F.when(bin_col == i, F.col("h"))).alias(f"b{i}")
-            for i in range(n)
-        ]
-    )
-    slots = []
-    for i in range(n):
-        lookups = ", ".join(f"b{(i + j) % n}" for j in range(n))
-        slots.append(f"coalesce({lookups})")
-    sig = f"array({', '.join(slots)})"
+    raw = _oph_bins(hashed, F.pmod(F.col("h"), F.lit(n)), n)
     n_filled = sum(
         F.when(F.col(f"b{i}").isNotNull(), 1).otherwise(0) for i in range(n)
     )
     return raw.select(
-        "doc_id", F.expr(sig).alias("sig"), n_filled.cast("bigint").alias("n_filled")
+        "doc_id", F.array(*_densify(n)).alias("sig"), n_filled.cast("bigint").alias("n_filled")
     )
 
 
 def oph_minhash_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5
 ) -> DataFrame:
-    """Near-dup pairs from the OPH signatures: same 8×4 banding and
-    band/bucket equi-join as the 32-perm path, same agreement estimator
-    — only the signature construction differs (1 hash per shingle).
+    """Near-dup pairs from the OPH signatures: the 32-perm pipeline with
+    only the signature construction changed (1 hash per shingle).
 
     Output: (doc_a, doc_b, est_jaccard).
     """
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = oph_minhash_signatures(docs).select(
+    sig = oph_minhash_signatures(_spread(load(spark, sf_dir, "documents"))).select(
         "doc_id", *[F.col("sig").getItem(i).alias(f"h{i}") for i in range(N_HASHES)]
     )
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-        ).alias(f"band{b}")
-        for b in range(N_BANDS)
-    ]
-    banded = sig.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias(
-            "band", "bucket"
-        ),
-    )
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_HASHES)],
-    )
-    est = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(N_HASHES)
-    ) / float(N_HASHES)
+    cands = _band_pairs(_band(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key))
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
+        _agree(cands, sig, N_HASHES, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", _est(N_HASHES).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
     )
 
@@ -3525,78 +3377,25 @@ def weighted_portable_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame
     ``shingle#r`` (r = 1..tf) → 28-bit md5 key → the same 16 affine
     permutations as :func:`portable_minhash_signatures`. Estimates
     weighted Jaccard Σmin(tf)/Σmax(tf) with values DuckDB re-derives
-    bit-identically (md5 + BIGINT affine, no engine hash).
-
-    Plan: explode shingles → map-side tf count → explode replicas →
-    ONE md5 per replica shared by all 16 permutations → 16 codegen
-    min-aggregates. Same replica volume as the xxhash64 weighted twin
-    (:func:`weighted_minhash_signatures`), which hashes per-seed."""
-    reps = (
-        _shingles_with_tf(docs, k)
-        .select(
-            "doc_id",
-            "shingle",
-            F.explode(F.expr("sequence(1, tf)")).alias("rep"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                "#", F.col("shingle"), F.col("rep").cast("string")
-            ).alias("r"),
-        )
-    )
-    x = F.conv(F.substring(F.md5("r"), 1, 7), 16, 10).cast("long")
-    aggs = [
-        F.min((F.lit(a) * x + F.lit(b)) % F.lit(PORTABLE_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(_PORT_COEF)
-    ]
-    return reps.groupBy("doc_id").agg(*aggs)
+    bit-identically (md5 + BIGINT affine, no engine hash): ONE md5 per
+    replica, shared by all 16 permutations."""
+    return _affine_mins(_tf_replicas(docs, k), "r")
 
 
 def minhash_weighted_portable_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5
 ) -> DataFrame:
     """Near-dup pairs under WEIGHTED Jaccard via the portable replicated
-    signatures — the SQL-oracled twin of :func:`weighted_minhash_pairs`.
-    Same 4×4 banding, same bucket-join candidate generation (never
-    all-pairs), same integer agreement estimator as the portable set
-    family.
+    signatures — the SQL-oracled twin of :func:`weighted_minhash_pairs`,
+    on the portable set family's pipeline.
 
     Output: (doc_a, doc_b, n_agree, est_wjaccard)."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = weighted_portable_signatures(docs)
-    banded = _portable_banded(sig)
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(PORTABLE_PERMS)],
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(PORTABLE_PERMS)],
-    )
-    n_agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(PORTABLE_PERMS)
-    )
+    sig = weighted_portable_signatures(_spread(load(spark, sf_dir, "documents")))
+    cands = _band_pairs(_band(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key))
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_agree", n_agree.cast("bigint"))
-        .withColumn(
-            "est_wjaccard",
-            F.col("n_agree").cast("double") / float(PORTABLE_PERMS),
-        )
+        _agree(cands, sig, PORTABLE_PERMS, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", "n_agree", _est(PORTABLE_PERMS).alias("est_wjaccard"))
         .where(F.col("est_wjaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_agree", "est_wjaccard")
     )
 
 
@@ -3677,67 +3476,27 @@ def oph_portable_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
     Output: (doc_id, h0..h15) — densified, column-per-slot so the
     shared banding/estimator machinery applies unchanged."""
     a0, b0 = _PORT_COEF[0]
-    sh = _shingles(docs, k)
-    x = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long")
-    h = (F.lit(a0) * x + F.lit(b0)) % F.lit(PORTABLE_P)
     n = PORTABLE_PERMS
-    binned = sh.select("doc_id", h.alias("h"))
-    raw = binned.groupBy("doc_id").agg(
-        *[
-            F.min(F.when(F.col("h") % n == i, F.col("h"))).alias(f"b{i}")
-            for i in range(n)
-        ]
-    )
-    slots = [
-        F.coalesce(*[F.col(f"b{(i + j) % n}") for j in range(n)]).alias(f"h{i}")
-        for i in range(n)
-    ]
-    return raw.select("doc_id", *slots)
+    h = (F.lit(a0) * _md5_key("shingle") + F.lit(b0)) % F.lit(PORTABLE_P)
+    raw = _oph_bins(_shingles(docs, k).select("doc_id", h.alias("h")), F.col("h") % n, n)
+    return raw.select("doc_id", *[c.alias(f"h{i}") for i, c in enumerate(_densify(n))])
 
 
 def minhash_oph_portable_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5
 ) -> DataFrame:
     """Near-dup pairs from the portable OPH signatures — the SQL-oracled
-    twin of :func:`oph_minhash_pairs`: same 4×4 banding and bucket join
-    as the portable set family, only the signature construction differs
-    (one permutation + densification instead of 16 permutations).
+    twin of :func:`oph_minhash_pairs`, on the portable set family's
+    pipeline (one permutation + densification instead of 16
+    permutations).
 
     Output: (doc_a, doc_b, n_agree, est_jaccard)."""
-    docs = _spread(load(spark, sf_dir, "documents"))
-    sig = oph_portable_signatures(docs)
-    banded = _portable_banded(sig)
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(PORTABLE_PERMS)],
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(PORTABLE_PERMS)],
-    )
-    n_agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(PORTABLE_PERMS)
-    )
+    sig = oph_portable_signatures(_spread(load(spark, sf_dir, "documents")))
+    cands = _band_pairs(_band(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key))
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_agree", n_agree.cast("bigint"))
-        .withColumn(
-            "est_jaccard",
-            F.col("n_agree").cast("double") / float(PORTABLE_PERMS),
-        )
+        _agree(cands, sig, PORTABLE_PERMS, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", "n_agree", _est(PORTABLE_PERMS).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_agree", "est_jaccard")
     )
 
 

@@ -2215,14 +2215,14 @@ def stream_neardup_probe(
     from raw text in DuckDB: the full stream path is externally
     hash-checked.
 
-    100-TB shape: the batch side (one shipment) broadcasts into both
-    joins; the corpus-sized index frames stay partitioned — banded rows
+    100-TB shape: the batch side (one shipment) broadcasts into every
+    join; the corpus-sized index frames stay partitioned — banded rows
     written bucketed by (band, bucket) would confine the probe shuffle
     to the batch itself. Per-batch cost is O(batch × bucket occupancy).
     """
+    import math
     import tempfile
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..operators import dedup as dd
@@ -2235,54 +2235,30 @@ def stream_neardup_probe(
         .parquet(replay)
     )
     sf_dir = os.path.dirname(docs_path)
-    banded_ix, sig_ix = dd._persisted_portable_index(spark, sf_dir)
-    banded_ix = banded_ix.select(
-        F.col("doc_id").alias("neardup_of"), "band", "bucket"
-    ).localCheckpoint(eager=True)
-    sig_ix = sig_ix.select(
-        F.col("doc_id").alias("neardup_of"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(dd.PORTABLE_PERMS)],
-    ).localCheckpoint(eager=True)
+    banded_ix, sig_ix = (
+        ix.localCheckpoint(eager=True)
+        for ix in dd._persisted_portable_index(spark, sf_dir)
+    )
     out_dir = os.path.join(
         tempfile.gettempdir(), f"stream_neardup_{uuid.uuid4().hex[:12]}"
     )
-    n_agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(dd.PORTABLE_PERMS)
-    )
+    # the batch twin's default threshold, hence the same integer cut
+    n_perms, threshold = dd.PORTABLE_PERMS, 0.5
 
     def ingest(batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.col("doc_id") % 10 == 0)
         if incoming.isEmpty():
             return
         sig = dd.portable_minhash_signatures(incoming)
-        bands = dd._portable_banded(sig)
-        cands = (
-            banded_ix.join(F.broadcast(bands), ["band", "bucket"])
-            .select("doc_id", "neardup_of")
-            .distinct()
-        )
-        a = sig.select(
-            "doc_id",
-            *[F.col(f"h{i}").alias(f"a{i}") for i in range(dd.PORTABLE_PERMS)],
-        )
-        scored = (
-            sig_ix.join(F.broadcast(cands.join(a, "doc_id")), "neardup_of")
-            .withColumn("n_agree", n_agree.cast("bigint"))
-            .where(F.col("n_agree") >= dd.PORTABLE_PERMS // 2)
-        )
-        w = Window.partitionBy("doc_id").orderBy(F.desc("n_agree"), "neardup_of")
+        bands = dd._band(sig, n_perms, dd.PORTABLE_ROWS, dd._concat_key)
+        cands = dd._band_probe(F.broadcast(bands), banded_ix)
+        # index side first, so both joins build on a batch-sized side
+        scored = dd._agree(
+            F.broadcast(cands), sig_ix, n_perms, "neardup_of", "doc_id", F.broadcast(sig)
+        ).where(F.col("n_agree") >= math.ceil(threshold * n_perms))
         (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "doc_id",
-                "neardup_of",
-                "n_agree",
-                (
-                    F.col("n_agree").cast("double") / float(dd.PORTABLE_PERMS)
-                ).alias("est_jaccard"),
-            )
+            dd._best_match(scored)
+            .select("doc_id", "neardup_of", "n_agree", dd._est(n_perms).alias("est_jaccard"))
             .write.mode("append")
             .parquet(out_dir)
         )

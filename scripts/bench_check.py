@@ -1,20 +1,22 @@
 #!/usr/bin/env python3
-"""Per-query bench regression gate: compare two BENCH_r*.json files.
+"""Per-query bench regression gate over ``bench_history.jsonl``.
 
-The driver records one ``BENCH_r{N}.json`` per round; a plan regression
-(an AQE flip, a lost broadcast, a new shuffle) shows up as one query's
-time jumping while the rest hold. This script catches that BEFORE the
-driver runs: compare the current bench output against the previous
-round's committed artifact and alarm on any query slower than
-``THRESHOLD``x its old time (default 1.3, above the n=3 harness's noise
-band — observed round-over-round noise is ~±10%).
+Every ``bench.py`` run appends one record (per-query seconds, ``sf``,
+``cpus``) to ``bench_history.jsonl``. A plan regression (an AQE flip, a
+lost broadcast, a new shuffle) shows up as one query's time jumping
+while the rest hold. This script compares the newest record against the
+newest EARLIER record with the same ``sf`` and ``cpus`` (times from
+other scales or core counts are not comparable) and alarms on any query
+slower than ``THRESHOLD``x its old time (default 1.3, above the n=3
+harness's noise band — observed run-over-run noise is ~±10%).
 
 Usage:
-    python scripts/bench_check.py                    # newest two BENCH_r*.json
-    python scripts/bench_check.py OLD.json NEW.json  # explicit pair
-    python scripts/bench_check.py --threshold 1.5 OLD.json NEW.json
+    python scripts/bench_check.py                     # after python bench.py
+    python scripts/bench_check.py --threshold 1.5
+    python scripts/bench_check.py --history path/to/bench_history.jsonl
 
-Exit code 1 if any shared query regressed past the threshold (CI-style).
+Exit code 1 if any shared query regressed past the threshold (CI-style),
+2 if the history holds no earlier record comparable to the newest one.
 New queries (no old number) and removed queries are reported, never fatal.
 """
 
@@ -22,49 +24,45 @@ from __future__ import annotations
 
 import argparse
 import json
-import re
 import sys
 from pathlib import Path
 
 THRESHOLD = 1.3
+HISTORY = Path(__file__).resolve().parent.parent / "bench_history.jsonl"
 
 
-def _load(path: Path) -> dict[str, float]:
-    rec = json.loads(path.read_text())
-    # driver artifacts wrap the bench line in {"parsed": {...}}; bench.py
-    # itself emits the flat {"queries": {...}} line
-    # `or rec` also covers {"parsed": null} (the truncated-r4 artifact)
-    parsed = rec.get("parsed") or rec
-    if "queries" not in parsed:
-        raise SystemExit(f"{path}: no usable bench record (parsed=null and no flat line)")
-    return parsed["queries"]
+def _pair(history: Path) -> tuple[dict, dict] | None:
+    """(old, new): the newest record and the newest earlier one with the
+    same sf and cpus, or None if there is no such earlier record."""
+    recs = [json.loads(line) for line in history.read_text().splitlines() if line.strip()]
+    if not recs:
+        return None
+    new = recs[-1]
+    same = [r for r in recs[:-1] if (r["sf"], r["cpus"]) == (new["sf"], new["cpus"])]
+    return (same[-1], new) if same else None
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("files", nargs="*", help="OLD.json NEW.json (default: newest two BENCH_r*.json)")
+    ap.add_argument("--history", type=Path, default=HISTORY)
     ap.add_argument("--threshold", type=float, default=THRESHOLD)
     args = ap.parse_args(argv)
 
-    root = Path(__file__).resolve().parent.parent
-    if len(args.files) == 2:
-        old_p, new_p = Path(args.files[0]), Path(args.files[1])
-    elif not args.files:
-        rounds = sorted(
-            root.glob("BENCH_r*.json"),
-            key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
+    pair = _pair(args.history)
+    if pair is None:
+        print(
+            f"{args.history}: no earlier record with the newest record's sf and cpus",
+            file=sys.stderr,
         )
-        if len(rounds) < 2:
-            print("need at least two BENCH_r*.json files", file=sys.stderr)
-            return 2
-        old_p, new_p = rounds[-2], rounds[-1]
-    else:
-        ap.error("pass exactly two files or none")
-
-    old, new = _load(old_p), _load(new_p)
+        return 2
+    old_rec, new_rec = pair
+    old, new = old_rec["queries"], new_rec["queries"]
     shared = sorted(set(old) & set(new))
     regressed = []
-    print(f"{old_p.name} -> {new_p.name}  (threshold {args.threshold}x)")
+    print(
+        f"sf{new_rec['sf']} cpus={new_rec['cpus']}: "
+        f"ts {old_rec['ts']} -> {new_rec['ts']}  (threshold {args.threshold}x)"
+    )
     for k in shared:
         ratio = new[k] / old[k] if old[k] else float("inf")
         flag = " <-- REGRESSED" if ratio > args.threshold else ""

@@ -265,6 +265,26 @@ def test_stream_model_scores_parity_with_batch_scorer(spark):
     assert batch.exceptAll(stream).count() == 0
 
 
+def test_sparse_scorer_without_bias_row_matches_dense(spark):
+    """A weight frame lacking the bias row (a stale or externally built
+    model) must score every document with w_bias = 0 on the sparse path,
+    exactly as the dense serving kernel does — not empty the output."""
+    from redis_dataflow_realtime_analytics_spark.operators import classifier
+    from redis_dataflow_realtime_analytics_spark.tables import load
+
+    counts, stats, y = classifier._sparse_train_inputs(spark, SF_SMOKE)
+    w = classifier.perceptron_model(spark, SF_SMOKE, rounds=2).where(
+        F.col("bucket") != classifier.BIAS_BUCKET
+    )
+    sparse = classifier._sparse_margins(y, counts, w, stats).select("doc_id", "margin")
+    dense = classifier.score_batch_with_model(
+        load(spark, SF_SMOKE, "documents"), w, stats
+    ).select("doc_id", "margin")
+    assert sparse.count() == dense.count() == y.count() > 0
+    assert sparse.exceptAll(dense).count() == 0
+    assert dense.exceptAll(sparse).count() == 0
+
+
 def test_keep_best_by_model_picks_max_margin_member(spark):
     """Every kept doc is a member of its cluster with the cluster's
     maximum margin (min doc_id among ties), one keeper per cluster."""

@@ -297,3 +297,23 @@ def test_truncation_recall_monotone_and_bounded(spark):
         assert 0.0 <= r.recall <= 1.0 and r.n_queries > 0, r
         assert r.recall >= last - 1e-9, (d, r.recall, last)
         last = r.recall
+
+
+def test_rowlocal_assign_zero_cosine_tie_goes_to_min_centroid(spark):
+    """A zero-norm centroid (cosine +0.0 by convention) ties a centroid
+    orthogonal to the row (its negated cosine is -0.0). ``array_min`` over
+    the (nv, cid) structs treats the two zeros as equal, so the tie goes
+    to the min centroid_id whichever of the two holds it — the window
+    formulation's ORDER BY desc(cosine), centroid_id."""
+    emb = spark.createDataFrame(
+        [(1, [3, 0], 9), (2, [0, 0], 0)], "vec_id long, qvec array<bigint>, n2 bigint"
+    )
+    schema = "centroid_id int, c_qvec array<bigint>, c_n2 bigint"
+    zero_norm_low = spark.createDataFrame([(0, [0, 0], 0), (1, [0, 5], 25)], schema)
+    zero_norm_high = spark.createDataFrame([(0, [0, 5], 25), (1, [0, 0], 0)], schema)
+    for cents in (zero_norm_low, zero_norm_high):
+        got = {
+            r.vec_id: r.bucket
+            for r in similarity._rowlocal_assign(emb, cents).collect()
+        }
+        assert got == {1: 0, 2: 0}
