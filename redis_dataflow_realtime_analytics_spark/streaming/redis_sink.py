@@ -119,11 +119,10 @@ class RedisMetricsSink:
                     raise RuntimeError(
                         "redis-py unavailable; pass log_dir for the command log"
                     )
-                (
-                    cmds.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(self.log_dir)
+                # a static overwrite of this batch's own leaf: a replay
+                # rewrites it, other batches' leaves stay
+                cmds.write.mode("overwrite").parquet(
+                    f"{self.log_dir}/batch_id={batch_id}"
                 )
                 return
             host, port = self.host, self.port

@@ -9,10 +9,11 @@ between batches — then restarts a fresh query from the SAME
 checkpointLocation and asserts the final outcome equals the
 uninterrupted batch oracle:
 
-* ``SketchStoreWriter`` — the dynamic-partition-overwrite store must
-  absorb a replayed batch without double counting (its partition is
-  rewritten, not appended). Reference analogue: the Dataflow runner
-  durability the reference's deploy relies on (deploy_dataflow.sh:24).
+* ``SketchStoreWriter`` — the store, whose every family overwrites its
+  own ``batch_id=<n>`` leaf, must absorb a replayed batch without double
+  counting (the leaf is rewritten, not appended). Reference analogue:
+  the Dataflow runner durability the reference's deploy relies on
+  (deploy_dataflow.sh:24).
 * ``IngestDedupWriter`` — the index anti-join must make a replayed
   append a no-op (exactly-once without a transaction log).
 * legacy ``applyInPandasWithState`` uniques — HDFS-backed state must
@@ -191,6 +192,33 @@ def test_sketch_store_crash_after_write_is_exactly_once(spark, tmp_path):
         d for d in os.listdir(f"{store}/visits") if d.startswith("batch_id=")
     }
     assert batch_ids == {f"batch_id={i}" for i in range(5)}
+
+
+def test_sketch_store_jobs_stay_in_the_query_job_group(spark, tmp_path):
+    """The store's family writes run on their own threads; each must
+    inherit the streaming query's run-id job group, or ``query.stop()``
+    could not cancel an in-flight write."""
+    replay = sp._chunked_events_replay_dir(EV, 5)
+    st = spark.sparkContext.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup())
+    ev = normalize_events(read_events_stream(spark, replay, 1)).withWatermark(
+        "ts", sp.WATERMARK
+    )
+    q = (
+        ev.writeStream.foreachBatch(sp.SketchStoreWriter(str(tmp_path / "store")))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    n_batches = sum(p.numInputRows > 0 for p in q.recentProgress)
+    assert n_batches >= 2
+    jobs = sorted(st.getJobIdsForGroup(str(q.runId)))
+    assert len(jobs) >= 5 * n_batches, "one job per family per batch"
+    # no job launched while the query ran escaped its group
+    assert jobs == list(range(jobs[0], jobs[-1] + 1))
+    assert set(st.getJobIdsForGroup()) <= ungrouped
 
 
 def test_ingest_dedup_crash_replay_appends_nothing(spark, tmp_path):

@@ -57,6 +57,33 @@ def test_command_log_fallback(spark, tmp_path):
     assert {r.batch_id for r in log.select("batch_id").distinct().collect()} == {0}
 
 
+def test_command_log_keeps_every_batch_under_replay(spark, tmp_path):
+    """Each batch owns its log leaf: a later batch must not delete an
+    earlier one, and a replayed batch rewrites only its own. Pinned to
+    the session default STATIC overwrite mode, under which a partitioned
+    overwrite of the whole log would keep only the last batch."""
+    ev = normalize_events(read_events(spark, SF_SMOKE))
+    b0, b1 = ev.where("user_id % 2 = 0"), ev.where("user_id % 2 = 1")
+    once, replayed = str(tmp_path / "once"), str(tmp_path / "replayed")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        RedisMetricsSink(log_dir=once)(b0, batch_id=0)
+        RedisMetricsSink(log_dir=once)(b1, batch_id=1)
+        sink = RedisMetricsSink(log_dir=replayed)
+        sink(b0, batch_id=0)
+        sink(b1, batch_id=1)
+        sink(b0, batch_id=0)  # redelivery of batch 0
+    finally:
+        spark.conf.set(key, old)
+    a, b = spark.read.parquet(once), spark.read.parquet(replayed)
+    for log in (a, b):
+        assert {r.batch_id for r in log.select("batch_id").distinct().collect()} == {0, 1}
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # End-to-end keyspace test (r10, VERDICT r9 item 4): redis-py isn't
 # installable in this sandbox, so the e2e drives the sink's REAL

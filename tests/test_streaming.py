@@ -12,7 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from redis_dataflow_realtime_analytics_spark.operators import metrics
-from redis_dataflow_realtime_analytics_spark.sources import normalize_events, read_events
+from redis_dataflow_realtime_analytics_spark.sources import (
+    normalize_events,
+    read_events,
+    read_events_stream,
+)
 from redis_dataflow_realtime_analytics_spark.streaming import pipeline as sp
 
 from .conftest import SF_SMOKE
@@ -148,6 +152,53 @@ def test_sketch_store_batch_replay_is_idempotent(spark, tmp_path):
         assert a == b, f"{reader.__name__} changed under replay"
 
 
+def test_sketch_store_writer_leaves_overwrite_mode_unchanged(spark, tmp_path):
+    """A direct writer call must not flip the session's partition
+    overwrite mode (other writers in the session rely on it)."""
+    ev = normalize_events(read_events(spark, SF_SMOKE))
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        sp.SketchStoreWriter(str(tmp_path / "store"))(ev, 0)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_sketch_store_failed_family_raises_after_the_rest(
+    spark, multi_file_events, tmp_path
+):
+    """One family's write fails (a regular file sits where its directory
+    belongs): the call raises only after the other four writes have
+    returned, releases the batch's cache, and fails a running query."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import StreamingQueryException
+
+    store = tmp_path / "store"
+    store.mkdir()
+    (store / "user_cms").write_text("not a directory")
+    families = ["visits", "user_sketch_minute", "user_sketch_variant", "user_set_variant"]
+    ev = normalize_events(read_events(spark, SF_SMOKE))
+    with pytest.raises(Py4JJavaError, match="user_cms"):
+        sp.SketchStoreWriter(str(store))(ev, 0)
+    for family in families:
+        assert (store / family / "batch_id=0" / "_SUCCESS").exists(), family
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(ev._jdf).isEmpty()
+
+    stream = normalize_events(read_events_stream(spark, multi_file_events, 1))
+    q = (
+        stream.writeStream.foreachBatch(sp.SketchStoreWriter(str(store)))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+
+
 def test_stream_static_enrichment_matches_batch(spark, multi_file_events):
     """Stream-static broadcast left join must equal the batch twin on the
     same data (the join is stateless — every micro-batch is enriched
@@ -238,7 +289,11 @@ def test_user_gap_profile_nulls_for_single_event_users(spark):
     """Single-event users must appear with NULL gap stats (count of gaps
     0), and n_rapid never exceeds n_gaps."""
     from redis_dataflow_realtime_analytics_spark.operators import sessions
-    from redis_dataflow_realtime_analytics_spark.sources import normalize_events, read_events
+    from redis_dataflow_realtime_analytics_spark.sources import (
+    normalize_events,
+    read_events,
+    read_events_stream,
+)
 
     ev = normalize_events(read_events(spark, SF_SMOKE))
     rows = sessions.user_gap_profile(ev).collect()
