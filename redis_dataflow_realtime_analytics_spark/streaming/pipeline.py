@@ -85,19 +85,23 @@ def _minute(col: str = "ts") -> F.Column:
     return F.date_trunc("minute", F.col(col)).alias("minute")
 
 
-def _replay_to_memory(spark: SparkSession, agg: DataFrame, prefix: str) -> DataFrame:
-    """Run a streaming aggregate to completion (availableNow) into a memory
-    sink and return the final table, with state partitions pinned."""
+def _replay_to_memory(
+    spark: SparkSession,
+    df: DataFrame,
+    prefix: str,
+    mode: str = "complete",
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Run a streaming query to completion (availableNow) into a memory
+    sink in output ``mode`` and return the final table, with state
+    partitions pinned. ``checkpoint_dir`` pins the checkpoint location
+    (default: an engine temp checkpoint)."""
+    name = f"{prefix}_{uuid.uuid4().hex}"
     with _state_partitions(spark):
-        name = f"{prefix}_{uuid.uuid4().hex}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        w = df.writeStream.format("memory").queryName(name)
+        if checkpoint_dir:
+            w = w.option("checkpointLocation", checkpoint_dir)
+        w.outputMode(mode).trigger(availableNow=True).start().awaitTermination()
     return _detach_memory_sink(spark, name)
 
 
@@ -252,24 +256,6 @@ def stream_deduped_visits(
     return _replay_to_memory(spark, agg, "dedupvisits")
 
 
-def _replay_to_memory_append(
-    spark: SparkSession, df: DataFrame, prefix: str
-) -> DataFrame:
-    """Append-mode variant of :func:`_replay_to_memory` — for queries that
-    only support append output (stream-stream joins)."""
-    with _state_partitions(spark):
-        name = f"{prefix}_{uuid.uuid4().hex}"
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _detach_memory_sink(spark, name)
-
-
 def stream_click_error_join(
     spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
@@ -322,7 +308,7 @@ def stream_click_error_join(
         "error_ts",
         (F.unix_micros("error_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    return _replay_to_memory_append(spark, joined, "ssjoin")
+    return _replay_to_memory(spark, joined, "ssjoin", "append")
 
 
 def stream_enriched_events(
@@ -346,8 +332,8 @@ def stream_enriched_events(
     from ..operators.timeseries import events_enriched_with_customer
 
     ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
-    return _replay_to_memory_append(
-        spark, events_enriched_with_customer(ev, customer), "enrich"
+    return _replay_to_memory(
+        spark, events_enriched_with_customer(ev, customer), "enrich", "append"
     )
 
 
@@ -508,20 +494,8 @@ def read_heavy_hitters(
 
 
 def _ts_micros(tbl):
-    """Normalize an arrow events table's ``ts`` to timestamp[us] before a
-    replay writer re-shards it.
-
-    Every replay writer round-trips the source file through pyarrow; a
-    source written by THIS engine's session (e.g. the soak harness) is
-    INT96, which pyarrow reads as timestamp[ns] and would re-write as
-    INT64 TIMESTAMP(NANOS) — an encoding the streaming scan's explicit
-    µs schema refuses (measured: FAILED_READ_FILE.PARQUET_COLUMN_
-    DATA_TYPE_MISMATCH at the r8 soak), and one that silently breaks
-    any µs-unit epoch arithmetic on the cast column (the late-arrival
-    delay model). Truncating ns → µs is the engine's own convention
-    (``timestamp_micros(ts DIV 1000)`` in read_events). µs inputs (the
-    driver fixtures) pass through untouched, so verified paths see
-    byte-identical replay dirs."""
+    """Normalize an arrow events table's ``ts`` to timestamp[us] — the
+    ns → µs rule of :func:`_replay_dir`."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -533,11 +507,104 @@ def _ts_micros(tbl):
     return tbl.set_column(i, pa.field("ts", cast.type), cast)
 
 
-#: Replay-dir cache for the outer-join heartbeat harness, keyed on the
-#: source file's (path, mtime_ns) — nanosecond mtime, the same rule the
-#: events schema probe follows (round-3 ADVICE), so an in-process fixture
-#: rewrite reliably invalidates.
-_OUTER_REPLAY_DIRS: dict[tuple[str, int], str] = {}
+# ---------------------------------------------------------------------------
+# Replay materializer: fixtures as mtime-ordered multi-file streams
+# ---------------------------------------------------------------------------
+#: every replay directory this process has materialized or found, keyed
+#: on (kind, source path, source st_mtime_ns, shaping params)
+_REPLAY_DIRS: dict[tuple, str] = {}
+
+
+def _replay_dir(kind: str, src: str, params: tuple, build) -> str:
+    """Materialize the parquet file ``src`` once as a replay directory of
+    shape ``kind`` and return its path; ``build(out, tbl)`` writes the
+    directory's files from the source table (usually via
+    :func:`_write_chunks`).
+
+    The file source turns a directory into a stream by replaying its files
+    in modification-time order (the Structured Streaming file-source
+    contract), so a replay directory is a deterministic stand-in for the
+    reference's Pub/Sub stream, and the stream/batch oracles re-derive
+    chunk membership from the data alone.
+
+    * Cache key: (kind, src, nanosecond mtime, params). The ns mtime is
+      the rule the events schema probe follows, so an in-process fixture
+      rewrite reliably invalidates; ``params`` must carry EVERY constant
+      that shapes the files (chunk counts, split fraction, the
+      late-arrival jitter) — a constant retune must never reuse a dir
+      built under the old shape.
+    * Location: derived from the key under the temp dir, so repeated
+      invocations (bench reps, the driver's rounds, test reruns, later
+      processes) reuse one materialization per fixture version instead of
+      leaking a fresh tempdir per call.
+    * ``_COMPLETE`` is written last, so a half-built dir from an
+      interrupted run is rebuilt, not trusted. Its leading underscore
+      keeps it out of Spark's file listings (the ``_SUCCESS`` convention).
+    * An events table's ``ts`` is normalized to µs before ``build``: a
+      source written by this engine's session is INT96, which pyarrow
+      reads as timestamp[ns] and would re-write as INT64 TIMESTAMP(NANOS)
+      — an encoding the streaming scan's explicit µs schema refuses
+      (FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH, measured at the
+      r8 soak) and one that silently breaks any µs-unit epoch arithmetic
+      on the column (the late-arrival delay model). Truncating ns → µs is
+      the engine's own convention (``timestamp_micros(ts DIV 1000)`` in
+      read_events); µs sources (the driver fixtures) pass through
+      untouched.
+    """
+    import hashlib
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    key = (kind, src, os.stat(src).st_mtime_ns, params)
+    if key not in _REPLAY_DIRS:
+        tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
+        out = os.path.join(tempfile.gettempdir(), f"{kind}_replay_{tag}")
+        marker = os.path.join(out, "_COMPLETE")
+        if not os.path.isfile(marker):
+            os.makedirs(out, exist_ok=True)
+            tbl = pq.read_table(src)
+            build(out, _ts_micros(tbl) if "ts" in tbl.column_names else tbl)
+            with open(marker, "w") as fh:
+                fh.write("ok\n")
+        _REPLAY_DIRS[key] = out
+    return _REPLAY_DIRS[key]
+
+
+def _write_chunks(out: str, tbl, n_chunks: int, tail=()) -> list[str]:
+    """Write ``tbl`` in row order as ``n_chunks`` equal slices
+    ``chunk_%04d.parquet`` (the last may be shorter), then each ``(name,
+    table)`` of ``tail``, and give the files strictly increasing mtimes
+    2 s apart in that order — the order the file source replays them in;
+    2 s so coarse-grained filesystems still tell them apart. An empty
+    table still writes one (empty) chunk, so the directory always carries
+    the schema a stream reader infers. Returns the paths in replay order."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(out, exist_ok=True)
+    n = tbl.num_rows
+    step = max(1, (n + n_chunks - 1) // n_chunks)
+    files = [
+        (f"chunk_{i // step:04d}.parquet", tbl.slice(i, step))
+        for i in range(0, max(n, 1), step)
+    ]
+    paths = []
+    for name, part in [*files, *tail]:
+        paths.append(os.path.join(out, name))
+        pq.write_table(part, paths[-1])
+    base = time.time() - 2 * len(paths)
+    for i, p in enumerate(paths):
+        os.utime(p, (base + 2 * i, base + 2 * i))
+    return paths
+
+
+def _sorted(tbl, *cols: str):
+    """``tbl`` in ascending (stable) order of ``cols``."""
+    import pyarrow.compute as pc
+
+    return tbl.take(pc.sort_indices(tbl, sort_keys=[(c, "ascending") for c in cols]))
 
 
 def _heartbeat_replay_dir(events_path: str, n_chunks: int = 3) -> str:
@@ -554,78 +621,38 @@ def _heartbeat_replay_dir(events_path: str, n_chunks: int = 3) -> str:
     data, strictly increasing): the first advances both sides' watermarks
     past all real data, the second triggers the batch that evicts-and-
     emits every remaining unmatched row. Heartbeats are filtered out of
-    the join output by ``user_id >= 0``.
+    the join output by ``user_id >= 0``; an empty source gets none.
 
-    Chunks are split in event-time order with strictly increasing file
-    mtimes so the file source (which orders micro-batches by modification
-    time) replays them as a monotone stream — no artificial lateness, so
-    stream output equals the batch left join exactly.
+    Chunks are split in event-time order, so the replay is a monotone
+    stream — no artificial lateness, so stream output equals the batch
+    left join exactly.
     """
-    import hashlib
-    import tempfile
-    import time as _time
     from datetime import timedelta
 
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    key = (events_path, os.stat(events_path).st_mtime_ns)
-    if key in _OUTER_REPLAY_DIRS:
-        return _OUTER_REPLAY_DIRS[key]
+    def build(out, tbl):
+        tbl = _sorted(tbl, "ts")
+        heartbeats = []
+        for j in range(2 if tbl.num_rows else 0):
+            ts = tbl["ts"][-1].as_py() + timedelta(days=1, minutes=j)
+            rows = [
+                {
+                    "event_id": -1 - 2 * j - k,
+                    "ts": ts,
+                    "user_id": -1,
+                    "event_type": variant,
+                    "value": 0.0,
+                    "props": "{}",
+                }
+                for k, variant in enumerate(("click", "error"))
+            ]
+            heartbeats.append(
+                (f"heartbeat_{j}.parquet", pa.Table.from_pylist(rows, schema=tbl.schema))
+            )
+        _write_chunks(out, tbl, n_chunks, heartbeats)
 
-    # Deterministic location derived from the cache key: repeated
-    # invocations (bench's n=3, the driver's per-round run, test reruns)
-    # REUSE one materialization per fixture version instead of leaking a
-    # fresh tempdir each call; the _COMPLETE marker is written last so a
-    # half-built dir from an interrupted run is rebuilt, not trusted.
-    tag = hashlib.md5(f"{events_path}:{key[1]}:{n_chunks}".encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"ssjoin_outer_replay_{tag}")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _OUTER_REPLAY_DIRS[key] = out
-        return out
-
-    tbl = _ts_micros(pq.read_table(events_path))
-    tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("ts", "ascending")]))
-    os.makedirs(out, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        p = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), p)
-        paths.append(p)
-
-    last_ts = tbl.column("ts")[-1].as_py()
-    for j in range(2):
-        hb = [
-            {
-                "event_id": -1 - 2 * j - k,
-                "ts": last_ts + timedelta(days=1, minutes=j),
-                "user_id": -1,
-                "event_type": variant,
-                "value": 0.0,
-                "props": "{}",
-            }
-            for k, variant in enumerate(("click", "error"))
-        ]
-        p = os.path.join(out, f"heartbeat_{j}.parquet")
-        pq.write_table(pa.Table.from_pylist(hb, schema=tbl.schema), p)
-        paths.append(p)
-
-    # file source orders by modification time — pin a strictly increasing
-    # sequence (2 s apart: coarser-grained filesystems still distinguish)
-    base = _time.time() - 2 * len(paths)
-    for i, p in enumerate(paths):
-        os.utime(p, (base + 2 * i, base + 2 * i))
-
-    # leading underscore: Spark's file listings skip `_`/`.`-prefixed
-    # paths (the _SUCCESS convention), so the marker never joins the scan
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _OUTER_REPLAY_DIRS[key] = out
-    return out
+    return _replay_dir("heartbeat", events_path, (n_chunks,), build)
 
 
 def stream_click_error_left_join(
@@ -706,7 +733,7 @@ def stream_click_error_left_join(
     # sides) then stalls at the last REAL click and withholds exactly that
     # click's NULL row (reproduced; the error side kept advancing, which
     # made the bug a single-row discrepancy).
-    return _replay_to_memory_append(spark, joined, "ssjoin_outer").where(
+    return _replay_to_memory(spark, joined, "ssjoin_outer", "append").where(
         F.col("user_id") >= 0
     )
 
@@ -737,59 +764,22 @@ def stream_quality_filtered_docs(spark: SparkSession, docs_path: str) -> DataFra
         path = docs_path
     docs = reader.parquet(path)
     filtered = quality_projection(docs).where(F.col("quality") >= GATE_MIN_QUALITY)
-    return _replay_to_memory_append(spark, filtered, "qualdocs")
-
-
-_DOCS_REPLAY_DIRS: dict[tuple[str, int, int], str] = {}
-
-_EVENTS_REPLAY_DIRS: dict[tuple[str, int, int], str] = {}
+    return _replay_to_memory(spark, filtered, "qualdocs", "append")
 
 
 def _chunked_events_replay_dir(events_path: str, n_chunks: int = 3) -> str:
-    """ts-ordered multi-file replay of the events fixture (one micro-batch
-    per file) — the single-file fixture otherwise replays as ONE batch,
-    which never exercises cross-batch state. Chunk boundaries fall wherever
-    the ts order puts them, so events of the same minute routinely straddle
-    two shipments — exactly the condition the partial-merge twins must
-    survive. Same _COMPLETE-marker pattern as the docs replay."""
-    import hashlib
-    import tempfile
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    key = (events_path, os.stat(events_path).st_mtime_ns, n_chunks)
-    if key in _EVENTS_REPLAY_DIRS:
-        return _EVENTS_REPLAY_DIRS[key]
-    tag = hashlib.md5(f"{events_path}:{key[1]}:{n_chunks}".encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"events_replay_{tag}")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _EVENTS_REPLAY_DIRS[key] = out
-        return out
-
-    tbl = _ts_micros(pq.read_table(events_path))
-    tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("ts", "ascending")]))
-    os.makedirs(out, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        fp = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), fp)
-        paths.append(fp)
-    base = _time.time() - 2 * len(paths)
-    for i, fp in enumerate(paths):
-        os.utime(fp, (base + 2 * i, base + 2 * i))
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _EVENTS_REPLAY_DIRS[key] = out
-    return out
-
-
-
-_SPLIT_REPLAY_DIRS: dict[tuple, tuple[str, str]] = {}
+    """ts-ordered (stable sort) multi-file replay of the events fixture —
+    the single-file fixture otherwise replays as ONE batch, which never
+    exercises cross-batch state. Chunk boundaries fall wherever the ts
+    order puts them, so events of the same minute routinely straddle two
+    shipments — exactly the condition the partial-merge twins must
+    survive."""
+    return _replay_dir(
+        "events",
+        events_path,
+        (n_chunks,),
+        lambda out, tbl: _write_chunks(out, _sorted(tbl, "ts"), n_chunks),
+    )
 
 
 def _split_replay_dir(
@@ -797,63 +787,22 @@ def _split_replay_dir(
 ) -> tuple[str, str]:
     """(ts, event_id)-ordered split of the events fixture into a single
     HISTORY parquet (the batch-backfill input) and a LIVE replay
-    directory (chunked, mtime-ordered) — the backfill-then-stream
-    migration shape the TWS initial-state bootstrap replays. Same
-    _COMPLETE-marker + (path, mtime, params)-keyed cache discipline as
-    the other replay builders. Returns (history_file, live_dir)."""
-    import hashlib
-    import tempfile
-    import time as _time
-
-    import pyarrow.compute as pc
+    directory — the backfill-then-stream migration shape the TWS
+    initial-state bootstrap replays; the unique tie-break makes the cut a
+    pure function of the data. Both halves are nonempty from two rows on,
+    and always readable parquet. Returns (history_file, live_dir)."""
     import pyarrow.parquet as pq
 
-    key = (
-        events_path,
-        os.stat(events_path).st_mtime_ns,
-        history_fraction,
-        n_live_chunks,
-    )
-    if key in _SPLIT_REPLAY_DIRS:
-        return _SPLIT_REPLAY_DIRS[key]
-    tag = hashlib.md5(
-        f"{events_path}:{key[1]}:{history_fraction}:{n_live_chunks}".encode()
-    ).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"events_split_replay_{tag}")
-    history = os.path.join(out, "history.parquet")
-    live = os.path.join(out, "live")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _SPLIT_REPLAY_DIRS[key] = (history, live)
-        return history, live
+    def build(out, tbl):
+        tbl = _sorted(tbl, "ts", "event_id")
+        n = tbl.num_rows
+        cut = max(0, min(max(int(n * history_fraction), 1), n - 1))
+        pq.write_table(tbl.slice(0, cut), os.path.join(out, "history.parquet"))
+        _write_chunks(os.path.join(out, "live"), tbl.slice(cut), n_live_chunks)
 
-    tbl = _ts_micros(pq.read_table(events_path))
-    tbl = tbl.take(
-        pc.sort_indices(
-            tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-        )
-    )
-    n = tbl.num_rows
-    cut = min(max(int(n * history_fraction), 1), n - 1)  # both halves nonempty
-    os.makedirs(live, exist_ok=True)
-    pq.write_table(tbl.slice(0, cut), history)
-    rest = tbl.slice(cut)
-    step = max(1, (rest.num_rows + n_live_chunks - 1) // n_live_chunks)
-    paths = []
-    for i in range(0, rest.num_rows, step):
-        fp = os.path.join(live, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(rest.slice(i, step), fp)
-        paths.append(fp)
-    base = _time.time() - 2 * len(paths)
-    for i, fp in enumerate(paths):
-        os.utime(fp, (base + 2 * i, base + 2 * i))
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _SPLIT_REPLAY_DIRS[key] = (history, live)
-    return history, live
+    out = _replay_dir("split", events_path, (history_fraction, n_live_chunks), build)
+    return os.path.join(out, "history.parquet"), os.path.join(out, "live")
 
-
-_LATE_REPLAY_DIRS: dict[tuple, str] = {}
 
 #: Deterministic per-event delivery delay for the late-arrival replay:
 #: most events arrive within minutes (``event_id % 13`` minutes of
@@ -876,63 +825,29 @@ def _late_arrival_replay_dir(events_path: str, n_chunks: int = 3) -> str:
     (event time + deterministic per-event delay, ties by event_id) as an
     n-chunk multi-file replay — the out-of-order delivery the ts-ordered
     replay (:func:`_chunked_events_replay_dir`) deliberately cannot
-    produce. Same mtime-ordering + _COMPLETE-marker pattern; ``ts`` is
-    rewritten as µs so downstream never hits the NANOS branch."""
-    import hashlib
-    import tempfile
-    import time as _time
-
+    produce. ``ts`` is written as zone-less µs."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    # the jitter constants are part of the key: a constant retune must
-    # never reuse a dir materialized under the old arrival order
-    jit = (LATE_EVERY, LATE_DAYS_MOD, JITTER_MINUTES_MOD)
-    key = (events_path, os.stat(events_path).st_mtime_ns, n_chunks, jit)
-    if key in _LATE_REPLAY_DIRS:
-        return _LATE_REPLAY_DIRS[key]
-    tag = hashlib.md5(
-        f"late:{events_path}:{key[1]}:{n_chunks}:{jit}".encode()
-    ).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"late_replay_{tag}")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _LATE_REPLAY_DIRS[key] = out
-        return out
+    def build(out, tbl):
+        ts = tbl["ts"].cast(pa.timestamp("us"))
+        tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", ts)
+        eid = tbl["event_id"].to_numpy()
+        delay_us = np.where(
+            eid % LATE_EVERY == 0,
+            (eid % LATE_DAYS_MOD) * 86_400_000_000,
+            (eid % JITTER_MINUTES_MOD) * 60_000_000,
+        )
+        arrival = pa.array(ts.cast(pa.int64()).to_numpy() + delay_us, pa.int64())
+        order = pc.sort_indices(
+            pa.table({"arrival": arrival, "event_id": tbl["event_id"]}),
+            sort_keys=[("arrival", "ascending"), ("event_id", "ascending")],
+        )
+        _write_chunks(out, tbl.take(order), n_chunks)
 
-    tbl = _ts_micros(pq.read_table(events_path))
-    ts_idx = tbl.schema.get_field_index("ts")
-    tbl = tbl.set_column(ts_idx, "ts", tbl["ts"].cast(pa.timestamp("us")))
-    eid = tbl["event_id"].to_numpy()
-    ts_us = tbl["ts"].cast(pa.int64()).to_numpy()
-    delay_us = np.where(
-        eid % LATE_EVERY == 0,
-        (eid % LATE_DAYS_MOD) * 86_400_000_000,
-        (eid % JITTER_MINUTES_MOD) * 60_000_000,
-    )
-    arrival = pa.array(ts_us + delay_us, pa.int64())
-    order = pc.sort_indices(
-        pa.table({"arrival": arrival, "event_id": tbl["event_id"]}),
-        sort_keys=[("arrival", "ascending"), ("event_id", "ascending")],
-    )
-    tbl = tbl.take(order)
-    os.makedirs(out, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        fp = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), fp)
-        paths.append(fp)
-    base = _time.time() - 2 * len(paths)
-    for i, fp in enumerate(paths):
-        os.utime(fp, (base + 2 * i, base + 2 * i))
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _LATE_REPLAY_DIRS[key] = out
-    return out
+    jitter = (LATE_EVERY, LATE_DAYS_MOD, JITTER_MINUTES_MOD)
+    return _replay_dir("late", events_path, (n_chunks, jitter), build)
 
 
 def stream_late_arrivals_audit(
@@ -1062,8 +977,6 @@ def stream_visits_with_late_backfill(
 
     Output: (minute, visits).
     """
-    import uuid
-
     replay = _late_arrival_replay_dir(events_path, n_chunks)
     late = stream_late_arrivals_audit(spark, events_path, n_chunks)
     agg = (
@@ -1073,18 +986,8 @@ def stream_visits_with_late_backfill(
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("minute"), "n")
     )
-    name = f"backfill_{uuid.uuid4().hex}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     streamed = (
-        _detach_memory_sink(spark, name)
+        _replay_to_memory(spark, agg, "backfill", "update")
         .groupBy("minute")
         .agg(F.max("n").alias("n"))
     )
@@ -1140,10 +1043,6 @@ def _chunked_docs_replay_dir(docs_path: str, n_chunks: int = 3) -> str:
     replay (one micro-batch per file) — the streaming analogue of a crawl
     landing in an object-store drop folder one shipment at a time.
 
-    Chunks are doc_id-ascending with strictly increasing mtimes so the
-    file source replays them in order; a _COMPLETE marker guards against
-    trusting a half-built dir (same pattern as the events replay above).
-
     mFPT note (r10 optimization): consumers of this dir read it with
     ``maxFilesPerTrigger=2`` — 2 micro-batches ([c0,c1],[c2]) instead of
     3, the r5 click_error/drop_audit precedent. Each consumer's output is
@@ -1156,40 +1055,12 @@ def _chunked_docs_replay_dir(docs_path: str, n_chunks: int = 3) -> str:
     commits, job scheduling) saved per query — ~30-40% of replay-harness
     wall time at sf0.1.
     """
-    import hashlib
-    import tempfile
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    key = (docs_path, os.stat(docs_path).st_mtime_ns, n_chunks)
-    if key in _DOCS_REPLAY_DIRS:
-        return _DOCS_REPLAY_DIRS[key]
-    tag = hashlib.md5(f"{docs_path}:{key[1]}:{n_chunks}".encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"docs_replay_{tag}")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _DOCS_REPLAY_DIRS[key] = out
-        return out
-
-    tbl = pq.read_table(docs_path)
-    tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("doc_id", "ascending")]))
-    os.makedirs(out, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        p = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), p)
-        paths.append(p)
-    base = _time.time() - 2 * len(paths)
-    for i, p in enumerate(paths):
-        os.utime(p, (base + 2 * i, base + 2 * i))
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _DOCS_REPLAY_DIRS[key] = out
-    return out
+    return _replay_dir(
+        "docs",
+        docs_path,
+        (n_chunks,),
+        lambda out, tbl: _write_chunks(out, _sorted(tbl, "doc_id"), n_chunks),
+    )
 
 
 class IngestDedupWriter:
@@ -1585,7 +1456,7 @@ def stream_image_ingest_features(
         .parquet(replay)
     )
     hist = image_histogram(image_blob_projection(stream))
-    return _replay_to_memory_append(spark, hist, "imghist")
+    return _replay_to_memory(spark, hist, "imghist", "append")
 
 
 def stream_curated_ingest(
@@ -1723,7 +1594,7 @@ def stream_ivf_assign(spark: SparkSession, emb_path: str) -> DataFrame:
             F.col("b.c_cos").alias("c_cos"),
         )
     )
-    return _replay_to_memory_append(spark, assigned, "ivfassign")
+    return _replay_to_memory(spark, assigned, "ivfassign", "append")
 
 
 def stream_postings_ingest(spark: SparkSession, docs_path: str) -> DataFrame:
@@ -1785,7 +1656,7 @@ def stream_postings_ingest(spark: SparkSession, docs_path: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("doc_id", F.col("p.term").alias("term"), F.col("p.tf").alias("tf"), "dl")
-    return _replay_to_memory_append(spark, postings, "postings")
+    return _replay_to_memory(spark, postings, "postings", "append")
 
 
 def stream_shard_assignment(
@@ -2388,9 +2259,6 @@ def stream_constraint_report(
 # ---------------------------------------------------------------------------
 # Exactly-once vs INCRBY: the duplicate-delivery audit (SURVEY §4 delta 1)
 # ---------------------------------------------------------------------------
-_DUP_REPLAY_DIRS: dict[tuple, str] = {}
-
-
 def _duplicate_delivery_replay_dir(
     events_path: str, n_chunks: int = 3, dup_chunk: int = 1
 ) -> str:
@@ -2401,51 +2269,17 @@ def _duplicate_delivery_replay_dir(
     deterministic: chunk membership is a pure function of the fixture
     (total order ts, event_id — unique tie-break, so the DuckDB oracle
     re-derives it exactly), and the redelivered copy always arrives
-    last. Cache key carries every shaping constant (r7 lesson: a
-    constant retune must never reuse a stale dir)."""
-    import hashlib
-    import tempfile
-    import time as _time
+    last."""
 
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    key = (events_path, os.stat(events_path).st_mtime_ns, n_chunks, dup_chunk)
-    if key in _DUP_REPLAY_DIRS:
-        return _DUP_REPLAY_DIRS[key]
-    tag = hashlib.md5(
-        f"{events_path}:{key[1]}:{n_chunks}:{dup_chunk}".encode()
-    ).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"dup_delivery_replay_{tag}")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _DUP_REPLAY_DIRS[key] = out
-        return out
-
-    tbl = _ts_micros(pq.read_table(events_path))
-    tbl = tbl.take(
-        pc.sort_indices(
-            tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
+    def build(out, tbl):
+        tbl = _sorted(tbl, "ts", "event_id")
+        step = max(1, (tbl.num_rows + n_chunks - 1) // n_chunks)
+        redelivered = tbl.slice(dup_chunk * step, step)
+        _write_chunks(
+            out, tbl, n_chunks, [(f"redelivered_{dup_chunk:04d}.parquet", redelivered)]
         )
-    )
-    os.makedirs(out, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        fp = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), fp)
-        paths.append(fp)
-    redelivered = os.path.join(out, f"redelivered_{dup_chunk:04d}.parquet")
-    pq.write_table(tbl.slice(dup_chunk * step, step), redelivered)
-    paths.append(redelivered)
-    base = _time.time() - 2 * len(paths)
-    for i, fp in enumerate(paths):
-        os.utime(fp, (base + 2 * i, base + 2 * i))
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _DUP_REPLAY_DIRS[key] = out
-    return out
+
+    return _replay_dir("dup", events_path, (n_chunks, dup_chunk), build)
 
 
 def stream_duplicate_delivery_audit(

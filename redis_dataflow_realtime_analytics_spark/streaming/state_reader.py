@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 #: N_CHUNKS files replayed one micro-batch each.
 N_CHUNKS = 3
 
-_ORDERED_REPLAY_DIRS: dict[tuple, str] = {}
 _CKPT_DIRS: dict[tuple, str] = {}
 
 
@@ -68,50 +67,17 @@ def _ensure_state_coordinator(spark: SparkSession) -> None:
 
 def _ordered_chunked_replay_dir(events_path: str, n_chunks: int = N_CHUNKS) -> str:
     """(ts, event_id)-ordered n-chunk replay dir (one file per
-    micro-batch, mtime ladder fixes arrival order). Same shape as the
-    duplicate-delivery replay minus the redelivered copy: the total
-    order is SQL-re-derivable, so a batch-k state snapshot has an exact
-    chunk-prefix oracle."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    micro-batch). Same shape as the duplicate-delivery replay minus the
+    redelivered copy: the total order is SQL-re-derivable, so a batch-k
+    state snapshot has an exact chunk-prefix oracle."""
+    from .pipeline import _replay_dir, _sorted, _write_chunks
 
-    from .pipeline import _ts_micros
-
-    key = (events_path, os.stat(events_path).st_mtime_ns, n_chunks)
-    if key in _ORDERED_REPLAY_DIRS:
-        return _ORDERED_REPLAY_DIRS[key]
-    tag = hashlib.md5(
-        f"ordered:{events_path}:{key[1]}:{n_chunks}".encode()
-    ).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"state_reader_replay_{tag}")
-    marker = os.path.join(out, "_COMPLETE")
-    if os.path.isfile(marker):
-        _ORDERED_REPLAY_DIRS[key] = out
-        return out
-
-    import time as _time
-
-    tbl = _ts_micros(pq.read_table(events_path))
-    tbl = tbl.take(
-        pc.sort_indices(
-            tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-        )
+    return _replay_dir(
+        "ordered",
+        events_path,
+        (n_chunks,),
+        lambda out, tbl: _write_chunks(out, _sorted(tbl, "ts", "event_id"), n_chunks),
     )
-    os.makedirs(out, exist_ok=True)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        fp = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), fp)
-        paths.append(fp)
-    base = _time.time() - 2 * len(paths)
-    for i, fp in enumerate(paths):
-        os.utime(fp, (base + 2 * i, base + 2 * i))
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _ORDERED_REPLAY_DIRS[key] = out
-    return out
 
 
 def _checkpointed_run(

@@ -18,7 +18,6 @@ answer from an update-mode memory sink.
 from __future__ import annotations
 
 import sys
-import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 from typing import Any
@@ -134,18 +133,11 @@ def stream_exact_uniques_per_variant(
     ``metrics.uniques_per_variant``. ``checkpoint_dir`` pins the
     checkpoint location so the soak harness can weigh the state store
     afterwards (default: engine temp checkpoint)."""
-    updates = uniques_updates(spark, events_path, max_files_per_trigger)
-    from .pipeline import _detach_memory_sink, _state_partitions
+    from .pipeline import _replay_to_memory
 
-    name = f"state_uniq_{uuid.uuid4().hex}"
-    with _state_partitions(spark):
-        w = updates.writeStream.format("memory").queryName(name)
-        if checkpoint_dir:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        q = w.outputMode("update").trigger(availableNow=True).start()
-        q.awaitTermination()
+    updates = uniques_updates(spark, events_path, max_files_per_trigger)
     return (
-        _detach_memory_sink(spark, name)
+        _replay_to_memory(spark, updates, "state_uniq", "update", checkpoint_dir)
         .groupBy("variant")
         .agg(F.max("unique_users").alias("unique_users"))
     )
@@ -281,20 +273,10 @@ def stream_sessions_ttl(
     updates = sessions_updates(
         spark, events_path, gap_minutes, max_files_per_trigger, prebuilt_replay
     )
-    from .pipeline import _detach_memory_sink, _state_partitions
+    from .pipeline import _replay_to_memory
 
-    name = f"state_sess_{uuid.uuid4().hex}"
-    with _state_partitions(spark):
-        q = (
-            updates.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        _detach_memory_sink(spark, name)
+        _replay_to_memory(spark, updates, "state_sess", "append")
         .where(F.col("user_id") >= 0)  # drop heartbeat rows
         .select(
             "user_id",
@@ -646,21 +628,15 @@ def stream_exact_uniques_per_variant_tws(
 ) -> DataFrame:
     """Run :func:`tws_uniques_updates` availableNow to completion; final
     exact (variant, unique_users), same oracle as the legacy twin."""
-    from .pipeline import _detach_memory_sink, _state_partitions
+    from .pipeline import _replay_to_memory
 
-    name = f"tws_uniq_{uuid.uuid4().hex}"
-    with _tws_session(spark), _state_partitions(spark):
+    with _tws_session(spark):
         updates = tws_uniques_updates(
             spark, events_path, max_files_per_trigger, state_impl
         )
-        w = updates.writeStream.format("memory").queryName(name)
-        if checkpoint_dir:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        q = w.outputMode("update").trigger(availableNow=True).start()
-        q.awaitTermination()
+        out = _replay_to_memory(spark, updates, "tws_uniq", "update", checkpoint_dir)
     return (
-        _detach_memory_sink(spark, name)
-        .groupBy("variant")
+        out.groupBy("variant")
         .agg(F.max("unique_users").alias("unique_users"))
     )
 
@@ -696,7 +672,7 @@ def stream_uniques_tws_bootstrapped(
         StatefulProcessorHandle,
     )
 
-    from .pipeline import _detach_memory_sink, _split_replay_dir, _state_partitions
+    from .pipeline import _replay_to_memory, _split_replay_dir
 
     history_path, live_dir = _split_replay_dir(events_path, history_fraction)
     seed = (
@@ -752,8 +728,7 @@ def stream_uniques_tws_bootstrapped(
     ev = normalize_events(
         read_events_stream(spark, live_dir, max_files_per_trigger)
     )
-    name = f"tws_boot_{uuid.uuid4().hex}"
-    with _tws_session(spark), _state_partitions(spark):
+    with _tws_session(spark):
         updates = (
             ev.select("variant", "user_id")
             .groupBy("variant")
@@ -765,17 +740,12 @@ def stream_uniques_tws_bootstrapped(
                 initialState=seed.groupBy("variant"),
             )
         )
-        w = updates.writeStream.format("memory").queryName(name)
-        if checkpoint_dir:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        q = w.outputMode("update").trigger(availableNow=True).start()
-        q.awaitTermination()
+        out = _replay_to_memory(spark, updates, "tws_boot", "update", checkpoint_dir)
     seed_counts = seed.groupBy("variant").agg(
         F.count("*").alias("unique_users")
     )
     return (
-        _detach_memory_sink(spark, name)
-        .unionByName(seed_counts)
+        out.unionByName(seed_counts)
         .groupBy("variant")
         .agg(F.max("unique_users").alias("unique_users"))
     )
@@ -892,7 +862,7 @@ def stream_sessions_ttl_tws(
         def close(self) -> None:
             pass
 
-    from .pipeline import _detach_memory_sink, _heartbeat_replay_dir, _state_partitions
+    from .pipeline import _heartbeat_replay_dir, _replay_to_memory
 
     # see stream_sessions_ttl: prebuilt_replay injects a caller-built
     # (possibly out-of-order) replay directory
@@ -904,22 +874,13 @@ def stream_sessions_ttl_tws(
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", F.unix_micros("ts").alias("tus"))
     )
-    name = f"tws_sess_{uuid.uuid4().hex}"
-    with _tws_session(spark), _state_partitions(spark):
+    with _tws_session(spark):
         updates = ev.groupBy("user_id").transformWithState(
             Sessions(), SESSION_OUT_SCHEMA, "Append", "EventTime"
         )
-        q = (
-            updates.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        out = _replay_to_memory(spark, updates, "tws_sess", "append")
     return (
-        _detach_memory_sink(spark, name)
-        .where(F.col("user_id") >= 0)  # drop heartbeat rows
+        out.where(F.col("user_id") >= 0)  # drop heartbeat rows
         .select(
             "user_id",
             F.timestamp_micros("start_us").alias("session_start"),

@@ -200,3 +200,30 @@ def test_round6_operators_empty(spark, tmp_path):
     # version diff: every class count is derived from an empty history
     diff = sampling.corpus_version_diff(spark, d)
     assert diff.count() == 0
+
+
+def test_replay_audits_empty(spark, tmp_path):
+    """The replay-harness keys on a zero-row events source: each runs one
+    empty micro-batch and returns its usual columns with no rows, where
+    the replay builders once raised or left nothing to infer a stream
+    schema from."""
+    import pyarrow.parquet as pq
+
+    from redis_dataflow_realtime_analytics_spark.streaming import pipeline as sp
+
+    src = f"{tmp_path}/events.parquet"
+    pq.write_table(pq.read_table(f"{SF_SMOKE}/events.parquet").slice(0, 0), src)
+    for fn, cols in (
+        (
+            sp.stream_click_error_left_join,
+            ["user_id", "click_id", "error_id", "click_ts", "error_ts", "gap_us"],
+        ),
+        (sp.stream_late_arrivals_audit, ["minute", "late_events"]),
+        (
+            sp.stream_duplicate_delivery_audit,
+            ["minute", "visits", "incrby_visits", "overcount"],
+        ),
+    ):
+        out = fn(spark, src)
+        assert out.columns == cols, fn.__name__
+        assert out.count() == 0, fn.__name__

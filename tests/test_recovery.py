@@ -36,7 +36,6 @@ from __future__ import annotations
 import os
 import time
 
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -92,25 +91,9 @@ def _uid_ordered_replay(tmp: str, n_chunks: int = 8) -> tuple[str, int]:
     """Events replay chunked in user_id order: each uid's rows land in one
     contiguous run of chunks, so early chunks carry users that never
     reappear — the fixture shape that makes lost state observable."""
-    tbl = sp._ts_micros(pq.read_table(EV))
-    tbl = tbl.take(
-        pc.sort_indices(
-            tbl, sort_keys=[("user_id", "ascending"), ("ts", "ascending")]
-        )
-    )
+    tbl = sp._sorted(sp._ts_micros(pq.read_table(EV)), "user_id", "ts")
     out = os.path.join(tmp, "uid_replay")
-    os.makedirs(out)
-    n = tbl.num_rows
-    step = max(1, (n + n_chunks - 1) // n_chunks)
-    paths = []
-    for i in range(0, n, step):
-        p = os.path.join(out, f"chunk_{i // step:04d}.parquet")
-        pq.write_table(tbl.slice(i, step), p)
-        paths.append(p)
-    base = time.time() - 2 * len(paths)
-    for i, p in enumerate(paths):
-        os.utime(p, (base + 2 * i, base + 2 * i))
-    return out, len(paths)
+    return out, len(sp._write_chunks(out, tbl, n_chunks))
 
 
 def _chunk_pairs(replay: str, name: str) -> set[tuple[str, int]]:

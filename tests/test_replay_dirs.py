@@ -101,3 +101,72 @@ def test_replay_dir_digest(kind):
         "\n".join(f"{f} {_file_digest(os.path.join(root, f))}" for f in files).encode()
     )
     assert (tuple(files), digest.hexdigest()) == _REPLAY_DIGESTS[kind]
+
+
+#: kind → (builder(src, **params) → the dir holding its chunk files,
+#: source fixture, default shaping params)
+_SHAPES = {
+    "heartbeat": (sp._heartbeat_replay_dir, EVENTS, {"n_chunks": 3}),
+    "events": (sp._chunked_events_replay_dir, EVENTS, {"n_chunks": 3}),
+    "split": (
+        lambda src, **p: sp._split_replay_dir(src, **p)[1],
+        EVENTS,
+        {"history_fraction": 0.5, "n_live_chunks": 3},
+    ),
+    "late": (sp._late_arrival_replay_dir, EVENTS, {"n_chunks": 3}),
+    "docs": (sp._chunked_docs_replay_dir, DOCS, {"n_chunks": 3}),
+    "dup": (sp._duplicate_delivery_replay_dir, EVENTS, {"n_chunks": 3, "dup_chunk": 1}),
+    "ordered": (state_reader._ordered_chunked_replay_dir, EVENTS, {"n_chunks": 3}),
+}
+_CHANGED = {"n_chunks": 5, "n_live_chunks": 5, "history_fraction": 0.25, "dup_chunk": 2}
+
+
+def _chunks(d: str) -> list[str]:
+    return sorted(f for f in os.listdir(d) if f.startswith("chunk_"))
+
+
+@pytest.mark.parametrize(
+    "kind,param", [(k, p) for k, (_, _, ps) in _SHAPES.items() for p in ps]
+)
+def test_each_shaping_param_gets_its_own_dir(kind, param):
+    """Every constant that shapes a replay is part of its cache key: a
+    changed value must never be served the directory built for the old
+    one."""
+    build, src, params = _SHAPES[kind]
+    changed = {**params, param: _CHANGED[param]}
+    before, after = build(src, **params), build(src, **changed)
+    assert before != after
+    for d, p in ((before, params), (after, changed)):
+        assert len(_chunks(d)) == p.get("n_chunks", p.get("n_live_chunks"))
+    if param == "dup_chunk":
+        assert "redelivered_0002.parquet" in os.listdir(after)
+    if param == "history_fraction":
+        n = pq.read_metadata(EVENTS).num_rows
+        history = [os.path.join(os.path.dirname(d), "history.parquet") for d in (before, after)]
+        assert [pq.read_metadata(h).num_rows for h in history] == [n // 2, n // 4]
+
+
+def test_late_replay_key_carries_the_jitter(monkeypatch):
+    before = sp._late_arrival_replay_dir(EVENTS)
+    monkeypatch.setattr(sp, "LATE_EVERY", sp.LATE_EVERY + 1)
+    assert sp._late_arrival_replay_dir(EVENTS) != before
+
+
+@pytest.mark.parametrize("kind", sorted(_SHAPES))
+def test_empty_source_writes_one_schema_carrying_chunk(kind, tmp_path):
+    """A zero-row source still replays: every kind writes at least one
+    file, each carrying the source schema, so a stream reader can infer
+    it and the query runs one empty batch instead of failing."""
+    build, fixture, params = _SHAPES[kind]
+    src = str(tmp_path / os.path.basename(fixture))
+    pq.write_table(pq.read_table(fixture).slice(0, 0), src)
+    schema = pq.read_schema(src)
+    d = build(src, **params)
+    files = [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+    if kind == "split":
+        files.append(os.path.join(os.path.dirname(d), "history.parquet"))
+    assert _chunks(d) == ["chunk_0000.parquet"]
+    assert not [f for f in os.listdir(d) if f.startswith("heartbeat_")]
+    for f in files:
+        assert pq.read_schema(f).equals(schema), f
+        assert pq.read_metadata(f).num_rows == 0

@@ -27,11 +27,11 @@ import os
 from datetime import datetime, timedelta
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
+from redis_dataflow_realtime_analytics_spark.streaming import pipeline as sp
 from redis_dataflow_realtime_analytics_spark.streaming import stateful
 
 T0 = datetime(2024, 1, 6, 12, 0, 0)
@@ -64,30 +64,24 @@ def _late_replay_dir(tmp_path) -> str:
     """file1: user 7 at T0 and T0+5min. file2: user 7 at T0+2min — LATE
     (event-time between file1's events) but inside the 10-min watermark.
     Then the two heartbeat files that advance the watermark and trigger
-    the eviction batch. File mtimes strictly increase, so the file
-    source replays them in exactly this order."""
-    out = tmp_path / "late_replay"
-    out.mkdir()
-    files = [
-        ("chunk_0000.parquet", [_row(1, T0, 7), _row(2, T0 + 5 * MIN, 7)]),
-        ("chunk_0001.parquet", [_row(3, T0 + 2 * MIN, 7)]),
+    the eviction batch: the 3 rows written as 2 chunks plus a 2-file
+    tail, in strictly increasing mtime order, so the file source
+    replays them in exactly this order."""
+
+    def table(*rows):
+        return pa.Table.from_pylist(list(rows), schema=_EVENT_SCHEMA)
+
+    out = str(tmp_path / "late_replay")
+    rows = table(_row(1, T0, 7), _row(2, T0 + 5 * MIN, 7), _row(3, T0 + 2 * MIN, 7))
+    heartbeats = [
         (
             "heartbeat_0.parquet",
-            [_row(-1, T0 + timedelta(days=1), -1), _row(-2, T0 + timedelta(days=1), -1)],
+            table(_row(-1, T0 + timedelta(days=1), -1), _row(-2, T0 + timedelta(days=1), -1)),
         ),
-        (
-            "heartbeat_1.parquet",
-            [_row(-3, T0 + timedelta(days=1, minutes=1), -1)],
-        ),
+        ("heartbeat_1.parquet", table(_row(-3, T0 + timedelta(days=1, minutes=1), -1))),
     ]
-    import time as _time
-
-    base = _time.time() - 2 * len(files)
-    for i, (name, rows) in enumerate(files):
-        p = str(out / name)
-        pq.write_table(pa.Table.from_pylist(rows, schema=_EVENT_SCHEMA), p)
-        os.utime(p, (base + 2 * i, base + 2 * i))
-    return str(out)
+    sp._write_chunks(out, rows, 2, heartbeats)
+    return out
 
 
 def _assert_single_merged_session(df) -> None:
