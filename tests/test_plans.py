@@ -6,6 +6,8 @@ that works at test SF but degrades catastrophically at scale.
 
 from __future__ import annotations
 
+import pytest
+
 from redis_dataflow_realtime_analytics_spark import plans
 from redis_dataflow_realtime_analytics_spark.operators import (
     metrics,
@@ -819,3 +821,43 @@ def test_tws_plan_uses_transform_with_state_operator(spark):
     # streaming frames can't .explain() pre-start; the logical string
     # carries the operator node
     assert "transformWithState" in out._jdf.queryExecution().logical().toString()
+
+
+#: (Window, WindowGroupLimit) node counts of each top-k key's formatted
+#: plan. Every per-query top-k filters ``row_number() <= k`` so Spark
+#: plans a Partial + Final ``WindowGroupLimit`` before and after the
+#: ``query_id`` exchange; a filter shape that loses it shuffles every
+#: candidate instead of k per query and task.
+_TOPK_WINDOW_NODES = {
+    "ann_topk_bruteforce": (1, 2),
+    "ann_topk_int8": (1, 2),
+    "ann_topk_pq": (1, 2),
+    "ann_topk_hamming": (1, 2),
+    "ann_lsh_topk": (1, 2),
+    "ann_lsh_portable_topk": (1, 2),
+    "similar_documents_report": (1, 2),
+    "ann_ivf_topk": (2, 3),
+    "ann_ivf_kmeans_topk": (2, 3),
+    "ann_ivf_exact_topk": (2, 3),
+    "ann_ivf_persisted_topk": (2, 3),
+    "ann_hamming_rerank_topk": (2, 3),
+    "ann_ivfpq_topk": (3, 5),
+    "ann_ivfpq_persisted_topk": (3, 5),
+    "hybrid_rrf_topk": (3, 5),
+    "ann_truncation_recall": (6, 12),
+    "retrieval_eval_report": (4, 8),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TOPK_WINDOW_NODES))
+def test_topk_keeps_window_group_limit(spark, name):
+    import re
+
+    from redis_dataflow_realtime_analytics_spark import registry
+
+    p = plans.plan_string(registry.QUERIES[name](spark, SF_SMOKE))
+    got = tuple(
+        len(re.findall(rf"^\(\d+\) {node}\b", p, re.MULTILINE))
+        for node in ("Window", "WindowGroupLimit")
+    )
+    assert got == _TOPK_WINDOW_NODES[name], p

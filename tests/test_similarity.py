@@ -3,6 +3,8 @@ brute-force baseline on the real embeddings fixture."""
 
 from __future__ import annotations
 
+import pytest
+
 from redis_dataflow_realtime_analytics_spark.operators import similarity
 
 from .conftest import SF_SMOKE
@@ -317,3 +319,29 @@ def test_rowlocal_assign_zero_cosine_tie_goes_to_min_centroid(spark):
             for r in similarity._rowlocal_assign(emb, cents).collect()
         }
         assert got == {1: 0, 2: 0}
+
+
+#: (row count, sha256 of the sorted row reprs) of the rows-only ANN keys
+#: on the smoke fixture — the same at 3 and 8 shuffle partitions.
+_ANN_ROW_DIGESTS = {
+    "ann_lsh_topk": (
+        50, "9cddd68447c6b24d2cae3c0de5bf48ec823b2daa39c822e227d17f7959efc7bd"),
+    "ann_ivf_kmeans_topk": (
+        50, "c43bcc80d4edb25b2c9ee88f47058f6bbd3c3d7a9293b7ab9ce842225a1d4061"),
+    "embedding_neardup_pairs_lsh": (
+        4, "2c8bb002100e5c1117c0eb7a10af02a514814b807a2202fef75915ca1f7d4db0"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ANN_ROW_DIGESTS))
+def test_rows_only_ann_key_digest(spark, name):
+    """The numpy-hyperplane LSH keys and the float-k-means IVF have no SQL
+    oracle, so their exact rows are pinned instead: an order-independent
+    digest of the registry output on the smoke fixture."""
+    import hashlib
+
+    from redis_dataflow_realtime_analytics_spark import registry
+
+    rows = registry.QUERIES[name](spark, SF_SMOKE).collect()
+    digest = hashlib.sha256("\n".join(sorted(repr(r) for r in rows)).encode())
+    assert (len(rows), digest.hexdigest()) == _ANN_ROW_DIGESTS[name]
