@@ -1,26 +1,34 @@
 """Similarity search over embedding columns (north-star extension).
 
-Brute-force cosine top-k as the exact baseline, and an IVF
-(inverted-file / coarse-quantizer) variant as the 100 TB scale path.
+Every ``ann_*`` key is one key-shaping step over a few shared stages,
+the IVFADC decomposition (Jégou et al., TPAMI 2011) written once:
 
-Vectors are quantized ONCE to fixed-point int64 (``functions.vectors``) —
-dot products are then exact integer sums: deterministic under any
-partitioning, oracle-checkable bit-exactly, and cheap (long multiply-adds
-in codegen instead of decimal/float folds).
-
-Scale notes:
-* ``ann_topk_bruteforce`` broadcasts the (small) query set and streams the
-  corpus once — embarrassingly parallel, no shuffle until the final
-  per-query top-k, which is a ``row_number`` window over ``query_id``
-  (state bounded by k × |queries|). Exact, O(|corpus|·|queries|).
-* ``ann_ivf_topk`` buckets the corpus by nearest coarse centroid
-  (one broadcast join), then probes only ``nprobe`` buckets per query —
-  the classic IVF trade: ~nprobe/n_centroids of the corpus scanned.
-  Bucketing is a plain column, so at scale the corpus can be written
-  partitioned by ``centroid_id`` and probing becomes partition pruning.
+* **corpus + queries** — ``_quantized`` quantizes each vector ONCE to
+  fixed-point int64 (``functions.vectors``), so dot products are exact
+  integer sums: deterministic under any partitioning, oracle-checkable
+  bit-exactly, and cheap (long multiply-adds in codegen).
+  ``query_set`` is every ``QUERY_MOD``-th vector, always broadcast.
+* **coarse probe** — a vector goes to its nearest cell row-locally
+  against a broadcast one-row codebook (``_rowlocal_assign`` for cosine
+  codebooks, ``_assign`` for the exact k-means state); a query keeps its
+  ``nprobe`` nearest cells (``_probe``), LSH buckets probe their
+  Hamming-1 neighbours (``_hamming1``). Candidates are an equi-join on
+  the cell id — partition pruning once the corpus is written by cell.
+* **PQ scan** — ``_subvectors`` splits a vector into ``PQ_M`` slices,
+  ``_pq_encode`` keeps the nearest codeword per slice, ``_adc`` scores a
+  query against the reconstructed vectors (asymmetric distance).
+* **re-rank and top-k** — ``_rerank`` re-scores a shortlist with the
+  exact cosine; ``_topk`` is the only ``row_number`` site: a window over
+  ``query_id`` filtered with ``rank <= k``, the shape Spark plans as a
+  Partial + Final ``WindowGroupLimit`` (state bounded by k × |queries|).
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import tempfile
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -51,12 +59,63 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def query_set(emb: DataFrame) -> DataFrame:
+def query_set(emb: DataFrame, *extra) -> DataFrame:
+    """(query_id, q_qvec, q_n2, *extra) of every QUERY_MOD-th vector."""
     return emb.where(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("qvec").alias("q_qvec"),
         F.col("n2").alias("q_n2"),
+        *extra,
     )
+
+
+def _topk(scored: DataFrame, k: int, *order) -> DataFrame:
+    """The k best rows per ``query_id`` under ``order``, numbered 1..k in
+    ``rank``. The filter compares the bare rank column with ``<= k`` so
+    Spark keeps the Partial + Final ``WindowGroupLimit`` (it drops it for
+    ``rank - 1 < k``): each task ships k rows per query, not every
+    candidate."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
+        F.col("rank") <= k
+    )
+
+
+def _ranked(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """(query_id, neighbor_id, <score>, rank): top-k by descending score,
+    ties broken on neighbor id so results are fully deterministic."""
+    return _topk(scored, k, F.desc(score), "vec_id").select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), score, "rank"
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """Exact fixed-point cosine of each (qvec, n2) × (q_qvec, q_n2) pair,
+    then the per-query top-k."""
+    scored = pairs.withColumn("dot", V.qdot("qvec", "q_qvec")).withColumn(
+        score, V.cosine("dot", "n2", "q_n2")
+    )
+    return _ranked(scored, k, score)
+
+
+def _against_queries(emb: DataFrame) -> DataFrame:
+    """Every corpus vector paired with every other broadcast query."""
+    return emb.join(F.broadcast(query_set(emb)), F.col("vec_id") != F.col("query_id"))
+
+
+def _rerank(emb: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine re-rank of a (query_id, vec_id) shortlist: only the
+    shortlisted pairs read full-precision vectors."""
+    pairs = cand.select("query_id", "vec_id").join(emb, "vec_id")
+    return _cosine_topk(pairs.join(F.broadcast(query_set(emb)), "query_id"), k)
+
+
+def _cents_row(cent: DataFrame, *fields) -> DataFrame:
+    """A codebook as ONE row: the sorted array ``cents`` of per-centroid
+    structs (default: the exact k-means state ``(cid, S, n, s2)``),
+    broadcast so assignment runs inside higher-order functions."""
+    fields = fields or ("cid", "S", "n", "s2")
+    return cent.agg(F.sort_array(F.collect_list(F.struct(*fields))).alias("cents"))
 
 
 def _rowlocal_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
@@ -66,25 +125,16 @@ def _rowlocal_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
 
     The crossJoin+window formulation explodes the corpus
     |corpus|×|centroids|-fold and then SORTS that frame inside a window
-    just to keep rank 1 — at sf1 an 8 M-row sort for 20 k assignments,
-    and the reason ann_ivf_topk showed a 1.14× 8→32-core ratio. Here the
-    codebook collapses to a broadcast ONE-ROW array of (cid, vec, n2)
-    structs and each corpus row computes its argmax with ``array_min``
-    over negated cosines — exact same dot/cosine arithmetic as
+    just to keep rank 1 — at sf1 an 8 M-row sort for 20 k assignments.
+    Here each corpus row computes its argmax with ``array_min`` over
+    negated cosines — exact same dot/cosine arithmetic as
     V.qdot/V.cosine (incl. the zero-norm → 0.0 convention); tie → min
-    centroid_id, matching the window's ORDER BY desc(c_cos),
-    centroid_id. The _KMEANS_ARGMIN shape: no row explosion, no sort,
-    pure whole-stage codegen."""
-    cents_row = cents.agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id").alias("cid"),
-                    F.col("c_qvec").alias("cv"),
-                    F.col("c_n2").alias("cn2"),
-                )
-            )
-        ).alias("cents")
+    centroid_id, matching ORDER BY desc(c_cos), centroid_id."""
+    cents_row = _cents_row(
+        cents,
+        F.col("centroid_id").alias("cid"),
+        F.col("c_qvec").alias("cv"),
+        F.col("c_n2").alias("cn2"),
     )
     best = (
         "array_min(transform(cents, c -> struct("
@@ -100,25 +150,37 @@ def _rowlocal_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
-    """Exact cosine top-k neighbors for each query vector.
+def _probed_topk(db: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-k over the candidates in each query's probed
+    cells: db (vec_id, qvec, n2, bucket) ⋈ probes (query_id, q_qvec,
+    q_n2, bucket)."""
+    cand = db.join(probes, "bucket").where(F.col("vec_id") != F.col("query_id"))
+    return _cosine_topk(cand, k)
 
-    Output: (query_id, neighbor_id, cosine, rank) — rank 1..k, ties broken
-    by neighbor_id so results are fully deterministic.
-    """
-    emb = _quantized(spark, sf_dir)
-    q = query_set(emb)
+
+def _ivf_query(emb: DataFrame, cents: DataFrame, k: int, nprobe: int) -> DataFrame:
+    """IVF over a cosine codebook (centroid_id, c_qvec, c_n2): row-local
+    corpus assignment, each query probes its ``nprobe`` nearest cells."""
     scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
+        query_set(emb)
+        .join(F.broadcast(cents), how="cross")
+        .withColumn("c_dot", V.qdot("q_qvec", "c_qvec"))
+        .withColumn("c_cos", V.cosine("c_dot", "q_n2", "c_n2"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
+    probes = _topk(scored, nprobe, F.desc("c_cos"), "centroid_id").select(
+        "query_id", "q_qvec", "q_n2", F.col("centroid_id").alias("bucket")
     )
+    return _probed_topk(_rowlocal_assign(emb, cents), probes, k)
+
+
+def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+    """Exact cosine top-k neighbors for each query vector: the broadcast
+    query set against one streaming pass over the corpus, no shuffle
+    until the top-k. O(|corpus|·|queries|).
+
+    Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
+    """
+    return _cosine_topk(_against_queries(_quantized(spark, sf_dir)), k)
 
 
 def ann_topk_int8(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
@@ -129,36 +191,18 @@ def ann_topk_int8(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
 
     Scores are ``dot8 / (‖a‖₈·‖b‖₈)`` computed entirely from the
     quantized ints — the per-vector scale factors cancel, so no
-    dequantization step exists and the result is deterministic (exact
-    int64 dot, IEEE sqrt/divide). Ranking ties break on neighbor_id.
-    Same broadcast-queries/stream-corpus plan as
-    :func:`ann_topk_bruteforce`; recall vs that exact baseline is
-    asserted in tests/test_similarity.py.
+    dequantization step exists and the result is deterministic. Recall
+    vs the exact baseline is asserted in tests/test_similarity.py.
 
     Output: (query_id, neighbor_id, approx_cosine, rank).
     """
     emb = (
         spread(load(spark, sf_dir, "embeddings"))
         .withColumn("ma", V.vec_maxabs("embedding"))
-        .select("vec_id", V.quantize_int8("embedding", "ma").alias("q8"))
-        .withColumn("n2", V.qdot("q8", "q8"))
+        .select("vec_id", V.quantize_int8("embedding", "ma").alias("qvec"))
+        .withColumn("n2", V.qnorm2("qvec"))
     )
-    q = emb.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q8").alias("q_q8"),
-        F.col("n2").alias("q_n2"),
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("dot", V.qdot("q8", "q_q8"))
-        .withColumn("approx_cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "approx_cosine", "rank")
-    )
+    return _cosine_topk(_against_queries(emb), k, "approx_cosine")
 
 
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.45) -> DataFrame:
@@ -236,67 +280,56 @@ def _lsh_bucket_udf(n_bits: int = LSH_BITS, seed: int = LSH_SEED):
     return pandas_udf(bucket, LongType())
 
 
-def ann_lsh_topk(
-    spark: SparkSession, sf_dir: str, k: int = 10, n_bits: int = LSH_BITS
-) -> DataFrame:
-    """Random-hyperplane LSH approximate top-k (third ANN strategy next to
-    brute force and IVF).
+def _hamming1(bucket: str, n_bits: int):
+    """LSH multiprobe: the bucket and each of its n_bits Hamming-1
+    neighbours, one ``probe_bucket`` row each."""
+    flips = [F.col(bucket).bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(n_bits)]
+    return F.explode(F.array(F.col(bucket), *flips)).alias("probe_bucket")
 
-    Corpus vectors hash to a 2^n_bits bucket via sign bits against fixed
-    hyperplanes; each query probes its own bucket plus every Hamming-1
-    neighbor (n_bits+1 probes), then candidates re-rank by exact
-    fixed-point cosine. Expected work per query ≈ |corpus|·(n_bits+1)/2^n_bits.
-    At scale the corpus is written partitioned by ``lsh_bucket`` so probing
-    is partition pruning, same as the IVF layout.
 
-    Output schema matches :func:`ann_topk_bruteforce`; recall vs the exact
-    baseline is asserted in tests/test_similarity.py.
-    """
-    bucket_udf = _lsh_bucket_udf(n_bits)
-    # Cache the bucketed corpus: it feeds both the probe join's corpus side
-    # and the (collected) broadcast query set — without it the Python UDF
-    # stage runs once per consumer.
-    emb = (
+def _lsh_corpus(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
+    """(vec_id, qvec, bucket, n2) under the float hyperplanes, cached: it
+    feeds both the probe join's corpus side and the broadcast query side,
+    and without the cache the Python UDF stage runs once per consumer."""
+    return (
         spread(load(spark, sf_dir, "embeddings"))
         .select(
             "vec_id",
             V.quantize("embedding").alias("qvec"),
-            bucket_udf("embedding").alias("bucket"),
+            _lsh_bucket_udf(n_bits)("embedding").alias("bucket"),
         )
         .withColumn("n2", V.qnorm2("qvec"))
         .cache()
     )
 
-    q = emb.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("q_qvec"),
-        F.col("n2").alias("q_n2"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(n_bits)
-                ],
-            )
-        ).alias("probe_bucket"),
-    )
 
-    scored = (
-        emb.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("probe_bucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
+def _lsh_topk(emb: DataFrame, k: int, n_bits: int) -> DataFrame:
+    """Multiprobe LSH top-k over a bucketed corpus: each query probes its
+    own bucket plus every Hamming-1 neighbour (n_bits+1 probes), then the
+    candidates re-rank by exact cosine. Work per query ≈
+    |corpus|·(n_bits+1)/2^n_bits."""
+    probes = F.broadcast(query_set(emb, _hamming1("bucket", n_bits)))
+    cand = emb.join(
+        probes,
+        (F.col("bucket") == F.col("probe_bucket"))
+        & (F.col("vec_id") != F.col("query_id")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _cosine_topk(cand, k)
+
+
+def ann_lsh_topk(
+    spark: SparkSession, sf_dir: str, k: int = 10, n_bits: int = LSH_BITS
+) -> DataFrame:
+    """Random-hyperplane LSH approximate top-k: corpus vectors hash to a
+    2^n_bits bucket via sign bits against fixed float hyperplanes
+    (``_lsh_bucket_udf``), then the shared multiprobe search. At scale the
+    corpus is written partitioned by bucket so probing is partition
+    pruning.
+
+    Output schema matches :func:`ann_topk_bruteforce`; recall vs the exact
+    baseline is asserted in tests/test_similarity.py.
+    """
+    return _lsh_topk(_lsh_corpus(spark, sf_dir, n_bits), k, n_bits)
 
 
 #: Portable LSH: integer hyperplanes in [-1000, 1000] from a constant-seed
@@ -334,57 +367,21 @@ def ann_lsh_portable_topk(
 
     Bucket = Σ_p 2^p·[⟨plane_p, qvec⟩ ≥ 0] over the FIXED-POINT vector
     (|w| ≤ 2^10, |qx| ≤ 2^23, dim 64 ⇒ |dot| ≤ 2^39 — exact int64).
-    Probing (own bucket + every Hamming-1 neighbor) and the exact-cosine
-    rerank are identical to the float twin; output schema matches
-    :func:`ann_topk_bruteforce`."""
-    planes = _portable_planes(n_bits)
-    emb = (
-        spread(load(spark, sf_dir, "embeddings"))
-        .select("vec_id", V.quantize("embedding").alias("qvec"))
-        .withColumn("n2", V.qnorm2("qvec"))
-    )
-    dot_exprs = [
+
+    It keeps its own banding instead of ``dedup._band``: ``_band`` keys
+    ``h0..hN`` slots by ``doc_id`` and has no Hamming-1 multiprobe."""
+    dots = [
         F.expr(
             f"aggregate(zip_with(qvec, array({', '.join(f'CAST({w} AS BIGINT)' for w in row)}), "
             f"(x, w) -> x * w), CAST(0 AS BIGINT), (s, v) -> s + v)"
         )
-        for row in planes
+        for row in _portable_planes(n_bits)
     ]
     bucket = sum(
-        F.when(dot_exprs[p] >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        for p in range(n_bits)
+        F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0)) for p, d in enumerate(dots)
     ).cast("long")
-    emb = emb.withColumn("bucket", bucket).cache()
-
-    q = emb.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("q_qvec"),
-        F.col("n2").alias("q_n2"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(n_bits)
-                ],
-            )
-        ).alias("probe_bucket"),
-    )
-    scored = (
-        emb.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("probe_bucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    emb = _quantized(spark, sf_dir).withColumn("bucket", bucket).cache()
+    return _lsh_topk(emb, k, n_bits)
 
 
 def oracle_ann_lsh_portable(k: int = 10, n_bits: int = LSH_BITS) -> str:
@@ -407,10 +404,6 @@ def oracle_ann_lsh_portable(k: int = 10, n_bits: int = LSH_BITS) -> str:
             f"SELECT vec_id, xor(bucket, {1 << i}) FROM bk WHERE vec_id % {QUERY_MOD} = 0"
             for i in range(n_bits)
         ]
-    )
-    cos = (
-        "CASE WHEN {a} > 0 AND {b} > 0 THEN CAST({d} AS DOUBLE) / "
-        "(sqrt(CAST({a} AS DOUBLE)) * sqrt(CAST({b} AS DOUBLE))) ELSE 0.0 END"
     )
     return f"""WITH e AS (
   SELECT vec_id, {oracle_quantize('embedding')} AS qv FROM embeddings
@@ -447,7 +440,7 @@ d AS (
 ),
 c AS (
   SELECT d.query_id, d.neighbor_id,
-         {cos.format(d='d.dot', a='nq.n2', b='nn.n2')} AS cosine
+         {V.oracle_cosine('d.dot', 'nq.n2', 'nn.n2')} AS cosine
   FROM d
   JOIN n nq ON nq.vec_id = d.query_id
   JOIN n nn ON nn.vec_id = d.neighbor_id
@@ -461,8 +454,9 @@ FROM c QUALIFY rank <= {k}"""
 def ann_ivf_topk(
     spark: SparkSession, sf_dir: str, k: int = 10, nprobe: int = 3
 ) -> DataFrame:
-    """IVF approximate top-k: assign corpus to nearest coarse centroid,
-    probe only the ``nprobe`` centroids nearest each query.
+    """IVF approximate top-k over sampled coarse centroids (every
+    ``CENTROID_MOD``-th vector): ~nprobe/n_centroids of the corpus is
+    scored per query.
 
     Output schema matches :func:`ann_topk_bruteforce`; recall vs the exact
     baseline is asserted in tests (tests/test_similarity.py).
@@ -473,39 +467,7 @@ def ann_ivf_topk(
         F.col("qvec").alias("c_qvec"),
         F.col("n2").alias("c_n2"),
     )
-
-    def nearest(df: DataFrame, id_col: str, vec_col: str, n2_col: str, n: int, out: str) -> DataFrame:
-        scored = (
-            df.join(F.broadcast(cents), how="cross")
-            .withColumn("c_dot", V.qdot(vec_col, "c_qvec"))
-            .withColumn("c_cos", V.cosine("c_dot", n2_col, "c_n2"))
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("c_cos"), "centroid_id")
-        return (
-            scored.withColumn("c_rank", F.row_number().over(w))
-            .where(F.col("c_rank") <= n)
-            .select(df["*"], F.col("centroid_id").alias(out))
-        )
-
-    assigned = _rowlocal_assign(emb, cents)
-    q = query_set(emb)
-    probes = nearest(q, "query_id", "q_qvec", "q_n2", nprobe, "probe_bucket")
-
-    scored = (
-        assigned.join(
-            probes,
-            (F.col("bucket") == F.col("probe_bucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _ivf_query(emb, cents, k, nprobe)
 
 
 def embedding_neardup_pairs_lsh(
@@ -518,37 +480,18 @@ def embedding_neardup_pairs_lsh(
     This is the 100 TB path for :func:`embedding_neardup_pairs`: pair count
     drops from |corpus|² to Σ_bucket |bucket|·(probes·|bucket|), and the
     bucket id is a plain column, so the corpus can be written partitioned
-    by it. High-cosine pairs collide in sign buckets with high probability;
-    recall vs the brute-force pairs is asserted in tests.
+    by it. Recall vs the brute-force pairs is asserted in tests.
 
     Default bits are coarser than the ANN top-k path (3 vs 5): pair mining
     wants recall at mid-range cosines, where the sign-collision probability
     (1 − θ/π) per hyperplane decays faster than for true near-dups.
     """
-    bucket_udf = _lsh_bucket_udf(n_bits)
-    emb = (
-        spread(load(spark, sf_dir, "embeddings"))
-        .select(
-            "vec_id",
-            V.quantize("embedding").alias("qvec"),
-            bucket_udf("embedding").alias("bucket"),
-        )
-        .withColumn("n2", V.qnorm2("qvec"))
-        .cache()
-    )
+    emb = _lsh_corpus(spark, sf_dir, n_bits)
     a = emb.select(
         F.col("vec_id").alias("vec_id_a"),
         F.col("qvec").alias("qa"),
         F.col("n2").alias("na"),
-        F.explode(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(n_bits)
-                ],
-            )
-        ).alias("probe_bucket"),
+        _hamming1("bucket", n_bits),
     )
     b = emb.select(
         F.col("vec_id").alias("vec_id_b"),
@@ -618,7 +561,7 @@ def kmeans_embedding_centroids(
 
     def assigned_df() -> DataFrame:
         # Row-local argmin against the broadcast one-row codebook array
-        # (r11, the _rowlocal_assign/_KMEANS_ARGMIN shape): same
+        # (r11, the _rowlocal_assign/_assign shape): same
         # zip_with/aggregate distance fold as the previous
         # crossJoin+window form (bit-identical doubles), tie → min
         # cluster_id, but no |corpus|×k row explosion and no sort. The
@@ -692,11 +635,10 @@ def ann_ivf_kmeans_topk(
     n_centroids: int | None = None, train_iters: int = 3,
 ) -> DataFrame:
     """IVF with TRAINED coarse centroids: Lloyd's k-means fits the
-    codebook (see :func:`kmeans_embedding_centroids`), then assignment /
-    probing proceed exactly as :func:`ann_ivf_topk`; the default codebook
-    size (``corpus // CENTROID_MOD``) keeps the two variants directly
-    comparable. Training touches only the k×dim codebook on the driver;
-    the search path is the same broadcast + partition-pruning shape.
+    codebook (see :func:`kmeans_embedding_centroids`), then the same IVF
+    query as :func:`ann_ivf_topk`; the default codebook size
+    (``corpus // CENTROID_MOD``) keeps the two variants directly
+    comparable. Training touches only the k×dim codebook on the driver.
 
     Measured honestly on the synthetic fixture: recall is comparable to
     the sampled-seed variant (0.84 vs 0.92 at sf0.001 — the fixture's
@@ -718,40 +660,7 @@ def ann_ivf_kmeans_topk(
         [(int(r.cluster_id), V.quantize_py(r.centroid)) for r in trained],
         "centroid_id int, c_qvec array<bigint>",
     ).withColumn("c_n2", V.qnorm2("c_qvec"))
-
-    emb = _quantized(spark, sf_dir)
-
-    def nearest(df: DataFrame, id_col: str, vec_col: str, n2_col: str, n: int, out: str) -> DataFrame:
-        scored = (
-            df.join(F.broadcast(cents), how="cross")
-            .withColumn("c_dot", V.qdot(vec_col, "c_qvec"))
-            .withColumn("c_cos", V.cosine("c_dot", n2_col, "c_n2"))
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("c_cos"), "centroid_id")
-        return (
-            scored.withColumn("c_rank", F.row_number().over(w))
-            .where(F.col("c_rank") <= n)
-            .select(df["*"], F.col("centroid_id").alias(out))
-        )
-
-    assigned = _rowlocal_assign(emb, cents)
-    q = query_set(emb)
-    probes = nearest(q, "query_id", "q_qvec", "q_n2", nprobe, "probe_bucket")
-    scored = (
-        assigned.join(
-            probes,
-            (F.col("bucket") == F.col("probe_bucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _ivf_query(_quantized(spark, sf_dir), cents, k, nprobe)
 
 
 def similar_documents_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1261,17 +1170,14 @@ def ann_topk_hamming(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame
     """Binary-compressed ANN: top-k neighbors by Hamming distance between
     1-bit sign sketches of the embeddings — the most aggressive
     compression leg of the ANN family (64 dims → 8 bytes, 32× smaller
-    than the float32 corpus and 8× smaller than the int8 path; at 100 TB
-    of embeddings the whole sketch index fits in a fraction of one
-    executor's memory and the scan is pure integer XOR/POPCNT inside
-    whole-stage codegen).
+    than the float32 corpus and 8× smaller than the int8 path; the scan
+    is pure integer XOR/POPCNT inside whole-stage codegen).
 
     Unlike the random-hyperplane ``ann_lsh_topk`` (engine-seeded hashes →
     rows-only), the sign sketch is a DETERMINISTIC function of the data
     (bit i = embedding[i] > 0), and the distance is integer, so ranking
     (hamming ASC, neighbor_id) is exactly reproducible and the operator
-    is SQL-oracled. Sign-of-dimension is the degenerate 1-bit scalar
-    quantizer; recall vs the exact cosine baseline is asserted in
+    is SQL-oracled. Recall vs the exact cosine baseline is asserted in
     tests/test_similarity.py.
 
     Output: (query_id, neighbor_id, hamming, rank), rank 1..k.
@@ -1290,11 +1196,8 @@ def ann_topk_hamming(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame
     scored = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id", F.col("vec_id").alias("neighbor_id"), ham.alias("hamming")
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "hamming", "rank")
+    return _topk(scored, k, "hamming", "neighbor_id").select(
+        "query_id", "neighbor_id", "hamming", "rank"
     )
 
 
@@ -1328,47 +1231,18 @@ def ann_hamming_rerank_topk(
     spark: SparkSession, sf_dir: str, k: int = 10, shortlist: int = 50
 ) -> DataFrame:
     """Two-stage ANN: sign-sketch Hamming SHORTLIST → exact-cosine
-    RE-RANK — the production layout of binary-compressed retrieval (the
-    ANN analogue of dedup's LSH → exact-verify). Stage 1 scans only the
-    8-byte sketches (integer XOR/POPCNT over an index that fits in
-    memory at any corpus size) and keeps ``shortlist`` candidates per
-    query; stage 2 touches full-precision vectors ONLY for those
-    candidates — per query the float work drops from |corpus| to
-    ``shortlist`` dot products, while recall vs the exact baseline
-    recovers most of what the 1-bit sketch loses (band-tested in
-    tests/test_similarity.py / test_round4e_ops.py).
-
-    Fully deterministic end to end (integer Hamming + id tie-breaks →
-    exact int64 dots → cosine with id tie-breaks), so SQL-oracled.
+    re-rank — the production layout of binary-compressed retrieval (the
+    ANN analogue of dedup's LSH → exact-verify). Per query the float
+    work drops from |corpus| to ``shortlist`` dot products, while recall
+    vs the exact baseline recovers most of what the 1-bit sketch loses
+    (band-tested in tests/test_similarity.py / test_round4e_ops.py).
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
     cand = ann_topk_hamming(spark, sf_dir, k=shortlist).select(
-        "query_id", "neighbor_id"
+        "query_id", F.col("neighbor_id").alias("vec_id")
     )
-    emb = _quantized(spark, sf_dir)
-    q = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("q_qvec"),
-        F.col("n2").alias("q_n2"),
-    )
-    nb = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("qvec").alias("n_qvec"),
-        F.col("n2").alias("n_n2"),
-    )
-    scored = (
-        cand.join(nb, "neighbor_id")
-        .join(q, "query_id")
-        .withColumn("dot", V.qdot("n_qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n_n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rerank(_quantized(spark, sf_dir), cand, k)
 
 
 def oracle_ann_hamming_rerank(k: int = 10, shortlist: int = 50) -> str:
@@ -1406,116 +1280,78 @@ PQ_M = 8
 PQ_SEED_MOD = 50
 
 
+def _subvectors(df: DataFrame, vec: str, out: str, *keep) -> DataFrame:
+    """One row per PQ subspace m: (*keep, m, out = the m-th of the PQ_M
+    equal slices of ``vec``)."""
+    width = f"size({vec}) div {PQ_M}"
+    return df.select(
+        *keep, F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"), vec
+    ).select(*keep, "m", F.expr(f"slice({vec}, m * ({width}) + 1, {width})").alias(out))
+
+
 def _pq_codebook(emb: DataFrame) -> DataFrame:
     """Per-subspace codebook: one row per subspace m holding a sorted
     array of (cid, cw, cwn2) structs — broadcast-joined to the encoding
     stage. cid = donor vec_id; cw = the donor's quantized subvector."""
-    seeds = emb.where(F.col("vec_id") % PQ_SEED_MOD == 0)
-    sub = seeds.select(
-        F.col("vec_id").alias("cid"),
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        F.col("qvec"),
-    ).select(
-        "cid",
-        "m",
-        F.expr(f"slice(qvec, m * (size(qvec) div {PQ_M}) + 1,"
-               f" size(qvec) div {PQ_M})").alias("cw"),
+    seeds = emb.where(F.col("vec_id") % PQ_SEED_MOD == 0).select(
+        F.col("vec_id").alias("cid"), "qvec"
     )
-    sub = sub.withColumn("cwn2", V.qdot("cw", "cw"))
+    sub = _subvectors(seeds, "qvec", "cw", "cid").withColumn("cwn2", V.qdot("cw", "cw"))
     return sub.groupBy("m").agg(
-        F.sort_array(
-            F.collect_list(F.struct("cid", "cw", "cwn2"))
-        ).alias("cbook")
+        F.sort_array(F.collect_list(F.struct("cid", "cw", "cwn2"))).alias("cbook")
     )
 
 
-def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
-    """Product-quantization ANN: each vector is encoded as ``PQ_M`` small
-    codes (nearest codeword per subspace, exact integer L2 argmin) and
-    queries score candidates by ASYMMETRIC DISTANCE COMPUTATION — the
-    full-precision query dotted against the RECONSTRUCTED (codeword)
-    vector, summed across subspaces. The fourth leg of the compression
-    family: float (exact) → int8 (1 B/dim) → PQ (M codes/vector,
-    ~log₂C bits each) → 1-bit sign sketch; PQ is the FAISS-style
-    memory/recall middle ground, and at 100 TB the code table (M bytes a
-    vector) plus the MB-scale codebook replace the raw corpus in the scan.
-
-    Everything is exact integer arithmetic on the fixed-point grid —
-    codeword argmin minimizes (c·c − 2·x_m·c) with a min-cid tie-break,
-    ADC dots and reconstructed norms are int64 sums — so the operator is
-    deterministic and SQL-oracled (codebook selection included); recall
-    vs the exact baseline is band-tested.
-
-    Plan: the codebook is PQ_M broadcast rows (argmin runs inside
-    higher-order functions — no shuffle); encoding is a per-(vector,
-    subspace) projection; scoring joins the broadcast query subvectors on
-    the subspace id and reduces with one keyed sum.
-
-    Output: (query_id, neighbor_id, approx_cosine, rank), rank 1..k.
-    """
-    emb = _quantized(spark, sf_dir)
-    cb = _pq_codebook(emb)
-    sub = emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        "qvec",
-    ).select(
-        "vec_id",
-        "m",
-        F.expr(f"slice(qvec, m * (size(qvec) div {PQ_M}) + 1,"
-               f" size(qvec) div {PQ_M})").alias("xm"),
-    )
+def _pq_encode(db: DataFrame, cb: DataFrame, *keep) -> DataFrame:
+    """(*keep, m, cw, cwn2): each vector's nearest codeword per subspace —
+    the integer L2 argmin of (c·c − 2·x_m·c), min-cid tie-break."""
     best = F.expr(
         "array_min(transform(cbook, c -> struct("
         " c.cwn2 - 2 * aggregate(zip_with(xm, c.cw, (x, y) -> x * y),"
         "   CAST(0 AS BIGINT), (acc, v) -> acc + v) AS cost,"
         " c.cid AS cid, c.cw AS cw, c.cwn2 AS cwn2)))"
     )
-    enc = (
-        sub.join(F.broadcast(cb), "m")
-        .select("vec_id", "m", best.alias("b"))
-        .select("vec_id", "m", F.col("b.cw").alias("cw"), F.col("b.cwn2").alias("cwn2"))
-    )
-    q_sub = (
-        emb.where(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("n2").alias("q_n2"),
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-            "qvec",
-        )
-        .select(
-            "query_id",
-            "q_n2",
-            "m",
-            F.expr(f"slice(qvec, m * (size(qvec) div {PQ_M}) + 1,"
-                   f" size(qvec) div {PQ_M})").alias("qm"),
-        )
-    )
-    pairs = (
-        enc.join(F.broadcast(q_sub), "m")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("d", V.qdot("qm", "cw"))
-    )
-    scored = pairs.groupBy("query_id", "vec_id").agg(
-        F.sum("d").alias("adc_dot"),
-        F.sum("cwn2").alias("r_n2"),
-        F.first("q_n2").alias("q_n2"),
-    )
-    scored = scored.withColumn(
-        "approx_cosine", V.cosine("adc_dot", "q_n2", "r_n2")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_cosine"), "vec_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "approx_cosine",
-            "rank",
-        )
+        _subvectors(db, "qvec", "xm", *keep)
+        .join(F.broadcast(cb), "m")
+        .select(*keep, "m", best.alias("b"))
+        .select(*keep, "m", "b.cw", "b.cwn2")
     )
+
+
+def _adc(pairs: DataFrame) -> DataFrame:
+    """Asymmetric distance per (query_id, vec_id) from per-subspace
+    (qm, cw, cwn2, q_n2) rows: the query's subvectors dotted with the
+    reconstructed vector, whose squared norm is Σ cwn2 — approx_cosine."""
+    return (
+        pairs.where(F.col("vec_id") != F.col("query_id"))
+        .withColumn("d", V.qdot("qm", "cw"))
+        .groupBy("query_id", "vec_id")
+        .agg(
+            F.sum("d").alias("adc_dot"),
+            F.sum("cwn2").alias("r_n2"),
+            F.first("q_n2").alias("q_n2"),
+        )
+        .withColumn("approx_cosine", V.cosine("adc_dot", "q_n2", "r_n2"))
+    )
+
+
+def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+    """Product-quantization ANN: each vector is encoded as ``PQ_M`` small
+    codes and queries score candidates by ASYMMETRIC DISTANCE — the
+    full-precision query against the reconstructed (codeword) vector.
+    The fourth leg of the compression family: float (exact) → int8
+    (1 B/dim) → PQ (M codes/vector) → 1-bit sign sketch; at 100 TB the
+    code table plus the MB-scale codebook replace the raw corpus in the
+    scan. Exact integer arithmetic throughout, so it is SQL-oracled
+    (codebook selection included); recall is band-tested.
+
+    Output: (query_id, neighbor_id, approx_cosine, rank), rank 1..k.
+    """
+    emb = _quantized(spark, sf_dir)
+    enc = _pq_encode(emb, _pq_codebook(emb), "vec_id")
+    q_sub = _subvectors(query_set(emb), "q_qvec", "qm", "query_id", "q_n2")
+    return _ranked(_adc(enc.join(F.broadcast(q_sub), "m")), k, "approx_cosine")
 
 
 def oracle_ann_topk_pq(k: int = 10) -> str:
@@ -1665,9 +1501,6 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k: int = 10, c: int = 60) 
     1/(c+rank) is one IEEE divide of small integers, summed through the
     DECIMAL(38,12) accumulator; ties break (n_lists DESC, doc_id).
 
-    Cost: the two top-k frames are tiny (queries × k rows each) — the
-    fusion is a union + one keyed sum, negligible beside the retrievers.
-
     Output: (query_id, doc_id, n_lists, rrf_score, rank), rank 1..k.
     """
     from .text import bm25_topk
@@ -1680,19 +1513,13 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k: int = 10, c: int = 60) 
     dense = ann_topk_bruteforce(spark, sf_dir, k=k).select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
-    both = sparse.union(dense)
     contrib = F.lit(1.0).cast("double") / (F.lit(c) + F.col("rank")).cast("double")
-    fused = both.groupBy("query_id", "doc_id").agg(
+    fused = sparse.union(dense).groupBy("query_id", "doc_id").agg(
         F.count("*").alias("n_lists"),
         F.sum(contrib.cast("decimal(38,12)")).cast("double").alias("rrf_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.desc("n_lists"), "doc_id"
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "n_lists", "rrf_score", "rank")
+    return _topk(fused, k, F.desc("rrf_score"), F.desc("n_lists"), "doc_id").select(
+        "query_id", "doc_id", "n_lists", "rrf_score", "rank"
     )
 
 
@@ -1754,17 +1581,42 @@ def kmeans_exact_centroids(
     )
 
 
-#: The exact-assignment argmin over a broadcast (cid, S, n, s2) codebook
-#: row — shared by the k-means loop and the learned-centroid IVF reader.
-_KMEANS_ARGMIN = (
-    "array_min(transform(cents, c -> struct("
-    " CAST(c.s2 - 2 * aggregate(zip_with(qvec, c.S,"
+#: The exact k-means cost of every cell of a broadcast (cid, S, n, s2)
+#: codebook row for the vector column {v}, as (v, cid) structs:
+#: d_c = (‖S_c‖² − 2·(x·S_c)·n_c) / n_c², exact DECIMAL(38,0) numerator.
+_KMEANS_COSTS = (
+    "transform(cents, c -> struct("
+    " CAST(c.s2 - 2 * aggregate(zip_with({v}, c.S,"
     "        (a, b) -> CAST(a AS DECIMAL(38,0)) * b),"
     "      CAST(0 AS DECIMAL(38,0)), (acc, t) -> acc + t) * c.n"
     "      AS DOUBLE)"
     "   / CAST(c.n * c.n AS DOUBLE) AS v,"
-    " c.cid AS cid)))"
+    " c.cid AS cid))"
 )
+
+
+def _assign(emb: DataFrame, cents_row: DataFrame) -> DataFrame:
+    """``emb`` plus ``bucket``: each vector's exact-k-means cell (min cost,
+    tie → min cid), computed row-locally against the broadcast row."""
+    argmin = F.expr(f"array_min({_KMEANS_COSTS.format(v='qvec')}).cid")
+    return emb.crossJoin(F.broadcast(cents_row)).select(*emb.columns, argmin.alias("bucket"))
+
+
+def _probe(emb: DataFrame, cents_row: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, q_qvec, q_n2, bucket) for each query's ``nprobe``
+    nearest exact-k-means cells — the same cost as :func:`_assign`."""
+    costs = (
+        query_set(emb)
+        .crossJoin(F.broadcast(cents_row))
+        .select(
+            "query_id", "q_qvec", "q_n2",
+            F.explode(F.expr(_KMEANS_COSTS.format(v="q_qvec"))).alias("p"),
+        )
+        .select("query_id", "q_qvec", "q_n2", "p.*")
+    )
+    return _topk(costs, nprobe, "v", "cid").select(
+        "query_id", "q_qvec", "q_n2", F.col("cid").alias("bucket")
+    )
 
 
 def _kmeans_exact_state(
@@ -1785,16 +1637,8 @@ def _kmeans_exact_state(
         )
         .localCheckpoint(eager=True)
     )
-    argmin = F.expr(_KMEANS_ARGMIN + ".cid")
     for _ in range(iters):
-        cents_row = cent.agg(
-            F.sort_array(F.collect_list(F.struct("cid", "S", "n", "s2"))).alias(
-                "cents"
-            )
-        )
-        asg = emb.crossJoin(F.broadcast(cents_row)).select(
-            "vec_id", "qvec", argmin.alias("cid")
-        )
+        asg = _assign(emb, _cents_row(cent)).withColumnRenamed("bucket", "cid")
         # n_c rides the (cid, pos) aggregation instead of a second
         # aggregate over `asg` (r10 optimization): every vector emits
         # every pos, so count(*) within any (cid, pos) group IS the
@@ -1942,10 +1786,7 @@ def kmeans_float_portable_centroids(
         " c.cid AS cid))).cid"
     )
     for _ in range(iters):
-        cents_row = cent.agg(
-            F.sort_array(F.collect_list(F.struct("cid", "C"))).alias("cents")
-        )
-        asg = emb.crossJoin(F.broadcast(cents_row)).select(
+        asg = emb.crossJoin(F.broadcast(_cents_row(cent, "cid", "C"))).select(
             "vec_id", "v", argmin.alias("cid")
         )
         # n rides the (cid, pos) aggregation (the exact-loop r10 fix):
@@ -2052,16 +1893,9 @@ def ann_ivf_exact_topk(
     """IVF over LEARNED centroids, fully SQL-oracled — the upgrade the
     float-k-means IVF (``ann_ivf_kmeans_topk``, rows-only) cannot have:
     the coarse codebook is the exact k-means fixpoint
-    (:func:`_kmeans_exact_state`), database vectors and queries assign /
-    probe with the same exact-numerator distance, and candidates inside
-    the probed buckets rank by the exact fixed-point cosine — every stage
-    deterministic, so codebook TRAINING, assignment, probing, and top-k
-    all hash-gate against DuckDB in one query.
-
-    Plan: the (km_k × dim)-integer codebook broadcasts as one row for
-    both the db-assignment scan and the query-probe scan; the candidate
-    join is an equi-join on the bucket id (partition-prunable at scale —
-    posting lists); only ~nprobe/km_k of the corpus is scored per query.
+    (:func:`_kmeans_exact_state`), trained inline, so codebook TRAINING,
+    assignment, probing, and top-k all hash-gate against DuckDB in one
+    query.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
@@ -2076,96 +1910,51 @@ def _ivf_exact_query(
     k: int = 10,
     nprobe: int = 3,
 ) -> DataFrame:
-    """The IVF QUERY path against a given coarse codebook state frame
-    (cid, S, n, s2): db assignment, query probing, candidate cosine,
-    per-query top-k — shared by the train-inline
-    (:func:`ann_ivf_exact_topk`) and train-once
-    (:func:`ann_ivf_persisted_topk`) variants."""
-    cents_row = cent.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "S", "n", "s2"))).alias("cents")
-    )
+    """The IVF query against an exact k-means state frame (cid, S, n,
+    s2) — shared by the train-inline and train-once variants."""
+    cents_row = _cents_row(cent)
     emb = _quantized(spark, sf_dir)
-    db = emb.crossJoin(F.broadcast(cents_row)).select(
-        "vec_id",
-        "qvec",
-        "n2",
-        F.expr(_KMEANS_ARGMIN + ".cid").alias("bucket"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy("v", "cid")
-    probes = (
-        emb.where(F.col("vec_id") % QUERY_MOD == 0)
-        .crossJoin(F.broadcast(cents_row))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("qvec").alias("q_qvec"),
-            F.col("n2").alias("q_n2"),
-            F.explode(
-                F.expr(
-                    "transform(cents, c -> struct("
-                    " CAST(c.s2 - 2 * aggregate(zip_with(qvec, c.S,"
-                    "        (a, b) -> CAST(a AS DECIMAL(38,0)) * b),"
-                    "      CAST(0 AS DECIMAL(38,0)), (acc, t) -> acc + t) * c.n"
-                    "      AS DOUBLE)"
-                    "   / CAST(c.n * c.n AS DOUBLE) AS v,"
-                    " c.cid AS cid))"
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "q_qvec", "q_n2", F.col("p.v").alias("v"), F.col("p.cid").alias("cid"))
-        .withColumn("pr", F.row_number().over(w_probe))
-        .where(F.col("pr") <= nprobe)
-        .select("query_id", "q_qvec", "q_n2", F.col("cid").alias("bucket"))
-    )
-    cand = (
-        db.join(probes, "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _probed_topk(_assign(emb, cents_row), _probe(emb, cents_row, nprobe), k)
 
 
+#: (artifact name, key) → parquet dir of every :func:`_persisted` artifact.
 _CODEBOOK_CACHE: dict = {}
+
+
+def _persisted(spark: SparkSession, sf_dir: str, name: str, params: tuple, build) -> DataFrame:
+    """Build once, read many: the frame ``build()`` persisted as parquet
+    under the temp dir as ``<name>_<tag>``, keyed by the embeddings
+    fixture's path + mtime + ``params`` — rebuilt only when the corpus
+    version or the artifact's shape changes."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, *params)
+    if (name, key) not in _CODEBOOK_CACHE:
+        tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
+        out = os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
+        if not os.path.isfile(os.path.join(out, "_SUCCESS")):
+            build().write.mode("overwrite").parquet(out)
+        _CODEBOOK_CACHE[name, key] = out
+    return spark.read.parquet(_CODEBOOK_CACHE[name, key])
 
 
 def _persisted_codebook(
     spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
 ) -> DataFrame:
     """Train-once / read-many coarse codebook: the exact k-means state
-    (cid, S, n, s2) persisted as parquet, keyed by the embeddings
-    fixture's path + mtime + hyperparameters — re-training only happens
-    when the corpus version or the codebook shape actually changes.
+    (cid, S, n, s2) persisted as parquet.
 
-    This is the production split the r4 verdict asked for (stretch 8):
     ``ann_ivf_exact_topk`` re-trains inside every hash-gated run, which
     is the right shape for the ORACLE (training is part of the gated
     semantics) but the wrong shape for the serving path — at 100 TB the
     codebook is a k×d-row artifact written by an offline job and read by
-    every query; the read is a broadcast-sized parquet scan. The exact
-    discipline makes the persisted state bit-identical to the freshly
-    trained one, so both variants share one oracle.
+    every query. The exact discipline makes the persisted state
+    bit-identical to the freshly trained one, so both variants share one
+    oracle.
     """
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, k, iters)
-    if key in _CODEBOOK_CACHE:
-        return spark.read.parquet(_CODEBOOK_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"ivf_codebook_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        _kmeans_exact_state(spark, sf_dir, k=k, iters=iters).write.mode(
-            "overwrite"
-        ).parquet(out)
-    _CODEBOOK_CACHE[key] = out
-    return spark.read.parquet(out)
+    return _persisted(
+        spark, sf_dir, "ivf_codebook", (k, iters),
+        lambda: _kmeans_exact_state(spark, sf_dir, k=k, iters=iters),
+    )
 
 
 def ann_ivf_persisted_topk(
@@ -2176,15 +1965,11 @@ def ann_ivf_persisted_topk(
     km_k: int = 8,
     iters: int = 3,
 ) -> DataFrame:
-    """IVF top-k over the PERSISTED codebook — the serving-path twin of
-    :func:`ann_ivf_exact_topk`: identical assignment/probe/rank
-    arithmetic, but the coarse centroids come from the train-once parquet
-    artifact (:func:`_persisted_codebook`) instead of being re-derived,
-    so the measured cost is the query path alone (one corpus assignment
-    scan + one probe scan + the bucket equi-join). Because the exact
-    k-means fixpoint is deterministic, the output is bit-identical to the
-    train-inline variant and hash-gates against the SAME DuckDB oracle
-    (which unrolls training — the oracle's job is semantics, not cost).
+    """IVF top-k over the PERSISTED codebook (:func:`_persisted_codebook`)
+    — the serving-path twin of :func:`ann_ivf_exact_topk`, so the
+    measured cost is the query path alone. The exact k-means fixpoint is
+    deterministic, so the output is bit-identical to the train-inline
+    variant and hash-gates against the SAME DuckDB oracle.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
@@ -2438,6 +2223,31 @@ v{i} AS MATERIALIZED (SELECT pos, ws / nrm AS val FROM w{i} CROSS JOIN n{i})"""
 IVFPQ_SHORTLIST = 50
 
 
+def _ivfpq_codes(spark: SparkSession, sf_dir: str, km_k: int, iters: int) -> DataFrame:
+    """(vec_id, bucket, m, cw, cwn2): every vector's coarse cell under the
+    persisted codebook plus its PQ codewords. PQ codes quantize the RAW
+    fixed-point vector (no residuals), as in :func:`ann_topk_pq`."""
+    cent = _persisted_codebook(spark, sf_dir, k=km_k, iters=iters)
+    emb = _quantized(spark, sf_dir)
+    db = _assign(emb, _cents_row(cent))
+    return _pq_encode(db, _pq_codebook(emb), "vec_id", "bucket")
+
+
+def _ivfpq_query(
+    spark: SparkSession, sf_dir: str, enc: DataFrame,
+    k: int, nprobe: int, km_k: int, iters: int, shortlist: int,
+) -> DataFrame:
+    """The IVFADC query over a code table ``enc`` (vec_id, bucket, m, cw,
+    cwn2): probe ``nprobe`` cells, ADC-score only their codes, keep a
+    ``shortlist`` per query, exact-cosine re-rank of the shortlist."""
+    emb = _quantized(spark, sf_dir)
+    cents_row = _cents_row(_persisted_codebook(spark, sf_dir, k=km_k, iters=iters))
+    probes = _probe(emb, cents_row, nprobe)
+    q_sub = _subvectors(probes, "q_qvec", "qm", "query_id", "q_n2", "bucket")
+    scored = _adc(enc.join(F.broadcast(q_sub), ["bucket", "m"]))
+    return _rerank(emb, _topk(scored, shortlist, F.desc("approx_cosine"), "vec_id"), k)
+
+
 def ann_ivfpq_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -2448,151 +2258,18 @@ def ann_ivfpq_topk(
     shortlist: int = IVFPQ_SHORTLIST,
 ) -> DataFrame:
     """IVF + PQ + exact re-rank — the ASSEMBLED production ANN pipeline
-    (the FAISS ``IVFPQ`` index shape, cf. the reference's approx-first
-    HLL/exact-verify discipline): coarse-prune to ``nprobe`` learned-
-    centroid posting lists, score the survivors by PQ asymmetric
-    distance (M codes per vector — the candidate scan reads codes, never
-    raw vectors), keep a ``shortlist`` per query, then exact fixed-point
-    cosine re-rank of the shortlist ONLY. Composes the repo's three
-    oracled ANN stages end to end:
-
-    * coarse codebook = the PERSISTED exact-k-means artifact
-      (:func:`_persisted_codebook` — train-once / read-many);
-    * PQ codes quantize the RAW fixed-point vector (no residuals), so
-      the ADC arithmetic is shared verbatim with :func:`ann_topk_pq`;
-    * the re-rank join mirrors :func:`ann_hamming_rerank_topk`.
-
-    Everything is exact integer arithmetic with min-id tie-breaks, so
-    coarse training, assignment, probing, encoding, ADC shortlist, and
-    the final top-k all hash-gate against one DuckDB oracle.
-
-    Plan at 100 TB: the corpus-sized frames carry only (vec_id, bucket,
-    M codes); the coarse codebook (km_k×d ints) and PQ codebook (M
-    broadcast rows) ship to every task; the candidate join is a bucket
-    equi-join against the nprobe-pruned broadcast query set (posting-
-    list scan, ~nprobe/km_k of the code table per query); the raw-vector
-    re-rank touches |queries|×shortlist point lookups.
+    (the FAISS ``IVFPQ`` index shape): coarse-prune to ``nprobe``
+    learned-centroid posting lists of the persisted exact-k-means
+    codebook, ADC-score the survivors' PQ codes, then exact cosine
+    re-rank of a ``shortlist`` per query. Every stage is exact integer
+    arithmetic with min-id tie-breaks, so the whole composition
+    hash-gates against one DuckDB oracle.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k — cosine
     is the EXACT fixed-point value for the re-ranked survivors.
     """
-    cent = _persisted_codebook(spark, sf_dir, k=km_k, iters=iters)
-    emb = _quantized(spark, sf_dir)
-    cents_row = cent.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "S", "n", "s2"))).alias("cents")
-    )
-    db = emb.crossJoin(F.broadcast(cents_row)).select(
-        "vec_id",
-        "qvec",
-        F.expr(_KMEANS_ARGMIN + ".cid").alias("bucket"),
-    )
-    # PQ-encode the database side (identical stage to ann_topk_pq, plus
-    # the bucket id carried through for the posting-list join).
-    cb = _pq_codebook(emb)
-    sub = db.select(
-        "vec_id",
-        "bucket",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        "qvec",
-    ).select(
-        "vec_id",
-        "bucket",
-        "m",
-        F.expr(f"slice(qvec, m * (size(qvec) div {PQ_M}) + 1,"
-               f" size(qvec) div {PQ_M})").alias("xm"),
-    )
-    best = F.expr(
-        "array_min(transform(cbook, c -> struct("
-        " c.cwn2 - 2 * aggregate(zip_with(xm, c.cw, (x, y) -> x * y),"
-        "   CAST(0 AS BIGINT), (acc, v) -> acc + v) AS cost,"
-        " c.cid AS cid, c.cw AS cw, c.cwn2 AS cwn2)))"
-    )
-    enc = (
-        sub.join(F.broadcast(cb), "m")
-        .select("vec_id", "bucket", "m", best.alias("b"))
-        .select(
-            "vec_id",
-            "bucket",
-            "m",
-            F.col("b.cw").alias("cw"),
-            F.col("b.cwn2").alias("cwn2"),
-        )
-    )
-    # Query probing — mirrors _ivf_exact_query's probe stage verbatim
-    # (not shared as a helper so that function's green-keyed source stays
-    # untouched; the arithmetic must match _KMEANS_ARGMIN's v exactly).
-    w_probe = Window.partitionBy("query_id").orderBy("v", "cid")
-    probes = (
-        emb.where(F.col("vec_id") % QUERY_MOD == 0)
-        .crossJoin(F.broadcast(cents_row))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("qvec").alias("q_qvec"),
-            F.col("n2").alias("q_n2"),
-            F.explode(
-                F.expr(
-                    "transform(cents, c -> struct("
-                    " CAST(c.s2 - 2 * aggregate(zip_with(qvec, c.S,"
-                    "        (a, b) -> CAST(a AS DECIMAL(38,0)) * b),"
-                    "      CAST(0 AS DECIMAL(38,0)), (acc, t) -> acc + t) * c.n"
-                    "      AS DOUBLE)"
-                    "   / CAST(c.n * c.n AS DOUBLE) AS v,"
-                    " c.cid AS cid))"
-                )
-            ).alias("p"),
-        )
-        .select(
-            "query_id", "q_qvec", "q_n2",
-            F.col("p.v").alias("v"), F.col("p.cid").alias("cid"),
-        )
-        .withColumn("pr", F.row_number().over(w_probe))
-        .where(F.col("pr") <= nprobe)
-        .select("query_id", "q_qvec", "q_n2", F.col("cid").alias("bucket"))
-    )
-    q_sub = probes.select(
-        "query_id",
-        "q_n2",
-        "bucket",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        "q_qvec",
-    ).select(
-        "query_id",
-        "q_n2",
-        "bucket",
-        "m",
-        F.expr(f"slice(q_qvec, m * (size(q_qvec) div {PQ_M}) + 1,"
-               f" size(q_qvec) div {PQ_M})").alias("qm"),
-    )
-    pairs = (
-        enc.join(F.broadcast(q_sub), ["bucket", "m"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("d", V.qdot("qm", "cw"))
-    )
-    scored = pairs.groupBy("query_id", "vec_id").agg(
-        F.sum("d").alias("adc_dot"),
-        F.sum("cwn2").alias("r_n2"),
-        F.first("q_n2").alias("q_n2"),
-    )
-    w_sl = Window.partitionBy("query_id").orderBy(
-        F.desc(V.cosine("adc_dot", "q_n2", "r_n2")), "vec_id"
-    )
-    sl = (
-        scored.withColumn("sr", F.row_number().over(w_sl))
-        .where(F.col("sr") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    rr = (
-        sl.join(emb, "vec_id")
-        .join(F.broadcast(query_set(emb)), "query_id")
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        rr.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    enc = _ivfpq_codes(spark, sf_dir, km_k, iters)
+    return _ivfpq_query(spark, sf_dir, enc, k, nprobe, km_k, iters, shortlist)
 
 
 def oracle_ann_ivfpq(
@@ -2705,72 +2382,18 @@ SELECT query_id, neighbor_id, cosine,
 FROM cs QUALIFY rank <= {k}"""
 
 
-_IVFPQ_INDEX_CACHE: dict = {}
-
-
 def _persisted_ivfpq_index(
     spark: SparkSession, sf_dir: str, km_k: int = 8, iters: int = 3
 ) -> DataFrame:
-    """Build-once / serve-many IVFPQ INDEX FILE: every vector's coarse
-    bucket + PQ codewords (vec_id, bucket, m, cw, cwn2) persisted as
-    parquet, keyed by the embeddings fixture's path + mtime +
-    hyperparameters — the FAISS ``.index`` analogue. At 100 TB this is
-    the artifact an offline index-build job writes (M codes a vector);
-    the query path reads codes and never touches raw vectors until the
-    re-rank."""
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, km_k, iters)
-    if key in _IVFPQ_INDEX_CACHE:
-        return spark.read.parquet(_IVFPQ_INDEX_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"ivfpq_index_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        cent = _persisted_codebook(spark, sf_dir, k=km_k, iters=iters)
-        emb = _quantized(spark, sf_dir)
-        cents_row = cent.agg(
-            F.sort_array(F.collect_list(F.struct("cid", "S", "n", "s2"))).alias("cents")
-        )
-        db = emb.crossJoin(F.broadcast(cents_row)).select(
-            "vec_id", "qvec", F.expr(_KMEANS_ARGMIN + ".cid").alias("bucket")
-        )
-        cb = _pq_codebook(emb)
-        sub = db.select(
-            "vec_id",
-            "bucket",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-            "qvec",
-        ).select(
-            "vec_id",
-            "bucket",
-            "m",
-            F.expr(f"slice(qvec, m * (size(qvec) div {PQ_M}) + 1,"
-                   f" size(qvec) div {PQ_M})").alias("xm"),
-        )
-        best = F.expr(
-            "array_min(transform(cbook, c -> struct("
-            " c.cwn2 - 2 * aggregate(zip_with(xm, c.cw, (x, y) -> x * y),"
-            "   CAST(0 AS BIGINT), (acc, v) -> acc + v) AS cost,"
-            " c.cid AS cid, c.cw AS cw, c.cwn2 AS cwn2)))"
-        )
-        (
-            sub.join(F.broadcast(cb), "m")
-            .select("vec_id", "bucket", "m", best.alias("b"))
-            .select(
-                "vec_id",
-                "bucket",
-                "m",
-                F.col("b.cw").alias("cw"),
-                F.col("b.cwn2").alias("cwn2"),
-            )
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-    _IVFPQ_INDEX_CACHE[key] = out
-    return spark.read.parquet(out)
+    """Build-once / serve-many IVFPQ INDEX FILE: :func:`_ivfpq_codes`
+    (vec_id, bucket, m, cw, cwn2) persisted as parquet — the FAISS
+    ``.index`` analogue an offline index-build job writes (M codes a
+    vector); the query path reads codes and never touches raw vectors
+    until the re-rank."""
+    return _persisted(
+        spark, sf_dir, "ivfpq_index", (km_k, iters),
+        lambda: _ivfpq_codes(spark, sf_dir, km_k, iters),
+    )
 
 
 def ann_ivfpq_persisted_topk(
@@ -2782,95 +2405,16 @@ def ann_ivfpq_persisted_topk(
     iters: int = 3,
     shortlist: int = IVFPQ_SHORTLIST,
 ) -> DataFrame:
-    """IVFPQ over the PERSISTED index file — the serving-path twin of
-    :func:`ann_ivfpq_topk`: identical probe/ADC/re-rank arithmetic, but
-    the per-vector (bucket, codes) come from the build-once parquet
-    artifact (:func:`_persisted_ivfpq_index`) instead of being
-    re-derived, so the measured cost is the query path alone: one probe
-    scan, the bucket equi-join over the code table, and the shortlist
-    re-rank's point lookups. Deterministic index build ⇒ bit-identical
-    to the train-inline variant, so the SAME oracle gates it.
+    """IVFPQ over the PERSISTED index file (:func:`_persisted_ivfpq_index`)
+    — the serving-path twin of :func:`ann_ivfpq_topk`, so the measured
+    cost is the query path alone. Deterministic index build ⇒
+    bit-identical to the train-inline variant, so the SAME oracle gates
+    it.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
     enc = _persisted_ivfpq_index(spark, sf_dir, km_k=km_k, iters=iters)
-    cent = _persisted_codebook(spark, sf_dir, k=km_k, iters=iters)
-    emb = _quantized(spark, sf_dir)
-    cents_row = cent.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "S", "n", "s2"))).alias("cents")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy("v", "cid")
-    probes = (
-        emb.where(F.col("vec_id") % QUERY_MOD == 0)
-        .crossJoin(F.broadcast(cents_row))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("qvec").alias("q_qvec"),
-            F.col("n2").alias("q_n2"),
-            F.explode(
-                F.expr(
-                    "transform(cents, c -> struct("
-                    " CAST(c.s2 - 2 * aggregate(zip_with(qvec, c.S,"
-                    "        (a, b) -> CAST(a AS DECIMAL(38,0)) * b),"
-                    "      CAST(0 AS DECIMAL(38,0)), (acc, t) -> acc + t) * c.n"
-                    "      AS DOUBLE)"
-                    "   / CAST(c.n * c.n AS DOUBLE) AS v,"
-                    " c.cid AS cid))"
-                )
-            ).alias("p"),
-        )
-        .select(
-            "query_id", "q_qvec", "q_n2",
-            F.col("p.v").alias("v"), F.col("p.cid").alias("cid"),
-        )
-        .withColumn("pr", F.row_number().over(w_probe))
-        .where(F.col("pr") <= nprobe)
-        .select("query_id", "q_qvec", "q_n2", F.col("cid").alias("bucket"))
-    )
-    q_sub = probes.select(
-        "query_id",
-        "q_n2",
-        "bucket",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        "q_qvec",
-    ).select(
-        "query_id",
-        "q_n2",
-        "bucket",
-        "m",
-        F.expr(f"slice(q_qvec, m * (size(q_qvec) div {PQ_M}) + 1,"
-               f" size(q_qvec) div {PQ_M})").alias("qm"),
-    )
-    pairs = (
-        enc.join(F.broadcast(q_sub), ["bucket", "m"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("d", V.qdot("qm", "cw"))
-    )
-    scored = pairs.groupBy("query_id", "vec_id").agg(
-        F.sum("d").alias("adc_dot"),
-        F.sum("cwn2").alias("r_n2"),
-        F.first("q_n2").alias("q_n2"),
-    )
-    w_sl = Window.partitionBy("query_id").orderBy(
-        F.desc(V.cosine("adc_dot", "q_n2", "r_n2")), "vec_id"
-    )
-    sl = (
-        scored.withColumn("sr", F.row_number().over(w_sl))
-        .where(F.col("sr") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    rr = (
-        sl.join(emb, "vec_id")
-        .join(F.broadcast(query_set(emb)), "query_id")
-        .withColumn("dot", V.qdot("qvec", "q_qvec"))
-        .withColumn("cosine", V.cosine("dot", "n2", "q_n2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        rr.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _ivfpq_query(spark, sf_dir, enc, k, nprobe, km_k, iters, shortlist)
 
 
 #: Truncation prefixes evaluated by the Matryoshka recall report.
@@ -2887,14 +2431,9 @@ def ann_truncation_recall_report(
     truncation point for an MRL-trained embedding (serve 8/64 of the
     vector at 8/64 of the memory and scan cost, keep X% of recall).
 
-    Everything is the fixed-point integer machinery (`slice` of the
-    quantized vector, int64 dots, min-id tie-breaks), so the report
-    hash-gates: per truncation dim, recall = Σ|top-k∩| / (k·|queries|)
-    as one exact-integer pair through one double division.
-
-    Plan: one broadcast query set serves all dims; the per-dim scans
-    share the quantized corpus projection; the report is
-    |TRUNC_DIMS|-row.
+    Per truncation dim, recall = Σ|top-k∩| / (k·|queries|) as one
+    exact-integer pair through one double division, so the report
+    hash-gates.
 
     Output: (trunc_dim, n_queries, recall) ordered small-to-large dims.
     """
@@ -2905,47 +2444,22 @@ def ann_truncation_recall_report(
     reports = []
     for d in TRUNC_DIMS:
         t = emb.select(
-            "vec_id", F.expr(f"slice(qvec, 1, {d})").alias("tvec")
-        ).withColumn("tn2", V.qdot("tvec", "tvec"))
-        q = t.where(F.col("vec_id") % QUERY_MOD == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("tvec").alias("q_tvec"),
-            F.col("tn2").alias("q_tn2"),
-        )
-        pairs = (
-            t.crossJoin(F.broadcast(q))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .withColumn("dot", V.qdot("tvec", "q_tvec"))
-            .withColumn("cosine", V.cosine("dot", "tn2", "q_tn2"))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-        topk = (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        )
+            "vec_id", F.expr(f"slice(qvec, 1, {d})").alias("qvec")
+        ).withColumn("n2", V.qnorm2("qvec"))
+        topk = _cosine_topk(_against_queries(t), k)
         hits = topk.join(
             full,
-            (topk.query_id == full.query_id)
-            & (topk.neighbor_id == full.full_nb),
+            (topk.query_id == full.query_id) & (topk.neighbor_id == full.full_nb),
             "left_semi",
         )
         reports.append(
-            hits.agg(
-                F.lit(d).cast("int").alias("trunc_dim"),
-                F.count("*").alias("n_hits"),
-            )
+            hits.agg(F.lit(d).cast("int").alias("trunc_dim"), F.count("*").alias("n_hits"))
         )
     nq = full.select("query_id").distinct().count()
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out.select(
+    return reduce(DataFrame.unionByName, reports).select(
         "trunc_dim",
         F.lit(nq).cast("bigint").alias("n_queries"),
-        (
-            F.col("n_hits").cast("double") / F.lit(float(k * nq))
-        ).alias("recall"),
+        (F.col("n_hits").cast("double") / F.lit(float(k * nq))).alias("recall"),
     )
 
 

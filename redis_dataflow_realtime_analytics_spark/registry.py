@@ -19,7 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.numeric import oracle_davg, oracle_dsum
-from .functions.vectors import oracle_qdot, oracle_quantize, oracle_quantize_int8
+from .functions.vectors import (
+    oracle_cosine,
+    oracle_qdot,
+    oracle_quantize,
+    oracle_quantize_int8,
+)
 from .operators import (
     classifier,
     dedup,
@@ -777,15 +782,6 @@ n AS (
   FROM (SELECT vec_id, unnest(qv) AS x FROM e) GROUP BY vec_id
 )"""
 
-#: cosine from int64 dot + norms — identical formula on the Spark side
-#: (functions.vectors.cosine), INCLUDING the zero-norm→0.0 guard (r7
-#: adversarial-fixture find: a zero embedding crashed every ANN consumer
-#: under ANSI mode).
-_ORACLE_COS = (
-    "CASE WHEN {a} > 0 AND {b} > 0 THEN CAST({d} AS DOUBLE) / "
-    "(sqrt(CAST({a} AS DOUBLE)) * sqrt(CAST({b} AS DOUBLE))) ELSE 0.0 END"
-)
-
 #: Brute-force exact-cosine oracle — also a CTE input to the retrieval
 #: evaluation report below, so it is built once and reused.
 _ORACLE_ANN_BRUTEFORCE = f"""WITH {_ORACLE_NORMS},
@@ -797,7 +793,7 @@ p AS (SELECT q.query_id, e.vec_id AS neighbor_id,
 d AS (SELECT query_id, neighbor_id, {oracle_qdot('z[1]', 'z[2]')} AS dot
       FROM p GROUP BY 1, 2),
 c AS (SELECT d.query_id, d.neighbor_id,
-             {_ORACLE_COS.format(d='d.dot', a='nq.n2', b='nn.n2')} AS cosine
+             {oracle_cosine('d.dot', 'nq.n2', 'nn.n2')} AS cosine
       FROM d
       JOIN n nq ON nq.vec_id = d.query_id
       JOIN n nn ON nn.vec_id = d.neighbor_id)
@@ -827,7 +823,7 @@ p AS (SELECT q.query_id, e.vec_id AS neighbor_id,
 d AS (SELECT query_id, neighbor_id, {oracle_qdot('z[1]', 'z[2]')} AS dot
       FROM p GROUP BY 1, 2),
 c AS (SELECT d.query_id, d.neighbor_id,
-             {_ORACLE_COS.format(d='d.dot', a='nq.n2', b='nn.n2')} AS approx_cosine
+             {oracle_cosine('d.dot', 'nq.n2', 'nn.n2')} AS approx_cosine
       FROM d
       JOIN n nq ON nq.vec_id = d.query_id
       JOIN n nn ON nn.vec_id = d.neighbor_id)
@@ -846,11 +842,11 @@ p AS (SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
 d AS (SELECT vec_id_a, vec_id_b, {oracle_qdot('z[1]', 'z[2]')} AS dot
       FROM p GROUP BY 1, 2)
 SELECT vec_id_a, vec_id_b,
-       {_ORACLE_COS.format(d='d.dot', a='na.n2', b='nb.n2')} AS cosine
+       {oracle_cosine('d.dot', 'na.n2', 'nb.n2')} AS cosine
 FROM d
 JOIN n na ON na.vec_id = vec_id_a
 JOIN n nb ON nb.vec_id = vec_id_b
-WHERE {_ORACLE_COS.format(d='d.dot', a='na.n2', b='nb.n2')} >= 0.45""",
+WHERE {oracle_cosine('d.dot', 'na.n2', 'nb.n2')} >= 0.45""",
 )
 # IVF is approximate vs brute force but fully DETERMINISTIC internally
 # (modulo-seeded centroids, exact int64 dots, explicit tie-breaks), so the
@@ -872,7 +868,7 @@ cd AS (SELECT vec_id, centroid_id,
               any_value(n2) AS n2, any_value(cn2) AS cn2
        FROM cp GROUP BY 1, 2),
 cs AS (SELECT vec_id, centroid_id,
-              {_ORACLE_COS.format(d='dot', a='n2', b='cn2')} AS c_cos
+              {oracle_cosine('dot', 'n2', 'cn2')} AS c_cos
        FROM cd),
 assign AS (
   SELECT vec_id, centroid_id AS bucket FROM cs
@@ -892,7 +888,7 @@ pairs AS (
 pd AS (SELECT query_id, vec_id, {oracle_qdot('z[1]', 'z[2]')} AS dot
        FROM pairs GROUP BY 1, 2),
 ps AS (SELECT pd.query_id, pd.vec_id,
-              {_ORACLE_COS.format(d='pd.dot', a='na.n2', b='nb.n2')} AS cosine
+              {oracle_cosine('pd.dot', 'na.n2', 'nb.n2')} AS cosine
        FROM pd JOIN n na ON na.vec_id = pd.vec_id
        JOIN n nb ON nb.vec_id = pd.query_id)
 SELECT query_id, vec_id AS neighbor_id, cosine,
@@ -920,7 +916,7 @@ pr AS (SELECT vec_id_a AS a, vec_id_b AS b
        FROM d
        JOIN n na ON na.vec_id = vec_id_a
        JOIN n nb ON nb.vec_id = vec_id_b
-       WHERE {_ORACLE_COS.format(d='d.dot', a='na.n2', b='nb.n2')} >= 0.45),
+       WHERE {oracle_cosine('d.dot', 'na.n2', 'nb.n2')} >= 0.45),
 edges AS (SELECT a, b FROM pr UNION SELECT b, a FROM pr),
 nodes AS (SELECT DISTINCT a AS nn FROM edges),
 reach(nn, m) AS (
@@ -1546,7 +1542,7 @@ cd AS (SELECT vec_id, centroid_id,
               any_value(n2) AS n2, any_value(cn2) AS cn2
        FROM cp GROUP BY 1, 2),
 cs AS (SELECT vec_id, centroid_id,
-              {_ORACLE_COS.format(d='dot', a='n2', b='cn2')} AS c_cos
+              {oracle_cosine('dot', 'n2', 'cn2')} AS c_cos
        FROM cd)
 SELECT vec_id, centroid_id AS bucket, c_cos FROM cs
 QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -2913,7 +2909,7 @@ q(
     similarity.oracle_ann_hamming_rerank().format(
         norms=_ORACLE_NORMS,
         qdot=oracle_qdot("z[1]", "z[2]"),
-        cos=_ORACLE_COS.format(d="d.dot", a="nq.n2", b="nn.n2"),
+        cos=oracle_cosine("d.dot", "nq.n2", "nn.n2"),
     ),
 )
 # Product-quantization ANN (FAISS-style ADC): M=8 integer-argmin codes per
@@ -3460,7 +3456,7 @@ p AS (SELECT q.query_id, e.vec_id AS neighbor_id,
 d AS (SELECT query_id, neighbor_id, {oracle_qdot('z[1]', 'z[2]')} AS dot
       FROM p GROUP BY 1, 2),
 c AS (SELECT d.query_id, d.neighbor_id,
-             {_ORACLE_COS.format(d='d.dot', a='nq.n2', b='nn.n2')} AS cosine
+             {oracle_cosine('d.dot', 'nq.n2', 'nn.n2')} AS cosine
       FROM d
       JOIN n nq ON nq.vec_id = d.query_id
       JOIN n nn ON nn.vec_id = d.neighbor_id),

@@ -41,6 +41,7 @@ Scale notes (100 TB/day ingest):
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
@@ -115,6 +116,16 @@ def _detach_memory_sink(spark: SparkSession, name: str) -> DataFrame:
     instead of living for the session."""
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
+    return out
+
+
+def _detach_scratch(df: DataFrame, *dirs: str) -> DataFrame:
+    """Pin ``df`` as an eager local checkpoint, then delete the per-call
+    scratch dirs it reads: the returned frame no longer touches them, so
+    a call leaves nothing behind under the temp dir."""
+    out = df.localCheckpoint(eager=True)
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -946,12 +957,13 @@ def stream_late_arrivals_audit(
         .start()
     )
     q.awaitTermination()
-    return (
+    late = (
         spark.read.schema("minute timestamp, late_events bigint")
         .parquet(out_dir)
         .groupBy("minute")
         .agg(F.sum("late_events").cast("bigint").alias("late_events"))
     )
+    return _detach_scratch(late, out_dir, f"{out_dir}_ckpt")
 
 
 def stream_visits_with_late_backfill(
@@ -2411,7 +2423,7 @@ def stream_duplicate_delivery_audit(
     # full outer: a minute whose every row was a duplicate delivery has
     # incrby counts but zero stored visits (possible only with duplicate
     # source event_ids — the adversarial-sweep fixtures)
-    return exact.join(incrby, "minute", "full_outer").select(
+    out = exact.join(incrby, "minute", "full_outer").select(
         "minute",
         F.coalesce("visits", F.lit(0)).cast("bigint").alias("visits"),
         F.coalesce("incrby_visits", F.lit(0)).cast("bigint").alias("incrby_visits"),
@@ -2421,6 +2433,7 @@ def stream_duplicate_delivery_audit(
         .cast("bigint")
         .alias("overcount"),
     )
+    return _detach_scratch(out, incrby_dir, store_dir, seen_dir, f"{base}_ckpt")
 
 
 def oracle_stream_duplicate_delivery(

@@ -84,22 +84,26 @@ def test_replay_writers_normalize_engine_written_sources(spark, tmp_path):
     import glob
     import shutil
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     src_dir = str(tmp_path / "ev_dir")
+    # The fixture's ts reads back as TIMESTAMP_NTZ, which the engine
+    # writes as INT64 µs; only a session TIMESTAMP is written as INT96.
     (
         spark.read.parquet(EVENTS)
         .limit(2000)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(src_dir)
     )
     one = str(tmp_path / "events_int96.parquet")
     shutil.move(glob.glob(f"{src_dir}/part-*.parquet")[0], one)
-    # precondition: the engine session really writes a ns-unit encoding
-    # (INT96 or TIMESTAMP(NANOS)); if a future conf change makes this µs,
-    # the test silently keeps covering the plain path
+    # precondition: the source really is a ns-unit encoding, so the
+    # replay writers' ns → µs rule is exercised, not the plain path
+    assert pq.read_schema(one).field("ts").type == pa.timestamp("ns")
     out = sp.stream_duplicate_delivery_audit(spark, one)
     got = {(r["minute"], r["visits"]) for r in out.collect()}
     want = {
@@ -113,6 +117,22 @@ def test_replay_writers_normalize_engine_written_sources(spark, tmp_path):
     d = sp._duplicate_delivery_replay_dir(one)
     chunk = glob.glob(f"{d}/chunk_*.parquet")[0]
     assert str(pq.read_schema(chunk).field("ts").type).startswith("timestamp[us")
+
+
+def test_audits_leave_no_scratch_dirs(spark):
+    """Both replay audits pin their result and remove their per-call
+    output and checkpoint dirs: once a first call has built the cached
+    replay dirs, further calls leave the temp dir's entry count unchanged,
+    and the returned rows still collect to the first call's."""
+    import tempfile
+
+    audits = (sp.stream_duplicate_delivery_audit, sp.stream_late_arrivals_audit)
+    first = [sorted(map(tuple, fn(spark, EVENTS).collect())) for fn in audits]
+    n_entries = len(os.listdir(tempfile.gettempdir()))
+    outs = [fn(spark, EVENTS) for fn in audits]
+    assert len(os.listdir(tempfile.gettempdir())) == n_entries
+    assert [sorted(map(tuple, o.collect())) for o in outs] == first
+    assert all(first)
 
 
 # ---------------------------------------------------------------------------

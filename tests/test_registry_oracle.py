@@ -21,12 +21,8 @@ from .oracle import compare
 
 @pytest.mark.parametrize("name", sorted(registry.ORACLE))
 def test_query_matches_oracle(spark, name):
-    df = registry.QUERIES[name](spark, SF_SMOKE)
-    compare(df, registry.ORACLE[name], SF_SMOKE)
-
-
-def test_oracled_output_schemas_are_driver_hashable(spark):
-    """Every SQL-oracled key must emit only scalar, pandas-hashable columns.
+    """The key matches its DuckDB oracle, and emits only scalar,
+    pandas-hashable columns.
 
     The driver's correctness gate canonicalizes results with pandas
     ``sort_values``/``factorize``, which raises ``TypeError: unhashable
@@ -35,24 +31,18 @@ def test_oracled_output_schemas_are_driver_hashable(spark):
     ``multimodal_decode_features`` array<double> and ``multimodal_resize``
     binary) — this guard ends it: project arrays to scalars (or
     ``array_join``) and binaries to ``hex()`` at the registration layer.
-
-    Schema inspection only — no job runs for batch keys (the plan is
-    lazy); the handful of streaming callables do execute, same as the
-    oracle-compare test above.
+    The schema is read from the frame the comparison runs anyway.
     """
     from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
-    bad: dict[str, list[str]] = {}
-    for name in registry.ORACLE:
-        df = registry.QUERIES[name](spark, SF_SMOKE)
-        offenders = [
-            f"{f.name}:{f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, BinaryType, MapType, StructType))
-        ]
-        if offenders:
-            bad[name] = offenders
-    assert not bad, f"driver-unhashable output columns in oracled keys: {bad}"
+    df = registry.QUERIES[name](spark, SF_SMOKE)
+    offenders = [
+        f"{f.name}:{f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, (ArrayType, BinaryType, MapType, StructType))
+    ]
+    assert not offenders, f"driver-unhashable output columns: {offenders}"
+    compare(df, registry.ORACLE[name], SF_SMOKE)
 
 
 @pytest.mark.parametrize("name", sorted(set(registry.QUERIES) - set(registry.ORACLE)))
