@@ -1276,7 +1276,7 @@ def _stream_store_variant_uniques(spark: SparkSession, sf_dir: str) -> DataFrame
     store = tempfile.mkdtemp(prefix="sketch_store_")
     ckpt = tempfile.mkdtemp(prefix="sketch_ckpt_")
     sp.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, ckpt)
-    return sp.read_uniques_per_variant_exact(spark, store)
+    return sp._detach_scratch(sp.read_uniques_per_variant_exact(spark, store), store, ckpt)
 
 
 q(
@@ -1507,7 +1507,7 @@ def _stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = tempfile.mkdtemp(prefix="sketch_store_")
     ckpt = tempfile.mkdtemp(prefix="sketch_ckpt_")
     sp.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, ckpt)
-    return sp.read_heavy_hitters(spark, store)
+    return sp._detach_scratch(sp.read_heavy_hitters(spark, store), store, ckpt)
 
 
 # All-time heavy hitters from the streaming count-min family: per-batch

@@ -34,6 +34,13 @@ Scale notes (100 TB/day ingest):
   five per-job fixed costs. Each writes its own ``batch_id=<n>`` leaf by
   plain static overwrite — no partition sort, no staging-dir rename, no
   session conf.
+* A ``foreachBatch`` sink receives an already-planned batch (a
+  ``LogicalRDD`` over the finished incremental plan), so Catalyst cannot
+  prune columns across that barrier: project to the sink's columns
+  before ``writeStream``. The sketch ingest selects ``STORE_COLUMNS``, so
+  its scan decodes 3 of 6 columns and the per-row ``props`` JSON parse
+  leaves the plan; the late-arrival and duplicate-delivery audits select
+  ``ts`` and ``(event_id, ts)``.
 * The store is plain partitioned parquet here; swap for Delta/Iceberg
   MERGE in production without touching the aggregation logic.
 """
@@ -54,6 +61,8 @@ from ..operators.metrics import CMS_DEPTH, CMS_WIDTH, _cms_pairs, approx_uniques
 from ..sources.events import normalize_events, read_events_stream
 
 WATERMARK = "10 minutes"
+# the only columns any SketchStoreWriter family reads
+STORE_COLUMNS = ("ts", "variant", "user_id")
 
 
 @contextmanager
@@ -370,13 +379,18 @@ class SketchStoreWriter:
     family; each thread inherits the caller's job group (a streaming
     query's run id), so ``query.stop()`` cancels in-flight writes. A
     failed write raises only after every other write has returned.
+
+    Only :data:`STORE_COLUMNS` are cached. The batch's plan is fixed
+    before the sink sees it, so that projection cannot reach the scan:
+    a query feeding this sink should select ``STORE_COLUMNS`` before
+    ``writeStream``, as :func:`run_sketch_ingest` does.
     """
 
     def __init__(self, store_dir: str):
         self.store_dir = store_dir
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        ev = batch_df.cache()
+        ev = batch_df.select(*STORE_COLUMNS).cache()
         try:
             families = {
                 "visits": ev.groupBy(_minute()).agg(F.count("*").alias("visits")),
@@ -413,8 +427,15 @@ def run_sketch_ingest(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """Replay ``events_path`` through the foreachBatch store (availableNow)."""
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    """Replay ``events_path`` through the foreachBatch store (availableNow).
+
+    The stream is projected to :data:`STORE_COLUMNS` before
+    ``writeStream``: the sink receives an already-planned batch, so only a
+    projection here prunes the file scan to three columns and drops the
+    ``props`` JSON parse from the plan."""
+    ev = normalize_events(
+        read_events_stream(spark, events_path, max_files_per_trigger)
+    ).select(*STORE_COLUMNS)
     q = (
         ev.withWatermark("ts", WATERMARK)
         .writeStream.foreachBatch(SketchStoreWriter(store_dir))
@@ -907,7 +928,8 @@ def stream_late_arrivals_audit(
     import uuid
 
     replay = _late_arrival_replay_dir(events_path, n_chunks)
-    stream = read_events_stream(spark, replay, max_files_per_trigger=1)
+    # the audit sink reads only ts; project before the foreachBatch barrier
+    stream = read_events_stream(spark, replay, max_files_per_trigger=1).select("ts")
     delay_us = delay_minutes * 60 * 1_000_000
     out_dir = os.path.join(
         tempfile.gettempdir(), f"late_audit_{uuid.uuid4().hex[:12]}"
@@ -2339,7 +2361,10 @@ def stream_duplicate_delivery_audit(
     import uuid
 
     replay = _duplicate_delivery_replay_dir(events_path, n_chunks, dup_chunk)
-    stream = read_events_stream(spark, replay, max_files_per_trigger=1)
+    # the sink reads only event_id and ts; project before the barrier
+    stream = read_events_stream(spark, replay, max_files_per_trigger=1).select(
+        "event_id", "ts"
+    )
     base = os.path.join(tempfile.gettempdir(), f"dupaudit_{uuid.uuid4().hex[:12]}")
     incrby_dir, store_dir, seen_dir = (
         f"{base}_incrby",

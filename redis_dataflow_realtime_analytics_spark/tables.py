@@ -12,30 +12,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL surface)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -112,6 +112,45 @@ def test_sketch_ingest_is_idempotent_on_replay(spark, multi_file_events, tmp_pat
     assert first == second == _batch_visits(spark)
 
 
+def test_sketch_ingest_sink_receives_only_store_columns(
+    spark, multi_file_events, tmp_path, monkeypatch
+):
+    """The ingest projects to the store's columns before the foreachBatch
+    barrier: the sink's batch arrives already planned, so any wider
+    column set would be scanned (and ``props`` JSON-parsed) for nothing."""
+    received = []
+
+    class Recording(sp.SketchStoreWriter):
+        def __call__(self, batch_df, batch_id):
+            received.append(tuple(batch_df.columns))
+            super().__call__(batch_df, batch_id)
+
+    monkeypatch.setattr(sp, "SketchStoreWriter", Recording)
+    sp.run_sketch_ingest(
+        spark, multi_file_events, str(tmp_path / "store"), str(tmp_path / "ck")
+    )
+    assert len(received) == 4
+    assert set(received) == {sp.STORE_COLUMNS}
+
+
+def test_store_backed_keys_leave_no_scratch_dirs(spark):
+    """The two store-backed registry keys pin their result and remove
+    their per-call store and checkpoint dirs: a call leaves the temp
+    dir's entry count unchanged, and its rows equal the first call's."""
+    import os
+    import tempfile
+
+    from redis_dataflow_realtime_analytics_spark.registry import QUERIES
+
+    for key in ("stream_store_uniques_per_variant", "stream_heavy_hitter_users"):
+        first = sorted(map(tuple, QUERIES[key](spark, SF_SMOKE).collect()))
+        n_entries = len(os.listdir(tempfile.gettempdir()))
+        out = QUERIES[key](spark, SF_SMOKE)
+        assert len(os.listdir(tempfile.gettempdir())) == n_entries, key
+        assert sorted(map(tuple, out.collect())) == first, key
+        assert first, key
+
+
 def test_sketch_store_batch_replay_is_idempotent(spark, tmp_path):
     """The exactly-once claim (SURVEY §4 delta 1): re-delivering a
     micro-batch must NOT change any read-side result — unlike the
@@ -180,13 +219,13 @@ def test_sketch_store_failed_family_raises_after_the_rest(
     (store / "user_cms").write_text("not a directory")
     families = ["visits", "user_sketch_minute", "user_sketch_variant", "user_set_variant"]
     ev = normalize_events(read_events(spark, SF_SMOKE))
+    spark.catalog.clearCache()
     with pytest.raises(Py4JJavaError, match="user_cms"):
         sp.SketchStoreWriter(str(store))(ev, 0)
     for family in families:
         assert (store / family / "batch_id=0" / "_SUCCESS").exists(), family
     assert not spark.sparkContext.statusTracker().getActiveJobsIds()
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    assert cache.lookupCachedData(ev._jdf).isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     stream = normalize_events(read_events_stream(spark, multi_file_events, 1))
     q = (
