@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load, spread
+from ..tables import load, persisted, spread
 
 #: Length-rule label threshold (chars); fixture median is ~306, so the
 #: classes are near-balanced at sf0.01.
@@ -408,35 +408,17 @@ FROM xy JOIN w{rounds} w USING (bucket)
 GROUP BY xy.doc_id"""
 
 
-#: (fixture path, mtime, rounds) -> parquet path of the trained weights.
-_MODEL_CACHE: dict = {}
-
-
 def _persisted_model(
     spark: SparkSession, sf_dir: str, rounds: int = 3
 ) -> DataFrame:
     """Train-once / score-many weights: :func:`perceptron_model` output
-    persisted as parquet keyed by fixture path + mtime + rounds — the
-    same artifact convention as the IVF codebook, BPE merge table, and
-    shard state. At 100 TB the model is a 65-row artifact written by
-    one training job over a sampled shard and read (broadcast) by every
-    scoring pass over the full corpus."""
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, rounds)
-    if key in _MODEL_CACHE:
-        return spark.read.parquet(_MODEL_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"perceptron_model_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        perceptron_model(spark, sf_dir, rounds=rounds).write.mode(
-            "overwrite"
-        ).parquet(out)
-    _MODEL_CACHE[key] = out
-    return spark.read.parquet(out)
+    persisted as parquet. At 100 TB the model is a 65-row artifact
+    written by one training job over a sampled shard and read
+    (broadcast) by every scoring pass over the full corpus."""
+    return persisted(
+        spark, "perceptron_model", f"{sf_dir}/documents.parquet", (rounds,),
+        lambda: perceptron_model(spark, sf_dir, rounds=rounds),
+    )
 
 
 def perceptron_persisted_scores(
@@ -469,43 +451,26 @@ def perceptron_persisted_scores(
     )
 
 
-#: (fixture path, mtime) -> parquet path of the centering statistics.
-_STATS_CACHE: dict = {}
-
-
 def _persisted_center_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FEATURE STORE half of the model artifact: per-bucket corpus
-    totals S_b and the corpus count N, persisted with the same keying
-    as the weights. Serving MUST center with the TRAINING corpus stats
-    — recomputing them per scoring batch is the classic train/serve
-    skew bug (a batch's own means differ from the corpus means the
-    weights were fit against), which is why production feature stores
-    version statistics alongside weights."""
-    import hashlib
-    import os
-    import tempfile
-
+    totals S_b and the corpus count N, persisted as parquet. Serving
+    MUST center with the TRAINING corpus stats — recomputing them per
+    scoring batch is the classic train/serve skew bug (a batch's own
+    means differ from the corpus means the weights were fit against),
+    which is why production feature stores version statistics
+    alongside weights."""
     from .text import hashed_features
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns)
-    if key in _STATS_CACHE:
-        return spark.read.parquet(_STATS_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"center_stats_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        docs = spread(load(spark, sf_dir, "documents"))
-        n = docs.count()
-        (
+    def stats() -> DataFrame:
+        n = spread(load(spark, sf_dir, "documents")).count()
+        return (
             hashed_features(spark, sf_dir)
             .groupBy("bucket")
             .agg(F.sum(F.col("n_terms").cast("bigint")).alias("S"))
             .withColumn("N", F.lit(int(n)).cast("bigint"))
-            .write.mode("overwrite")
-            .parquet(out)
         )
-    _STATS_CACHE[key] = out
-    return spark.read.parquet(out)
+
+    return persisted(spark, "center_stats", f"{sf_dir}/documents.parquet", (), stats)
 
 
 def score_batch_with_model(

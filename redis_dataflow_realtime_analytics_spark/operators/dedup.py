@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import oracle_dsum12
-from ..tables import load, spread
+from ..tables import load, materialized, spread
 
 # Explicit whitespace class — Java's \s includes \x0B, RE2's (DuckDB) does
 # not, so both sides spell the class out (see operators.text.WS).
@@ -1475,60 +1475,34 @@ JOIN sizes sb ON sb.doc_id = doc_b
 WHERE n_common / (sa.n + sb.n - n_common) >= {threshold}"""
 
 
-_PORTABLE_INDEX_CACHE: dict = {}
-
-
 def _persisted_portable_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Build-once / probe-many NEAR-DUP INDEX over the existing corpus
     (``doc_id % 10 != 0``): the banded (doc_id, band, bucket) rows and
-    the full 16-slot signatures, persisted as parquet keyed by the
-    documents fixture's path + mtime + the portable hyperparameters —
-    the same train-once/serve-many split as the entity-linkage and IVF
-    indices. At 100 TB the banded frame would be WRITTEN bucketed by
-    (band, bucket) so an arriving batch's probe shuffles only itself."""
-    import hashlib
-    import os
-    import tempfile
+    the full 16-slot signatures, persisted as parquet. At 100 TB the
+    banded frame would be WRITTEN bucketed by (band, bucket) so an
+    arriving batch's probe shuffles only itself."""
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        os.path.abspath(path),
-        os.stat(path).st_mtime_ns,
-        PORTABLE_PERMS,
-        PORTABLE_BANDS,
-        NGRAM_K,
+    def build(out: str) -> None:
+        docs = _spread(load(spark, sf_dir, "documents")).where(
+            F.col("doc_id") % 10 != 0
+        )
+        portable_minhash_signatures(docs).write.parquet(f"{out}/sig")
+        _band(
+            spark.read.parquet(f"{out}/sig"),
+            PORTABLE_PERMS,
+            PORTABLE_ROWS,
+            _concat_key,
+        ).write.parquet(f"{out}/bands")
+
+    out = materialized(
+        "portable_ndx",
+        f"{sf_dir}/documents.parquet",
+        (PORTABLE_PERMS, PORTABLE_BANDS, NGRAM_K),
+        build,
     )
-    if key not in _PORTABLE_INDEX_CACHE:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-        out = os.path.join(tempfile.gettempdir(), f"portable_ndx_{tag}")
-        # Gate the rebuild-skip on BOTH legs' _SUCCESS markers: sig is
-        # written before bands, so a crash between the two writes would
-        # otherwise leave a directory that passes a sig-only guard with
-        # bands missing — and the deterministic tag would make every
-        # later run fail reading bands until the temp dir was removed.
-        if not all(
-            os.path.isfile(os.path.join(out, leg, "_SUCCESS"))
-            for leg in ("sig", "bands")
-        ):
-            docs = _spread(load(spark, sf_dir, "documents")).where(
-                F.col("doc_id") % 10 != 0
-            )
-            sig = portable_minhash_signatures(docs)
-            sig.write.mode("overwrite").parquet(os.path.join(out, "sig"))
-            _band(
-                spark.read.parquet(os.path.join(out, "sig")),
-                PORTABLE_PERMS,
-                PORTABLE_ROWS,
-                _concat_key,
-            ).write.mode("overwrite").parquet(os.path.join(out, "bands"))
-        _PORTABLE_INDEX_CACHE[key] = out
-    out = _PORTABLE_INDEX_CACHE[key]
-    return (
-        spark.read.parquet(os.path.join(out, "bands")),
-        spark.read.parquet(os.path.join(out, "sig")),
-    )
+    return spark.read.parquet(f"{out}/bands"), spark.read.parquet(f"{out}/sig")
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -3074,16 +3048,12 @@ def _entity_grams(recs: DataFrame, q: int = ENTITY_Q) -> DataFrame:
     )
 
 
-_ENTITY_INDEX_CACHE: dict = {}
-
-
 def _persisted_entity_index(
     spark: SparkSession, sf_dir: str, q: int = ENTITY_Q,
     max_dist: int = ENTITY_MAX_DIST,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build-once / probe-many LINKAGE INDEX over the clean registry:
-    (names, gram-df table, prefix posting lists) persisted as parquet,
-    keyed by the documents fixture's path + mtime + hyperparameters.
+    (names, gram-df table, prefix posting lists) persisted as parquet.
 
     The df table is the load-bearing artifact: the prefix filter's
     losslessness proof needs BOTH sides' prefixes under ONE total order,
@@ -3094,39 +3064,29 @@ def _persisted_entity_index(
     the index has never seen rank first (df 0) — they extend the pinned
     order consistently and can match no clean prefix gram anyway.
     """
-    import hashlib
-    import os
-    import tempfile
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, q, max_dist)
-    if key not in _ENTITY_INDEX_CACHE:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-        out = os.path.join(tempfile.gettempdir(), f"entity_index_{tag}")
-        if not os.path.isfile(os.path.join(out, "names", "_SUCCESS")):
-            docs = spread(load(spark, sf_dir, "documents"))
-            clean = docs.select(
-                F.col("doc_id").alias("id"), F.expr(_ENTITY_TITLE).alias("name")
-            )
-            grams = _entity_grams(clean, q=q)
-            df_tab = grams.groupBy("gram").agg(F.count("*").alias("df"))
-            w = Window.partitionBy("id").orderBy("df", "gram")
-            prefix = (
-                grams.join(F.broadcast(df_tab), "gram")
-                .withColumn("r", F.row_number().over(w))
-                .where(F.col("r") <= q * max_dist + 1)
-                .select("id", "gram")
-            )
-            clean.write.mode("overwrite").parquet(os.path.join(out, "names"))
-            df_tab.write.mode("overwrite").parquet(os.path.join(out, "df"))
-            prefix.write.mode("overwrite").parquet(os.path.join(out, "prefix"))
-        _ENTITY_INDEX_CACHE[key] = out
-    out = _ENTITY_INDEX_CACHE[key]
-    return (
-        spark.read.parquet(os.path.join(out, "names")),
-        spark.read.parquet(os.path.join(out, "df")),
-        spark.read.parquet(os.path.join(out, "prefix")),
+    def build(out: str) -> None:
+        docs = spread(load(spark, sf_dir, "documents"))
+        clean = docs.select(
+            F.col("doc_id").alias("id"), F.expr(_ENTITY_TITLE).alias("name")
+        )
+        grams = _entity_grams(clean, q=q)
+        df_tab = grams.groupBy("gram").agg(F.count("*").alias("df"))
+        w = Window.partitionBy("id").orderBy("df", "gram")
+        prefix = (
+            grams.join(F.broadcast(df_tab), "gram")
+            .withColumn("r", F.row_number().over(w))
+            .where(F.col("r") <= q * max_dist + 1)
+            .select("id", "gram")
+        )
+        clean.write.parquet(f"{out}/names")
+        df_tab.write.parquet(f"{out}/df")
+        prefix.write.parquet(f"{out}/prefix")
+
+    out = materialized(
+        "entity_index", f"{sf_dir}/documents.parquet", (q, max_dist), build
     )
+    return tuple(spark.read.parquet(f"{out}/{leg}") for leg in ("names", "df", "prefix"))
 
 
 # --- Pipeline drop audit ------------------------------------------------------

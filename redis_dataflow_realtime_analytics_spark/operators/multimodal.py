@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import load, spread
+from ..tables import load, persisted, spread
 
 # The decode/resize closures reference module-level helpers (_parse_pnm /
 # _encode_pnm). Python workers don't inherit a driver-side sys.path patch,
@@ -1345,38 +1345,22 @@ def image_ahash_pairs(
     )
 
 
-#: (fixture path, mtime) -> parquet path of the banded aHash index over
-#: the existing images — same cache convention as the IVF codebook.
-_AHASH_INDEX_CACHE: dict = {}
-
-
 def _persisted_ahash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-build half of the incremental image near-dup split: the
     banded aHash table (doc_id, hash_hi, hash_lo, band_idx, band_val)
     of the EXISTING images (doc_id % 10 != 0 — the incremental fixture
-    convention of ``dedup.incremental_new_docs``), persisted as parquet
-    keyed by fixture path + mtime. At 100 TB this is the artifact the
-    nightly index job writes, bucketed by (band_idx, band_val) so the
-    per-batch probe join shuffles only the batch."""
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns)
-    if key in _AHASH_INDEX_CACHE:
-        return spark.read.parquet(_AHASH_INDEX_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"ahash_index_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        existing = with_content_gray_blob(spark, sf_dir).where(
-            "doc_id % 10 != 0"
-        )
-        _ahash_bands(
-            image_ahash(existing).select("doc_id", "hash_hi", "hash_lo")
-        ).write.mode("overwrite").parquet(out)
-    _AHASH_INDEX_CACHE[key] = out
-    return spark.read.parquet(out)
+    convention of ``dedup.incremental_new_docs``), persisted as parquet.
+    At 100 TB this is the artifact the nightly index job writes,
+    bucketed by (band_idx, band_val) so the per-batch probe join
+    shuffles only the batch."""
+    return persisted(
+        spark, "ahash_index", f"{sf_dir}/documents.parquet", (),
+        lambda: _ahash_bands(
+            image_ahash(
+                with_content_gray_blob(spark, sf_dir).where("doc_id % 10 != 0")
+            ).select("doc_id", "hash_hi", "hash_lo")
+        ),
+    )
 
 
 def image_ahash_probe(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dquant, oracle_dquant, oracle_dsum12
-from ..tables import load, spread
+from ..tables import load, persisted, spread
 
 
 def _hash_bucket(key: F.Column) -> F.Column:
@@ -1202,41 +1202,24 @@ SELECT doc_id, n_tokens, tokens_before,
 FROM scanned"""
 
 
-#: (fixture path, mtime, bucket_docs) -> parquet path of the existing
-#: corpus's per-bucket token sums — the persisted layout state the
-#: arrival path composes with (same cache convention as the IVF
-#: codebook and the BPE merge table).
-_SHARD_STATE_CACHE: dict = {}
-
-
 def _persisted_shard_state(
     spark: SparkSession, sf_dir: str, bucket_docs: int = 256
 ) -> DataFrame:
     """Layout-once / append-many state for :func:`shard_assignment_incremental`:
     the per-bucket token sums of the EXISTING corpus (doc_id below the
-    arrival watermark), persisted as parquet keyed by fixture path +
-    mtime + bucket size. At 100 TB this is the O(n/bucket_docs)-row
-    artifact the layout job leaves behind; every arrival batch reads it
-    as a broadcast-sized scan instead of rescanning the corpus."""
-    import hashlib
-    import os
-    import tempfile
-
+    arrival watermark), persisted as parquet. At 100 TB this is the
+    O(n/bucket_docs)-row artifact the layout job leaves behind; every
+    arrival batch reads it as a broadcast-sized scan instead of
+    rescanning the corpus."""
     from .text import TOKEN_RE
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, bucket_docs)
-    if key in _SHARD_STATE_CACHE:
-        return spark.read.parquet(_SHARD_STATE_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"shard_state_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
+    def state() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         thr = docs.agg(
             F.expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)").alias("thr")
         )
         existing = docs.crossJoin(F.broadcast(thr)).where("doc_id < thr")
-        state = (
+        return (
             existing.select(
                 F.size(F.split(F.trim(F.col("text")), TOKEN_RE))
                 .cast("bigint")
@@ -1246,9 +1229,10 @@ def _persisted_shard_state(
             .groupBy("bucket")
             .agg(F.sum("n_tokens").alias("bucket_tokens"))
         )
-        state.write.mode("overwrite").parquet(out)
-    _SHARD_STATE_CACHE[key] = out
-    return spark.read.parquet(out)
+
+    return persisted(
+        spark, "shard_state", f"{sf_dir}/documents.parquet", (bucket_docs,), state
+    )
 
 
 def shard_assignment_incremental(

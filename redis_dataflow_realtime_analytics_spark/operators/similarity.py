@@ -25,9 +25,6 @@ the IVFADC decomposition (Jégou et al., TPAMI 2011) written once:
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -35,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors as V
 from ..functions.numeric import oracle_dsum12
-from ..tables import load, spread
+from ..tables import load, persisted, spread
 
 #: Query set = every QUERY_MOD-th vector (deterministic, data-derived).
 QUERY_MOD = 100
@@ -1917,26 +1914,6 @@ def _ivf_exact_query(
     return _probed_topk(_assign(emb, cents_row), _probe(emb, cents_row, nprobe), k)
 
 
-#: (artifact name, key) → parquet dir of every :func:`_persisted` artifact.
-_CODEBOOK_CACHE: dict = {}
-
-
-def _persisted(spark: SparkSession, sf_dir: str, name: str, params: tuple, build) -> DataFrame:
-    """Build once, read many: the frame ``build()`` persisted as parquet
-    under the temp dir as ``<name>_<tag>``, keyed by the embeddings
-    fixture's path + mtime + ``params`` — rebuilt only when the corpus
-    version or the artifact's shape changes."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, *params)
-    if (name, key) not in _CODEBOOK_CACHE:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-        out = os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
-        if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-            build().write.mode("overwrite").parquet(out)
-        _CODEBOOK_CACHE[name, key] = out
-    return spark.read.parquet(_CODEBOOK_CACHE[name, key])
-
-
 def _persisted_codebook(
     spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
 ) -> DataFrame:
@@ -1951,8 +1928,8 @@ def _persisted_codebook(
     bit-identical to the freshly trained one, so both variants share one
     oracle.
     """
-    return _persisted(
-        spark, sf_dir, "ivf_codebook", (k, iters),
+    return persisted(
+        spark, "ivf_codebook", f"{sf_dir}/embeddings.parquet", (k, iters),
         lambda: _kmeans_exact_state(spark, sf_dir, k=k, iters=iters),
     )
 
@@ -2390,8 +2367,8 @@ def _persisted_ivfpq_index(
     ``.index`` analogue an offline index-build job writes (M codes a
     vector); the query path reads codes and never touches raw vectors
     until the re-rank."""
-    return _persisted(
-        spark, sf_dir, "ivfpq_index", (km_k, iters),
+    return persisted(
+        spark, "ivfpq_index", f"{sf_dir}/embeddings.parquet", (km_k, iters),
         lambda: _ivfpq_codes(spark, sf_dir, km_k, iters),
     )
 

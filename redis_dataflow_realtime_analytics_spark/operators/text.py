@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dquant, oracle_dquant, oracle_dsum12
-from ..tables import load, spread
+from ..tables import load, persisted, spread
 
 #: Explicit whitespace class, spelled identically for Java (Spark) and RE2
 #: (DuckDB). Java's ``\s`` is ``[ \t\n\x0B\f\r]`` but RE2's ``\s`` omits
@@ -1756,37 +1756,17 @@ def oracle_bpe_merges(n_merges: int = 3) -> str:
 {selects}"""
 
 
-#: (fixture path, mtime, n_merges) -> parquet path of the trained merge
-#: table — the train-once / encode-many split, keyed like the IVF
-#: codebook cache (``similarity._persisted_codebook``).
-_BPE_MERGES_CACHE: dict = {}
-
-
 def _persisted_bpe_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = 3
 ) -> DataFrame:
     """Train-once / encode-many merge table: :func:`bpe_merges` output
-    persisted as parquet, keyed by the documents fixture's path + mtime
-    + n_merges — retraining only happens when the corpus version or the
-    merge budget changes. At 100 TB the merge table is a vocabulary-
+    persisted as parquet. At 100 TB the merge table is a vocabulary-
     sized artifact written by one offline training job and read by
     every encode job; the read is a broadcast-sized parquet scan."""
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, n_merges)
-    if key in _BPE_MERGES_CACHE:
-        return spark.read.parquet(_BPE_MERGES_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"bpe_merges_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        bpe_merges(spark, sf_dir, n_merges=n_merges).write.mode(
-            "overwrite"
-        ).parquet(out)
-    _BPE_MERGES_CACHE[key] = out
-    return spark.read.parquet(out)
+    return persisted(
+        spark, "bpe_merges", f"{sf_dir}/documents.parquet", (n_merges,),
+        lambda: bpe_merges(spark, sf_dir, n_merges=n_merges),
+    )
 
 
 def bpe_encode(
@@ -1885,39 +1865,25 @@ def _bpe_encoded_vocab(
     return syms.select("w", "pos", "sym").join(F.broadcast(token_ids), "sym")
 
 
-_BPE_VOCAB_CACHE: dict = {}
-
-
 def _persisted_bpe_vocab(
     spark: SparkSession, sf_dir: str, n_merges: int = 3, doc_mod: int = 10
 ) -> DataFrame:
     """Train-once / serve-many COMPILED VOCABULARY artifact — (w, pos,
-    sym, token_id) parquet keyed by the documents fixture's path +
-    mtime + hyperparameters (the same persisted-artifact convention as
-    the IVF codebook and the perceptron weights). At 100 TB this is the
-    tokenizer file every encode/serving job broadcasts; an arriving
-    word missing from it (true OOV) would take the merge walk
-    (:func:`_bpe_encoded_vocab`) — on the fixture the vocabulary is
-    corpus-derived, so shipments contain no OOV by construction."""
-    import hashlib
-    import os
-    import tempfile
+    sym, token_id) parquet. At 100 TB this is the tokenizer file every
+    encode/serving job broadcasts; an arriving word missing from it
+    (true OOV) would take the merge walk (:func:`_bpe_encoded_vocab`) —
+    on the fixture the vocabulary is corpus-derived, so shipments
+    contain no OOV by construction."""
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (os.path.abspath(path), os.stat(path).st_mtime_ns, n_merges, doc_mod)
-    if key in _BPE_VOCAB_CACHE:
-        return spark.read.parquet(_BPE_VOCAB_CACHE[key])
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    out = os.path.join(tempfile.gettempdir(), f"bpe_vocab_{tag}")
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
+    def vocab() -> DataFrame:
         words = _bpe_doc_words(spark, sf_dir, doc_mod=doc_mod).localCheckpoint(
             eager=True
         )
-        _bpe_encoded_vocab(spark, sf_dir, words, n_merges=n_merges).write.mode(
-            "overwrite"
-        ).parquet(out)
-    _BPE_VOCAB_CACHE[key] = out
-    return spark.read.parquet(out)
+        return _bpe_encoded_vocab(spark, sf_dir, words, n_merges=n_merges)
+
+    return persisted(
+        spark, "bpe_vocab", f"{sf_dir}/documents.parquet", (n_merges, doc_mod), vocab
+    )
 
 
 def oracle_bpe_encode(n_merges: int = 3, doc_mod: int = 10) -> str:

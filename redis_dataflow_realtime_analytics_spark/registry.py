@@ -1268,15 +1268,24 @@ def _stream_uniques_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.stream_uniques_per_minute_approx(spark, f"{sf_dir}/events.parquet")
 
 
-def _stream_store_variant_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+def _sketch_store_read(spark: SparkSession, sf_dir: str, read) -> DataFrame:
+    """``read(spark, store)`` over a sketch store the events fixture is
+    ingested into, both in one per-call scratch dir."""
+    from .streaming import pipeline as sp
+    from .tables import pinned
 
+    def run(d: str) -> DataFrame:
+        store = f"{d}/store"
+        sp.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, f"{d}/checkpoint")
+        return read(spark, store)
+
+    return pinned(run)
+
+
+def _stream_store_variant_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming import pipeline as sp
 
-    store = tempfile.mkdtemp(prefix="sketch_store_")
-    ckpt = tempfile.mkdtemp(prefix="sketch_ckpt_")
-    sp.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, ckpt)
-    return sp._detach_scratch(sp.read_uniques_per_variant_exact(spark, store), store, ckpt)
+    return _sketch_store_read(spark, sf_dir, sp.read_uniques_per_variant_exact)
 
 
 q(
@@ -1500,14 +1509,9 @@ SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 
 
 def _stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from .streaming import pipeline as sp
 
-    store = tempfile.mkdtemp(prefix="sketch_store_")
-    ckpt = tempfile.mkdtemp(prefix="sketch_ckpt_")
-    sp.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, ckpt)
-    return sp._detach_scratch(sp.read_heavy_hitters(spark, store), store, ckpt)
+    return _sketch_store_read(spark, sf_dir, sp.read_heavy_hitters)
 
 
 # All-time heavy hitters from the streaming count-min family: per-batch

@@ -48,7 +48,6 @@ Scale notes (100 TB/day ingest):
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
@@ -59,6 +58,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..operators.metrics import CMS_DEPTH, CMS_WIDTH, _cms_pairs, approx_uniques, cms_sketch
 from ..sources.events import normalize_events, read_events_stream
+from ..tables import foreach_batch, materialized
 
 WATERMARK = "10 minutes"
 # the only columns any SketchStoreWriter family reads
@@ -125,16 +125,6 @@ def _detach_memory_sink(spark: SparkSession, name: str) -> DataFrame:
     instead of living for the session."""
     out = spark.table(name).localCheckpoint(eager=True)
     spark.catalog.dropTempView(name)
-    return out
-
-
-def _detach_scratch(df: DataFrame, *dirs: str) -> DataFrame:
-    """Pin ``df`` as an eager local checkpoint, then delete the per-call
-    scratch dirs it reads: the returned frame no longer touches them, so
-    a call leaves nothing behind under the temp dir."""
-    out = df.localCheckpoint(eager=True)
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -542,15 +532,11 @@ def _ts_micros(tbl):
 # ---------------------------------------------------------------------------
 # Replay materializer: fixtures as mtime-ordered multi-file streams
 # ---------------------------------------------------------------------------
-#: every replay directory this process has materialized or found, keyed
-#: on (kind, source path, source st_mtime_ns, shaping params)
-_REPLAY_DIRS: dict[tuple, str] = {}
-
-
 def _replay_dir(kind: str, src: str, params: tuple, build) -> str:
     """Materialize the parquet file ``src`` once as a replay directory of
-    shape ``kind`` and return its path; ``build(out, tbl)`` writes the
-    directory's files from the source table (usually via
+    shape ``kind`` (a :func:`~..tables.materialized` artifact keyed on
+    ``src`` + ``params``) and return its path; ``build(out, tbl)`` writes
+    the directory's files from the source table (usually via
     :func:`_write_chunks`).
 
     The file source turns a directory into a stream by replaying its files
@@ -559,48 +545,24 @@ def _replay_dir(kind: str, src: str, params: tuple, build) -> str:
     reference's Pub/Sub stream, and the stream/batch oracles re-derive
     chunk membership from the data alone.
 
-    * Cache key: (kind, src, nanosecond mtime, params). The ns mtime is
-      the rule the events schema probe follows, so an in-process fixture
-      rewrite reliably invalidates; ``params`` must carry EVERY constant
-      that shapes the files (chunk counts, split fraction, the
-      late-arrival jitter) — a constant retune must never reuse a dir
-      built under the old shape.
-    * Location: derived from the key under the temp dir, so repeated
-      invocations (bench reps, the driver's rounds, test reruns, later
-      processes) reuse one materialization per fixture version instead of
-      leaking a fresh tempdir per call.
-    * ``_COMPLETE`` is written last, so a half-built dir from an
-      interrupted run is rebuilt, not trusted. Its leading underscore
-      keeps it out of Spark's file listings (the ``_SUCCESS`` convention).
-    * An events table's ``ts`` is normalized to µs before ``build``: a
-      source written by this engine's session is INT96, which pyarrow
-      reads as timestamp[ns] and would re-write as INT64 TIMESTAMP(NANOS)
-      — an encoding the streaming scan's explicit µs schema refuses
-      (FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH, measured at the
-      r8 soak) and one that silently breaks any µs-unit epoch arithmetic
-      on the column (the late-arrival delay model). Truncating ns → µs is
-      the engine's own convention (``timestamp_micros(ts DIV 1000)`` in
-      read_events); µs sources (the driver fixtures) pass through
-      untouched.
+    An events table's ``ts`` is normalized to µs before ``build``: a
+    source written by this engine's session is INT96, which pyarrow
+    reads as timestamp[ns] and would re-write as INT64 TIMESTAMP(NANOS)
+    — an encoding the streaming scan's explicit µs schema refuses
+    (FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH, measured at the
+    r8 soak) and one that silently breaks any µs-unit epoch arithmetic
+    on the column (the late-arrival delay model). Truncating ns → µs is
+    the engine's own convention (``timestamp_micros(ts DIV 1000)`` in
+    read_events); µs sources (the driver fixtures) pass through
+    untouched.
     """
-    import hashlib
-    import tempfile
-
     import pyarrow.parquet as pq
 
-    key = (kind, src, os.stat(src).st_mtime_ns, params)
-    if key not in _REPLAY_DIRS:
-        tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-        out = os.path.join(tempfile.gettempdir(), f"{kind}_replay_{tag}")
-        marker = os.path.join(out, "_COMPLETE")
-        if not os.path.isfile(marker):
-            os.makedirs(out, exist_ok=True)
-            tbl = pq.read_table(src)
-            build(out, _ts_micros(tbl) if "ts" in tbl.column_names else tbl)
-            with open(marker, "w") as fh:
-                fh.write("ok\n")
-        _REPLAY_DIRS[key] = out
-    return _REPLAY_DIRS[key]
+    def write(out: str) -> None:
+        tbl = pq.read_table(src)
+        build(out, _ts_micros(tbl) if "ts" in tbl.column_names else tbl)
+
+    return materialized(f"{kind}_replay", src, params, write)
 
 
 def _write_chunks(out: str, tbl, n_chunks: int, tail=()) -> list[str]:
@@ -924,16 +886,10 @@ def stream_late_arrivals_audit(
     aggregation, no extra shuffle beyond the per-minute groupBy the main
     query already does.
     """
-    import tempfile
-    import uuid
-
     replay = _late_arrival_replay_dir(events_path, n_chunks)
     # the audit sink reads only ts; project before the foreachBatch barrier
     stream = read_events_stream(spark, replay, max_files_per_trigger=1).select("ts")
     delay_us = delay_minutes * 60 * 1_000_000
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"late_audit_{uuid.uuid4().hex[:12]}"
-    )
     # Sequential micro-batches (availableNow) make this closure-held
     # watermark state exact; a multi-query production deployment would
     # read it from StreamingQueryProgress instead. Two-deep state
@@ -944,7 +900,7 @@ def stream_late_arrivals_audit(
     # before the delay subtraction, as the engine truncates.
     hwm = {"enforced_us": None, "pending_us": None}
 
-    def audit(batch: DataFrame, _batch_id: int) -> None:
+    def audit(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         enforced = hwm["enforced_us"]
         if enforced is not None:
             wmark_us = (enforced // 1000) * 1000 - delay_us
@@ -972,20 +928,14 @@ def stream_late_arrivals_audit(
             prev_pend = hwm["pending_us"]
             hwm["pending_us"] = mx if prev_pend is None else max(prev_pend, mx)
 
-    q = (
-        stream.writeStream.foreachBatch(audit)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    late = (
-        spark.read.schema("minute timestamp, late_events bigint")
+    return foreach_batch(
+        stream,
+        audit,
+        lambda out_dir: spark.read.schema("minute timestamp, late_events bigint")
         .parquet(out_dir)
         .groupBy("minute")
-        .agg(F.sum("late_events").cast("bigint").alias("late_events"))
+        .agg(F.sum("late_events").cast("bigint").alias("late_events")),
     )
-    return _detach_scratch(late, out_dir, f"{out_dir}_ckpt")
 
 
 def stream_visits_with_late_backfill(
@@ -1144,9 +1094,6 @@ def stream_ingest_dedup(
     md5(text)`` dedup exactly — stream/batch parity for the incremental
     index semantics.
     """
-    import tempfile
-    import uuid
-
     replay = _chunked_docs_replay_dir(docs_path, n_chunks)
     schema = spark.read.parquet(docs_path).schema
     stream = (
@@ -1154,18 +1101,11 @@ def stream_ingest_dedup(
         .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
         .parquet(replay)
     )
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"ingest_index_{uuid.uuid4().hex[:12]}"
+    return foreach_batch(
+        stream,
+        lambda index_dir, *batch: IngestDedupWriter(index_dir)(*batch),
+        spark.read.parquet,
     )
-
-    q = (
-        stream.writeStream.foreachBatch(IngestDedupWriter(index_dir))
-        .option("checkpointLocation", f"{index_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(index_dir)
 
 
 def stream_decontamination_gate(
@@ -1193,9 +1133,6 @@ def stream_decontamination_gate(
     ``oracle_decontamination_hits`` — exact stream/batch parity because
     the filter is stateless per document.
     """
-    import tempfile
-    import uuid
-
     from ..operators.dedup import DECON_K, DECON_MOD, _shingle_array
 
     replay = _chunked_docs_replay_dir(docs_path, n_chunks)
@@ -1212,11 +1149,8 @@ def stream_decontamination_gate(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"decon_clean_{uuid.uuid4().hex[:12]}"
-    )
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         corpus = batch.where(F.col("doc_id") % DECON_MOD != 0)
         sh = corpus.select("doc_id", F.explode(_shingle_array(DECON_K)).alias("shingle"))
         contaminated = (
@@ -1228,14 +1162,7 @@ def stream_decontamination_gate(
             "doc_id", "lang", "source"
         ).write.mode("append").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_drop_audit(
@@ -1270,9 +1197,6 @@ def stream_drop_audit(
     index decision equals the batch canonical-per-group decision, and
     every other stage is per-document.
     """
-    import tempfile
-    import uuid
-
     from ..operators.dedup import (
         DECON_K,
         DECON_MOD,
@@ -1304,13 +1228,11 @@ def stream_drop_audit(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    tag = uuid.uuid4().hex[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"audit_out_{tag}")
-    index_dir = os.path.join(tempfile.gettempdir(), f"audit_index_{tag}")
 
-    def audit(batch: DataFrame, _batch_id: int) -> None:
+    def audit(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         import glob as _glob
 
+        index_dir = f"{out_dir}_index"
         ss = batch.sparkSession
         gate = quality_gate_frame(batch).select(
             "doc_id", F.col("keep").alias("pass_gate")
@@ -1381,14 +1303,7 @@ def stream_drop_audit(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(audit)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, audit, spark.read.parquet)
 
 
 def stream_hierarchical_rollup(
@@ -1411,18 +1326,12 @@ def stream_hierarchical_rollup(
     batch — no state store, no watermark; store size is O(minutes ×
     shipments-touching-the-minute), compacted by any later rewrite.
     """
-    import tempfile
-    import uuid
-
-    from ..sources.events import normalize_events, read_events_stream
-
     replay = _chunked_events_replay_dir(events_path)
     stream = normalize_events(
         read_events_stream(spark, replay, max_files_per_trigger)
     )
-    store = os.path.join(tempfile.gettempdir(), f"ca_store_{uuid.uuid4().hex[:12]}")
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(store: str, batch: DataFrame, _batch_id: int) -> None:
         (
             batch.groupBy(F.date_trunc("minute", F.col("ts")).alias("bucket"))
             .agg(
@@ -1433,16 +1342,8 @@ def stream_hierarchical_rollup(
             .parquet(store)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{store}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     m = (
-        spark.read.parquet(store)
+        foreach_batch(stream, ingest, spark.read.parquet)
         .groupBy("bucket")
         .agg(F.sum("visits").alias("visits"), F.sum("vsum").alias("vsum"))
     )
@@ -1510,9 +1411,6 @@ def stream_curated_ingest(
     doc_id-ascending, so first-seen == min) — stream/batch parity for the
     composed pipeline.
     """
-    import tempfile
-    import uuid
-
     from ..operators.text import GATE_MIN_QUALITY, quality_projection
 
     replay = _chunked_docs_replay_dir(docs_path, n_chunks)
@@ -1522,11 +1420,8 @@ def stream_curated_ingest(
         .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
         .parquet(replay)
     )
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"curated_index_{uuid.uuid4().hex[:12]}"
-    )
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(index_dir: str, batch: DataFrame, _batch_id: int) -> None:
         kept = (
             quality_projection(batch)
             .where(F.col("quality") >= GATE_MIN_QUALITY)
@@ -1543,14 +1438,7 @@ def stream_curated_ingest(
             b = b.join(idx, "content_hash", "left_anti")
         b.write.mode("append").parquet(index_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{index_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(index_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_ivf_assign(spark: SparkSession, emb_path: str) -> DataFrame:
@@ -1719,8 +1607,6 @@ def stream_shard_assignment(
     Output: (doc_id, n_tokens, tokens_before, shard_id) for every
     arrival doc across all shipments.
     """
-    import tempfile
-
     from ..operators.sampling import (
         _persisted_shard_state,
         _two_level_tokens_before,
@@ -1744,12 +1630,9 @@ def stream_shard_assignment(
         .agg(F.expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)"))
         .first()[0]
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_shards_{uuid.uuid4().hex[:12]}"
-    )
-    total_dir = os.path.join(out_dir + "_state")
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
+        total_dir = f"{out_dir}_state"
         ss = batch.sparkSession
         arrivals = batch.where(F.col("doc_id") >= thr).select(
             "doc_id",
@@ -1783,14 +1666,7 @@ def stream_shard_assignment(
             [(int(stream_total + batch_tokens),)], "t bigint"
         ).write.mode("overwrite").parquet(total_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_image_ahash_probe(
@@ -1836,13 +1712,8 @@ def stream_image_ahash_probe(
         )
         .localCheckpoint(eager=True)
     )
-    import tempfile
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_ahash_probe_{uuid.uuid4().hex[:12]}"
-    )
-
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.col("doc_id") % 10 == 0)
         if incoming.isEmpty():
             return
@@ -1867,14 +1738,7 @@ def stream_image_ahash_probe(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_model_scores(
@@ -1893,8 +1757,6 @@ def stream_model_scores(
     — equal to the batch scorer (stats pinned to the training corpus ⇒
     exact stream/batch parity), gated by the same unrolled-CTE oracle.
     """
-    import tempfile
-
     from ..operators.classifier import (
         _persisted_center_stats,
         _persisted_model,
@@ -1911,25 +1773,15 @@ def stream_model_scores(
     sf_dir = os.path.dirname(docs_path)
     weights = _persisted_model(spark, sf_dir).localCheckpoint(eager=True)
     stats = _persisted_center_stats(spark, sf_dir).localCheckpoint(eager=True)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_scores_{uuid.uuid4().hex[:12]}"
-    )
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
         score_batch_with_model(batch, weights, stats).write.mode(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_bpe_encode(
@@ -1954,10 +1806,6 @@ def stream_bpe_encode(
     exactly equal to the batch encoder (``text.bpe_encode``), so the
     same unrolled-training oracle gates it.
     """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..operators.text import TOKEN_RE, _persisted_bpe_vocab
 
     replay = _chunked_docs_replay_dir(docs_path, n_chunks)
@@ -1971,11 +1819,8 @@ def stream_bpe_encode(
     vocab = _persisted_bpe_vocab(
         spark, sf_dir, n_merges=n_merges, doc_mod=doc_mod
     ).localCheckpoint(eager=True)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_bpe_{uuid.uuid4().hex[:12]}"
-    )
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
         words = (
@@ -2002,14 +1847,7 @@ def stream_bpe_encode(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_entity_probe(
@@ -2031,10 +1869,7 @@ def stream_entity_probe(
     the batch matcher, so the same brute-force oracle proves the
     filter lossless for the streaming path too.
     """
-    import tempfile
-
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..operators.dedup import (
         ENTITY_MAX_DIST,
@@ -2060,11 +1895,8 @@ def stream_entity_probe(
     prefix = prefix.select(
         F.col("id").alias("clean_id"), "gram"
     ).localCheckpoint(eager=True)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_entity_{uuid.uuid4().hex[:12]}"
-    )
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.expr("doc_id % 20 IN (1, 7, 13)"))
         if incoming.isEmpty():
             return
@@ -2106,14 +1938,7 @@ def stream_entity_probe(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_neardup_probe(
@@ -2141,9 +1966,6 @@ def stream_neardup_probe(
     to the batch itself. Per-batch cost is O(batch × bucket occupancy).
     """
     import math
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     from ..operators import dedup as dd
 
@@ -2159,13 +1981,10 @@ def stream_neardup_probe(
         ix.localCheckpoint(eager=True)
         for ix in dd._persisted_portable_index(spark, sf_dir)
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_neardup_{uuid.uuid4().hex[:12]}"
-    )
     # the batch twin's default threshold, hence the same integer cut
     n_perms, threshold = dd.PORTABLE_PERMS, 0.5
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.col("doc_id") % 10 == 0)
         if incoming.isEmpty():
             return
@@ -2183,14 +2002,7 @@ def stream_neardup_probe(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return foreach_batch(stream, ingest, spark.read.parquet)
 
 
 def stream_constraint_report(
@@ -2209,10 +2021,6 @@ def stream_constraint_report(
     do — a twin that averaged per-shipment fractions would weight a
     10-doc shipment equal to a 10M-doc one.
     """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..operators.relational import _CONSTRAINTS
 
     replay = _chunked_docs_replay_dir(docs_path, n_chunks)
@@ -2222,11 +2030,8 @@ def stream_constraint_report(
         .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
         .parquet(replay)
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"stream_constraints_{uuid.uuid4().hex[:12]}"
-    )
 
-    def ingest(batch: DataFrame, _batch_id: int) -> None:
+    def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
             return
         (
@@ -2254,19 +2059,12 @@ def stream_constraint_report(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # NOTE: per-batch countDistinct on doc_id composes by SUM only
     # because the replay chunks partition doc_id ranges disjointly (the
     # replay is doc_id-ordered); with cross-shipment id reuse the
     # distinct partial would be a sketch/set union instead — documented
     # deliberately, asserted by the parity test.
-    partials = spark.read.parquet(out_dir)
+    partials = foreach_batch(stream, ingest, spark.read.parquet)
     a = partials.agg(
         F.sum("n").alias("n"),
         *[
@@ -2357,23 +2155,17 @@ def stream_duplicate_delivery_audit(
     set/merge semantics with no index at all, as ``RedisMetricsSink``
     does).
     """
-    import tempfile
-    import uuid
-
     replay = _duplicate_delivery_replay_dir(events_path, n_chunks, dup_chunk)
     # the sink reads only event_id and ts; project before the barrier
     stream = read_events_stream(spark, replay, max_files_per_trigger=1).select(
         "event_id", "ts"
     )
-    base = os.path.join(tempfile.gettempdir(), f"dupaudit_{uuid.uuid4().hex[:12]}")
-    incrby_dir, store_dir, seen_dir = (
-        f"{base}_incrby",
-        f"{base}_store",
-        f"{base}_seen",
-    )
-    def sink(batch: DataFrame, _batch_id: int) -> None:
+    read = spark.read.schema("minute timestamp, n bigint").parquet
+
+    def sink(store_dir: str, batch: DataFrame, _batch_id: int) -> None:
         import glob as _glob
 
+        incrby_dir, seen_dir = f"{store_dir}_incrby", f"{store_dir}_seen"
         minute = F.date_trunc("minute", F.col("ts")).alias("minute")
         # INCRBY discipline: apply every delivery, duplicates included.
         # coalesce(1): a per-minute partial aggregate of one micro-batch
@@ -2425,40 +2217,33 @@ def stream_duplicate_delivery_audit(
             .parquet(store_dir)
         )
 
+    def divergence(store_dir: str) -> DataFrame:
+        exact = (
+            read(store_dir)
+            .groupBy("minute")
+            .agg(F.sum("n").cast("bigint").alias("visits"))
+        )
+        incrby = (
+            read(f"{store_dir}_incrby")
+            .groupBy("minute")
+            .agg(F.sum("n").cast("bigint").alias("incrby_visits"))
+        )
+        # full outer: a minute whose every row was a duplicate delivery has
+        # incrby counts but zero stored visits (possible only with duplicate
+        # source event_ids — the adversarial-sweep fixtures)
+        return exact.join(incrby, "minute", "full_outer").select(
+            "minute",
+            F.coalesce("visits", F.lit(0)).cast("bigint").alias("visits"),
+            F.coalesce("incrby_visits", F.lit(0)).cast("bigint").alias("incrby_visits"),
+            (
+                F.coalesce("incrby_visits", F.lit(0)) - F.coalesce("visits", F.lit(0))
+            )
+            .cast("bigint")
+            .alias("overcount"),
+        )
+
     with _state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{base}_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    exact = (
-        spark.read.schema("minute timestamp, n bigint")
-        .parquet(store_dir)
-        .groupBy("minute")
-        .agg(F.sum("n").cast("bigint").alias("visits"))
-    )
-    incrby = (
-        spark.read.schema("minute timestamp, n bigint")
-        .parquet(incrby_dir)
-        .groupBy("minute")
-        .agg(F.sum("n").cast("bigint").alias("incrby_visits"))
-    )
-    # full outer: a minute whose every row was a duplicate delivery has
-    # incrby counts but zero stored visits (possible only with duplicate
-    # source event_ids — the adversarial-sweep fixtures)
-    out = exact.join(incrby, "minute", "full_outer").select(
-        "minute",
-        F.coalesce("visits", F.lit(0)).cast("bigint").alias("visits"),
-        F.coalesce("incrby_visits", F.lit(0)).cast("bigint").alias("incrby_visits"),
-        (
-            F.coalesce("incrby_visits", F.lit(0)) - F.coalesce("visits", F.lit(0))
-        )
-        .cast("bigint")
-        .alias("overcount"),
-    )
-    return _detach_scratch(out, incrby_dir, store_dir, seen_dir, f"{base}_ckpt")
+        return foreach_batch(stream, sink, divergence)
 
 
 def oracle_stream_duplicate_delivery(

@@ -35,14 +35,10 @@ RocksDB checkpoint on a session with no shim injected).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..tables import materialized
 
 #: replay shape shared by every key in this module (and re-derived by
 #: their DuckDB oracles, so it is part of the contract): the events
@@ -50,8 +46,6 @@ from pyspark.sql import functions as F
 #: makes chunk membership a pure function of the data — split into
 #: N_CHUNKS files replayed one micro-batch each.
 N_CHUNKS = 3
-
-_CKPT_DIRS: dict[tuple, str] = {}
 
 
 def _ensure_state_coordinator(spark: SparkSession) -> None:
@@ -85,44 +79,27 @@ def _checkpointed_run(
 ) -> str:
     """Run the ``kind`` uniques op ("legacy" = applyInPandasWithState /
     HDFS provider, "tws" = transformWithStateInPandas MapState /
-    RocksDB) over the ordered replay to a content-cached checkpoint and
+    RocksDB) over the ordered replay to a content-keyed checkpoint and
     return its location. The checkpoint is the ARTIFACT here — the
-    readers below scan it; a ``_QUERY_DONE`` marker (written only after
-    ``awaitTermination``) guards against reusing a half-built one."""
+    readers below scan it — and it is published only after
+    ``awaitTermination``, so a half-built one is never reused."""
     from . import stateful
 
     # even on a cache hit the CALLER is about to scan state — warm the
     # coordinator here, the one chokepoint every reader passes through
     _ensure_state_coordinator(spark)
-    key = (events_path, os.stat(events_path).st_mtime_ns, kind, n_chunks)
-    if key in _CKPT_DIRS:
-        return _CKPT_DIRS[key]
-    tag = hashlib.md5(
-        f"ckpt:{kind}:{events_path}:{key[1]}:{n_chunks}".encode()
-    ).hexdigest()[:16]
-    ckpt = os.path.join(tempfile.gettempdir(), f"state_reader_ckpt_{kind}_{tag}")
-    marker = os.path.join(ckpt, "_QUERY_DONE")
-    if os.path.isfile(marker):
-        _CKPT_DIRS[key] = ckpt
-        return ckpt
-    if os.path.isdir(ckpt):  # crashed half-build: never resume into it
-        shutil.rmtree(ckpt)
-
-    replay = _ordered_chunked_replay_dir(events_path, n_chunks)
-    if kind == "legacy":
-        stateful.stream_exact_uniques_per_variant(
-            spark, replay, checkpoint_dir=ckpt
-        ).collect()
-    elif kind == "tws":
-        stateful.stream_exact_uniques_per_variant_tws(
-            spark, replay, checkpoint_dir=ckpt
-        ).collect()
-    else:  # pragma: no cover - caller bug
-        raise ValueError(f"unknown checkpoint kind: {kind!r}")
-    with open(marker, "w") as fh:
-        fh.write("ok\n")
-    _CKPT_DIRS[key] = ckpt
-    return ckpt
+    run = {
+        "legacy": stateful.stream_exact_uniques_per_variant,
+        "tws": stateful.stream_exact_uniques_per_variant_tws,
+    }[kind]
+    return materialized(
+        f"state_reader_ckpt_{kind}",
+        events_path,
+        (n_chunks,),
+        lambda ckpt: run(
+            spark, _ordered_chunked_replay_dir(events_path, n_chunks), checkpoint_dir=ckpt
+        ).collect(),
+    )
 
 
 def state_reader_uniques(spark: SparkSession, events_path: str) -> DataFrame:

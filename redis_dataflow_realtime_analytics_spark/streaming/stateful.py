@@ -344,17 +344,18 @@ def _protobuf_shim_path(base_dir: str | None = None) -> str | None:
     """Path to prepend to the workers' PYTHONPATH so ``google.protobuf``
     imports, or ``None`` if it already does / no vendored runtime exists.
 
-    Built once per machine in the temp dir (``base_dir`` overrides, for
-    tests): symlinks to every module of the vendored runtime, with
-    ``runtime_version.py`` replaced by the no-op validator above (the
-    only file NOT symlinked). Both generated files are written to a
-    temp name and ``os.rename``d into place so a concurrent builder
-    (parallel pytest / driver session) can never expose a torn
-    ``runtime_version.py`` to a worker that is already importing it —
-    rename is atomic on POSIX, and the ``_COMPLETE`` marker only ever
-    appears after a fully-written shim."""
+    Built once per machine under :data:`~..tables.ARTIFACTS`
+    (``base_dir`` overrides, for tests): symlinks to every module of the
+    vendored runtime, with ``runtime_version.py`` replaced by the no-op
+    validator above (the only file NOT symlinked). Both generated files
+    are written to a temp name and ``os.rename``d into place so a
+    concurrent builder (parallel pytest / driver session) can never
+    expose a torn ``runtime_version.py`` to a worker that is already
+    importing it — rename is atomic on POSIX, and the ``_COMPLETE``
+    marker only ever appears after a fully-written shim."""
     import os
-    import tempfile
+
+    from ..tables import ARTIFACTS
 
     if base_dir is None:
         try:
@@ -368,7 +369,7 @@ def _protobuf_shim_path(base_dir: str | None = None) -> str | None:
     )
     if src is None:
         return None
-    shim = os.path.join(base_dir or tempfile.gettempdir(), "spark_tws_protobuf_shim")
+    shim = os.path.join(base_dir or ARTIFACTS, "spark_tws_protobuf_shim")
     pkg = os.path.join(shim, "google", "protobuf")
     marker = os.path.join(shim, "_COMPLETE")
     if not os.path.isfile(marker):

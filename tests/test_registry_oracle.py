@@ -6,6 +6,7 @@ the full-size check is the driver's job.
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -13,10 +14,16 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from redis_dataflow_realtime_analytics_spark import registry  # noqa: E402
+from redis_dataflow_realtime_analytics_spark import registry, tables  # noqa: E402
 
 from .conftest import SF_SMOKE
 from .oracle import compare
+
+
+def _scratch_entries() -> set[str]:
+    """What the per-call scratch root holds; every key must leave it as
+    it found it."""
+    return set(os.listdir(tables.SCRATCH)) if os.path.isdir(tables.SCRATCH) else set()
 
 
 @pytest.mark.parametrize("name", sorted(registry.ORACLE))
@@ -35,6 +42,7 @@ def test_query_matches_oracle(spark, name):
     """
     from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
+    scratch = _scratch_entries()
     df = registry.QUERIES[name](spark, SF_SMOKE)
     offenders = [
         f"{f.name}:{f.dataType.simpleString()}"
@@ -43,13 +51,16 @@ def test_query_matches_oracle(spark, name):
     ]
     assert not offenders, f"driver-unhashable output columns: {offenders}"
     compare(df, registry.ORACLE[name], SF_SMOKE)
+    assert _scratch_entries() == scratch, "the key left per-call scratch dirs"
 
 
 @pytest.mark.parametrize("name", sorted(set(registry.QUERIES) - set(registry.ORACLE)))
 def test_unoracled_query_runs(spark, name):
+    scratch = _scratch_entries()
     df = registry.QUERIES[name](spark, SF_SMOKE)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+    assert _scratch_entries() == scratch, "the key left per-call scratch dirs"
 
 
 def test_priority_window_covers_every_unchecked_oracled_key():

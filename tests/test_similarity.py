@@ -189,17 +189,27 @@ def test_persisted_ivf_matches_train_inline(spark):
     assert a == b and len(a) > 0
 
 
-def test_persisted_codebook_artifact_reused(spark):
-    """Second call must read the parquet artifact, not retrain: the cache
-    maps the fixture key to one path and the directory's _SUCCESS marker
-    survives."""
+def test_persisted_codebook_artifact_reused(spark, monkeypatch):
+    """Second call must read the parquet artifact, not retrain: the
+    shared artifact cache maps the fixture key to one path, the
+    published directory is complete, and training is never re-entered."""
     import os
 
+    from redis_dataflow_realtime_analytics_spark import tables
+
+    def codebooks() -> dict:
+        return {k: v for k, v in tables._ARTIFACTS.items() if k[0] == "ivf_codebook"}
+
     similarity.ann_ivf_persisted_topk(spark, SF_SMOKE).count()
-    n_before = len(similarity._CODEBOOK_CACHE)
+    before = codebooks()
+
+    def retrain(*_a, **_k):
+        raise AssertionError("the persisted codebook was retrained")
+
+    monkeypatch.setattr(similarity, "_kmeans_exact_state", retrain)
     similarity.ann_ivf_persisted_topk(spark, SF_SMOKE).count()
-    assert len(similarity._CODEBOOK_CACHE) == n_before
-    for path in similarity._CODEBOOK_CACHE.values():
+    assert codebooks() == before and before
+    for path in before.values():
         assert os.path.isfile(os.path.join(path, "_SUCCESS"))
 
 

@@ -151,6 +151,40 @@ def test_store_backed_keys_leave_no_scratch_dirs(spark):
         assert first, key
 
 
+def test_foreach_batch_runner_removes_scratch_on_return_and_on_failure(
+    spark, multi_file_events
+):
+    """The runner pins what the sink wrote and then removes the call's
+    scratch dir; when the sink raises mid-stream (after one batch was
+    written) the dir is removed as well."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from redis_dataflow_realtime_analytics_spark import tables
+
+    def entries() -> set[str]:
+        return set(os.listdir(tables.SCRATCH)) if os.path.isdir(tables.SCRATCH) else set()
+
+    def sink(fail_at, out, batch, batch_id):
+        if batch_id == fail_at:
+            raise RuntimeError("sink failed mid-stream")
+        batch.write.mode("append").parquet(out)
+
+    def run(fail_at):
+        stream = read_events_stream(spark, multi_file_events, max_files_per_trigger=1)
+        return tables.foreach_batch(
+            stream, lambda *a: sink(fail_at, *a), spark.read.parquet
+        )
+
+    before = entries()
+    assert run(None).count() == read_events(spark, SF_SMOKE).count() > 0
+    assert entries() == before
+    with pytest.raises(StreamingQueryException):
+        run(1)
+    assert entries() == before
+
+
 def test_sketch_store_batch_replay_is_idempotent(spark, tmp_path):
     """The exactly-once claim (SURVEY §4 delta 1): re-delivering a
     micro-batch must NOT change any read-side result — unlike the
