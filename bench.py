@@ -264,12 +264,11 @@ def summary_line(times: dict[str, float], sf_val) -> str:
     return line
 
 
-def main() -> None:
-    spark = get_spark(app_name="bench")
-    # warm the JVM/codegen paths so timings measure the plans, not startup
+def warm_up(spark) -> None:
+    """Warm the JVM/codegen paths and the Python/Arrow UDF workers, so
+    timings measure the plans, not startup (pandas-UDF queries otherwise
+    pay a one-time ~3 s interpreter spin-up inside their slot)."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # warm the Python/Arrow UDF workers the same way (pandas-UDF queries
-    # otherwise pay a one-time ~3 s interpreter spin-up inside their slot)
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -279,25 +278,35 @@ def main() -> None:
     _ident.__annotations__ = {"s": pd.Series, "return": pd.Series}
     spark.range(1_000).select(pandas_udf(_ident, "long")("id")).collect()
 
-    # Each query runs three times and records the fastest run: the first
-    # execution pays one-time JVM/whole-stage-codegen compilation (1-4 s per
-    # distinct plan shape) and occasional GC pauses from the preceding
-    # queries' shuffles — the min is the reproducible steady-state cost of
-    # the PLAN, which is what the round-over-round comparison should track
-    # (n=2 left 1.4-1.7x run-to-run noise on four queries in round 2; n=3
-    # bounds it). Caches are cleared between queries so no query benefits
-    # from another's state.
+
+def timed_runs(spark, name: str, sf_dir: str, n: int) -> list[float]:
+    """Wall times (s) of ``n`` end-to-end runs of registry key ``name``
+    on ``sf_dir``: build the plan, execute it into the no-op sink, then
+    clear the cache so no run or later query benefits from another's
+    state.
+
+    Callers record the fastest run: the first execution pays one-time
+    JVM/whole-stage-codegen compilation (1-4 s per distinct plan shape)
+    and occasional GC pauses from the preceding queries' shuffles — the
+    min is the reproducible steady-state cost of the PLAN, which is what
+    the round-over-round comparison should track (n=2 left 1.4-1.7x
+    run-to-run noise on four queries in round 2; n=3 bounds it)."""
+    fn = registry.QUERIES[name]
+    runs = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        runs.append(time.perf_counter() - t0)
+        spark.catalog.clearCache()
+    return runs
+
+
+def main() -> None:
+    spark = get_spark(app_name="bench")
+    warm_up(spark)
     times: dict[str, float] = {}
     for name in HEADLINE:
-        fn = registry.QUERIES[name]
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        times[name] = round(best, 3)
+        times[name] = round(min(timed_runs(spark, name, SF_DIR, 3)), 3)
         # one bounded record per query, emitted as it is measured — the
         # driver's tail window then recovers per-query numbers even when
         # the full set is large

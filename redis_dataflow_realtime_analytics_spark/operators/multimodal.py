@@ -180,15 +180,6 @@ def with_gray_blob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _le_hex(col: F.Column, n_bytes: int) -> F.Column:
-    """Hex string of an int column encoded little-endian in ``n_bytes``
-    bytes — pure Catalyst (lpad(hex) + byte-pair reversal), used to build
-    binary RIFF/WAV headers declaratively."""
-    h = F.lpad(F.lower(F.hex(col)), 2 * n_bytes, "0")
-    pairs = [F.substring(h, 2 * i - 1, 2) for i in range(n_bytes, 0, -1)]
-    return F.concat(*pairs)
-
-
 def with_audio_blob(spark: SparkSession, sf_dir: str, sample_rate: int = 8000) -> DataFrame:
     """Attach a genuine RIFF/WAV (PCM s16le mono) audio blob to each document.
 
@@ -670,7 +661,7 @@ def sample_video_frames(blobs: DataFrame, every: int = 2) -> DataFrame:
 def _le_hex(col, n_bytes: int):
     """Little-endian hex encoding of a non-negative integer column —
     ``n_bytes`` bytes (2 hex chars each) with the byte order reversed,
-    the layout every BMP header field uses."""
+    the layout every RIFF/WAV and BMP header field uses."""
     bh = F.lpad(F.lower(F.conv(col.cast("string"), 10, 16)), 2 * n_bytes, "0")
     pairs = [F.substring(bh, 2 * i - 1, 2) for i in range(n_bytes, 0, -1)]
     return F.concat(*pairs)

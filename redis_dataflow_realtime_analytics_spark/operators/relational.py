@@ -1131,6 +1131,47 @@ _CONSTRAINTS = [
     ("range_n_chars_1_100k", 1.0),
     ("min_length_100", 1.0),
 ]
+#: the conditional count behind each of :data:`_CONSTRAINTS`, in order
+_CONSTRAINT_COUNTS = ["c_text", "c_uniq", "c_len", "c_lang", "c_src", "c_range", "c_min100"]
+
+
+def _constraint_counts(docs: DataFrame) -> DataFrame:
+    """One row over ``docs``: the row count ``n`` and the conditional
+    counts :data:`_CONSTRAINT_COUNTS` — exact integers, so the rows of
+    doc_id-disjoint shipments merge by sum."""
+    return docs.agg(
+        F.count("*").alias("n"),
+        F.count(
+            F.when(F.col("text").isNotNull() & (F.length("text") > 0), 1)
+        ).alias("c_text"),
+        F.countDistinct("doc_id").alias("c_uniq"),
+        F.count(F.when(F.col("n_chars") == F.length("text"), 1)).alias("c_len"),
+        F.count(
+            F.when(F.col("lang").isin("de", "en", "es", "fr", "zh"), 1)
+        ).alias("c_lang"),
+        F.count(F.when(F.col("source").rlike("^src[0-9]+$"), 1)).alias("c_src"),
+        F.count(F.when(F.col("n_chars").between(1, 100000), 1)).alias("c_range"),
+        F.count(F.when(F.col("n_chars") >= 100, 1)).alias("c_min100"),
+    )
+
+
+def _constraint_rows(counts: DataFrame) -> DataFrame:
+    """The report from the one-row ``counts`` frame: one row per
+    constraint, each metric one double division of its count by ``n``
+    (``try_divide``: NULL metrics, not an error, on an empty corpus)."""
+    stack = ", ".join(
+        f"'{name}', try_divide(CAST({c} AS DOUBLE), CAST(n AS DOUBLE)),"
+        f" CAST({thr} AS DOUBLE)"
+        for (name, thr), c in zip(_CONSTRAINTS, _CONSTRAINT_COUNTS)
+    )
+    return counts.selectExpr(
+        f"stack({len(_CONSTRAINTS)}, {stack}) AS (check_name, metric, threshold)"
+    ).select(
+        "check_name",
+        "metric",
+        "threshold",
+        (F.col("metric") >= F.col("threshold")).alias("passed"),
+    )
 
 
 def constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,42 +1190,14 @@ def constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (check_name, metric DOUBLE, threshold DOUBLE, passed).
     """
-    docs = load(spark, sf_dir, "documents")
-    a = docs.agg(
-        F.count("*").alias("n"),
-        F.count(
-            F.when(F.col("text").isNotNull() & (F.length("text") > 0), 1)
-        ).alias("c_text"),
-        F.countDistinct("doc_id").alias("c_uniq"),
-        F.count(F.when(F.col("n_chars") == F.length("text"), 1)).alias("c_len"),
-        F.count(
-            F.when(F.col("lang").isin("de", "en", "es", "fr", "zh"), 1)
-        ).alias("c_lang"),
-        F.count(F.when(F.col("source").rlike("^src[0-9]+$"), 1)).alias("c_src"),
-        F.count(F.when(F.col("n_chars").between(1, 100000), 1)).alias("c_range"),
-        F.count(F.when(F.col("n_chars") >= 100, 1)).alias("c_min100"),
-    )
-    counts = ["c_text", "c_uniq", "c_len", "c_lang", "c_src", "c_range", "c_min100"]
-    stack = ", ".join(
-        f"'{name}', CAST({c} AS DOUBLE) / CAST(n AS DOUBLE), CAST({thr} AS DOUBLE)"
-        for (name, thr), c in zip(_CONSTRAINTS, counts)
-    )
-    return a.selectExpr(
-        f"stack({len(_CONSTRAINTS)}, {stack}) AS (check_name, metric, threshold)"
-    ).select(
-        "check_name",
-        "metric",
-        "threshold",
-        (F.col("metric") >= F.col("threshold")).alias("passed"),
-    )
+    return _constraint_rows(_constraint_counts(load(spark, sf_dir, "documents")))
 
 
 def oracle_constraint_report() -> str:
     """DuckDB twin of :func:`constraint_report` — the same one-pass
     conditional counts, unpivoted with UNION ALL."""
     rows = []
-    counts = ["c_text", "c_uniq", "c_len", "c_lang", "c_src", "c_range", "c_min100"]
-    for (name, thr), c in zip(_CONSTRAINTS, counts):
+    for (name, thr), c in zip(_CONSTRAINTS, _CONSTRAINT_COUNTS):
         rows.append(
             f"SELECT '{name}' AS check_name,"
             f" CAST({c} AS DOUBLE) / CAST(n AS DOUBLE) AS metric,"

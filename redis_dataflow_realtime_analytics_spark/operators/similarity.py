@@ -645,17 +645,29 @@ def ann_ivf_kmeans_topk(
     where sampled seeds land in dense regions and leave sparse regions
     without nearby centroids; tests gate recall within a band of the
     sampled variant rather than claiming dominance.
+
+    The quantized codebook is trained once per embeddings version and
+    shape (:func:`~..tables.persisted`); later calls run the query alone.
     """
-    if n_centroids is None:
-        n_centroids = max(
-            load(spark, sf_dir, "embeddings").count() // CENTROID_MOD, 2
+
+    def codebook() -> DataFrame:
+        k_cents = n_centroids
+        if k_cents is None:
+            k_cents = max(load(spark, sf_dir, "embeddings").count() // CENTROID_MOD, 2)
+        trained = kmeans_embedding_centroids(
+            spark, sf_dir, k=k_cents, iters=train_iters
+        ).select("cluster_id", "centroid").collect()
+        return spark.createDataFrame(
+            [(int(r.cluster_id), V.quantize_py(r.centroid)) for r in trained],
+            "centroid_id int, c_qvec array<bigint>",
         )
-    trained = kmeans_embedding_centroids(
-        spark, sf_dir, k=n_centroids, iters=train_iters
-    ).select("cluster_id", "centroid").collect()
-    cents = spark.createDataFrame(
-        [(int(r.cluster_id), V.quantize_py(r.centroid)) for r in trained],
-        "centroid_id int, c_qvec array<bigint>",
+
+    cents = persisted(
+        spark,
+        "ivf_kmeans_codebook",
+        f"{sf_dir}/embeddings.parquet",
+        (n_centroids, train_iters, CENTROID_MOD),
+        codebook,
     ).withColumn("c_n2", V.qnorm2("c_qvec"))
     return _ivf_query(_quantized(spark, sf_dir), cents, k, nprobe)
 

@@ -13,6 +13,7 @@ experiment_id→json ``props.k``, timestamp→ts.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +39,7 @@ from .operators import (
     timeseries,
 )
 from .sources import normalize_events, read_events
+from .tables import load, pinned
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -79,6 +81,25 @@ def q(name: str, fn: QueryFn, oracle: str | None = None) -> None:
         ORACLE[name] = oracle
 
 
+def _stream(target: str, table: str, *frames: str, **kw) -> QueryFn:
+    """The query fn calling ``streaming.<target>`` (``"<module>.<fn>"``)
+    with the fixture path ``<sf_dir>/<table>.parquet``, then each fixture
+    table named in ``frames`` loaded, then ``kw``. The streaming module is
+    imported only when the key runs."""
+    module, fn = target.rsplit(".", 1)
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        stream_fn = getattr(importlib.import_module(f".streaming.{module}", __package__), fn)
+        return stream_fn(
+            spark,
+            f"{sf_dir}/{table}.parquet",
+            *(load(spark, sf_dir, t) for t in frames),
+            **kw,
+        )
+
+    return run
+
+
 # ---------------------------------------------------------------------------
 # Reference-parity metric grains (SURVEY §2.2, W1–W12)
 # ---------------------------------------------------------------------------
@@ -111,28 +132,16 @@ q(
     "w3_uniques_per_variant_approx",
     lambda s, d: metrics.uniques_per_variant(_ev(s, d), exact=False),
 )
-def _stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline
-
-    return pipeline.stream_sliding_visits(spark, f"{sf_dir}/events.parquet")
-
-
-def _stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline
-
-    return pipeline.stream_user_sessions(spark, f"{sf_dir}/events.parquet")
-
-
 # Streaming twins of the batch sliding/session windows — same oracles
 # (stream/batch parity is the correctness claim).
 q(
     "stream_sliding_visits",
-    _stream_sliding,
+    _stream("pipeline.stream_sliding_visits", "events"),
     sessions.oracle_sliding_visits(EV_CTE),
 )
 q(
     "stream_user_sessions",
-    _stream_sessions,
+    _stream("pipeline.stream_user_sessions", "events"),
     sessions.oracle_user_sessions(EV_CTE),
 )
 
@@ -1256,23 +1265,10 @@ FROM b GROUP BY doc_id, f, n_frames""",
 # Structured Streaming (SURVEY §2.5 streaming / Phase 2) — availableNow
 # replays through the real streaming engine; oracles prove stream/batch parity
 # ---------------------------------------------------------------------------
-def _stream_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_visits_per_minute(spark, f"{sf_dir}/events.parquet")
-
-
-def _stream_uniques_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_uniques_per_minute_approx(spark, f"{sf_dir}/events.parquet")
-
-
 def _sketch_store_read(spark: SparkSession, sf_dir: str, read) -> DataFrame:
     """``read(spark, store)`` over a sketch store the events fixture is
     ingested into, both in one per-call scratch dir."""
     from .streaming import pipeline as sp
-    from .tables import pinned
 
     def run(d: str) -> DataFrame:
         store = f"{d}/store"
@@ -1290,26 +1286,23 @@ def _stream_store_variant_uniques(spark: SparkSession, sf_dir: str) -> DataFrame
 
 q(
     "stream_visits_per_minute",
-    _stream_visits,
+    _stream("pipeline.stream_visits_per_minute", "events"),
     f"""{EV_CTE}
 SELECT date_trunc('minute', ts) AS minute, count(*) AS visits
 FROM ev GROUP BY 1""",
 )
-q("stream_uniques_per_minute_approx", _stream_uniques_approx)
+q(
+    "stream_uniques_per_minute_approx",
+    _stream("pipeline.stream_uniques_per_minute_approx", "events"),
+)
 
 
 # Streaming corpus ingestion: the stateless quality prefilter applied on
 # arrival (scan → project → filter, no state store); oracle = the batch
 # projection + threshold, proving stream/batch parity for the filter path.
-def _stream_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_quality_filtered_docs(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_quality_filtered_docs",
-    _stream_quality_docs,
+    _stream("pipeline.stream_quality_filtered_docs", "documents"),
     f"""SELECT * FROM ({text.oracle_quality_score()})
 WHERE quality >= {text.GATE_MIN_QUALITY}""",
 )
@@ -1319,15 +1312,9 @@ WHERE quality >= {text.GATE_MIN_QUALITY}""",
 # content-hash index store (foreachBatch), appending only first-seen
 # hashes; doc_id-ascending shipments make first-seen == min(doc_id), so
 # the batch dedup is the exact oracle (stream/batch parity).
-def _stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_ingest_dedup(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_ingest_dedup",
-    _stream_ingest_dedup,
+    _stream("pipeline.stream_ingest_dedup", "documents"),
     """SELECT md5(text) AS content_hash, min(doc_id) AS doc_id
 FROM documents GROUP BY 1""",
 )
@@ -1335,15 +1322,9 @@ FROM documents GROUP BY 1""",
 
 # The fused production ingest: quality prefilter + incremental dedup in
 # ONE foreachBatch — rejected docs never cost an md5 or an index probe.
-def _stream_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_curated_ingest(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_curated_ingest",
-    _stream_curated_ingest,
+    _stream("pipeline.stream_curated_ingest", "documents"),
     f"""WITH q AS ({text.oracle_quality_score()})
 SELECT md5(d.text) AS content_hash, min(d.doc_id) AS doc_id
 FROM documents d JOIN q ON q.doc_id = d.doc_id
@@ -1353,15 +1334,9 @@ GROUP BY 1""",
 # Streaming decontamination gate: each shipment screened against the
 # static benchmark shingle set (broadcast semi-join + anti-join, no
 # state); output = accepted clean corpus docs, batch-parity oracle.
-def _stream_decontamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_decontamination_gate(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_decontamination_gate",
-    _stream_decontamination_gate,
+    _stream("pipeline.stream_decontamination_gate", "documents"),
     f"""WITH hits AS ({dedup.oracle_decontamination_hits()})
 SELECT doc_id, lang, source
 FROM documents
@@ -1373,19 +1348,19 @@ WHERE doc_id % {dedup.DECON_MOD} <> 0
 # survivor-hash index probe-then-append, broadcast benchmark shingles);
 # byte-exact stream/batch parity against the UNCHANGED batch oracle
 # because shipments replay doc_id-ascending (first-seen == global min).
-def _stream_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_drop_audit(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_drop_audit",
-    _stream_drop_audit,
+    _stream("pipeline.stream_drop_audit", "documents"),
     dedup.oracle_corpus_drop_audit(
         f"regexp_replace(lower(trim(text)), '{text.TOKEN_SQL}', ' ', 'g')"
     ),
 )
+
+
+def _oracle_stream_late_arrivals() -> str:
+    from .streaming.pipeline import oracle_stream_late_arrivals
+
+    return oracle_stream_late_arrivals()
 
 
 # Watermark/late-data observability (r7, SURVEY §2.5's semantic delta made
@@ -1395,21 +1370,11 @@ q(
 # the fixture, so the DuckDB oracle re-derives the drop set exactly;
 # engine parity (append-mode windowed count drops exactly these rows) is
 # pinned in tests/test_streaming_late.py.
-def _stream_late_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_late_arrivals_audit(spark, f"{sf_dir}/events.parquet")
-
-
-def _oracle_stream_late_arrivals() -> str:
-    # local import: registry keeps streaming modules off its import path
-    # (same laziness as every _stream_* query fn above)
-    from .streaming.pipeline import oracle_stream_late_arrivals
-
-    return oracle_stream_late_arrivals()
-
-
-q("stream_late_arrivals_audit", _stream_late_arrivals, _oracle_stream_late_arrivals())
+q(
+    "stream_late_arrivals_audit",
+    _stream("pipeline.stream_late_arrivals_audit", "events"),
+    _oracle_stream_late_arrivals(),
+)
 
 
 # ... and the REPAIR: update-mode watermarked count (drops the audited
@@ -1417,19 +1382,19 @@ q("stream_late_arrivals_audit", _stream_late_arrivals, _oracle_stream_late_arriv
 # exactly — so the oracle is the plain per-minute count, no replay
 # modeling. The Lambda-style late-backfill correction as a first-class,
 # hash-gated op.
-def _stream_visits_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_visits_with_late_backfill(spark, f"{sf_dir}/events.parquet")
-
-
 q(
     "stream_visits_late_backfill",
-    _stream_visits_backfill,
+    _stream("pipeline.stream_visits_with_late_backfill", "events"),
     """SELECT date_trunc('minute', ts) AS minute,
        CAST(count(*) AS BIGINT) AS visits
 FROM events GROUP BY 1""",
 )
+
+
+def _oracle_stream_dup_delivery() -> str:
+    from .streaming.pipeline import oracle_stream_duplicate_delivery
+
+    return oracle_stream_duplicate_delivery(EV_CTE)
 
 
 # SURVEY §4 delta 1 made measurable (r8, the delivery-semantics sibling
@@ -1440,34 +1405,16 @@ FROM events GROUP BY 1""",
 # a pure function of (ts, event_id), so the oracle re-derives the exact
 # per-minute overcount. Duplicate repair ON THE STREAM itself is the
 # separate stream_deduped_visits key; this one audits the SINK contract.
-def _stream_dup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_duplicate_delivery_audit(spark, f"{sf_dir}/events.parquet")
-
-
-def _oracle_stream_dup_delivery() -> str:
-    from .streaming.pipeline import oracle_stream_duplicate_delivery
-
-    return oracle_stream_duplicate_delivery(EV_CTE)
-
-
 q(
     "stream_duplicate_delivery_audit",
-    _stream_dup_delivery,
+    _stream("pipeline.stream_duplicate_delivery_audit", "events"),
     _oracle_stream_dup_delivery(),
 )
 # Streaming multimodal ingest: the Catalyst blob synthesis + Arrow
 # histogram per micro-batch (stateless); batch-parity histogram oracle.
-def _stream_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_image_ingest_features(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_image_ingest_features",
-    _stream_image_ingest,
+    _stream("pipeline.stream_image_ingest_features", "documents"),
     multimodal.oracle_image_histogram(),
 )
 # Streaming arrival-path shard layout: per-shipment two-level prefix
@@ -1475,29 +1422,17 @@ q(
 # composed over the persisted corpus state + a running stream total;
 # doc_id-ascending shipments + prefix-sum composition => bit-identical
 # to the batch incremental layout, same flat-window oracle.
-def _stream_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_shard_assignment(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_shard_assignment",
-    _stream_shard_assignment,
+    _stream("pipeline.stream_shard_assignment", "documents"),
     sampling.oracle_shard_assignment_incremental(),
 )
 # Streaming image near-dup probe: per-shipment decode+aHash of incoming
 # images probed against the persisted banded index (stateless filter
 # => exact stream/batch parity, same oracle as the batch probe).
-def _stream_image_ahash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_image_ahash_probe(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_image_ahash_probe",
-    _stream_image_ahash_probe,
+    _stream("pipeline.stream_image_ahash_probe", "documents"),
     multimodal.oracle_image_ahash_probe(),
 )
 q(
@@ -1521,19 +1456,13 @@ def _stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 q("stream_heavy_hitter_users", _stream_heavy_hitters)
 
 
-def _stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_ivf_assign(spark, f"{sf_dir}/embeddings.parquet")
-
-
 # Streaming vector-index ingestion: stateless stream-static assignment of
 # arriving embeddings to IVF coarse centroids via a broadcast codebook row
 # and an array-argmax (no rank window — streaming-safe). Fixed-point dots
 # make stream, batch window plan, and the DuckDB oracle bit-identical.
 q(
     "stream_ivf_assign",
-    _stream_ivf_assign,
+    _stream("pipeline.stream_ivf_assign", "embeddings"),
     f"""WITH {_ORACLE_NORMS},
 ev AS (SELECT e.vec_id, e.qv, n.n2 FROM e JOIN n USING (vec_id)),
 cents AS (SELECT vec_id AS centroid_id, qv AS cqv, n2 AS cn2
@@ -1554,47 +1483,24 @@ QUALIFY row_number() OVER (PARTITION BY vec_id
 )
 
 
-def _stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-    from .tables import load
-
-    return sp.stream_enriched_events(
-        spark, f"{sf_dir}/events.parquet", load(spark, sf_dir, "customer")
-    )
-
-
 # Stream-static dimension join (stateless broadcast enrichment per
 # micro-batch) — same oracle as the batch twin events_enriched_with_customer.
 q(
     "stream_enriched_events",
-    _stream_enriched_events,
+    _stream("pipeline.stream_enriched_events", "events", "customer"),
     f"""{EV_CTE}
 SELECT event_id, e.user_id, ts, variant, c_nationkey, c_mktsegment
 FROM ev e LEFT JOIN customer c ON e.user_id = c.c_custkey""",
 )
 
 
-def _stream_stateful_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import stateful
-
-    return stateful.stream_exact_uniques_per_variant(spark, f"{sf_dir}/events.parquet")
-
-
 # custom stateful operator (applyInPandasWithState) — exact, so oracle-gated
 q(
     "stream_stateful_uniques_per_variant",
-    _stream_stateful_uniques,
+    _stream("stateful.stream_exact_uniques_per_variant", "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
-
-
-def _stream_stateful_uniques_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import stateful
-
-    return stateful.stream_exact_uniques_per_variant_tws(
-        spark, f"{sf_dir}/events.parquet"
-    )
 
 
 # The same op on Spark 4's transformWithStateInPandas (SPARK-49564) — the
@@ -1604,18 +1510,10 @@ def _stream_stateful_uniques_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twins prove the engine's stateful surface covers both entry points.
 q(
     "stream_stateful_uniques_tws",
-    _stream_stateful_uniques_tws,
+    _stream("stateful.stream_exact_uniques_per_variant_tws", "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
-
-
-def _stream_stateful_uniques_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import stateful
-
-    return stateful.stream_uniques_tws_bootstrapped(
-        spark, f"{sf_dir}/events.parquet"
-    )
 
 
 # TWS initialState bootstrap (r10): the backfill-then-stream migration of
@@ -1626,16 +1524,10 @@ def _stream_stateful_uniques_bootstrap(spark: SparkSession, sf_dir: str) -> Data
 # load-bearing (history-only uids appear in no live batch).
 q(
     "stream_stateful_uniques_bootstrap",
-    _stream_stateful_uniques_bootstrap,
+    _stream("stateful.stream_uniques_tws_bootstrapped", "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
-
-
-def _stream_state_reader_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import state_reader
-
-    return state_reader.state_reader_uniques(spark, f"{sf_dir}/events.parquet")
 
 
 # Offline state-store audit (r10): Spark 4's `statestore` data source
@@ -1646,18 +1538,10 @@ def _stream_state_reader_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
 # question with redis-cli SCARD against the live keyspace).
 q(
     "stream_state_reader_uniques",
-    _stream_state_reader_uniques,
+    _stream("state_reader.state_reader_uniques", "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
-
-
-def _stream_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import state_reader
-
-    return state_reader.state_time_travel_uniques(
-        spark, f"{sf_dir}/events.parquet"
-    )
 
 
 # State time-travel (r10): the same store read AS OF every committed
@@ -1668,7 +1552,7 @@ def _stream_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snapshots, so the three per-batch images genuinely differ.
 q(
     "stream_state_time_travel",
-    _stream_state_time_travel,
+    _stream("state_reader.state_time_travel_uniques", "events"),
     f"""{EV_CTE},
 n AS (SELECT greatest(1, CAST(ceil(count(*) / 3.0) AS BIGINT)) AS step FROM ev),
 e AS (
@@ -1685,14 +1569,6 @@ GROUP BY 1, 2""",
 )
 
 
-def _stream_state_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import state_reader
-
-    return state_reader.state_changelog_uniques(
-        spark, f"{sf_dir}/events.parquet"
-    )
-
-
 # State CHANGE FEED (r10): `readChangeFeed` — one row per state write,
 # i.e. per (batch, variant) with input that batch; the delta view where
 # time-travel is the snapshot view. A variant idle in chunk k has live
@@ -1701,7 +1577,7 @@ def _stream_state_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chunk-prefix distinct uids — the post-image the write persisted.
 q(
     "stream_state_changelog",
-    _stream_state_changelog,
+    _stream("state_reader.state_changelog_uniques", "events"),
     f"""{EV_CTE},
 n AS (SELECT greatest(1, CAST(ceil(count(*) / 3.0) AS BIGINT)) AS step FROM ev),
 e AS (
@@ -1719,14 +1595,6 @@ GROUP BY 1, 2, 3""",
 )
 
 
-def _stream_state_reader_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import state_reader
-
-    return state_reader.state_reader_tws_uniques(
-        spark, f"{sf_dir}/events.parquet"
-    )
-
-
 # TWS store audit (r10): read BOTH named state variables of the
 # transformWithStateInPandas twin's RocksDB checkpoint — the `seen`
 # MapState's per-variant entry count and the `n` ValueState counter —
@@ -1736,7 +1604,7 @@ def _stream_state_reader_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 # even where TWS queries themselves cannot start.
 q(
     "stream_state_reader_tws",
-    _stream_state_reader_tws,
+    _stream("state_reader.state_reader_tws_uniques", "events"),
     f"""{EV_CTE}
 SELECT variant,
        count(DISTINCT user_id) AS unique_users,
@@ -1754,27 +1622,15 @@ FROM ev GROUP BY 1""",
 # the emitted set deterministically equals batch ``sessions.user_sessions``
 # (the equality the parity pytest has pinned since r4); the batch oracle
 # therefore gates it directly, same as stream_user_sessions.
-def _stream_sessions_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import stateful
-
-    # mFPT=2 halves the replay's micro-batch count ([c0,c1],[c2,hb0],
-    # [hb1]) — the r5 click_error precedent; mid-replay watermark
-    # advancement and the heartbeat eviction batch are still exercised,
-    # and the batch-parity pytest pins output equality at mFPT=1 too.
-    return stateful.stream_sessions_ttl(
-        spark, f"{sf_dir}/events.parquet", max_files_per_trigger=2
-    )
-
-
-q("stream_sessions_ttl", _stream_sessions_ttl, sessions.oracle_user_sessions(EV_CTE))
-
-
-def _stream_sessions_ttl_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import stateful
-
-    return stateful.stream_sessions_ttl_tws(
-        spark, f"{sf_dir}/events.parquet", max_files_per_trigger=2
-    )
+# mFPT=2 halves the replay's micro-batch count ([c0,c1],[c2,hb0],
+# [hb1]) — the r5 click_error precedent; mid-replay watermark
+# advancement and the heartbeat eviction batch are still exercised,
+# and the batch-parity pytest pins output equality at mFPT=1 too.
+q(
+    "stream_sessions_ttl",
+    _stream("stateful.stream_sessions_ttl", "events", max_files_per_trigger=2),
+    sessions.oracle_user_sessions(EV_CTE),
+)
 
 
 # TTL sessionization on transformWithStateInPandas: explicit EVENT-TIME
@@ -1784,7 +1640,7 @@ def _stream_sessions_ttl_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replay and batch oracle; a parity pytest additionally pins TWS == legacy.
 q(
     "stream_sessions_ttl_tws",
-    _stream_sessions_ttl_tws,
+    _stream("stateful.stream_sessions_ttl_tws", "events", max_files_per_trigger=2),
     sessions.oracle_user_sessions(EV_CTE),
 )
 
@@ -2590,18 +2446,12 @@ q(
 )
 
 
-def _stream_deduped_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline
-
-    return pipeline.stream_deduped_visits(spark, f"{sf_dir}/events.parquet")
-
-
 # Doubled (at-least-once) input + dropDuplicatesWithinWatermark == the plain
 # batch W1 count: the oracle proves redelivery does not over-count here,
 # unlike the reference's INCRBY leg (SURVEY §4 delta 1).
 q(
     "stream_deduped_visits",
-    _stream_deduped_visits,
+    _stream("pipeline.stream_deduped_visits", "events"),
     # Dedup by id FIRST (keep min(ts) per event_id), THEN group by
     # minute — not count(DISTINCT event_id) per minute: the op's
     # contract is redelivery repair keyed on event_id, so each id must
@@ -2622,34 +2472,22 @@ GROUP BY 1""",
 )
 
 
-def _stream_ev_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline
-
-    return pipeline.stream_uniques_per_ev_minute(spark, f"{sf_dir}/events.parquet")
-
-
 # Streaming EXACT distinct via watermarked dropDuplicates + windowed count —
 # same oracle as batch w2 (stream/batch parity).
 q(
     "stream_uniques_per_ev_minute",
-    _stream_ev_uniques,
+    _stream("pipeline.stream_uniques_per_ev_minute", "events"),
     f"""{EV_CTE}
 SELECT date_trunc('minute', ts) AS minute, experiment_id, variant,
        count(DISTINCT user_id) AS unique_users
 FROM ev GROUP BY 1, 2, 3""",
 )
 
-def _stream_click_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline
-
-    return pipeline.stream_click_error_join(spark, f"{sf_dir}/events.parquet")
-
-
 # Watermarked stream-stream interval join (funnel/attribution shape) —
 # oracled against the identical batch self-join (stream/batch parity).
 q(
     "stream_click_error_join",
-    _stream_click_error_join,
+    _stream("pipeline.stream_click_error_join", "events"),
     f"""{EV_CTE}
 SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
        c.ts AS click_ts, e.ts AS error_ts,
@@ -2661,19 +2499,13 @@ FROM ev c JOIN ev e
 )
 
 
-def _stream_click_error_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline
-
-    return pipeline.stream_click_error_left_join(spark, f"{sf_dir}/events.parquet")
-
-
 # LEFT OUTER watermarked interval join — the strictly harder semantics
 # (a NULL row only emits once the watermark proves no match can still
 # arrive, so the replay is capped by watermark-heartbeat files; see
 # pipeline._heartbeat_replay_dir). Oracled against the batch LEFT JOIN.
 q(
     "stream_click_error_left_join",
-    _stream_click_error_left_join,
+    _stream("pipeline.stream_click_error_left_join", "events"),
     f"""{EV_CTE}
 SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
        c.ts AS click_ts, e.ts AS error_ts,
@@ -2785,15 +2617,9 @@ q(
 # could evict the shared prefix gram — the ordering analogue of pinned
 # centering stats). Stateless per batch; same brute-force oracle proves
 # the filter lossless on the arrival path too.
-def _stream_entity_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_entity_probe(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_entity_probe",
-    _stream_entity_probe,
+    _stream("pipeline.stream_entity_probe", "documents"),
     dedup.oracle_entity_match(),
 )
 
@@ -2805,15 +2631,9 @@ q(
 # oracle_incremental_neardup_portable; portable permutations mean DuckDB
 # re-derives every signature from raw text: the stream path is
 # externally hash-checked end to end.
-def _stream_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_neardup_probe(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_neardup_probe",
-    _stream_neardup_probe,
+    _stream("pipeline.stream_neardup_probe", "documents"),
     dedup.oracle_incremental_neardup_portable(),
 )
 # Deequ-style data-validation suite: completeness/uniqueness/consistency/
@@ -2829,15 +2649,9 @@ q(
 # conditional COUNTS (associative; fractions do NOT compose — a twin
 # averaging per-shipment fractions would weight a 10-doc shipment equal
 # to a 10M-doc one), folded to the exact batch report; same oracle.
-def _stream_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_constraint_report(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_constraint_report",
-    _stream_constraint_report,
+    _stream("pipeline.stream_constraint_report", "documents"),
     relational.oracle_constraint_report(),
 )
 # Dedup QA report: cluster-size histogram over the oracled components.
@@ -3116,15 +2930,9 @@ q(
 # training-corpus centering stats (the feature-store discipline:
 # centering with a batch's own means would be train/serve skew);
 # stateless per batch, exact stream/batch parity, same oracle.
-def _stream_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_model_scores(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_model_scores",
-    _stream_model_scores,
+    _stream("pipeline.stream_model_scores", "documents"),
     classifier.oracle_perceptron_scores(),
 )
 # Streaming tokenizer application: each shipment encoded by joining the
@@ -3132,15 +2940,9 @@ q(
 # tokenizer file the offline training job wrote; stateless per batch
 # (one explode + one broadcast join, no merge-walk rounds on the hot
 # path), exact stream/batch parity, same unrolled-training oracle.
-def _stream_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_bpe_encode(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_bpe_encode",
-    _stream_bpe_encode,
+    _stream("pipeline.stream_bpe_encode", "documents"),
     text.oracle_bpe_encode(),
 )
 # Corpus-version regression report over the SCD2 history: added /
@@ -3165,15 +2967,9 @@ q(
 # per-doc (term, tf, dl) posting rows emitted on arrival, row-local tf via
 # higher-order functions (no groupBy — append-safe). Oracle = the batch
 # index derivation: stream/batch parity for the BM25 index build.
-def _stream_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_postings_ingest(spark, f"{sf_dir}/documents.parquet")
-
-
 q(
     "stream_postings_ingest",
-    _stream_postings,
+    _stream("pipeline.stream_postings_ingest", "documents"),
     f"""WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '{text.TOKEN_SQL}') AS t
   FROM documents),
@@ -3280,8 +3076,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
 
 
 def _events_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tables import load
-
     return timeseries.events_enriched_with_customer(
         _ev(spark, sf_dir), load(spark, sf_dir, "customer")
     )
@@ -3367,15 +3161,9 @@ q(
 # minute partials appended to the store (ts-chunked replay makes minutes
 # straddle shipments), merged + rolled up at read; same oracle. Window-slotted
 # (never-green outranks re-checks) — builder-green at both SFs.
-def _stream_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return sp.stream_hierarchical_rollup(spark, f"{sf_dir}/events.parquet")
-
-
 q(
     "stream_hierarchical_rollup",
-    _stream_hierarchical_rollup,
+    _stream("pipeline.stream_hierarchical_rollup", "events"),
     metrics.oracle_hierarchical_time_rollup(EV_CTE),
 )
 # Monitoring extension: trailing z-score anomaly flags on the visit series

@@ -20,6 +20,8 @@ needed columns so parquet column pruning applies.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -148,12 +150,30 @@ _PROBED_NANOS: dict[tuple[str, int], bool] = {}
 
 
 def _probe_key(path: str) -> tuple[str, int]:
-    import os
-
     try:
         return (path, os.stat(path).st_mtime_ns)
     except OSError:  # globs/remote URIs: fall back to path-only keying
         return (path, -1)
+
+
+def read_parquet_stream(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    max_files_per_trigger: int = 1,
+) -> DataFrame:
+    """The package's one streaming parquet scan: ``path`` is a directory
+    replayed in file modification-time order, ``max_files_per_trigger``
+    files per micro-batch, or a single file read as a one-file stream.
+    ``schema`` is required, as streaming sources do not infer one."""
+    reader = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", max_files_per_trigger
+    )
+    if os.path.isfile(path):
+        # the streaming file source requires a directory
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return reader.parquet(path)
 
 
 def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -170,22 +190,13 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
     µs-timestamp parquet; the physical schema is probed with a batch read
     (streaming sources require an explicit schema).
     """
-    import os
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = _probe_key(path)
     if key not in _PROBED_NANOS:
         _PROBED_NANOS[key] = dict(spark.read.parquet(path).dtypes).get("ts") == "bigint"
     nanos = _PROBED_NANOS[key]
     schema = _EVENTS_PARQUET_SCHEMA if nanos else EVENTS_TABLE_SCHEMA
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if os.path.isfile(path):
-        # the streaming file source requires a directory
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    df = reader.parquet(path)
+    df = read_parquet_stream(spark, path, schema, max_files_per_trigger)
     if nanos:
         df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     return df

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..operators.metrics import CMS_DEPTH, CMS_WIDTH, _cms_pairs, approx_uniques, cms_sketch
-from ..sources.events import normalize_events, read_events_stream
+from ..sources.events import normalize_events, read_events_stream, read_parquet_stream
 from ..tables import foreach_batch, materialized
 
 WATERMARK = "10 minutes"
@@ -266,6 +266,47 @@ def stream_deduped_visits(
     return _replay_to_memory(spark, agg, "dedupvisits")
 
 
+def _click_error_join(ev: DataFrame, how: str) -> DataFrame:
+    """The (click, error) interval join of the normalized event stream
+    ``ev``: each click paired with every error by the same user within
+    the 5 minutes after it, both sides watermarked; ``how`` is
+    ``"inner"`` or ``"leftOuter"``."""
+    clicks = (
+        ev.where(F.col("variant") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("click_user"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", WATERMARK)
+    )
+    errors = (
+        ev.where(F.col("variant") == "error")
+        .select(
+            F.col("event_id").alias("error_id"),
+            F.col("user_id").alias("error_user"),
+            F.col("ts").alias("error_ts"),
+        )
+        .withWatermark("error_ts", WATERMARK)
+    )
+    return clicks.join(
+        errors,
+        F.expr(
+            "click_user = error_user AND "
+            "error_ts > click_ts AND "
+            "error_ts <= click_ts + interval 5 minutes"
+        ),
+        how,
+    ).select(
+        F.col("click_user").alias("user_id"),
+        "click_id",
+        "error_id",
+        "click_ts",
+        "error_ts",
+        (F.unix_micros("error_ts") - F.unix_micros("click_ts")).alias("gap_us"),
+    )
+
+
 def stream_click_error_join(
     spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
@@ -285,40 +326,7 @@ def stream_click_error_join(
     the interval-join semantics.
     """
     ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
-    clicks = (
-        ev.where(F.col("variant") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    errors = (
-        ev.where(F.col("variant") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("error_user"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
-    )
-    joined = clicks.join(
-        errors,
-        F.expr(
-            "click_user = error_user AND "
-            "error_ts > click_ts AND "
-            "error_ts <= click_ts + interval 5 minutes"
-        ),
-    ).select(
-        F.col("click_user").alias("user_id"),
-        "click_id",
-        "error_id",
-        "click_ts",
-        "error_ts",
-        (F.unix_micros("error_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
-    return _replay_to_memory(spark, joined, "ssjoin", "append")
+    return _replay_to_memory(spark, _click_error_join(ev, "inner"), "ssjoin", "append")
 
 
 def stream_enriched_events(
@@ -685,40 +693,7 @@ def stream_click_error_left_join(
     ev = normalize_events(
         read_events_stream(spark, replay_dir, max_files_per_trigger)
     )
-    clicks = (
-        ev.where(F.col("variant") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    errors = (
-        ev.where(F.col("variant") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("error_user"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
-    )
-    joined = clicks.join(
-        errors,
-        F.expr(
-            "click_user = error_user AND "
-            "error_ts > click_ts AND "
-            "error_ts <= click_ts + interval 5 minutes"
-        ),
-        "leftOuter",
-    ).select(
-        F.col("click_user").alias("user_id"),
-        "click_id",
-        "error_id",
-        "click_ts",
-        "error_ts",
-        (F.unix_micros("error_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
+    joined = _click_error_join(ev, "leftOuter")
     # The heartbeat filter must run on the MATERIALIZED output, not inside
     # the streaming plan: as a streaming-side filter Catalyst pushes
     # ``user_id >= 0`` below the join and through the click-side
@@ -749,14 +724,7 @@ def stream_quality_filtered_docs(spark: SparkSession, docs_path: str) -> DataFra
     """
     from ..operators.text import GATE_MIN_QUALITY, quality_projection
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    if os.path.isfile(docs_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(docs_path))
-        path = os.path.dirname(docs_path)
-    else:
-        path = docs_path
-    docs = reader.parquet(path)
+    docs = read_parquet_stream(spark, docs_path, spark.read.parquet(docs_path).schema)
     filtered = quality_projection(docs).where(F.col("quality") >= GATE_MIN_QUALITY)
     return _replay_to_memory(spark, filtered, "qualdocs", "append")
 
@@ -1025,25 +993,39 @@ GROUP BY 1"""
 def _chunked_docs_replay_dir(docs_path: str, n_chunks: int = 3) -> str:
     """Materialize the documents fixture as a doc_id-ordered multi-file
     replay (one micro-batch per file) — the streaming analogue of a crawl
-    landing in an object-store drop folder one shipment at a time.
-
-    mFPT note (r10 optimization): consumers of this dir read it with
-    ``maxFilesPerTrigger=2`` — 2 micro-batches ([c0,c1],[c2]) instead of
-    3, the r5 click_error/drop_audit precedent. Each consumer's output is
-    batching-invariant (per-document stateless, probes of persisted/
-    static artifacts, or mergeable/prefix-sum state composed over
-    doc_id-ascending chunks — argued in each docstring) and every key
-    stays hash-gated by its unchanged driver oracle; the cross-batch
-    boundary (batch 2 probing batch 1's index/state) remains exercised.
-    Measured: one micro-batch of fixed setup (source listing, store
-    commits, job scheduling) saved per query — ~30-40% of replay-harness
-    wall time at sf0.1.
-    """
+    landing in an object-store drop folder one shipment at a time."""
     return _replay_dir(
         "docs",
         docs_path,
         (n_chunks,),
         lambda out, tbl: _write_chunks(out, _sorted(tbl, "doc_id"), n_chunks),
+    )
+
+
+def _docs_stream(
+    spark: SparkSession, docs_path: str, n_chunks: int = 3, max_files_per_trigger: int = 2
+) -> DataFrame:
+    """The documents fixture as a stream: its :func:`_chunked_docs_replay_dir`
+    replay under the source's schema, the front end of every docs-stream
+    key.
+
+    mFPT note (r10 optimization): ``maxFilesPerTrigger=2`` gives 2
+    micro-batches ([c0,c1],[c2]) instead of 3, the r5 click_error
+    precedent. Each consumer's output is batching-invariant
+    (per-document stateless, probes of persisted/static artifacts, or
+    mergeable/prefix-sum state composed over doc_id-ascending chunks —
+    argued in each docstring) and every key stays hash-gated by its
+    unchanged driver oracle; the cross-batch boundary (batch 2 probing
+    batch 1's index/state) remains exercised. Measured: one micro-batch
+    of fixed setup (source listing, store commits, job scheduling) saved
+    per query — ~30-40% of replay-harness wall time at sf0.1
+    (``stream_drop_audit``: 12.4 s at mFPT=1 vs 10.7 s).
+    """
+    return read_parquet_stream(
+        spark,
+        _chunked_docs_replay_dir(docs_path, n_chunks),
+        spark.read.parquet(docs_path).schema,
+        max_files_per_trigger,
     )
 
 
@@ -1094,18 +1076,39 @@ def stream_ingest_dedup(
     md5(text)`` dedup exactly — stream/batch parity for the incremental
     index semantics.
     """
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     return foreach_batch(
         stream,
         lambda index_dir, *batch: IngestDedupWriter(index_dir)(*batch),
         spark.read.parquet,
     )
+
+
+def _contamination_probe(spark: SparkSession, docs_path: str):
+    """Build the benchmark's distinct k-token shingle set (the
+    ``doc_id % DECON_MOD == 0`` slice of ``docs_path``) once, pinned, and
+    return the per-batch probe: a micro-batch's corpus ``doc_id``s that
+    share a shingle with it (one explode + one broadcast semi-join)."""
+    from ..operators.dedup import DECON_K, DECON_MOD, _shingle_array
+
+    bench_sh = (
+        spark.read.parquet(docs_path)
+        .where(F.col("doc_id") % DECON_MOD == 0)
+        .select(F.explode(_shingle_array(DECON_K)).alias("shingle"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+    def contaminated(batch: DataFrame) -> DataFrame:
+        return (
+            batch.where(F.col("doc_id") % DECON_MOD != 0)
+            .select("doc_id", F.explode(_shingle_array(DECON_K)).alias("shingle"))
+            .join(F.broadcast(bench_sh), "shingle", "left_semi")
+            .select("doc_id")
+            .distinct()
+        )
+
+    return contaminated
 
 
 def stream_decontamination_gate(
@@ -1133,32 +1136,14 @@ def stream_decontamination_gate(
     ``oracle_decontamination_hits`` — exact stream/batch parity because
     the filter is stateless per document.
     """
-    from ..operators.dedup import DECON_K, DECON_MOD, _shingle_array
+    from ..operators.dedup import DECON_MOD
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
-    bench_sh = (
-        spark.read.parquet(docs_path)
-        .where(F.col("doc_id") % DECON_MOD == 0)
-        .select(F.explode(_shingle_array(DECON_K)).alias("shingle"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
+    contaminated = _contamination_probe(spark, docs_path)
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         corpus = batch.where(F.col("doc_id") % DECON_MOD != 0)
-        sh = corpus.select("doc_id", F.explode(_shingle_array(DECON_K)).alias("shingle"))
-        contaminated = (
-            sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        corpus.join(contaminated, "doc_id", "left_anti").select(
+        corpus.join(contaminated(batch), "doc_id", "left_anti").select(
             "doc_id", "lang", "source"
         ).write.mode("append").parquet(out_dir)
 
@@ -1197,37 +1182,11 @@ def stream_drop_audit(
     index decision equals the batch canonical-per-group decision, and
     every other stage is per-document.
     """
-    from ..operators.dedup import (
-        DECON_K,
-        DECON_MOD,
-        _norm_text,
-        _shingle_array,
-        drop_audit_ladder,
-    )
+    from ..operators.dedup import DECON_MOD, _norm_text, drop_audit_ladder
     from ..operators.text import quality_gate_frame
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    # Replay chunking A/B'd (interleaved, one process, sf0.1, properly
-    # wired — a first mis-anchored edit measured 1 vs 1 and concluded
-    # "no win"): mFPT=1 12.4 s vs mFPT=2 10.7 s — one micro-batch of
-    # ladder setup saved, the r5 stream_click_error_left_join pattern.
-    # Cross-batch index semantics stay exercised (batch 2 probes batch
-    # 1's survivor hashes) and chunks stay doc_id-ascending, so
-    # first-seen == global min holds — output byte-identical (parity
-    # test + unchanged oracle).
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(replay)
-    )
-    bench_sh = (
-        spark.read.parquet(docs_path)
-        .where(F.col("doc_id") % DECON_MOD == 0)
-        .select(F.explode(_shingle_array(DECON_K)).alias("shingle"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks, max_files_per_trigger)
+    contaminated = _contamination_probe(spark, docs_path)
 
     def audit(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         import glob as _glob
@@ -1279,21 +1238,14 @@ def stream_drop_audit(
             )
         else:
             dup = dup.select("doc_id", F.col("in_batch_dup").alias("is_exact_dup"))
-        contaminated = (
-            # derived from the RAW batch, not ``base``: the shingle probe
-            # needs only (doc_id, text), and routing it through ``base``
-            # would re-run the quality-gate aggregate inside this subtree
-            batch.where(F.col("doc_id") % DECON_MOD != 0)
-            .select("doc_id", F.explode(_shingle_array(DECON_K)).alias("shingle"))
-            .join(F.broadcast(bench_sh), "shingle", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .withColumn("is_contaminated", F.lit(True))
-        )
+        # probed on the RAW batch, not ``base``: the shingle probe needs
+        # only (doc_id, text), and routing it through ``base`` would
+        # re-run the quality-gate aggregate inside this subtree
+        hits = contaminated(batch).withColumn("is_contaminated", F.lit(True))
         reason, stage = drop_audit_ladder()
         (
             base.join(dup, "doc_id", "left")
-            .join(contaminated, "doc_id", "left")
+            .join(hits, "doc_id", "left")
             .select(
                 "doc_id",
                 reason.alias("drop_reason"),
@@ -1311,7 +1263,7 @@ def stream_hierarchical_rollup(
 ) -> DataFrame:
     # default mFPT=2 (r10): 2 micro-batches over the 3-chunk replay —
     # partials are decimal-additive, so the merged hierarchy is
-    # bit-identical at any batching (see _chunked_docs_replay_dir note).
+    # bit-identical at any batching (see _docs_stream note).
     """Streaming twin of ``metrics.hierarchical_time_rollup`` — the
     continuous-aggregate REFRESH path: each event shipment appends its
     own minute-grain partials (count + DECIMAL(38,12) value sum) to the
@@ -1383,13 +1335,7 @@ def stream_image_ingest_features(
     """
     from ..operators.multimodal import image_blob_projection, image_histogram
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     hist = image_histogram(image_blob_projection(stream))
     return _replay_to_memory(spark, hist, "imghist", "append")
 
@@ -1413,30 +1359,15 @@ def stream_curated_ingest(
     """
     from ..operators.text import GATE_MIN_QUALITY, quality_projection
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
 
-    def ingest(index_dir: str, batch: DataFrame, _batch_id: int) -> None:
+    def ingest(index_dir: str, batch: DataFrame, batch_id: int) -> None:
         kept = (
             quality_projection(batch)
             .where(F.col("quality") >= GATE_MIN_QUALITY)
             .select("doc_id")
         )
-        b = (
-            batch.join(kept, "doc_id")
-            .select(F.md5("text").alias("content_hash"), "doc_id")
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
-        if os.path.isdir(index_dir):
-            idx = batch.sparkSession.read.parquet(index_dir).select("content_hash")
-            b = b.join(idx, "content_hash", "left_anti")
-        b.write.mode("append").parquet(index_dir)
+        IngestDedupWriter(index_dir)(batch.join(kept, "doc_id"), batch_id)
 
     return foreach_batch(stream, ingest, spark.read.parquet)
 
@@ -1486,15 +1417,8 @@ def stream_ivf_assign(spark: SparkSession, emb_path: str) -> DataFrame:
         )
         .agg(F.sort_array(F.collect_list("c")).alias("cents"))
     )
-    schema = spark.read.parquet(emb_path).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    if os.path.isfile(emb_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(emb_path))
-        path = os.path.dirname(emb_path)
-    else:
-        path = emb_path
     emb = (
-        reader.parquet(path)
+        read_parquet_stream(spark, emb_path, spark.read.parquet(emb_path).schema)
         .select("vec_id", V.quantize("embedding").alias("qvec"))
         .withColumn("n2", V.qnorm2("qvec"))
     )
@@ -1545,14 +1469,7 @@ def stream_postings_ingest(spark: SparkSession, docs_path: str) -> DataFrame:
     """
     from ..operators.text import BM25_SHINGLE_K, TOKEN_RE
 
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    if os.path.isfile(docs_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(docs_path))
-        path = os.path.dirname(docs_path)
-    else:
-        path = docs_path
-    docs = reader.parquet(path)
+    docs = read_parquet_stream(spark, docs_path, spark.read.parquet(docs_path).schema)
     ksh = BM25_SHINGLE_K
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower(F.col("text"))), TOKEN_RE).alias("t")
@@ -1613,13 +1530,7 @@ def stream_shard_assignment(
     )
     from ..operators.text import TOKEN_RE
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
     state = _persisted_shard_state(spark, sf_dir, bucket_docs=bucket_docs)
     corpus_total = int(
@@ -1627,7 +1538,7 @@ def stream_shard_assignment(
     )
     thr = int(
         spark.read.parquet(docs_path)
-        .agg(F.expr("CAST(max(doc_id) * 9 DIV 10 AS BIGINT)"))
+        .agg(F.expr("CAST(coalesce(max(doc_id), 0) * 9 DIV 10 AS BIGINT)"))
         .first()[0]
     )
 
@@ -1693,13 +1604,7 @@ def stream_image_ahash_probe(
         image_ahash,
     )
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
     idx = (
         _persisted_ahash_index(spark, sf_dir)
@@ -1715,8 +1620,6 @@ def stream_image_ahash_probe(
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.col("doc_id") % 10 == 0)
-        if incoming.isEmpty():
-            return
         blobs = content_gray_blob_projection(incoming)
         inc = image_ahash(blobs).select("doc_id", "hash_hi", "hash_lo")
         pb = _ahash_bands(inc).select(
@@ -1763,20 +1666,12 @@ def stream_model_scores(
         score_batch_with_model,
     )
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
     weights = _persisted_model(spark, sf_dir).localCheckpoint(eager=True)
     stats = _persisted_center_stats(spark, sf_dir).localCheckpoint(eager=True)
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         score_batch_with_model(batch, weights, stats).write.mode(
             "append"
         ).parquet(out_dir)
@@ -1808,21 +1703,13 @@ def stream_bpe_encode(
     """
     from ..operators.text import TOKEN_RE, _persisted_bpe_vocab
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
     vocab = _persisted_bpe_vocab(
         spark, sf_dir, n_merges=n_merges, doc_mod=doc_mod
     ).localCheckpoint(eager=True)
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         words = (
             batch.where(F.expr(f"doc_id % {doc_mod} = 0"))
             .select(
@@ -1879,13 +1766,7 @@ def stream_entity_probe(
         _persisted_entity_index,
     )
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
     names, df_tab, prefix = _persisted_entity_index(spark, sf_dir)
     names = names.select(
@@ -1898,8 +1779,6 @@ def stream_entity_probe(
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.expr("doc_id % 20 IN (1, 7, 13)"))
-        if incoming.isEmpty():
-            return
         dirty = incoming.select(
             F.col("doc_id").alias("id"), F.expr(_ENTITY_DIRTY).alias("name")
         )
@@ -1969,13 +1848,7 @@ def stream_neardup_probe(
 
     from ..operators import dedup as dd
 
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
-    )
+    stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
     banded_ix, sig_ix = (
         ix.localCheckpoint(eager=True)
@@ -1986,8 +1859,6 @@ def stream_neardup_probe(
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         incoming = batch.where(F.col("doc_id") % 10 == 0)
-        if incoming.isEmpty():
-            return
         sig = dd.portable_minhash_signatures(incoming)
         bands = dd._band(sig, n_perms, dd.PORTABLE_ROWS, dd._concat_key)
         cands = dd._band_probe(F.broadcast(bands), banded_ix)
@@ -2021,43 +1892,16 @@ def stream_constraint_report(
     do — a twin that averaged per-shipment fractions would weight a
     10-doc shipment equal to a 10M-doc one.
     """
-    from ..operators.relational import _CONSTRAINTS
-
-    replay = _chunked_docs_replay_dir(docs_path, n_chunks)
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)  # see _chunked_docs_replay_dir note
-        .parquet(replay)
+    from ..operators.relational import (
+        _CONSTRAINT_COUNTS,
+        _constraint_counts,
+        _constraint_rows,
     )
 
+    stream = _docs_stream(spark, docs_path, n_chunks)
+
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            batch.agg(
-                F.count("*").alias("n"),
-                F.count(
-                    F.when(F.col("text").isNotNull() & (F.length("text") > 0), 1)
-                ).alias("c_text"),
-                F.countDistinct("doc_id").alias("c_uniq"),
-                F.count(
-                    F.when(F.col("n_chars") == F.length("text"), 1)
-                ).alias("c_len"),
-                F.count(
-                    F.when(F.col("lang").isin("de", "en", "es", "fr", "zh"), 1)
-                ).alias("c_lang"),
-                F.count(
-                    F.when(F.col("source").rlike("^src[0-9]+$"), 1)
-                ).alias("c_src"),
-                F.count(
-                    F.when(F.col("n_chars").between(1, 100000), 1)
-                ).alias("c_range"),
-                F.count(F.when(F.col("n_chars") >= 100, 1)).alias("c_min100"),
-            )
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        _constraint_counts(batch).write.mode("append").parquet(out_dir)
 
     # NOTE: per-batch countDistinct on doc_id composes by SUM only
     # because the replay chunks partition doc_id ranges disjointly (the
@@ -2065,26 +1909,8 @@ def stream_constraint_report(
     # distinct partial would be a sketch/set union instead — documented
     # deliberately, asserted by the parity test.
     partials = foreach_batch(stream, ingest, spark.read.parquet)
-    a = partials.agg(
-        F.sum("n").alias("n"),
-        *[
-            F.sum(c).alias(c)
-            for c in ["c_text", "c_uniq", "c_len", "c_lang", "c_src",
-                      "c_range", "c_min100"]
-        ],
-    )
-    counts = ["c_text", "c_uniq", "c_len", "c_lang", "c_src", "c_range", "c_min100"]
-    stack = ", ".join(
-        f"'{name}', CAST({c} AS DOUBLE) / CAST(n AS DOUBLE), CAST({thr} AS DOUBLE)"
-        for (name, thr), c in zip(_CONSTRAINTS, counts)
-    )
-    return a.selectExpr(
-        f"stack({len(_CONSTRAINTS)}, {stack}) AS (check_name, metric, threshold)"
-    ).select(
-        "check_name",
-        "metric",
-        "threshold",
-        (F.col("metric") >= F.col("threshold")).alias("passed"),
+    return _constraint_rows(
+        partials.agg(*[F.sum(c).alias(c) for c in ["n", *_CONSTRAINT_COUNTS]])
     )
 
 

@@ -9,18 +9,20 @@ pushdown, column pruning and partition pruning natively.
 Written directories follow two rules. A content-keyed artifact (a replay
 directory, a trained model, an index, a finished checkpoint) is built
 once per source version and shape by :func:`materialized` and kept under
-:data:`ARTIFACTS`. Per-call scratch (a ``foreachBatch`` sink's output and
-its query checkpoint) lives in a fresh dir under :data:`SCRATCH` that
-:func:`pinned` / :func:`foreach_batch` remove on return and on failure.
+:data:`ARTIFACTS` while its source exists. Per-call scratch (a
+``foreachBatch`` sink's output and its query checkpoint) lives in a
+fresh dir under :data:`SCRATCH` that :func:`pinned` /
+:func:`foreach_batch` remove on return and on failure.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,8 +90,10 @@ def materialized(name: str, src: str, params: tuple, build) -> str:
     path). ``params`` must carry every constant that shapes the files —
     a retune must never be served a dir built under the old shape — and
     the ns mtime makes an in-place rewrite of ``src`` a new version.
-    Published dirs are kept, so later calls, bench reps and later
-    processes reuse one build per source version and shape."""
+    Published dirs are kept while their source exists, so later calls,
+    bench reps and later processes reuse one build per source version
+    and shape. Each records its source as the symlink ``<out>.src``;
+    every build first removes the artifacts whose ``.src`` dangles."""
     src = os.path.abspath(src)
     key = (name, src, os.stat(src).st_mtime_ns, params)
     if key not in _ARTIFACTS:
@@ -97,6 +101,7 @@ def materialized(name: str, src: str, params: tuple, build) -> str:
         out = os.path.join(ARTIFACTS, f"{name}_{tag}")
         if not os.path.isdir(out):
             os.makedirs(ARTIFACTS, exist_ok=True)
+            _remove_orphans()
             built = tempfile.mkdtemp(prefix=f"{name}_{tag}.", dir=ARTIFACTS)
             try:
                 build(built)
@@ -107,8 +112,28 @@ def materialized(name: str, src: str, params: tuple, build) -> str:
                 os.symlink(built, out)
             except FileExistsError:  # a concurrent build published first
                 shutil.rmtree(built)
+            with suppress(FileExistsError):
+                os.symlink(src, f"{out}.src")
         _ARTIFACTS[key] = out
     return _ARTIFACTS[key]
+
+
+def _remove_orphans() -> None:
+    """Remove every published artifact whose source is gone — its
+    ``.src`` link dangles: the published link first, so no caller
+    resolves a half-removed dir, then its build dirs (``<out>.<rand>``),
+    and the ``.src`` link last, so an interrupted removal is retried."""
+    for link in glob.glob(os.path.join(ARTIFACTS, "*.src")):
+        if os.path.exists(link):
+            continue
+        out = link[: -len(".src")]
+        with suppress(FileNotFoundError):  # a concurrent build removed it
+            os.remove(out)
+        for built in glob.glob(f"{glob.escape(out)}.*"):
+            if built != link:
+                shutil.rmtree(built, ignore_errors=True)
+        with suppress(FileNotFoundError):
+            os.remove(link)
 
 
 def persisted(

@@ -12,8 +12,9 @@ contract (HEADLINE set, sf0.1, methodology, summary line) is untouched.
     SPARK_GRAFT_CPUS=32 python scripts/bench_sf1.py [--n 2] [--out FILE]
     SPARK_GRAFT_CPUS=8  python scripts/bench_sf1.py ...
 
-Methodology matches bench.py: each key runs --n times end-to-end into
-the noop sink, min recorded, caches cleared between runs.
+Timing is bench.py's own loop (``bench.timed_runs``): each key runs --n
+times end-to-end into the noop sink, min recorded, caches cleared
+between runs.
 
 Key selection: data-sized work only — relational core + windowed top-k,
 tf-idf/BM25, heavy-hitters/retention, brute-force + IVF ANN, k-means,
@@ -33,7 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from redis_dataflow_realtime_analytics_spark import registry
+from bench import timed_runs, warm_up
 from redis_dataflow_realtime_analytics_spark.session import get_spark
 
 SF1_KEYS = [
@@ -76,28 +77,12 @@ def main() -> None:
         build(dst=args.sf_dir)
 
     spark = get_spark(app_name="bench-sf1")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _ident(s):
-        return s
-
-    _ident.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    spark.range(1_000).select(pandas_udf(_ident, "long")("id")).collect()
+    warm_up(spark)
 
     times: dict[str, float] = {}
     for name in args.names or SF1_KEYS:
-        fn = registry.QUERIES[name]
         spark.sparkContext.setJobDescription(f"sf1:{name}")
-        best = float("inf")
-        for _ in range(args.n):
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        times[name] = round(best, 3)
+        times[name] = round(min(timed_runs(spark, name, args.sf_dir, args.n)), 3)
         print(json.dumps({"query": name, "sec": times[name]}, separators=(",", ":")), flush=True)
         spark.sparkContext.setJobDescription(None)
 

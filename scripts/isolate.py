@@ -6,8 +6,8 @@ optionally dump .explain("formatted") to plans/<round>/<name>_<tag>.txt
 
     python scripts/isolate.py [--plans TAG] [--n 3] name [name ...]
 
-Timing methodology matches bench.py (construction + noop write, min of N,
-clearCache between runs) so numbers are comparable run-for-run.
+Timing is bench.py's own loop (``bench.timed_runs``: construction + noop
+write, clearCache between runs), so numbers are comparable run-for-run.
 """
 
 from __future__ import annotations
@@ -16,10 +16,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import timed_runs, warm_up
 from redis_dataflow_realtime_analytics_spark import registry
 from redis_dataflow_realtime_analytics_spark.session import get_spark
 
@@ -39,29 +39,14 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark(app_name="isolate")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _ident(s):
-        return s
-
-    _ident.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    spark.range(1_000).select(pandas_udf(_ident, "long")("id")).collect()
+    warm_up(spark)
 
     for name in args.names:
-        fn = registry.QUERIES[name]
         spark.sparkContext.setJobDescription(name)
-        runs = []
-        for _ in range(args.n):
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
+        runs = [round(t, 3) for t in timed_runs(spark, name, SF_DIR, args.n)]
         if args.plans:
             os.makedirs(PLANS_DIR, exist_ok=True)
-            df = fn(spark, SF_DIR)
+            df = registry.QUERIES[name](spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
             )

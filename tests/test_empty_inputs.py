@@ -227,3 +227,44 @@ def test_replay_audits_empty(spark, tmp_path):
         out = fn(spark, src)
         assert out.columns == cols, fn.__name__
         assert out.count() == 0, fn.__name__
+
+
+def test_docs_stream_keys_empty(spark, tmp_path):
+    """The docs-stream keys on a zero-row documents source: each runs its
+    empty micro-batch and returns its usual columns with no rows, where
+    sinks that skipped empty batches once left no output to read. The
+    constraint reports, batch and streaming, keep their 7 rows with NULL
+    metrics instead of dividing by zero."""
+    import pyarrow.parquet as pq
+
+    from redis_dataflow_realtime_analytics_spark.operators import relational
+    from redis_dataflow_realtime_analytics_spark.streaming import pipeline as sp
+
+    src = f"{tmp_path}/documents.parquet"
+    pq.write_table(pq.read_table(f"{SF_SMOKE}/documents.parquet").slice(0, 0), src)
+    report = ["check_name", "metric", "threshold", "passed"]
+    for fn, cols, n in (
+        (sp.stream_ingest_dedup, ["content_hash", "doc_id"], 0),
+        (sp.stream_decontamination_gate, ["doc_id", "lang", "source"], 0),
+        (sp.stream_drop_audit, ["doc_id", "drop_reason", "stage"], 0),
+        (sp.stream_image_ingest_features, ["doc_id", "channel", "bin", "n_pixels"], 0),
+        (sp.stream_curated_ingest, ["content_hash", "doc_id"], 0),
+        (
+            sp.stream_shard_assignment,
+            ["doc_id", "n_tokens", "tokens_before", "shard_id"],
+            0,
+        ),
+        (sp.stream_image_ahash_probe, ["doc_id", "match_id", "hamming"], 0),
+        (sp.stream_model_scores, ["doc_id", "margin", "label", "pred", "correct"], 0),
+        (sp.stream_bpe_encode, ["doc_id", "wpos", "spos", "token", "token_id"], 0),
+        (sp.stream_entity_probe, ["dirty_id", "clean_id", "distance"], 0),
+        (sp.stream_neardup_probe, ["doc_id", "neardup_of", "n_agree", "est_jaccard"], 0),
+        (sp.stream_constraint_report, report, 7),
+        (lambda s, p: relational.constraint_report(s, str(tmp_path)), report, 7),
+    ):
+        out = fn(spark, src)
+        name = getattr(fn, "__name__", "constraint_report")
+        assert out.columns == cols, name
+        rows = out.collect()
+        assert len(rows) == n, name
+        assert all(r.metric is None for r in rows), name

@@ -8,6 +8,8 @@ incremental state, not a single-batch degenerate run.
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -376,3 +378,18 @@ def test_user_gap_profile_nulls_for_single_event_users(spark):
         assert r.n_rapid <= max(r.n_gaps, 0)
         if r.n_gaps == 0:
             assert r.min_gap_us is None and r.avg_gap_us is None
+
+
+def test_only_sources_read_streams():
+    """Every stream the package reads is opened under ``sources/``: the
+    streaming twins reshape the one parquet stream reader
+    (``read_parquet_stream``) instead of each building its own."""
+    package = pathlib.Path(sp.__file__).parents[1]
+    offenders = [
+        f"{path.relative_to(package)}:{n}"
+        for path in sorted(package.rglob("*.py"))
+        if path.relative_to(package).parts[0] != "sources"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".readStream" in line
+    ]
+    assert offenders == []

@@ -95,3 +95,17 @@ def test_only_tables_picks_temp_dirs():
         if "gettempdir" in line or "mkdtemp" in line
     ]
     assert offenders == []
+
+
+def test_artifacts_of_a_deleted_source_are_removed_by_the_next_build(store, tmp_path):
+    gone = tmp_path / "gone.parquet"
+    gone.write_text("v1")
+    first = tables.materialized("thing", str(gone), (), _counting_build([]))
+    built = os.path.realpath(first)
+    assert os.path.islink(f"{first}.src")
+    kept = tables.materialized("thing", str(store), (), _counting_build([]))
+    gone.unlink()
+    tables.materialized("other", str(store), (), _counting_build([]))
+    assert not os.path.lexists(first) and not os.path.lexists(f"{first}.src")
+    assert not os.path.exists(built)
+    assert pathlib.Path(kept, "data.txt").read_text() == "build 1"
