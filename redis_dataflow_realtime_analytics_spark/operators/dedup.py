@@ -1508,7 +1508,6 @@ def _persisted_portable_index(
 # --- SimHash -----------------------------------------------------------------
 SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4
-CHUNK_BITS = SIMHASH_BITS // SIMHASH_CHUNKS
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
@@ -2282,12 +2281,7 @@ r0 AS (SELECT src AS doc_id, 1.0 / n.total AS rank FROM deg CROSS JOIN n)"""
     return f"WITH {body}\nSELECT doc_id, rank FROM r{iters}"
 
 
-def neardup_triangles(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.5,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
+def neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle count and local clustering coefficient over the
     near-duplicate graph — the third graph-analytics leg beside
     :func:`connected_components` (membership) and
@@ -2310,11 +2304,10 @@ def neardup_triangles(
     skew-resistant plan.
 
     Output: (doc_id, degree, triangles, clustering) for every vertex of
-    the near-dup graph; clustering = 2T / (deg·(deg−1)), 0.0 when deg < 2.
+    the near-dup graph (n-gram Jaccard ≥ 0.5 edges, the other graph legs'
+    default); clustering = 2T / (deg·(deg−1)), 0.0 when deg < 2.
     """
-    edges = ngram_jaccard_pairs(
-        spark, sf_dir, threshold=threshold, max_shingle_df=max_shingle_df
-    )
+    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=0.5)
     e = edges.select("doc_a", "doc_b").localCheckpoint(eager=True)
     sym = e.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
         e.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
@@ -2860,7 +2853,7 @@ ENTITY_MAX_DIST = 2
 #: Entity name length (a fixed-width title slice of the document text).
 ENTITY_TITLE_LEN = 40
 
-_ENTITY_TITLE = "substring(lower(text), 1, 40)"
+_ENTITY_TITLE = f"substring(lower(text), 1, {ENTITY_TITLE_LEN})"
 #: Deterministic dirty-registry synthesis (the fixture corpus has no
 #: second noisy entity source, so — like the PII operator's synthesized
 #: input — the dirty side derives from doc_id): every 20th/7th/13th doc
@@ -2968,7 +2961,7 @@ def oracle_entity_match(max_dist: int = ENTITY_MAX_DIST) -> str:
     BRUTE-FORCE quadratic join: the oracle states the semantics (all
     pairs within distance d) so the hash gate proves the engine's
     prefix filter lossless."""
-    title = "substr(lower(text), 1, 40)"
+    title = f"substr(lower(text), 1, {ENTITY_TITLE_LEN})"
     dirty = f"""CASE (doc_id // 20) % 3
     WHEN 0 THEN concat(substr({title}, 1, 4 + (doc_id % 30)),
                        substr({title}, 6 + (doc_id % 30)))

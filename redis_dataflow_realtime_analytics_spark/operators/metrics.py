@@ -41,11 +41,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Matches Redis HLL accuracy (≈0.81% standard error, reference README.md:23-26).
-HLL_RSD = 0.008
-
-#: DataSketches lgConfigK giving the same ≈0.81% error class with
-#: sparse-adaptive partials (see module docstring perf note).
+#: DataSketches lgConfigK giving Redis HLL's ≈0.81% error class
+#: (reference README.md:23-26) with sparse-adaptive partials (see module
+#: docstring perf note).
 HLL_LGK = 14
 
 

@@ -152,10 +152,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("lang_pred", F.coalesce(pred, F.lit(langs[-1])))
 
 
-#: Shingle width (tokens) for the min-shingle fingerprint.
-SHINGLE_K = 5
-
-
 def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: md5 of whitespace-normalized text, plus the
     minimum md5 over all 5-token shingles (a winnowing-style rolling

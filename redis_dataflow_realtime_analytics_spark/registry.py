@@ -13,7 +13,6 @@ experiment_id→json ``props.k``, timestamp→ts.
 
 from __future__ import annotations
 
-import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,7 @@ from .operators import (
     timeseries,
 )
 from .sources import normalize_events, read_events
+from .streaming import pipeline, redis_sink, state_reader, stateful
 from .tables import load, pinned
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -81,15 +81,14 @@ def q(name: str, fn: QueryFn, oracle: str | None = None) -> None:
         ORACLE[name] = oracle
 
 
-def _stream(target: str, table: str, *frames: str, **kw) -> QueryFn:
-    """The query fn calling ``streaming.<target>`` (``"<module>.<fn>"``)
-    with the fixture path ``<sf_dir>/<table>.parquet``, then each fixture
-    table named in ``frames`` loaded, then ``kw``. The streaming module is
-    imported only when the key runs."""
-    module, fn = target.rsplit(".", 1)
+def _stream(
+    stream_fn: Callable[..., DataFrame], table: str, *frames: str, **kw
+) -> QueryFn:
+    """The query fn calling ``stream_fn`` with the fixture path
+    ``<sf_dir>/<table>.parquet``, then each fixture table named in
+    ``frames`` loaded, then ``kw``."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stream_fn = getattr(importlib.import_module(f".streaming.{module}", __package__), fn)
         return stream_fn(
             spark,
             f"{sf_dir}/{table}.parquet",
@@ -136,12 +135,12 @@ q(
 # (stream/batch parity is the correctness claim).
 q(
     "stream_sliding_visits",
-    _stream("pipeline.stream_sliding_visits", "events"),
+    _stream(pipeline.stream_sliding_visits, "events"),
     sessions.oracle_sliding_visits(EV_CTE),
 )
 q(
     "stream_user_sessions",
-    _stream("pipeline.stream_user_sessions", "events"),
+    _stream(pipeline.stream_user_sessions, "events"),
     sessions.oracle_user_sessions(EV_CTE),
 )
 
@@ -1268,32 +1267,29 @@ FROM b GROUP BY doc_id, f, n_frames""",
 def _sketch_store_read(spark: SparkSession, sf_dir: str, read) -> DataFrame:
     """``read(spark, store)`` over a sketch store the events fixture is
     ingested into, both in one per-call scratch dir."""
-    from .streaming import pipeline as sp
 
     def run(d: str) -> DataFrame:
         store = f"{d}/store"
-        sp.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, f"{d}/checkpoint")
+        pipeline.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, f"{d}/checkpoint")
         return read(spark, store)
 
     return pinned(run)
 
 
 def _stream_store_variant_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return _sketch_store_read(spark, sf_dir, sp.read_uniques_per_variant_exact)
+    return _sketch_store_read(spark, sf_dir, pipeline.read_uniques_per_variant_exact)
 
 
 q(
     "stream_visits_per_minute",
-    _stream("pipeline.stream_visits_per_minute", "events"),
+    _stream(pipeline.stream_visits_per_minute, "events"),
     f"""{EV_CTE}
 SELECT date_trunc('minute', ts) AS minute, count(*) AS visits
 FROM ev GROUP BY 1""",
 )
 q(
     "stream_uniques_per_minute_approx",
-    _stream("pipeline.stream_uniques_per_minute_approx", "events"),
+    _stream(pipeline.stream_uniques_per_minute_approx, "events"),
 )
 
 
@@ -1302,7 +1298,7 @@ q(
 # projection + threshold, proving stream/batch parity for the filter path.
 q(
     "stream_quality_filtered_docs",
-    _stream("pipeline.stream_quality_filtered_docs", "documents"),
+    _stream(pipeline.stream_quality_filtered_docs, "documents"),
     f"""SELECT * FROM ({text.oracle_quality_score()})
 WHERE quality >= {text.GATE_MIN_QUALITY}""",
 )
@@ -1314,7 +1310,7 @@ WHERE quality >= {text.GATE_MIN_QUALITY}""",
 # the batch dedup is the exact oracle (stream/batch parity).
 q(
     "stream_ingest_dedup",
-    _stream("pipeline.stream_ingest_dedup", "documents"),
+    _stream(pipeline.stream_ingest_dedup, "documents"),
     """SELECT md5(text) AS content_hash, min(doc_id) AS doc_id
 FROM documents GROUP BY 1""",
 )
@@ -1324,7 +1320,7 @@ FROM documents GROUP BY 1""",
 # ONE foreachBatch — rejected docs never cost an md5 or an index probe.
 q(
     "stream_curated_ingest",
-    _stream("pipeline.stream_curated_ingest", "documents"),
+    _stream(pipeline.stream_curated_ingest, "documents"),
     f"""WITH q AS ({text.oracle_quality_score()})
 SELECT md5(d.text) AS content_hash, min(d.doc_id) AS doc_id
 FROM documents d JOIN q ON q.doc_id = d.doc_id
@@ -1336,7 +1332,7 @@ GROUP BY 1""",
 # state); output = accepted clean corpus docs, batch-parity oracle.
 q(
     "stream_decontamination_gate",
-    _stream("pipeline.stream_decontamination_gate", "documents"),
+    _stream(pipeline.stream_decontamination_gate, "documents"),
     f"""WITH hits AS ({dedup.oracle_decontamination_hits()})
 SELECT doc_id, lang, source
 FROM documents
@@ -1350,17 +1346,11 @@ WHERE doc_id % {dedup.DECON_MOD} <> 0
 # because shipments replay doc_id-ascending (first-seen == global min).
 q(
     "stream_drop_audit",
-    _stream("pipeline.stream_drop_audit", "documents"),
+    _stream(pipeline.stream_drop_audit, "documents"),
     dedup.oracle_corpus_drop_audit(
         f"regexp_replace(lower(trim(text)), '{text.TOKEN_SQL}', ' ', 'g')"
     ),
 )
-
-
-def _oracle_stream_late_arrivals() -> str:
-    from .streaming.pipeline import oracle_stream_late_arrivals
-
-    return oracle_stream_late_arrivals()
 
 
 # Watermark/late-data observability (r7, SURVEY §2.5's semantic delta made
@@ -1372,8 +1362,8 @@ def _oracle_stream_late_arrivals() -> str:
 # pinned in tests/test_streaming_late.py.
 q(
     "stream_late_arrivals_audit",
-    _stream("pipeline.stream_late_arrivals_audit", "events"),
-    _oracle_stream_late_arrivals(),
+    _stream(pipeline.stream_late_arrivals_audit, "events"),
+    pipeline.oracle_stream_late_arrivals(),
 )
 
 
@@ -1384,17 +1374,11 @@ q(
 # hash-gated op.
 q(
     "stream_visits_late_backfill",
-    _stream("pipeline.stream_visits_with_late_backfill", "events"),
+    _stream(pipeline.stream_visits_with_late_backfill, "events"),
     """SELECT date_trunc('minute', ts) AS minute,
        CAST(count(*) AS BIGINT) AS visits
 FROM events GROUP BY 1""",
 )
-
-
-def _oracle_stream_dup_delivery() -> str:
-    from .streaming.pipeline import oracle_stream_duplicate_delivery
-
-    return oracle_stream_duplicate_delivery(EV_CTE)
 
 
 # SURVEY §4 delta 1 made measurable (r8, the delivery-semantics sibling
@@ -1407,14 +1391,14 @@ def _oracle_stream_dup_delivery() -> str:
 # separate stream_deduped_visits key; this one audits the SINK contract.
 q(
     "stream_duplicate_delivery_audit",
-    _stream("pipeline.stream_duplicate_delivery_audit", "events"),
-    _oracle_stream_dup_delivery(),
+    _stream(pipeline.stream_duplicate_delivery_audit, "events"),
+    pipeline.oracle_stream_duplicate_delivery(EV_CTE),
 )
 # Streaming multimodal ingest: the Catalyst blob synthesis + Arrow
 # histogram per micro-batch (stateless); batch-parity histogram oracle.
 q(
     "stream_image_ingest_features",
-    _stream("pipeline.stream_image_ingest_features", "documents"),
+    _stream(pipeline.stream_image_ingest_features, "documents"),
     multimodal.oracle_image_histogram(),
 )
 # Streaming arrival-path shard layout: per-shipment two-level prefix
@@ -1424,7 +1408,7 @@ q(
 # to the batch incremental layout, same flat-window oracle.
 q(
     "stream_shard_assignment",
-    _stream("pipeline.stream_shard_assignment", "documents"),
+    _stream(pipeline.stream_shard_assignment, "documents"),
     sampling.oracle_shard_assignment_incremental(),
 )
 # Streaming image near-dup probe: per-shipment decode+aHash of incoming
@@ -1432,7 +1416,7 @@ q(
 # => exact stream/batch parity, same oracle as the batch probe).
 q(
     "stream_image_ahash_probe",
-    _stream("pipeline.stream_image_ahash_probe", "documents"),
+    _stream(pipeline.stream_image_ahash_probe, "documents"),
     multimodal.oracle_image_ahash_probe(),
 )
 q(
@@ -1444,9 +1428,7 @@ SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 
 
 def _stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import pipeline as sp
-
-    return _sketch_store_read(spark, sf_dir, sp.read_heavy_hitters)
+    return _sketch_store_read(spark, sf_dir, pipeline.read_heavy_hitters)
 
 
 # All-time heavy hitters from the streaming count-min family: per-batch
@@ -1462,7 +1444,7 @@ q("stream_heavy_hitter_users", _stream_heavy_hitters)
 # make stream, batch window plan, and the DuckDB oracle bit-identical.
 q(
     "stream_ivf_assign",
-    _stream("pipeline.stream_ivf_assign", "embeddings"),
+    _stream(pipeline.stream_ivf_assign, "embeddings"),
     f"""WITH {_ORACLE_NORMS},
 ev AS (SELECT e.vec_id, e.qv, n.n2 FROM e JOIN n USING (vec_id)),
 cents AS (SELECT vec_id AS centroid_id, qv AS cqv, n2 AS cn2
@@ -1487,7 +1469,7 @@ QUALIFY row_number() OVER (PARTITION BY vec_id
 # micro-batch) — same oracle as the batch twin events_enriched_with_customer.
 q(
     "stream_enriched_events",
-    _stream("pipeline.stream_enriched_events", "events", "customer"),
+    _stream(pipeline.stream_enriched_events, "events", "customer"),
     f"""{EV_CTE}
 SELECT event_id, e.user_id, ts, variant, c_nationkey, c_mktsegment
 FROM ev e LEFT JOIN customer c ON e.user_id = c.c_custkey""",
@@ -1497,20 +1479,20 @@ FROM ev e LEFT JOIN customer c ON e.user_id = c.c_custkey""",
 # custom stateful operator (applyInPandasWithState) — exact, so oracle-gated
 q(
     "stream_stateful_uniques_per_variant",
-    _stream("stateful.stream_exact_uniques_per_variant", "events"),
+    _stream(stateful.stream_exact_uniques_per_variant, "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
 
 
 # The same op on Spark 4's transformWithStateInPandas (SPARK-49564) — the
-# API Structured Streaming steers new stateful code to: named ListState
-# with APPEND-ONLY delta writes per batch (the legacy tuple state rewrites
-# the whole uid set every batch), RocksDB-backed. Same oracle; the two
+# API Structured Streaming steers new stateful code to: a named MapState
+# of uids probed per batch with delta writes (the legacy tuple state
+# rewrites the whole uid set every batch), RocksDB-backed. Same oracle; the two
 # twins prove the engine's stateful surface covers both entry points.
 q(
     "stream_stateful_uniques_tws",
-    _stream("stateful.stream_exact_uniques_per_variant_tws", "events"),
+    _stream(stateful.stream_exact_uniques_per_variant_tws, "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
@@ -1524,7 +1506,7 @@ SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 # load-bearing (history-only uids appear in no live batch).
 q(
     "stream_stateful_uniques_bootstrap",
-    _stream("stateful.stream_uniques_tws_bootstrapped", "events"),
+    _stream(stateful.stream_uniques_tws_bootstrapped, "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
@@ -1538,7 +1520,7 @@ SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 # question with redis-cli SCARD against the live keyspace).
 q(
     "stream_state_reader_uniques",
-    _stream("state_reader.state_reader_uniques", "events"),
+    _stream(state_reader.state_reader_uniques, "events"),
     f"""{EV_CTE}
 SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 )
@@ -1552,7 +1534,7 @@ SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 # snapshots, so the three per-batch images genuinely differ.
 q(
     "stream_state_time_travel",
-    _stream("state_reader.state_time_travel_uniques", "events"),
+    _stream(state_reader.state_time_travel_uniques, "events"),
     f"""{EV_CTE},
 n AS (SELECT greatest(1, CAST(ceil(count(*) / 3.0) AS BIGINT)) AS step FROM ev),
 e AS (
@@ -1577,7 +1559,7 @@ GROUP BY 1, 2""",
 # chunk-prefix distinct uids — the post-image the write persisted.
 q(
     "stream_state_changelog",
-    _stream("state_reader.state_changelog_uniques", "events"),
+    _stream(state_reader.state_changelog_uniques, "events"),
     f"""{EV_CTE},
 n AS (SELECT greatest(1, CAST(ceil(count(*) / 3.0) AS BIGINT)) AS step FROM ev),
 e AS (
@@ -1604,7 +1586,7 @@ GROUP BY 1, 2, 3""",
 # even where TWS queries themselves cannot start.
 q(
     "stream_state_reader_tws",
-    _stream("state_reader.state_reader_tws_uniques", "events"),
+    _stream(state_reader.state_reader_tws_uniques, "events"),
     f"""{EV_CTE}
 SELECT variant,
        count(DISTINCT user_id) AS unique_users,
@@ -1628,7 +1610,7 @@ FROM ev GROUP BY 1""",
 # and the batch-parity pytest pins output equality at mFPT=1 too.
 q(
     "stream_sessions_ttl",
-    _stream("stateful.stream_sessions_ttl", "events", max_files_per_trigger=2),
+    _stream(stateful.stream_sessions_ttl, "events", max_files_per_trigger=2),
     sessions.oracle_user_sessions(EV_CTE),
 )
 
@@ -1640,7 +1622,7 @@ q(
 # replay and batch oracle; a parity pytest additionally pins TWS == legacy.
 q(
     "stream_sessions_ttl_tws",
-    _stream("stateful.stream_sessions_ttl_tws", "events", max_files_per_trigger=2),
+    _stream(stateful.stream_sessions_ttl_tws, "events", max_files_per_trigger=2),
     sessions.oracle_user_sessions(EV_CTE),
 )
 
@@ -1652,9 +1634,7 @@ _MINUTE_KEY = "strftime(ts, '%Y_%m_%dT%H_%M')"
 
 
 def _redis_commands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming.redis_sink import metric_commands
-
-    return metric_commands(_ev(spark, sf_dir))
+    return redis_sink.metric_commands(_ev(spark, sf_dir))
 
 
 def _oracle_pairs(method: str, key_sql: str, member_sql: str) -> str:
@@ -2451,7 +2431,7 @@ q(
 # unlike the reference's INCRBY leg (SURVEY §4 delta 1).
 q(
     "stream_deduped_visits",
-    _stream("pipeline.stream_deduped_visits", "events"),
+    _stream(pipeline.stream_deduped_visits, "events"),
     # Dedup by id FIRST (keep min(ts) per event_id), THEN group by
     # minute — not count(DISTINCT event_id) per minute: the op's
     # contract is redelivery repair keyed on event_id, so each id must
@@ -2476,7 +2456,7 @@ GROUP BY 1""",
 # same oracle as batch w2 (stream/batch parity).
 q(
     "stream_uniques_per_ev_minute",
-    _stream("pipeline.stream_uniques_per_ev_minute", "events"),
+    _stream(pipeline.stream_uniques_per_ev_minute, "events"),
     f"""{EV_CTE}
 SELECT date_trunc('minute', ts) AS minute, experiment_id, variant,
        count(DISTINCT user_id) AS unique_users
@@ -2487,7 +2467,7 @@ FROM ev GROUP BY 1, 2, 3""",
 # oracled against the identical batch self-join (stream/batch parity).
 q(
     "stream_click_error_join",
-    _stream("pipeline.stream_click_error_join", "events"),
+    _stream(pipeline.stream_click_error_join, "events"),
     f"""{EV_CTE}
 SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
        c.ts AS click_ts, e.ts AS error_ts,
@@ -2505,7 +2485,7 @@ FROM ev c JOIN ev e
 # pipeline._heartbeat_replay_dir). Oracled against the batch LEFT JOIN.
 q(
     "stream_click_error_left_join",
-    _stream("pipeline.stream_click_error_left_join", "events"),
+    _stream(pipeline.stream_click_error_left_join, "events"),
     f"""{EV_CTE}
 SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
        c.ts AS click_ts, e.ts AS error_ts,
@@ -2619,7 +2599,7 @@ q(
 # the filter lossless on the arrival path too.
 q(
     "stream_entity_probe",
-    _stream("pipeline.stream_entity_probe", "documents"),
+    _stream(pipeline.stream_entity_probe, "documents"),
     dedup.oracle_entity_match(),
 )
 
@@ -2633,7 +2613,7 @@ q(
 # externally hash-checked end to end.
 q(
     "stream_neardup_probe",
-    _stream("pipeline.stream_neardup_probe", "documents"),
+    _stream(pipeline.stream_neardup_probe, "documents"),
     dedup.oracle_incremental_neardup_portable(),
 )
 # Deequ-style data-validation suite: completeness/uniqueness/consistency/
@@ -2651,7 +2631,7 @@ q(
 # to a 10M-doc one), folded to the exact batch report; same oracle.
 q(
     "stream_constraint_report",
-    _stream("pipeline.stream_constraint_report", "documents"),
+    _stream(pipeline.stream_constraint_report, "documents"),
     relational.oracle_constraint_report(),
 )
 # Dedup QA report: cluster-size histogram over the oracled components.
@@ -2932,7 +2912,7 @@ q(
 # stateless per batch, exact stream/batch parity, same oracle.
 q(
     "stream_model_scores",
-    _stream("pipeline.stream_model_scores", "documents"),
+    _stream(pipeline.stream_model_scores, "documents"),
     classifier.oracle_perceptron_scores(),
 )
 # Streaming tokenizer application: each shipment encoded by joining the
@@ -2942,7 +2922,7 @@ q(
 # path), exact stream/batch parity, same unrolled-training oracle.
 q(
     "stream_bpe_encode",
-    _stream("pipeline.stream_bpe_encode", "documents"),
+    _stream(pipeline.stream_bpe_encode, "documents"),
     text.oracle_bpe_encode(),
 )
 # Corpus-version regression report over the SCD2 history: added /
@@ -2969,7 +2949,7 @@ q(
 # index derivation: stream/batch parity for the BM25 index build.
 q(
     "stream_postings_ingest",
-    _stream("pipeline.stream_postings_ingest", "documents"),
+    _stream(pipeline.stream_postings_ingest, "documents"),
     f"""WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '{text.TOKEN_SQL}') AS t
   FROM documents),
@@ -3163,7 +3143,7 @@ q(
 # (never-green outranks re-checks) — builder-green at both SFs.
 q(
     "stream_hierarchical_rollup",
-    _stream("pipeline.stream_hierarchical_rollup", "events"),
+    _stream(pipeline.stream_hierarchical_rollup, "events"),
     metrics.oracle_hierarchical_time_rollup(EV_CTE),
 )
 # Monitoring extension: trailing z-score anomaly flags on the visit series

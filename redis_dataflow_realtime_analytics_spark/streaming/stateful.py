@@ -131,7 +131,7 @@ def stream_exact_uniques_per_variant(
     """Replay ``events_path`` through the stateful operator (availableNow);
     return the final (variant, unique_users) — exact, matching the batch
     ``metrics.uniques_per_variant``. ``checkpoint_dir`` pins the
-    checkpoint location so the soak harness can weigh the state store
+    checkpoint location so ``state_reader`` can scan the state store
     afterwards (default: engine temp checkpoint)."""
     from .pipeline import _replay_to_memory
 
@@ -529,7 +529,6 @@ def tws_uniques_updates(
     spark: SparkSession,
     events_path: str,
     max_files_per_trigger: int = 1,
-    state_impl: str = "map",
 ) -> DataFrame:
     """The UNSTARTED ``transformWithStateInPandas`` transform behind
     :func:`stream_exact_uniques_per_variant_tws`. MUST be built (and its
@@ -542,28 +541,19 @@ def tws_uniques_updates(
     :func:`stream_exact_uniques_per_variant` — exact all-time distinct
     users per variant, replayed availableNow, same oracle.
 
-    State design (``state_impl="map"``, the default): a MapState keyed
-    by uid (value is a 1-byte placeholder) plus a ValueState running
-    count. Membership is ``containsKey`` per DISTINCT incoming uid, so
-    per-batch state READS are O(batch uids) point lookups and WRITES are
-    O(new uids) puts — both deltas. At 100 TB uid cardinality that is
-    the only viable shape: RocksDB point-gets against an all-time set
-    that never has to be materialized in memory.
-
-    ``state_impl="list"`` keeps the r8 formulation (one ListState of
-    uids, append-only delta writes but a FULL list read per key per
-    batch — the read side the r8 verdict flagged as the pattern that
-    dies at scale). It stays selectable for the soak A/B in BASELINE.md;
-    the legacy ``applyInPandasWithState`` op additionally rewrites the
-    whole set every batch. Counts are monotone, so the final answer is
-    the per-key max over the update-mode sink."""
+    State design: a MapState keyed by uid (value is a 1-byte
+    placeholder) plus a ValueState running count. Membership is
+    ``containsKey`` per DISTINCT incoming uid, so per-batch state READS
+    are O(batch uids) point lookups and WRITES are O(new uids) puts —
+    both deltas. At 100 TB uid cardinality that is the only viable
+    shape: RocksDB point-gets against an all-time set that never has to
+    be materialized in memory (the legacy ``applyInPandasWithState`` op
+    rewrites the whole set every batch). Counts are monotone, so the
+    final answer is the per-key max over the update-mode sink."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-
-    if state_impl not in ("map", "list"):
-        raise ValueError(f"state_impl must be 'map' or 'list', got {state_impl!r}")
 
     class UniqueUsersMap(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -589,34 +579,13 @@ def tws_uniques_updates(
         def close(self) -> None:
             pass
 
-    class UniqueUsersList(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.seen = handle.getListState("seen", "uid string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            old = {r.uid for r in self.seen.get()}
-            new: set[str] = set()
-            for pdf in rows:
-                new.update(str(u) for u in pdf["user_id"].tolist())
-            fresh = sorted(new - old)
-            if fresh:
-                self.seen.appendList([(u,) for u in fresh])
-            yield pd.DataFrame(
-                {"variant": [key[0]], "unique_users": [len(old) + len(fresh)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    processor = UniqueUsersMap() if state_impl == "map" else UniqueUsersList()
-
     ev = normalize_events(
         read_events_stream(spark, events_path, max_files_per_trigger)
     )
     return (
         ev.select("variant", "user_id")
         .groupBy("variant")
-        .transformWithStateInPandas(processor, OUTPUT_SCHEMA, "Update", "None")
+        .transformWithStateInPandas(UniqueUsersMap(), OUTPUT_SCHEMA, "Update", "None")
     )
 
 
@@ -624,7 +593,6 @@ def stream_exact_uniques_per_variant_tws(
     spark: SparkSession,
     events_path: str,
     max_files_per_trigger: int = 1,
-    state_impl: str = "map",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run :func:`tws_uniques_updates` availableNow to completion; final
@@ -632,9 +600,7 @@ def stream_exact_uniques_per_variant_tws(
     from .pipeline import _replay_to_memory
 
     with _tws_session(spark):
-        updates = tws_uniques_updates(
-            spark, events_path, max_files_per_trigger, state_impl
-        )
+        updates = tws_uniques_updates(spark, events_path, max_files_per_trigger)
         out = _replay_to_memory(spark, updates, "tws_uniq", "update", checkpoint_dir)
     return (
         out.groupBy("variant")

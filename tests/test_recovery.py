@@ -296,7 +296,7 @@ def test_tws_uniques_kill_restart_resumes_rocksdb_state(spark, tmp_path):
     ck, upd_dir = str(tmp_path / "ck"), str(tmp_path / "updates")
 
     def start():
-        updates = stateful.tws_uniques_updates(spark, replay, 1, "map")
+        updates = stateful.tws_uniques_updates(spark, replay, 1)
         return (
             updates.writeStream.foreachBatch(
                 lambda df, _bid: df.write.mode("append").parquet(upd_dir)

@@ -118,6 +118,7 @@ def test_stream_cms_store_equals_batch_sketch(spark, tmp_path):
     got = {(r.user_id, r.est_count) for r in sp.read_heavy_hitters(spark, store).collect()}
     want = {(r.user_id, r.est_count)
             for r in metrics.heavy_hitter_users_cms(_ev(spark)).collect()}
+    assert want  # empty on both sides would pass the equality vacuously
     assert got == want
 
 
