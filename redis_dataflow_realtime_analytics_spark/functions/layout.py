@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 from ..sources.events import read_events
 
+#: Morton codes per file of the Z-order report: 2**ZORDER_FILE_BITS.
+ZORDER_FILE_BITS = 22
+
 
 def write_date_partitioned_events(
     spark: SparkSession, sf_dir: str, out_dir: str
@@ -68,12 +71,10 @@ def zorder_key_sql(a_sql: str, b_sql: str) -> str:
     return f"({_spread16_sql(a_sql)} | ({_spread16_sql(b_sql)} << 1))"
 
 
-def zorder_locality_report(
-    spark: SparkSession, sf_dir: str, file_bits: int = 22
-) -> DataFrame:
+def zorder_locality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ORDER layout diagnostic: interleave (minute-of-stream, user
     bucket) into a Morton code, split the code space into files of
-    2^``file_bits`` codes, and report each file's row count plus min/max
+    2^``ZORDER_FILE_BITS`` codes, and report each file's row count plus min/max
     of BOTH dimensions — the footer statistics a data-skipping reader
     would consult. Because the Morton curve keeps both dimensions short
     per file, a filter on EITHER time or user prunes most files — the
@@ -97,7 +98,7 @@ def zorder_locality_report(
     z = zorder_key_sql("minute_idx", "user_bucket")
     return (
         keyed.withColumn("z", F.expr(z))
-        .groupBy(F.expr(f"z div {1 << file_bits}").alias("z_file"))
+        .groupBy(F.expr(f"z div {1 << ZORDER_FILE_BITS}").alias("z_file"))
         .agg(
             F.count("*").alias("n_events"),
             F.min("minute_idx").alias("min_minute"),

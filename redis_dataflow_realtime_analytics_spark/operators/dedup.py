@@ -57,6 +57,31 @@ from ..tables import load, materialized, spread
 # not, so both sides spell the class out (see operators.text.WS).
 from .text import TOKEN_EXPR, TOKEN_RE, TOKEN_SQL  # noqa: E402
 
+#: Jaccard cut of every MinHash / LSH near-dup key and its oracle.
+NEARDUP_THRESHOLD = 0.5
+#: Jaccard cut of the exact n-gram join (:func:`ngram_jaccard_pairs`).
+NGRAM_JACCARD_THRESHOLD = 0.06
+#: Containment cut of :func:`containment_pairs`.
+CONTAINMENT_THRESHOLD = 0.6
+#: Max differing SimHash bits of a near-dup pair.
+SIMHASH_MAX_HAMMING = 3
+#: Near-dup PageRank: iterations, damping, localCheckpoint cadence.
+PAGERANK_ITERS = 5
+PAGERANK_DAMPING = 0.85
+PAGERANK_CHECKPOINT_EVERY = 3
+#: k-core: the core order and the peeling rounds.
+KCORE_K = 2
+KCORE_ROUNDS = 4
+#: Label-propagation rounds.
+LPA_ROUNDS = 3
+#: A span is boilerplate once it repeats in this many docs.
+BOILERPLATE_MIN_DOCS = 2
+#: Iteration caps of the two connected-components formulations.
+CC_MAX_ITER = 25
+CC_STAR_MAX_ITER = 50
+#: Seed of the portable MinHash permutations.
+PORTABLE_SEED = 0x5EED
+
 #: Token-level shingle width for Jaccard/MinHash (3-token shingles).
 NGRAM_K = 3
 
@@ -158,26 +183,26 @@ def _shingle_seq(k: int = NGRAM_K) -> str:
     )
 
 
-def _shingle_docs(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
+def _shingle_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, arr) with arr = distinct k-token shingle array, aliased in
     its own projection — for call sites that reference the array MORE THAN
     ONCE (size + explode): the multiply-referenced alias is kept by the
     optimizer, so the array is computed once per doc (benched ~2× faster
     than inlining the expression at both references)."""
-    return docs.select("doc_id", _shingle_array(k).alias("arr"))
+    return docs.select("doc_id", _shingle_array().alias("arr"))
 
 
-def _shingles(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
+def _shingles(docs: DataFrame) -> DataFrame:
     """Distinct k-token shingles per doc: (doc_id, shingle). Single
     reference → inline the array expression directly under explode (see
     the formulation note on :func:`_shingle_array`)."""
-    return docs.select("doc_id", F.explode(_shingle_array(k)).alias("shingle"))
+    return docs.select("doc_id", F.explode(_shingle_array()).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
     spark: SparkSession,
     sf_dir: str,
-    threshold: float = 0.06,
+    threshold: float = NGRAM_JACCARD_THRESHOLD,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for every co-shingled doc pair
@@ -270,7 +295,7 @@ def ngram_jaccard_pairs(
 
 
 def oracle_ngram_jaccard_pairs(
-    threshold: float = 0.06, max_shingle_df: int | None = None
+    threshold: float = NGRAM_JACCARD_THRESHOLD, max_shingle_df: int | None = None
 ) -> str:
     """DuckDB twin of :func:`ngram_jaccard_pairs` — with
     ``max_shingle_df`` set, the inverted index is df-capped exactly like
@@ -322,18 +347,12 @@ DECON_K = 5
 DECON_MOD = 20
 
 
-def decontamination_hits(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = DECON_K,
-    benchmark_mod: int = DECON_MOD,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
+def decontamination_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-corpus decontamination: flag corpus documents sharing any
     k-token shingle with a held-out benchmark set — the standard
     eval-leakage check every LLM data pipeline runs before training.
 
-    The benchmark set is the ``doc_id % benchmark_mod == 0`` slice (a
+    The benchmark set is the ``doc_id % DECON_MOD == 0`` slice (a
     deterministic stand-in for an external eval suite; swap in a real
     benchmark table at ingest). Output: one row per contaminated corpus
     doc — (doc_id, n_shared_shingles, n_benchmark_docs_hit).
@@ -342,28 +361,17 @@ def decontamination_hits(
     against the benchmark side's (much smaller) shingle set — an equi-join
     on the shingle string that AQE broadcasts when the benchmark set fits
     (typical: eval suites are MBs vs corpus TBs). Cost scales with corpus
-    size × benchmark shingle hit-rate, never corpus². ``max_shingle_df``
-    is the same stop-shingle guard as :func:`ngram_jaccard_pairs` —
-    ubiquitous shingles ("in the middle of the") carry no contamination
-    signal and dominate the join if left in.
+    size × benchmark shingle hit-rate, never corpus².
     """
     docs = _spread(load(spark, sf_dir, "documents"))
-    is_bench = F.col("doc_id") % benchmark_mod == 0
+    is_bench = F.col("doc_id") % DECON_MOD == 0
     corpus_sh = docs.where(~is_bench).select(
-        "doc_id", F.explode(_shingle_array(k)).alias("shingle")
+        "doc_id", F.explode(_shingle_array(DECON_K)).alias("shingle")
     )
     bench_sh = docs.where(is_bench).select(
         F.col("doc_id").alias("bench_doc_id"),
-        F.explode(_shingle_array(k)).alias("shingle"),
+        F.explode(_shingle_array(DECON_K)).alias("shingle"),
     )
-    if max_shingle_df is not None:
-        rare = (
-            bench_sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") <= max_shingle_df)
-            .select("shingle")
-        )
-        bench_sh = bench_sh.join(rare, "shingle", "left_semi")
     return (
         corpus_sh.join(bench_sh, "shingle")
         .groupBy("doc_id")
@@ -374,22 +382,22 @@ def decontamination_hits(
     )
 
 
-def oracle_decontamination_hits(k: int = DECON_K, benchmark_mod: int = DECON_MOD) -> str:
+def oracle_decontamination_hits() -> str:
     """DuckDB twin of :func:`decontamination_hits`."""
     toks = f"string_split_regex(trim(text), '{TOKEN_SQL}')"
     return f"""WITH pos AS (
   SELECT doc_id, toks,
-         unnest(generate_series(1, greatest(len(toks) - {k - 1}, 1))) AS i
+         unnest(generate_series(1, greatest(len(toks) - {DECON_K - 1}, 1))) AS i
   FROM (SELECT doc_id, {toks} AS toks FROM documents) d
 ),
 sh AS (
   SELECT DISTINCT doc_id,
-         array_to_string(toks[i : i + {k - 1}], ' ') AS shingle
+         array_to_string(toks[i : i + {DECON_K - 1}], ' ') AS shingle
   FROM pos
 ),
-corpus AS (SELECT * FROM sh WHERE doc_id % {benchmark_mod} <> 0),
+corpus AS (SELECT * FROM sh WHERE doc_id % {DECON_MOD} <> 0),
 bench AS (SELECT doc_id AS bench_doc_id, shingle FROM sh
-          WHERE doc_id % {benchmark_mod} = 0)
+          WHERE doc_id % {DECON_MOD} = 0)
 SELECT c.doc_id,
        count(DISTINCT c.shingle) AS n_shared_shingles,
        count(DISTINCT b.bench_doc_id) AS n_benchmark_docs_hit
@@ -423,8 +431,6 @@ def _bloom_word_bit(seed: int, m_bits: int):
 def decontamination_hits_bloom(
     spark: SparkSession,
     sf_dir: str,
-    k: int = DECON_K,
-    benchmark_mod: int = DECON_MOD,
     m_bits: int = BLOOM_M_BITS,
     n_hashes: int = BLOOM_N_HASHES,
 ) -> DataFrame:
@@ -446,13 +452,13 @@ def decontamination_hits_bloom(
     declaratively since Spark exposes no public ``bloom_filter_agg``.
     """
     docs = _spread(load(spark, sf_dir, "documents"))
-    is_bench = F.col("doc_id") % benchmark_mod == 0
+    is_bench = F.col("doc_id") % DECON_MOD == 0
     corpus_sh = docs.where(~is_bench).select(
-        "doc_id", F.explode(_shingle_array(k)).alias("shingle")
+        "doc_id", F.explode(_shingle_array(DECON_K)).alias("shingle")
     )
     bench_sh = docs.where(is_bench).select(
         F.col("doc_id").alias("bench_doc_id"),
-        F.explode(_shingle_array(k)).alias("shingle"),
+        F.explode(_shingle_array(DECON_K)).alias("shingle"),
     )
 
     # Build: distinct benchmark shingles -> n_hashes (word, mask) pairs ->
@@ -509,10 +515,10 @@ def decontamination_hits_bloom(
 SPAN_K = 8
 
 
-def duplicate_spans(spark: SparkSession, sf_dir: str, k: int = SPAN_K) -> DataFrame:
+def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level duplicate inventory: for each document, how much of
     it re-occurs verbatim elsewhere in the corpus — (doc_id, n_spans,
-    n_dup_spans, dup_span_frac) over sliding ``k``-token windows.
+    n_dup_spans, dup_span_frac) over sliding ``SPAN_K``-token windows.
 
     Exact-dedup (:func:`exact_dedup_groups`) only removes whole-document
     copies; training corpora lose most duplicated TEXT to partial overlaps
@@ -530,7 +536,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str, k: int = SPAN_K) -> DataFr
     docs = _spread(load(spark, sf_dir, "documents"))
     # _shingle_array is array_distinct → (doc_id, h) pairs are unique, so
     # the per-span count below equals the number of DOCS containing it.
-    spans = docs.select("doc_id", F.explode(_shingle_array(k)).alias("span")).select(
+    spans = docs.select("doc_id", F.explode(_shingle_array(SPAN_K)).alias("span")).select(
         "doc_id", F.md5("span").alias("h")
     )
     span_df = spans.groupBy("h").agg(F.count("*").alias("nd"))
@@ -546,16 +552,16 @@ def duplicate_spans(spark: SparkSession, sf_dir: str, k: int = SPAN_K) -> DataFr
     )
 
 
-def oracle_duplicate_spans(k: int = SPAN_K) -> str:
+def oracle_duplicate_spans() -> str:
     """DuckDB twin of :func:`duplicate_spans`."""
     toks = f"string_split_regex(trim(text), '{TOKEN_SQL}')"
     return f"""WITH pos AS (
   SELECT doc_id, toks,
-         unnest(generate_series(1, greatest(len(toks) - {k - 1}, 1))) AS i
+         unnest(generate_series(1, greatest(len(toks) - {SPAN_K - 1}, 1))) AS i
   FROM (SELECT doc_id, {toks} AS toks FROM documents) d
 ),
 sh AS (
-  SELECT DISTINCT doc_id, md5(array_to_string(toks[i : i + {k - 1}], ' ')) AS h
+  SELECT DISTINCT doc_id, md5(array_to_string(toks[i : i + {SPAN_K - 1}], ' ')) AS h
   FROM pos
 ),
 c AS (SELECT h, count(*) AS nd FROM sh GROUP BY 1)
@@ -632,7 +638,7 @@ def maximal_duplicate_spans(
     ).drop("island")
 
 
-def oracle_maximal_duplicate_spans(k: int = SPAN_K) -> str:
+def oracle_maximal_duplicate_spans() -> str:
     """DuckDB twin of :func:`maximal_duplicate_spans` — identical window
     inventory, occurrence rule, and lag/running-sum island merge."""
     toks = f"string_split_regex(trim(text), '{TOKEN_SQL}')"
@@ -641,12 +647,12 @@ def oracle_maximal_duplicate_spans(k: int = SPAN_K) -> str:
 ),
 pos AS (
   SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_toks,
-         unnest(generate_series(1, greatest(len(toks) - {k - 1}, 1))) AS i
+         unnest(generate_series(1, greatest(len(toks) - {SPAN_K - 1}, 1))) AS i
   FROM base
 ),
 w AS (
   SELECT doc_id, n_toks, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(toks[i : i + {k - 1}], ' ')) AS h
+         md5(array_to_string(toks[i : i + {SPAN_K - 1}], ' ')) AS h
   FROM pos
 ),
 c AS (SELECT h, count(*) AS occ FROM w GROUP BY 1),
@@ -655,7 +661,7 @@ dup AS (
 ),
 flag AS (
   SELECT doc_id, n_toks, pos,
-         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > {k}
+         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > {SPAN_K}
               THEN 1 ELSE 0 END AS brk
   FROM dup
 ),
@@ -667,8 +673,8 @@ isl AS (
 )
 SELECT doc_id,
        CAST(min(pos) AS BIGINT) AS span_start,
-       CAST(least(max(pos) + {k - 1}, min(n_toks)) AS BIGINT) AS span_end,
-       CAST(least(max(pos) + {k - 1}, min(n_toks)) - min(pos) + 1 AS BIGINT)
+       CAST(least(max(pos) + {SPAN_K - 1}, min(n_toks)) AS BIGINT) AS span_end,
+       CAST(least(max(pos) + {SPAN_K - 1}, min(n_toks)) - min(pos) + 1 AS BIGINT)
          AS span_tokens,
        CAST(count(*) AS BIGINT) AS n_windows
 FROM isl GROUP BY doc_id, island"""
@@ -729,11 +735,11 @@ def cut_duplicate_spans(
     )
 
 
-def oracle_cut_duplicate_spans(k: int = SPAN_K) -> str:
+def oracle_cut_duplicate_spans() -> str:
     """DuckDB twin of :func:`cut_duplicate_spans` — the maximal-span
     oracle as a CTE, then per-token covered test + ordered reassembly."""
     toks = f"string_split_regex(trim(text), '{TOKEN_SQL}')"
-    return f"""WITH spans AS ({oracle_maximal_duplicate_spans(k)}),
+    return f"""WITH spans AS ({oracle_maximal_duplicate_spans()}),
 tk AS (
   SELECT doc_id, CAST(len(t) AS BIGINT) AS n_toks,
          unnest(t) AS tok,
@@ -849,7 +855,7 @@ def cut_duplicate_spans_keep_first(
     )
 
 
-def oracle_cut_keep_first(k: int = SPAN_K) -> str:
+def oracle_cut_keep_first() -> str:
     """DuckDB twin of :func:`cut_duplicate_spans_keep_first` — canonical
     selection via ``row_number`` over (doc_id, pos) per hash (equivalent
     to the engine's lexicographic struct-min), then the shared island
@@ -860,12 +866,12 @@ def oracle_cut_keep_first(k: int = SPAN_K) -> str:
 ),
 pos AS (
   SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_toks,
-         unnest(generate_series(1, greatest(len(toks) - {k - 1}, 1))) AS i
+         unnest(generate_series(1, greatest(len(toks) - {SPAN_K - 1}, 1))) AS i
   FROM base
 ),
 w AS (
   SELECT doc_id, n_toks, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(toks[i : i + {k - 1}], ' ')) AS h
+         md5(array_to_string(toks[i : i + {SPAN_K - 1}], ' ')) AS h
   FROM pos
 ),
 ranked AS (
@@ -879,7 +885,7 @@ cut AS (
 ),
 flag AS (
   SELECT doc_id, n_toks, pos,
-         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > {k}
+         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > {SPAN_K}
               THEN 1 ELSE 0 END AS brk
   FROM cut
 ),
@@ -892,7 +898,7 @@ isl AS (
 spans AS (
   SELECT doc_id,
          min(pos) AS span_start,
-         least(max(pos) + {k - 1}, min(n_toks)) AS span_end
+         least(max(pos) + {SPAN_K - 1}, min(n_toks)) AS span_end
   FROM isl GROUP BY doc_id, island
 ),
 tk AS (
@@ -1059,14 +1065,14 @@ def _affine_mins(rows: DataFrame, col: str) -> DataFrame:
     )
 
 
-def _tf_replicas(docs: DataFrame, k: int) -> DataFrame:
+def _tf_replicas(docs: DataFrame) -> DataFrame:
     """(doc_id, r) tf-replication rows: a shingle with tf = n contributes
     ``shingle#1 .. shingle#n``, so a set MinHash over ``r`` estimates the
     WEIGHTED Jaccard Σmin(tf)/Σmax(tf). One explode + a map-side-combined
     tf count, then one replica explode; replica volume equals the total
     (non-distinct) shingle count."""
     return (
-        docs.select("doc_id", F.explode(F.expr(_shingle_seq(k))).alias("shingle"))
+        docs.select("doc_id", F.explode(F.expr(_shingle_seq())).alias("shingle"))
         .groupBy("doc_id", "shingle")
         .agg(F.count("*").alias("tf"))
         .select("doc_id", "shingle", F.explode(F.expr("sequence(1, tf)")).alias("rep"))
@@ -1173,13 +1179,11 @@ def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     return _band_pairs(_band(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key))
 
 
-def incremental_neardup_candidates(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def incremental_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup twin of :func:`incremental_new_docs`: flag INCOMING docs
     (``doc_id % 10 = 0``) whose MinHash signature shares an LSH band
     bucket with an EXISTING doc and whose estimated Jaccard ≥
-    ``threshold`` — the per-ingest-batch near-dup check against a
+    ``NEARDUP_THRESHOLD`` — the per-ingest-batch near-dup check against a
     persisted signature index. Output: one row per flagged incoming doc —
     (doc_id, neardup_of, est_jaccard) with the best (highest estimate,
     smallest id) existing match.
@@ -1192,7 +1196,7 @@ def incremental_neardup_candidates(
     """
     sig = minhash_signatures(_spread(load(spark, sf_dir, "documents")))
     scored = _neardup_probe(sig, N_HASHES, ROWS_PER_BAND, _xxhash_key).where(
-        F.col("n_agree") >= math.ceil(threshold * N_HASHES)
+        F.col("n_agree") >= math.ceil(NEARDUP_THRESHOLD * N_HASHES)
     )
     return _best_match(scored).select(
         "doc_id", "neardup_of", _est(N_HASHES).alias("est_jaccard")
@@ -1200,7 +1204,7 @@ def incremental_neardup_candidates(
 
 
 def minhash_neardup_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
+    spark: SparkSession, sf_dir: str, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
     """LSH candidates refined by estimated Jaccard (fraction of matching
     signature slots) ≥ threshold. Sub-quadratic: no pair outside a shared
@@ -1232,14 +1236,14 @@ PORTABLE_ROWS = PORTABLE_PERMS // PORTABLE_BANDS
 PORTABLE_P = 2_147_483_647
 
 
-def _portable_coeffs(n: int = PORTABLE_PERMS, seed: int = 0x5EED) -> list[tuple[int, int]]:
+def _portable_coeffs() -> list[tuple[int, int]]:
     """Fixed affine coefficients (a_i, b_i) for the portable permutations,
     derived from a constant-seed 64-bit LCG at import time. Both the Spark
     expressions and the generated oracle SQL inline these as literals from
     the SAME list, so engine/oracle agreement is by construction."""
-    s = seed
+    s = PORTABLE_SEED
     out = []
-    for _ in range(n):
+    for _ in range(PORTABLE_PERMS):
         s = (s * 6364136223846793005 + 1442695040888963407) % (1 << 64)
         a = (s >> 33) % (PORTABLE_P - 1) + 1
         s = (s * 6364136223846793005 + 1442695040888963407) % (1 << 64)
@@ -1283,9 +1287,7 @@ def portable_minhash_signatures(docs: DataFrame) -> DataFrame:
     return _affine_mins(_shingles(docs), "shingle")
 
 
-def minhash_portable_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def minhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via the PORTABLE MinHash + LSH banding — the fully
     SQL-oracled twin of :func:`minhash_neardup_pairs` (reference scope:
     the reference dedups nothing; this is the LLM-pipeline surface, Lee
@@ -1293,7 +1295,7 @@ def minhash_portable_pairs(
 
     Output: (doc_a, doc_b, n_agree, est_jaccard) for every candidate pair
     sharing ≥ 1 of the 4 band buckets whose signature agreement ≥
-    ``threshold``. Sub-quadratic exactly like the scale twin: pairs are
+    ``NEARDUP_THRESHOLD``. Sub-quadratic exactly like the scale twin: pairs are
     generated ONLY inside shared band buckets — the all-pairs formulation
     exists nowhere in the engine (the oracle may do as it likes; it also
     band-joins, keeping sf0.1 checks fast).
@@ -1305,13 +1307,11 @@ def minhash_portable_pairs(
     return (
         _agree(cands, sig, PORTABLE_PERMS, "doc_a", "doc_b")
         .select("doc_a", "doc_b", "n_agree", _est(PORTABLE_PERMS).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
+        .where(F.col("est_jaccard") >= NEARDUP_THRESHOLD)
     )
 
 
-def incremental_neardup_portable(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def incremental_neardup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable-permutation twin of :func:`incremental_neardup_candidates`
     — the per-ingest-batch near-dup probe (incoming = ``doc_id % 10 = 0``)
     against the existing corpus's banded signature index, now externally
@@ -1325,14 +1325,14 @@ def incremental_neardup_portable(
     # pairs as the sibling twins' est_jaccard >= threshold filter at
     # EVERY threshold, not just ones where t*P is whole.
     scored = _neardup_probe(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key).where(
-        F.col("n_agree") >= math.ceil(threshold * PORTABLE_PERMS)
+        F.col("n_agree") >= math.ceil(NEARDUP_THRESHOLD * PORTABLE_PERMS)
     )
     return _best_match(scored).select(
         "doc_id", "neardup_of", "n_agree", _est(PORTABLE_PERMS).alias("est_jaccard")
     )
 
 
-def _oracle_portable_sig_sql(k: int = NGRAM_K) -> str:
+def _oracle_portable_sig_sql() -> str:
     """Shared CTE text: documents → distinct shingles → 28-bit md5 keys →
     16-column portable MinHash signature (``sig``)."""
     toks = f"string_split_regex(trim(text), '{TOKEN_SQL}')"
@@ -1342,12 +1342,12 @@ def _oracle_portable_sig_sql(k: int = NGRAM_K) -> str:
     )
     return f"""pos AS (
   SELECT doc_id, toks,
-         unnest(generate_series(1, greatest(len(toks) - {k - 1}, 1))) AS i
+         unnest(generate_series(1, greatest(len(toks) - {NGRAM_K - 1}, 1))) AS i
   FROM (SELECT doc_id, {toks} AS toks FROM documents) d
 ),
 sh AS (
   SELECT DISTINCT doc_id,
-         CAST(('0x' || substr(md5(array_to_string(toks[i : i + {k - 1}], ' ')), 1, 7))
+         CAST(('0x' || substr(md5(array_to_string(toks[i : i + {NGRAM_K - 1}], ' ')), 1, 7))
               AS BIGINT) AS x
   FROM pos
 ),
@@ -1366,7 +1366,7 @@ bands AS (
 )"""
 
 
-def oracle_minhash_portable_pairs(threshold: float = 0.5) -> str:
+def oracle_minhash_portable_pairs() -> str:
     """DuckDB twin of :func:`minhash_portable_pairs` — re-derives the
     signatures from the raw text and band-joins exactly like the engine."""
     agree = " + ".join(
@@ -1385,10 +1385,10 @@ SELECT c.doc_a, c.doc_b,
 FROM cand c
 JOIN sig sa ON sa.doc_id = c.doc_a
 JOIN sig sb ON sb.doc_id = c.doc_b
-WHERE CAST({agree} AS DOUBLE) / {float(PORTABLE_PERMS)} >= {threshold}"""
+WHERE CAST({agree} AS DOUBLE) / {float(PORTABLE_PERMS)} >= {NEARDUP_THRESHOLD}"""
 
 
-def oracle_incremental_neardup_portable(threshold: float = 0.5) -> str:
+def oracle_incremental_neardup_portable() -> str:
     """DuckDB twin of :func:`incremental_neardup_portable`."""
     agree = " + ".join(
         f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END"
@@ -1406,7 +1406,7 @@ scored AS (
   FROM cand c
   JOIN sig sa ON sa.doc_id = c.doc_id
   JOIN sig sb ON sb.doc_id = c.neardup_of
-  WHERE {agree} >= {math.ceil(threshold * PORTABLE_PERMS)}
+  WHERE {agree} >= {math.ceil(NEARDUP_THRESHOLD * PORTABLE_PERMS)}
 ),
 best AS (
   SELECT doc_id, neardup_of, n_agree,
@@ -1419,9 +1419,7 @@ SELECT doc_id, neardup_of, n_agree,
 FROM best WHERE rn = 1"""
 
 
-def lsh_exact_jaccard_portable(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def lsh_exact_jaccard_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two-stage production dedup layout — LSH candidates, then EXACT
     Jaccard verification — under PORTABLE permutations, which makes the
     whole architecture SQL-oracled (its xxhash64 twin
@@ -1433,10 +1431,10 @@ def lsh_exact_jaccard_portable(
     docs = _spread(load(spark, sf_dir, "documents"))
     sig = portable_minhash_signatures(docs)
     cands = _band_pairs(_band(sig, PORTABLE_PERMS, PORTABLE_ROWS, _concat_key))
-    return _verify_jaccard(cands, docs, threshold)
+    return _verify_jaccard(cands, docs, NEARDUP_THRESHOLD)
 
 
-def oracle_lsh_exact_jaccard_portable(threshold: float = 0.5) -> str:
+def oracle_lsh_exact_jaccard_portable() -> str:
     """DuckDB twin of :func:`lsh_exact_jaccard_portable`: the portable
     signature/banding CTEs produce the candidate set, a separate
     shingle-STRING inventory re-verifies exact Jaccard on it (candidates
@@ -1472,7 +1470,7 @@ SELECT doc_a, doc_b,
 FROM common
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE n_common / (sa.n + sb.n - n_common) >= {threshold}"""
+WHERE n_common / (sa.n + sb.n - n_common) >= {NEARDUP_THRESHOLD}"""
 
 
 def _persisted_portable_index(
@@ -1517,7 +1515,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
 
 
 def simhash_neardup_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3
+    spark: SparkSession, sf_dir: str, max_hamming: int = SIMHASH_MAX_HAMMING
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -1554,20 +1552,18 @@ def simhash_portable_signatures(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", _simhash(token_key, SIMHASH_PORTABLE_BITS))
 
 
-def simhash_portable_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs at Hamming ≤ ``max_hamming`` over the PORTABLE
+def simhash_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs at Hamming ≤ ``SIMHASH_MAX_HAMMING`` over the PORTABLE
     SimHash — fully SQL-oracled (the xxhash64 family stays rows-only as
     the scale path). Blocking on 4 chunks of 12 bits (48-bit signature);
     ``hamming`` is a bigint."""
     sig = simhash_portable_signatures(_spread(load(spark, sf_dir, "documents")))
     return _chunk_pairs(
-        sig, SIMHASH_PORTABLE_BITS, SIMHASH_PORTABLE_CHUNKS, max_hamming, "bigint"
+        sig, SIMHASH_PORTABLE_BITS, SIMHASH_PORTABLE_CHUNKS, SIMHASH_MAX_HAMMING, "bigint"
     )
 
 
-def oracle_simhash_portable_pairs(max_hamming: int = 3) -> str:
+def oracle_simhash_portable_pairs() -> str:
     """DuckDB twin of :func:`simhash_portable_pairs` — explode + 32
     conditional vote sums re-derive the per-row fold's signatures exactly
     (same md5 keys, same ≥0 tie rule), then the same chunk blocking."""
@@ -1609,13 +1605,11 @@ pairs AS (
 )
 SELECT doc_a, doc_b,
        CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-FROM pairs WHERE bit_count(xor(sa, sb)) <= {max_hamming}"""
+FROM pairs WHERE bit_count(xor(sa, sb)) <= {SIMHASH_MAX_HAMMING}"""
 
 
 # --- Connected components (pairs -> duplicate clusters) ---------------------
-def _sym_edges(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def _sym_edges(edges: DataFrame) -> DataFrame:
     """Symmetrize an undirected ``(doc_a, doc_b)`` edge list into a pinned
     ``(src, dst)`` frame with ONE pass over the edge subtree.
 
@@ -1631,17 +1625,17 @@ def _sym_edges(
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col("doc_a").alias(src), F.col("doc_b").alias(dst)),
-                    F.struct(F.col("doc_b").alias(src), F.col("doc_a").alias(dst)),
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
                 )
             ).alias("e")
         )
-        .select(f"e.{src}", f"e.{dst}")
+        .select("e.src", "e.dst")
         .localCheckpoint(eager=True)
     )
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components over an undirected edge list ``(doc_a, doc_b)``:
     returns ``(doc_id, component_id)`` with ``component_id`` = min doc_id
     reachable — the canonical-label convention every dedup pipeline uses to
@@ -1657,7 +1651,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     Scale: converges in O(graph diameter) iterations. Near-dup graphs are
     unions of near-cliques (each duplicate cluster is densely
     inter-connected because similarity is transitive-ish at high
-    thresholds), so diameter is small — 2–4 in practice; ``max_iter`` is a
+    thresholds), so diameter is small — 2–4 in practice; ``CC_MAX_ITER`` is a
     safety bound and non-convergence raises. For adversarial long-chain
     graphs at 10⁹+ nodes, swap the body for the large-star/small-star
     alternating rounds (Kiveris et al., "Connected Components in
@@ -1682,7 +1676,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr_min = (
             sym.join(labels, sym.dst == labels.doc_id)
             .groupBy("src")
@@ -1713,7 +1707,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         labels = new_labels.select("doc_id", F.col("new_comp").alias("comp"))
         if not any_changed:
             return labels.select("doc_id", F.col("comp").alias("component_id"))
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
+    raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} iterations")
 
 
 def _star_edges_sig(edges: DataFrame) -> tuple[int, int]:
@@ -1728,7 +1722,7 @@ def _star_edges_sig(edges: DataFrame) -> tuple[int, int]:
     return row["n"], row["h"]
 
 
-def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
     — the adversarial-topology alternative to min-label propagation
@@ -1758,7 +1752,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
         .localCheckpoint(eager=True)
     )
     prev_sig = _star_edges_sig(e)
-    for _ in range(max_iter):
+    for _ in range(CC_STAR_MAX_ITER):
         # large-star
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
@@ -1798,48 +1792,40 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
                 )
             )
         prev_sig = sig
-    raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components_star did not converge in {CC_STAR_MAX_ITER} rounds")
 
 
-def neardup_components_star(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def neardup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`neardup_components` computed by the large-star/small-star
     rounds instead of min-label propagation — same SQL-oracled edge set
     (:func:`ngram_jaccard_pairs`), same output, same oracle; registered
     separately so the driver gates BOTH clustering algorithms."""
-    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
+    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=NEARDUP_THRESHOLD)
     return connected_components_star(edges)
 
 
-def neardup_components(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
-    """Duplicate clusters from exact n-gram Jaccard pairs at ``threshold``:
+def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate clusters from exact n-gram Jaccard pairs at ``NEARDUP_THRESHOLD``:
     (doc_id, component_id) for every document in at least one near-dup
     pair. The edge set is the SQL-oracled :func:`ngram_jaccard_pairs`, so
     the whole pipeline — shingle index → pair similarity → transitive
     clustering — is differential-testable end to end."""
-    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
+    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=NEARDUP_THRESHOLD)
     return connected_components(edges)
 
 
-def neardup_survivors(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents surviving near-dedup: every unpaired doc plus the minimum
     doc_id (canonical) of each duplicate cluster — the keep-list a training
     pipeline feeds downstream."""
     docs = _spread(load(spark, sf_dir, "documents"))
-    comp = neardup_components(spark, sf_dir, threshold=threshold)
+    comp = neardup_components(spark, sf_dir)
     keep_of_cluster = comp.groupBy("component_id").agg(F.min("doc_id").alias("doc_id"))
     unpaired = docs.join(comp.select("doc_id"), "doc_id", "left_anti")
     return unpaired.select("doc_id").union(keep_of_cluster.select("doc_id"))
 
 
-def lsh_components(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production near-dedup pipeline end to end at 100 TB shape:
     MinHash-LSH candidates → exact-Jaccard verification
     (:func:`lsh_exact_jaccard_pairs`, sub-quadratic, precision 1) →
@@ -1851,14 +1837,14 @@ def lsh_components(
     banding); on corpora whose near-dup pairs sit well above the LSH
     threshold (recall ≈ 1) it equals the exact clustering — asserted on
     planted duplicates in tests/test_dedup.py."""
-    edges = lsh_exact_jaccard_pairs(spark, sf_dir, threshold=threshold)
+    edges = lsh_exact_jaccard_pairs(spark, sf_dir)
     return connected_components(edges)
 
 
-def oracle_neardup_components(threshold: float = 0.5) -> str:
+def oracle_neardup_components() -> str:
     """DuckDB twin of :func:`neardup_components` — the pair CTE from
     :func:`oracle_ngram_jaccard_pairs` plus a recursive min-label closure."""
-    pairs = oracle_ngram_jaccard_pairs(threshold)
+    pairs = oracle_ngram_jaccard_pairs(NEARDUP_THRESHOLD)
     return f"""WITH RECURSIVE pr AS ({pairs}),
 edges AS (SELECT doc_a AS a, doc_b AS b FROM pr UNION SELECT doc_b, doc_a FROM pr),
 nodes AS (SELECT DISTINCT a AS n FROM edges),
@@ -1870,9 +1856,9 @@ reach(n, m) AS (
 SELECT n AS doc_id, min(m) AS component_id FROM reach GROUP BY n"""
 
 
-def oracle_neardup_survivors(threshold: float = 0.5) -> str:
+def oracle_neardup_survivors() -> str:
     """DuckDB twin of :func:`neardup_survivors`."""
-    comp = oracle_neardup_components(threshold)
+    comp = oracle_neardup_components()
     return f"""WITH comp AS ({comp})
 SELECT min(doc_id) AS doc_id FROM comp GROUP BY component_id
 UNION ALL
@@ -1881,7 +1867,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM comp)"""
 
 
 def lsh_exact_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
+    spark: SparkSession, sf_dir: str, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
     """Two-stage near-dup architecture: MinHash-LSH candidate generation
     (sub-quadratic — only bucket-colliding pairs surface), then EXACT
@@ -1900,9 +1886,7 @@ def lsh_exact_jaccard_pairs(
     return _verify_jaccard(minhash_lsh_candidates(docs), docs, threshold)
 
 
-def cluster_size_histogram(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of near-dup cluster sizes — the dedup QA report every
     corpus pipeline prints before dropping documents (a single giant
     cluster usually means a boilerplate template, not true duplication,
@@ -1914,7 +1898,7 @@ def cluster_size_histogram(
     differential-testable. Two tiny aggregations on top of the component
     labels; all-int output, bit-exact.
     """
-    comp = neardup_components(spark, sf_dir, threshold=threshold)
+    comp = neardup_components(spark, sf_dir)
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size")
@@ -1925,8 +1909,8 @@ def cluster_size_histogram(
     )
 
 
-def oracle_cluster_size_histogram(threshold: float = 0.5) -> str:
-    comp = oracle_neardup_components(threshold)
+def oracle_cluster_size_histogram() -> str:
+    comp = oracle_neardup_components()
     return f"""WITH comp AS ({comp}),
 sizes AS (SELECT component_id, count(*) AS cluster_size FROM comp GROUP BY 1)
 SELECT cluster_size, count(*) AS n_clusters,
@@ -1980,9 +1964,7 @@ GROUP BY 1 HAVING count(*) >= 2"""
 
 
 # --- Quality-canonical selection (keep BEST, not first) ---------------------
-def neardup_keep_best(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-canonical dedup keep-list: for every near-dup cluster keep
     the HIGHEST-quality member (ties broken by min doc_id), plus every
     unpaired document — the representative-selection step modern corpus
@@ -2015,7 +1997,7 @@ def neardup_keep_best(
     from .text import quality_projection
 
     docs = _spread(load(spark, sf_dir, "documents"))
-    comp = neardup_components(spark, sf_dir, threshold=threshold)
+    comp = neardup_components(spark, sf_dir)
     q = quality_projection(docs).select("doc_id", "quality")
     scored = comp.join(q, "doc_id").localCheckpoint(eager=True)
     best = scored.groupBy("component_id").agg(
@@ -2072,12 +2054,7 @@ FROM q WHERE q.doc_id NOT IN (SELECT doc_id FROM comp)"""
 
 # --- PageRank centrality over the near-dup graph ----------------------------
 def neardup_pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.5,
-    iters: int = 5,
-    damping: float = 0.85,
-    checkpoint_every: int = 3,
+    spark: SparkSession, sf_dir: str, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
     """PageRank over the near-duplicate graph — a centrality score for
     every doc that appears in at least one near-dup pair. Inside a
@@ -2091,10 +2068,10 @@ def neardup_pagerank(
     as :func:`connected_components`): per iteration one join (ranks onto
     the edge list) + one keyed sum — both shuffles keyed by uniform int64
     doc ids, partial aggregation map-side. Lineage is truncated every
-    ``checkpoint_every`` iterations rather than every one: a bounded
+    ``PAGERANK_CHECKPOINT_EVERY`` iterations rather than every one: a bounded
     chain of lazy iterations executes as ONE job (measured 13% faster
     than per-iteration materialization at bench SF) while the periodic
-    ``localCheckpoint`` still keeps the plan O(checkpoint_every) deep at
+    ``localCheckpoint`` still keeps the plan O(PAGERANK_CHECKPOINT_EVERY) deep at
     any iteration count. The edge list is symmetric, so every node has
     out-degree ≥ 1 (no dangling mass) and receives ≥ 1 contribution
     (inner joins are total).
@@ -2103,10 +2080,10 @@ def neardup_pagerank(
     fixpoints): neighbor sums go through the exact decimal accumulator
     convention (``functions/numeric.py``) at DECIMAL(38,12) — addition is
     order-independent, so the result is bit-identical at any
-    partitioning, and the oracle unrolls the same ``iters`` iterations as
+    partitioning, and the oracle unrolls the same ``PAGERANK_ITERS`` iterations as
     chained CTEs with the identical arithmetic.
 
-    Output: (doc_id, rank) after ``iters`` iterations; ranks over the
+    Output: (doc_id, rank) after ``PAGERANK_ITERS`` iterations; ranks over the
     graph's nodes sum to ≈ 1 (teleport mass included).
     """
     edges = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
@@ -2120,8 +2097,8 @@ def neardup_pagerank(
     rank = nodes.select(
         "doc_id", "deg", "_n", (F.lit(1.0) / F.col("_n")).alias("rank")
     )
-    teleport = F.lit(1 - damping) / F.col("_n")
-    for i in range(iters):
+    teleport = F.lit(1 - PAGERANK_DAMPING) / F.col("_n")
+    for i in range(PAGERANK_ITERS):
         contrib = sym.join(
             rank.select(F.col("doc_id").alias("src"), "deg", "rank"), "src"
         ).select("dst", (F.col("rank") / F.col("deg")).alias("c"))
@@ -2132,22 +2109,18 @@ def neardup_pagerank(
             "doc_id",
             "deg",
             "_n",
-            (teleport + F.lit(damping) * F.col("s")).alias("rank"),
+            (teleport + F.lit(PAGERANK_DAMPING) * F.col("s")).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < PAGERANK_ITERS:
             rank = rank.localCheckpoint(eager=True)
     return rank.select("doc_id", "rank")
 
 
 def kcore_membership(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 2,
-    rounds: int = 4,
-    threshold: float = 0.5,
+    spark: SparkSession, sf_dir: str, rounds: int = KCORE_ROUNDS
 ) -> DataFrame:
     """k-core membership of the near-duplicate graph: iteratively peel
-    nodes whose degree (among survivors) is below ``k`` — the standard
+    nodes whose degree (among survivors) is below ``KCORE_K`` — the standard
     graph-density diagnostic for duplicate clusters (a 2-core separates
     genuinely interconnected variant families from incidental pairwise
     matches that :func:`connected_components` lumps together; the core
@@ -2172,11 +2145,11 @@ def kcore_membership(
     Output: (doc_id, core_deg) — nodes in the k-core with their
     within-core degree.
     """
-    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
-    return kcore_peel(edges, k=k, rounds=rounds)
+    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=NEARDUP_THRESHOLD)
+    return kcore_peel(edges, rounds=rounds)
 
 
-def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
+def kcore_peel(edges: DataFrame, rounds: int = KCORE_ROUNDS) -> DataFrame:
     """The peel itself over any (doc_a, doc_b) pair frame — the same
     edges-in contract as :func:`connected_components`, so the scale path
     feeds it LSH-bucketed pairs (``lsh_exact_jaccard_pairs``) while the
@@ -2195,7 +2168,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
         keep = (
             sym.groupBy("src")
             .agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= k)
+            .where(F.col("deg") >= KCORE_K)
             .select("src")
             .localCheckpoint(eager=True)
         )
@@ -2212,7 +2185,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     )
 
 
-def oracle_kcore_membership(pairs_sql: str, k: int = 2, rounds: int = 4) -> str:
+def oracle_kcore_membership(pairs_sql: str) -> str:
     """DuckDB twin of :func:`kcore_membership` — the same peels unrolled
     as chained CTEs over the symmetric edge list."""
     # every e{i} is consumed twice (by s{i+1} and e{i+1}) — MATERIALIZED,
@@ -2223,11 +2196,11 @@ def oracle_kcore_membership(pairs_sql: str, k: int = 2, rounds: int = 4) -> str:
 e0 AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pr
        UNION ALL SELECT doc_b, doc_a FROM pr)"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, KCORE_ROUNDS + 1):
         p = i - 1
         ctes.append(
             f"""s{i} AS MATERIALIZED (SELECT src FROM e{p} GROUP BY src
-         HAVING count(*) >= {k}),
+         HAVING count(*) >= {KCORE_K}),
 e{i} AS MATERIALIZED (SELECT e.src, e.dst FROM e{p} e
          JOIN s{i} a ON a.src = e.src
          JOIN s{i} b ON b.src = e.dst)"""
@@ -2235,13 +2208,11 @@ e{i} AS MATERIALIZED (SELECT e.src, e.dst FROM e{p} e
     body = ",\n".join(ctes)
     return (
         f"WITH {body}\n"
-        f"SELECT src AS doc_id, count(*) AS core_deg FROM e{rounds} GROUP BY src"
+        f"SELECT src AS doc_id, count(*) AS core_deg FROM e{KCORE_ROUNDS} GROUP BY src"
     )
 
 
-def oracle_neardup_pagerank(
-    pairs_sql: str, iters: int = 5, damping: float = 0.85
-) -> str:
+def oracle_neardup_pagerank(pairs_sql: str) -> str:
     """DuckDB twin of :func:`neardup_pagerank` — the same iterations
     unrolled as chained CTEs; damping constants embedded via ``repr`` so
     both engines evaluate the identical doubles.
@@ -2255,8 +2226,8 @@ def oracle_neardup_pagerank(
     evaluation hint, and the sibling graph oracles (connected
     components / label propagation / triangles / k-core) share the
     same edge SQL single-referenced and pass unhinted."""
-    d = repr(damping)
-    t = repr(1 - damping)
+    d = repr(PAGERANK_DAMPING)
+    t = repr(1 - PAGERANK_DAMPING)
     ctes = [
         f"""pr AS MATERIALIZED ({pairs_sql}),
 sym AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pr
@@ -2265,7 +2236,7 @@ deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY src),
 n AS (SELECT count(*) AS total FROM deg),
 r0 AS (SELECT src AS doc_id, 1.0 / n.total AS rank FROM deg CROSS JOIN n)"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         ctes.append(
             f"""r{i} AS (
   SELECT s.dst AS doc_id,
@@ -2278,7 +2249,7 @@ r0 AS (SELECT src AS doc_id, 1.0 / n.total AS rank FROM deg CROSS JOIN n)"""
   GROUP BY s.dst, n.total)"""
         )
     body = ",\n".join(ctes)
-    return f"WITH {body}\nSELECT doc_id, rank FROM r{iters}"
+    return f"WITH {body}\nSELECT doc_id, rank FROM r{PAGERANK_ITERS}"
 
 
 def neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2401,9 +2372,7 @@ SELECT deg.doc_id, deg.degree,
 FROM deg LEFT JOIN tcnt ON tcnt.doc_id = deg.doc_id"""
 
 
-def cross_source_dup_matrix(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source duplicate-leakage matrix: near-dup pairs rolled up by
     the (source, source) combination of their endpoints — the corpus
     diagnostic that tells you WHICH ingestion feeds duplicate each other
@@ -2419,7 +2388,7 @@ def cross_source_dup_matrix(
 
     Output: (source_a, source_b, n_pairs), source_a <= source_b.
     """
-    pairs = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
+    pairs = ngram_jaccard_pairs(spark, sf_dir, threshold=NEARDUP_THRESHOLD)
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
     labeled = (
         pairs.join(
@@ -2455,7 +2424,7 @@ FROM lab GROUP BY 1, 2"""
 
 
 def containment_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.6
+    spark: SparkSession, sf_dir: str, threshold: float = CONTAINMENT_THRESHOLD
 ) -> DataFrame:
     """ASYMMETRIC shingle containment C(A→B) = |A∩B| / |A|: how much of
     doc A's shingle set lives inside doc B. Jaccard misses the
@@ -2528,7 +2497,7 @@ def containment_pairs(
     return both.where(F.col("containment") >= threshold)
 
 
-def oracle_containment_pairs(threshold: float = 0.6) -> str:
+def oracle_containment_pairs() -> str:
     """DuckDB twin of :func:`containment_pairs`."""
     toks = f"string_split_regex(trim(text), '{TOKEN_SQL}')"
     return f"""WITH pos AS (
@@ -2560,15 +2529,13 @@ dirs AS (
   SELECT doc_b, doc_a, n_common / nb FROM sized
 )
 SELECT doc_src, doc_dst, containment FROM dirs
-WHERE containment >= {threshold}"""
+WHERE containment >= {CONTAINMENT_THRESHOLD}"""
 
 
 # --- C4-style boilerplate span removal --------------------------------------
-def remove_boilerplate_spans(
-    spark: SparkSession, sf_dir: str, k: int = SPAN_K, min_docs: int = 2
-) -> DataFrame:
-    """Boilerplate REMOVAL (not just detection): every ``k``-token sliding
-    window that occurs in >= ``min_docs`` distinct documents is treated as
+def remove_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Boilerplate REMOVAL (not just detection): every ``SPAN_K``-token sliding
+    window that occurs in >= ``BOILERPLATE_MIN_DOCS`` distinct documents is treated as
     boilerplate, every token position it covers is dropped, and the
     surviving tokens are re-assembled in order — the C4/"remove duplicated
     spans" cleaning step that :func:`duplicate_spans` only measures.
@@ -2592,19 +2559,19 @@ def remove_boilerplate_spans(
         "doc_id",
         "n",
         F.explode(
-            F.sequence(F.lit(1), F.greatest(F.col("n") - (k - 1), F.lit(1)))
+            F.sequence(F.lit(1), F.greatest(F.col("n") - (SPAN_K - 1), F.lit(1)))
         ).alias("start"),
         "toks",
     ).select(
         "doc_id",
         "n",
         "start",
-        F.md5(F.concat_ws(" ", F.slice("toks", F.col("start"), k))).alias("h"),
+        F.md5(F.concat_ws(" ", F.slice("toks", F.col("start"), SPAN_K))).alias("h"),
     )
     freq = (
         spans.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("nd"))
-        .where(F.col("nd") >= min_docs)
+        .where(F.col("nd") >= BOILERPLATE_MIN_DOCS)
         .select("h")
     )
     covered = (
@@ -2613,7 +2580,7 @@ def remove_boilerplate_spans(
             "doc_id",
             F.explode(
                 F.sequence(
-                    F.col("start"), F.least(F.col("start") + (k - 1), F.col("n"))
+                    F.col("start"), F.least(F.col("start") + (SPAN_K - 1), F.col("n"))
                 )
             ).alias("p"),
         )
@@ -2643,7 +2610,7 @@ def remove_boilerplate_spans(
     )
 
 
-def oracle_remove_boilerplate_spans(k: int = SPAN_K, min_docs: int = 2) -> str:
+def oracle_remove_boilerplate_spans() -> str:
     """DuckDB twin of :func:`remove_boilerplate_spans` — same 1-based
     positions, same truncated trailing windows, same remove-everywhere
     policy."""
@@ -2652,19 +2619,19 @@ def oracle_remove_boilerplate_spans(k: int = SPAN_K, min_docs: int = 2) -> str:
   SELECT doc_id, {toks} AS toks, len({toks}) AS n FROM documents),
 pos AS (
   SELECT doc_id, toks, n,
-         unnest(generate_series(1, greatest(n - {k - 1}, 1))) AS start
+         unnest(generate_series(1, greatest(n - {SPAN_K - 1}, 1))) AS start
   FROM d),
 sp AS (
   SELECT doc_id, n, start,
-         md5(array_to_string(toks[start : start + {k - 1}], ' ')) AS h
+         md5(array_to_string(toks[start : start + {SPAN_K - 1}], ' ')) AS h
   FROM pos),
 freq AS (
   SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM sp GROUP BY 1)
-  WHERE nd >= {min_docs}),
+  WHERE nd >= {BOILERPLATE_MIN_DOCS}),
 cov AS (
   SELECT DISTINCT sp.doc_id, p
   FROM sp JOIN freq USING (h),
-       LATERAL unnest(generate_series(start, least(start + {k - 1}, n))) AS t(p)),
+       LATERAL unnest(generate_series(start, least(start + {SPAN_K - 1}, n))) AS t(p)),
 tok AS (
   SELECT doc_id, toks[p] AS tok, CAST(p AS BIGINT) AS p
   FROM d, LATERAL unnest(generate_series(1, n)) AS t(p)),
@@ -2684,9 +2651,7 @@ SELECT d.doc_id,
 FROM d LEFT JOIN rebuilt r USING (doc_id)"""
 
 
-def label_propagation(
-    spark: SparkSession, sf_dir: str, rounds: int = 3, threshold: float = 0.5
-) -> DataFrame:
+def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection on the near-duplicate graph by synchronous
     label propagation — the densest-neighborhood grouping that sits
     between :func:`connected_components` (too coarse: one bridge edge
@@ -2694,7 +2659,7 @@ def label_propagation(
     density filter, not an assignment). LPA is the standard cheap
     community pass for duplicate-cluster splitting at corpus scale.
 
-    Fixed ``rounds`` synchronous updates with a fully deterministic
+    Fixed ``LPA_ROUNDS`` synchronous updates with a fully deterministic
     rule — new label = the neighbor label with the highest count,
     ties broken by SMALLEST label; no RNG, no async order dependence —
     so the result is exactly reproducible and SQL-oracle-able by
@@ -2704,11 +2669,11 @@ def label_propagation(
 
     Output: (doc_id, community) for every node with >= 1 edge.
     """
-    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
-    return lpa_labels(edges, rounds=rounds)
+    edges = ngram_jaccard_pairs(spark, sf_dir, threshold=NEARDUP_THRESHOLD)
+    return lpa_labels(edges)
 
 
-def lpa_labels(edges: DataFrame, rounds: int = 3) -> DataFrame:
+def lpa_labels(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     """The propagation itself over any (doc_a, doc_b) pair frame — the
     same edges-in contract as :func:`connected_components` /
     :func:`kcore_peel`, so the scale path feeds LSH-bucketed pairs.
@@ -2740,7 +2705,7 @@ def lpa_labels(edges: DataFrame, rounds: int = 3) -> DataFrame:
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("community"))
 
 
-def oracle_label_propagation(pairs_sql: str, rounds: int = 3) -> str:
+def oracle_label_propagation(pairs_sql: str) -> str:
     """DuckDB twin of :func:`label_propagation` — the same synchronous
     rounds unrolled as chained CTEs (sym MATERIALIZED: it feeds every
     round; each l{i} is consumed once)."""
@@ -2750,7 +2715,7 @@ sym AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pr
        UNION ALL SELECT doc_b, doc_a FROM pr),
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym)"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, LPA_ROUNDS + 1):
         ctes.append(
             f"""l{i} AS (
   SELECT src AS node, label
@@ -2762,13 +2727,11 @@ l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym)"""
     body = ",\n".join(ctes)
     return (
         f"WITH {body}\n"
-        f"SELECT node AS doc_id, CAST(label AS BIGINT) AS community FROM l{rounds}"
+        f"SELECT node AS doc_id, CAST(label AS BIGINT) AS community FROM l{LPA_ROUNDS}"
     )
 
 
-def keep_best_by_model(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def keep_best_by_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-canonical selection: for every near-dup cluster keep the
     member with the highest LEARNED quality margin (ties broken by min
     doc_id) — :func:`neardup_keep_best` with the trained classifier
@@ -2795,7 +2758,7 @@ def keep_best_by_model(
     """
     from .classifier import perceptron_persisted_scores
 
-    comp = neardup_components(spark, sf_dir, threshold=threshold)
+    comp = neardup_components(spark, sf_dir)
     scores = perceptron_persisted_scores(spark, sf_dir).select(
         "doc_id", "margin"
     )
@@ -2867,17 +2830,14 @@ _ENTITY_DIRTY = f"""CASE (doc_id div 20) % 3
   ELSE {_ENTITY_TITLE} END"""
 
 
-def entity_match_pairs(
-    spark: SparkSession, sf_dir: str, q: int = ENTITY_Q,
-    max_dist: int = ENTITY_MAX_DIST,
-) -> DataFrame:
+def entity_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record linkage by EXACT edit-distance join — the entity-resolution
     family (noisy registry records matched against a clean registry),
     distinct from the token/shingle dedup family: similarity is
     character-level Levenshtein, the workload of name/address/title
     matching.
 
-    Semantics: ALL (dirty, clean) pairs with ``levenshtein ≤ max_dist``
+    Semantics: ALL (dirty, clean) pairs with ``levenshtein ≤ ENTITY_MAX_DIST``
     — not an approximation. The sub-quadratic plan is the ED-Join
     prefix-filter scheme (Xiao et al., VLDB'08): an edit operation
     touches ≤ q gram positions, so d edits remove ≤ q·d distinct
@@ -2895,7 +2855,7 @@ def entity_match_pairs(
     grams of each record); the verify join touches candidate pairs
     only. The quadratic brute-force twin exists only inside the oracle.
 
-    Output: (dirty_id, clean_id, distance), distance ≤ max_dist.
+    Output: (dirty_id, clean_id, distance), distance ≤ ENTITY_MAX_DIST.
     """
     docs = spread(load(spark, sf_dir, "documents"))
     clean = docs.select(
@@ -2919,8 +2879,8 @@ def entity_match_pairs(
         "id",
         F.explode(
             F.expr(
-                f"array_distinct(transform(sequence(1, length(name) - {q - 1}),"
-                f" i -> substring(name, i, {q})))"
+                f"array_distinct(transform(sequence(1, length(name) - {ENTITY_Q - 1}),"
+                f" i -> substring(name, i, {ENTITY_Q})))"
             )
         ).alias("gram"),
     )
@@ -2929,7 +2889,7 @@ def entity_match_pairs(
     prefix = (
         grams.join(F.broadcast(df_tab), "gram")
         .withColumn("r", F.row_number().over(w_rank))
-        .where(F.col("r") <= q * max_dist + 1)
+        .where(F.col("r") <= ENTITY_Q * ENTITY_MAX_DIST + 1)
         .select("side", "id", "gram")
         .localCheckpoint(eager=True)
     )
@@ -2951,12 +2911,12 @@ def entity_match_pairs(
         .join(clean.select(F.col("id").alias("clean_id"),
                            F.col("name").alias("cname")), "clean_id")
         .withColumn("distance", F.levenshtein("dname", "cname"))
-        .where(F.col("distance") <= max_dist)
+        .where(F.col("distance") <= ENTITY_MAX_DIST)
         .select("dirty_id", "clean_id", "distance")
     )
 
 
-def oracle_entity_match(max_dist: int = ENTITY_MAX_DIST) -> str:
+def oracle_entity_match() -> str:
     """DuckDB twin of :func:`entity_match_pairs` — deliberately the
     BRUTE-FORCE quadratic join: the oracle states the semantics (all
     pairs within distance d) so the hash gate proves the engine's
@@ -2975,7 +2935,7 @@ dirty AS (
   FROM documents WHERE doc_id % 20 IN (1, 7, 13))
 SELECT d.dirty_id, c.clean_id,
        CAST(levenshtein(d.dname, c.cname) AS INTEGER) AS distance
-FROM dirty d JOIN clean c ON levenshtein(d.dname, c.cname) <= {max_dist}"""
+FROM dirty d JOIN clean c ON levenshtein(d.dname, c.cname) <= {ENTITY_MAX_DIST}"""
 
 
 def entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3014,10 +2974,10 @@ def entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_entity_resolve(max_dist: int = ENTITY_MAX_DIST) -> str:
+def oracle_entity_resolve() -> str:
     """DuckDB twin of :func:`entity_resolve` — brute-force match set,
     per-dirty argmin, left join for the unmatched audit."""
-    return f"""WITH m AS ({oracle_entity_match(max_dist)}),
+    return f"""WITH m AS ({oracle_entity_match()}),
 best AS (
   SELECT dirty_id, clean_id, distance FROM m
   QUALIFY row_number() OVER (PARTITION BY dirty_id
@@ -3028,22 +2988,21 @@ SELECT d.dirty_id, b.clean_id, b.distance,
 FROM d LEFT JOIN best b ON b.dirty_id = d.dirty_id"""
 
 
-def _entity_grams(recs: DataFrame, q: int = ENTITY_Q) -> DataFrame:
+def _entity_grams(recs: DataFrame) -> DataFrame:
     """(id, gram) — each record's DISTINCT character q-grams."""
     return recs.select(
         "id",
         F.explode(
             F.expr(
-                f"array_distinct(transform(sequence(1, length(name) - {q - 1}),"
-                f" i -> substring(name, i, {q})))"
+                f"array_distinct(transform(sequence(1, length(name) - {ENTITY_Q - 1}),"
+                f" i -> substring(name, i, {ENTITY_Q})))"
             )
         ).alias("gram"),
     )
 
 
 def _persisted_entity_index(
-    spark: SparkSession, sf_dir: str, q: int = ENTITY_Q,
-    max_dist: int = ENTITY_MAX_DIST,
+    spark: SparkSession, sf_dir: str,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build-once / probe-many LINKAGE INDEX over the clean registry:
     (names, gram-df table, prefix posting lists) persisted as parquet.
@@ -3063,13 +3022,13 @@ def _persisted_entity_index(
         clean = docs.select(
             F.col("doc_id").alias("id"), F.expr(_ENTITY_TITLE).alias("name")
         )
-        grams = _entity_grams(clean, q=q)
+        grams = _entity_grams(clean)
         df_tab = grams.groupBy("gram").agg(F.count("*").alias("df"))
         w = Window.partitionBy("id").orderBy("df", "gram")
         prefix = (
             grams.join(F.broadcast(df_tab), "gram")
             .withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= q * max_dist + 1)
+            .where(F.col("r") <= ENTITY_Q * ENTITY_MAX_DIST + 1)
             .select("id", "gram")
         )
         clean.write.parquet(f"{out}/names")
@@ -3077,7 +3036,7 @@ def _persisted_entity_index(
         prefix.write.parquet(f"{out}/prefix")
 
     out = materialized(
-        "entity_index", f"{sf_dir}/documents.parquet", (q, max_dist), build
+        "entity_index", f"{sf_dir}/documents.parquet", (ENTITY_Q, ENTITY_MAX_DIST), build
     )
     return tuple(spark.read.parquet(f"{out}/{leg}") for leg in ("names", "df", "prefix"))
 
@@ -3222,7 +3181,7 @@ FROM audit"""
 
 
 # --- Weighted MinHash (bag similarity) ----------------------------------------
-def weighted_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
+def weighted_minhash_signatures(docs: DataFrame) -> DataFrame:
     """Integer-weight MinHash by tf-replication (:func:`_tf_replicas`):
     the per-seed min over replicas ``shingle#1 .. shingle#tf`` estimates
     WEIGHTED Jaccard Σmin(tf)/Σmax(tf) — the bag-similarity near-dup
@@ -3236,11 +3195,11 @@ def weighted_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
     class. Seeded xxhash64 ⇒ engine-specific ⇒ rows-only; gated by the
     recall/bag-sensitivity suite in tests/test_dedup.py.
     """
-    return _xxhash_mins(_tf_replicas(docs, k), "r")
+    return _xxhash_mins(_tf_replicas(docs), "r")
 
 
 def weighted_minhash_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
+    spark: SparkSession, sf_dir: str, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
     """Near-dup pairs under WEIGHTED Jaccard: the set-MinHash pipeline
     over the tf-replicated signatures.
@@ -3257,7 +3216,7 @@ def weighted_minhash_pairs(
 
 
 # --- One-permutation MinHash (OPH) --------------------------------------------
-def oph_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
+def oph_minhash_signatures(docs: DataFrame) -> DataFrame:
     """One-permutation MinHash (Li et al. 2012) with rotation
     densification (Shrivastava 2017): ONE xxhash64 per shingle, binned
     into 32 buckets by ``pmod``; each bucket keeps its min; an empty
@@ -3285,7 +3244,7 @@ def oph_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
     Output: (doc_id, sig array<long> of length 32, n_filled).
     """
     n = N_HASHES
-    hashed = _shingles(docs, k).select(
+    hashed = _shingles(docs).select(
         "doc_id", F.xxhash64(F.lit(0), F.col("shingle")).alias("h")
     )
     raw = _oph_bins(hashed, F.pmod(F.col("h"), F.lit(n)), n)
@@ -3298,7 +3257,7 @@ def oph_minhash_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
 
 
 def oph_minhash_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
+    spark: SparkSession, sf_dir: str, threshold: float = NEARDUP_THRESHOLD
 ) -> DataFrame:
     """Near-dup pairs from the OPH signatures: the 32-perm pipeline with
     only the signature construction changed (1 hash per shingle).
@@ -3325,19 +3284,17 @@ def oph_minhash_pairs(
 # hash-checkable; the xxhash64 originals stay the scale path.
 
 
-def weighted_portable_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
+def weighted_portable_signatures(docs: DataFrame) -> DataFrame:
     """PORTABLE weighted (bag) MinHash via tf-replication: replica
     ``shingle#r`` (r = 1..tf) → 28-bit md5 key → the same 16 affine
     permutations as :func:`portable_minhash_signatures`. Estimates
     weighted Jaccard Σmin(tf)/Σmax(tf) with values DuckDB re-derives
     bit-identically (md5 + BIGINT affine, no engine hash): ONE md5 per
     replica, shared by all 16 permutations."""
-    return _affine_mins(_tf_replicas(docs, k), "r")
+    return _affine_mins(_tf_replicas(docs), "r")
 
 
-def minhash_weighted_portable_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def minhash_weighted_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs under WEIGHTED Jaccard via the portable replicated
     signatures — the SQL-oracled twin of :func:`weighted_minhash_pairs`,
     on the portable set family's pipeline.
@@ -3348,11 +3305,11 @@ def minhash_weighted_portable_pairs(
     return (
         _agree(cands, sig, PORTABLE_PERMS, "doc_a", "doc_b")
         .select("doc_a", "doc_b", "n_agree", _est(PORTABLE_PERMS).alias("est_wjaccard"))
-        .where(F.col("est_wjaccard") >= threshold)
+        .where(F.col("est_wjaccard") >= NEARDUP_THRESHOLD)
     )
 
 
-def _oracle_portable_weighted_sig_sql(k: int = NGRAM_K) -> str:
+def _oracle_portable_weighted_sig_sql() -> str:
     """Shared CTE text for the weighted portable family: documents →
     shingles WITH tf → replicas → 28-bit md5 keys → 16-column signature
     (``sig``) → band buckets (``bands``). Mirrors
@@ -3364,12 +3321,12 @@ def _oracle_portable_weighted_sig_sql(k: int = NGRAM_K) -> str:
     )
     return f"""pos AS (
   SELECT doc_id, toks,
-         unnest(generate_series(1, greatest(len(toks) - {k - 1}, 1))) AS i
+         unnest(generate_series(1, greatest(len(toks) - {NGRAM_K - 1}, 1))) AS i
   FROM (SELECT doc_id, {toks} AS toks FROM documents) d
 ),
 shtf AS (
   SELECT doc_id, s, count(*) AS tf
-  FROM (SELECT doc_id, array_to_string(toks[i : i + {k - 1}], ' ') AS s FROM pos)
+  FROM (SELECT doc_id, array_to_string(toks[i : i + {NGRAM_K - 1}], ' ') AS s FROM pos)
   GROUP BY 1, 2
 ),
 reps AS (
@@ -3393,7 +3350,7 @@ bands AS (
 )"""
 
 
-def oracle_minhash_weighted_portable_pairs(threshold: float = 0.5) -> str:
+def oracle_minhash_weighted_portable_pairs() -> str:
     """DuckDB twin of :func:`minhash_weighted_portable_pairs`."""
     agree = " + ".join(
         f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END"
@@ -3411,10 +3368,10 @@ SELECT c.doc_a, c.doc_b,
 FROM cand c
 JOIN sig sa ON sa.doc_id = c.doc_a
 JOIN sig sb ON sb.doc_id = c.doc_b
-WHERE CAST({agree} AS DOUBLE) / {float(PORTABLE_PERMS)} >= {threshold}"""
+WHERE CAST({agree} AS DOUBLE) / {float(PORTABLE_PERMS)} >= {NEARDUP_THRESHOLD}"""
 
 
-def oph_portable_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
+def oph_portable_signatures(docs: DataFrame) -> DataFrame:
     """PORTABLE one-permutation MinHash with rotation densification:
     ONE affine permutation (the family's coefficient 0) over the 28-bit
     md5 shingle keys, binned into ``PORTABLE_PERMS`` buckets by
@@ -3431,13 +3388,11 @@ def oph_portable_signatures(docs: DataFrame, k: int = NGRAM_K) -> DataFrame:
     a0, b0 = _PORT_COEF[0]
     n = PORTABLE_PERMS
     h = (F.lit(a0) * _md5_key("shingle") + F.lit(b0)) % F.lit(PORTABLE_P)
-    raw = _oph_bins(_shingles(docs, k).select("doc_id", h.alias("h")), F.col("h") % n, n)
+    raw = _oph_bins(_shingles(docs).select("doc_id", h.alias("h")), F.col("h") % n, n)
     return raw.select("doc_id", *[c.alias(f"h{i}") for i, c in enumerate(_densify(n))])
 
 
-def minhash_oph_portable_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5
-) -> DataFrame:
+def minhash_oph_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs from the portable OPH signatures — the SQL-oracled
     twin of :func:`oph_minhash_pairs`, on the portable set family's
     pipeline (one permutation + densification instead of 16
@@ -3449,11 +3404,11 @@ def minhash_oph_portable_pairs(
     return (
         _agree(cands, sig, PORTABLE_PERMS, "doc_a", "doc_b")
         .select("doc_a", "doc_b", "n_agree", _est(PORTABLE_PERMS).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
+        .where(F.col("est_jaccard") >= NEARDUP_THRESHOLD)
     )
 
 
-def oracle_minhash_oph_portable_pairs(threshold: float = 0.5) -> str:
+def oracle_minhash_oph_portable_pairs() -> str:
     """DuckDB twin of :func:`minhash_oph_portable_pairs` — re-derives the
     one-permutation bins and the clockwise densification as an unrolled
     coalesce, then the same band join."""
@@ -3513,4 +3468,4 @@ SELECT c.doc_a, c.doc_b,
 FROM cand c
 JOIN sig sa ON sa.doc_id = c.doc_a
 JOIN sig sb ON sb.doc_id = c.doc_b
-WHERE CAST({agree} AS DOUBLE) / {float(n)} >= {threshold}"""
+WHERE CAST({agree} AS DOUBLE) / {float(n)} >= {NEARDUP_THRESHOLD}"""

@@ -41,6 +41,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: Heavy-hitter share: a user is heavy above this fraction of all events.
+HH_PHI = 0.0075
+
 #: DataSketches lgConfigK giving Redis HLL's ≈0.81% error class
 #: (reference README.md:23-26) with sparse-adaptive partials (see module
 #: docstring perf note).
@@ -53,20 +56,10 @@ def approx_uniques(col: str) -> Column:
     return F.hll_sketch_estimate(F.expr(f"hll_sketch_agg({col}, {HLL_LGK})"))
 
 
-def minute(col: str = "ts") -> Column:
+def minute() -> Column:
     """Tumbling 1-minute event-time bucket (S4 ``timeBasedKeyBuilder``,
     MetricsCalculationPipeline.java:237-243)."""
-    return F.date_trunc("minute", F.col(col)).alias("minute")
-
-
-def minute_key(col: str = "ts", prefix: str = "") -> Column:
-    """The reference's literal key string ``'<p>_'yyyy_MM_dd'T'HH_mm``
-    (S1/S2/S4 key builders, MetricsCalculationPipeline.java:198-222,237-243).
-
-    Kept for wire-compatibility with Redis-keyed consumers; the idiomatic
-    grain column is :func:`minute`.
-    """
-    return F.concat(F.lit(prefix), F.date_format(F.col(col), "yyyy_MM_dd'T'HH_mm")).alias("minute_key")
+    return F.date_trunc("minute", F.col("ts")).alias("minute")
 
 
 # --- W1: visits per minute (INCRBY ≡ count) ---------------------------------
@@ -160,7 +153,7 @@ def uniques_per_minute(events: DataFrame, exact: bool = True) -> DataFrame:
 
 
 # --- Mergeable sketches (streaming store format) -----------------------------
-def hll_sketches_per_minute(events: DataFrame, col: str = "user_id") -> DataFrame:
+def hll_sketches_per_minute(events: DataFrame) -> DataFrame:
     """Per-minute DataSketches HLL sketches — the engine's analogue of the
     reference's Redis HLL keys: mergeable across partitions/batches with
     ``hll_union_agg`` and readable with ``hll_sketch_estimate``.
@@ -168,7 +161,7 @@ def hll_sketches_per_minute(events: DataFrame, col: str = "user_id") -> DataFram
     This is the bounded-state design for all-time distincts in streaming
     (SURVEY §4 delta 2): persist per-batch sketches, merge at read time.
     """
-    return events.groupBy(minute()).agg(F.hll_sketch_agg(col).alias("sketch"))
+    return events.groupBy(minute()).agg(F.hll_sketch_agg("user_id").alias("sketch"))
 
 
 def all_grains(events: DataFrame) -> dict[str, DataFrame]:
@@ -193,9 +186,9 @@ def all_grains(events: DataFrame) -> dict[str, DataFrame]:
 
 
 # --- Heavy hitters (frequency sketch — the CMS leg of the sketch family) -----
-def heavy_hitter_users(events: DataFrame, phi: float = 0.0075) -> DataFrame:
+def heavy_hitter_users(events: DataFrame) -> DataFrame:
     """Exact support-threshold heavy hitters: users contributing at least
-    ``phi`` of all events — the formal HH(φ) definition (count ≥ φ·N),
+    ``HH_PHI`` of all events — the formal HH(φ) definition (count ≥ φ·N),
     the abuse/hot-key detection query every event pipeline runs.
 
     Output: (user_id, n_events, share). Plan: one count shuffle keyed by
@@ -206,7 +199,7 @@ def heavy_hitter_users(events: DataFrame, phi: float = 0.0075) -> DataFrame:
     total = events.agg(F.count("*").alias("_total"))
     return (
         counts.crossJoin(F.broadcast(total))
-        .where(F.col("n_events") >= F.col("_total") * phi)
+        .where(F.col("n_events") >= F.col("_total") * HH_PHI)
         .select(
             "user_id",
             "n_events",
@@ -245,7 +238,6 @@ def _cms_pairs(keyed: DataFrame, key: str, depth: int, width: int) -> DataFrame:
 
 def cms_sketch(
     events: DataFrame,
-    key: str = "user_id",
     depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
@@ -262,17 +254,14 @@ def cms_sketch(
     output ≤ depth·width rows however large the input.
     """
     return (
-        _cms_pairs(events.select(key), key, depth, width)
+        _cms_pairs(events.select("user_id"), "user_id", depth, width)
         .groupBy("row_idx", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
 
 
 def heavy_hitter_users_cms(
-    events: DataFrame,
-    phi: float = 0.0075,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
+    events: DataFrame, phi: float = HH_PHI, width: int = CMS_WIDTH
 ) -> DataFrame:
     """Heavy hitters answered FROM the count-min sketch: probe each
     candidate key's depth cells, take the row-minimum as the estimate,
@@ -291,15 +280,29 @@ def heavy_hitter_users_cms(
     tests, with a width-16 variant forcing collisions to prove the probe
     takes row minima rather than sums.
     """
-    sketch = cms_sketch(events, "user_id", depth, width)
-    candidates = events.select("user_id").distinct()
-    probes = _cms_pairs(candidates, "user_id", depth, width)
+    return _cms_heavy_hitters(
+        events.select("user_id").distinct(),
+        cms_sketch(events, width=width),
+        events.agg(F.count("*").alias("_total")),
+        width,
+        phi,
+    )
+
+
+def _cms_heavy_hitters(
+    candidates: DataFrame, cells: DataFrame, total: DataFrame, width: int, phi: float
+) -> DataFrame:
+    """HH(φ) from count-min ``cells`` (row_idx, bucket, cnt): probe each
+    candidate ``user_id``'s depth cells, take the row minimum as its
+    ``est_count``, keep estimates ≥ φ·N, N being the one-row ``_total``
+    frame. The batch sketch and the streaming store's merged cells share
+    this probe."""
+    probes = _cms_pairs(candidates, "user_id", CMS_DEPTH, width)
     est = (
-        probes.join(sketch, ["row_idx", "bucket"])
+        probes.join(cells, ["row_idx", "bucket"])
         .groupBy("user_id")
         .agg(F.min("cnt").alias("est_count"))
     )
-    total = events.agg(F.count("*").alias("_total"))
     return (
         est.crossJoin(F.broadcast(total))
         .where(F.col("est_count") >= F.col("_total") * phi)

@@ -45,6 +45,14 @@ from pyspark.sql import functions as F
 
 from ..tables import load, persisted, spread
 
+#: Synthesised WAV sample rate (Hz) and samples per feature frame.
+AUDIO_SAMPLE_RATE = 8000
+AUDIO_FRAME_LEN = 160
+#: Bins per channel of the image histogram.
+HISTOGRAM_BINS = 8
+#: Max differing aHash bits of a near-duplicate image pair.
+AHASH_MAX_HAMMING = 10
+
 # The decode/resize closures reference module-level helpers (_parse_pnm /
 # _encode_pnm). Python workers don't inherit a driver-side sys.path patch,
 # so if the engine package was imported off-path (e.g. the driver harness
@@ -180,7 +188,7 @@ def with_gray_blob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def with_audio_blob(spark: SparkSession, sf_dir: str, sample_rate: int = 8000) -> DataFrame:
+def with_audio_blob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attach a genuine RIFF/WAV (PCM s16le mono) audio blob to each document.
 
     The full 44-byte canonical WAV header (RIFF chunk, fmt chunk with
@@ -201,7 +209,7 @@ def with_audio_blob(spark: SparkSession, sf_dir: str, sample_rate: int = 8000) -
         1,
         data_size * 2,
     )
-    byte_rate = sample_rate * 2  # mono s16le
+    byte_rate = AUDIO_SAMPLE_RATE * 2  # mono s16le
     header_hex = F.concat(
         F.lit("52494646"),                       # "RIFF"
         _le_hex(data_size + 36, 4),              # chunk size
@@ -210,7 +218,7 @@ def with_audio_blob(spark: SparkSession, sf_dir: str, sample_rate: int = 8000) -
         F.lit("10000000"),                       # fmt chunk size 16 (LE)
         F.lit("0100"),                           # audio format 1 = PCM (LE)
         F.lit("0100"),                           # channels 1 (LE)
-        _le_hex(F.lit(sample_rate), 4),          # sample rate
+        _le_hex(F.lit(AUDIO_SAMPLE_RATE), 4),          # sample rate
         _le_hex(F.lit(byte_rate), 4),            # byte rate
         F.lit("0200"),                           # block align 2 (LE)
         F.lit("1000"),                           # bits per sample 16 (LE)
@@ -225,7 +233,7 @@ def with_audio_blob(spark: SparkSession, sf_dir: str, sample_rate: int = 8000) -
         F.struct(
             F.lit("audio/wav").alias("mime"),
             F.octet_length(content).alias("n_bytes"),
-            F.lit(sample_rate).alias("sample_rate"),
+            F.lit(AUDIO_SAMPLE_RATE).alias("sample_rate"),
             n_samples.alias("n_samples"),
         ).alias("meta"),
     )
@@ -314,9 +322,9 @@ AUDIO_FRAME_SCHEMA = (
 )
 
 
-def audio_frame_features(blobs: DataFrame, frame_len: int = 160) -> DataFrame:
+def audio_frame_features(blobs: DataFrame) -> DataFrame:
     """Framewise audio features over decoded PCM: per non-overlapping
-    ``frame_len``-sample window (20 ms at 8 kHz), the integer power sums
+    ``AUDIO_FRAME_LEN``-sample window (20 ms at 8 kHz), the integer power sums
     (Σ|x|, Σx², peak) and the zero-crossing count — the classic
     VAD/speech-music front-end, and the per-window shape every real
     feature extractor (MFCC/fbank) shares. Integer arithmetic end to
@@ -345,8 +353,8 @@ def audio_frame_features(blobs: DataFrame, frame_len: int = 160) -> DataFrame:
             for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
                 _, samples = _parse_wav(bytes(blob))
                 x = samples.astype(np.int64)
-                for f in range(0, (len(x) + frame_len - 1) // frame_len):
-                    seg = x[f * frame_len : (f + 1) * frame_len]
+                for f in range(0, (len(x) + AUDIO_FRAME_LEN - 1) // AUDIO_FRAME_LEN):
+                    seg = x[f * AUDIO_FRAME_LEN : (f + 1) * AUDIO_FRAME_LEN]
                     neg = seg < 0
                     doc_ids.append(int(doc_id))
                     frames.append(f)
@@ -370,7 +378,7 @@ def audio_frame_features(blobs: DataFrame, frame_len: int = 160) -> DataFrame:
     return blobs.mapInPandas(_frames, schema=AUDIO_FRAME_SCHEMA)
 
 
-def oracle_audio_frame_features(frame_len: int = 160) -> str:
+def oracle_audio_frame_features() -> str:
     """DuckDB twin of :func:`audio_frame_features` over the WAV blob
     synthesis — the decode-audio oracle's sample stream, grouped by
     frame, with crossings counted via lag() restricted to same-frame
@@ -396,9 +404,9 @@ def oracle_audio_frame_features(frame_len: int = 160) -> str:
   FROM smp
 ), fr AS (
   SELECT doc_id, i, val,
-         CAST((i - 1) // {frame_len} AS INTEGER) AS frame,
+         CAST((i - 1) // {AUDIO_FRAME_LEN} AS INTEGER) AS frame,
          lag(val) OVER (PARTITION BY doc_id ORDER BY i) AS pv,
-         CAST((i - 2) // {frame_len} AS INTEGER) AS pframe
+         CAST((i - 2) // {AUDIO_FRAME_LEN} AS INTEGER) AS pframe
   FROM v
 )
 SELECT doc_id, frame,
@@ -547,7 +555,7 @@ SCENE_CUT_SCHEMA = "doc_id bigint, frame_index int, sad_y bigint, is_cut boolean
 SCENE_CUT_SAD = 11_000
 
 
-def video_scene_cuts(blobs: DataFrame, threshold: int = SCENE_CUT_SAD) -> DataFrame:
+def video_scene_cuts(blobs: DataFrame) -> DataFrame:
     """Scene-cut detection over the video column: per consecutive frame
     pair, the Y-plane sum of absolute differences (the classic shot-
     boundary signal every keyframe extractor thresholds) and the cut
@@ -586,13 +594,13 @@ def video_scene_cuts(blobs: DataFrame, threshold: int = SCENE_CUT_SAD) -> DataFr
                     "sad_y": pd.Series(sads, dtype="int64"),
                 }
             )
-            out["is_cut"] = out["sad_y"] > threshold
+            out["is_cut"] = out["sad_y"] > SCENE_CUT_SAD
             yield out
 
     return blobs.mapInPandas(_cuts, schema=SCENE_CUT_SCHEMA)
 
 
-def oracle_video_scene_cuts(threshold: int = SCENE_CUT_SAD) -> str:
+def oracle_video_scene_cuts() -> str:
     """DuckDB twin of :func:`video_scene_cuts` — Y-plane bytes re-derived
     from the SHA-256 payload stream (global byte index ``f*384 + j`` for
     frame f, Y-pixel j), consecutive frames joined on pixel index."""
@@ -617,7 +625,7 @@ def oracle_video_scene_cuts(threshold: int = SCENE_CUT_SAD) -> str:
 )
 SELECT cur.doc_id, cur.f AS frame_index,
        CAST(sum(abs(cur.byte - prv.byte)) AS BIGINT) AS sad_y,
-       CAST(sum(abs(cur.byte - prv.byte)) AS BIGINT) > {threshold} AS is_cut
+       CAST(sum(abs(cur.byte - prv.byte)) AS BIGINT) > {SCENE_CUT_SAD} AS is_cut
 FROM yb cur
 JOIN yb prv ON prv.doc_id = cur.doc_id AND prv.j = cur.j AND prv.f = cur.f - 1
 GROUP BY 1, 2"""
@@ -943,11 +951,11 @@ def decode_features(blobs: DataFrame, fake: bool = False) -> DataFrame:
 HISTOGRAM_SCHEMA = "doc_id bigint, channel int, bin int, n_pixels bigint"
 
 
-def image_histogram(blobs: DataFrame, n_bins: int = 8) -> DataFrame:
+def image_histogram(blobs: DataFrame) -> DataFrame:
     """Per-channel intensity histogram of decoded Netpbm rasters — the
     classic image-level feature for near-dup blocking, exposure/quality
     gates, and drift monitoring over an image corpus. ``bin = byte DIV
-    (256/n_bins)`` on the raw uint8 values: integer arithmetic end to
+    (256/HISTOGRAM_BINS)`` on the raw uint8 values: integer arithmetic end to
     end, so counts are bit-deterministic and the operator hash-gates
     against a SQL oracle that re-derives the same pixel stream.
 
@@ -959,7 +967,7 @@ def image_histogram(blobs: DataFrame, n_bins: int = 8) -> DataFrame:
     nothing — binning happens inside the decode pass via ``np.bincount``,
     so the histogram adds no plan nodes over the decode itself.
     """
-    width_per_bin = 256 // n_bins
+    width_per_bin = 256 // HISTOGRAM_BINS
 
     def _hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -977,8 +985,8 @@ def image_histogram(blobs: DataFrame, n_bins: int = 8) -> DataFrame:
                 _, _, img = _parse_pnm(blob)
                 for ch in range(img.shape[2]):
                     binned = img[:, :, ch].astype(np.int32) // width_per_bin
-                    counts = np.bincount(binned.ravel(), minlength=n_bins)
-                    for b in range(n_bins):
+                    counts = np.bincount(binned.ravel(), minlength=HISTOGRAM_BINS)
+                    for b in range(HISTOGRAM_BINS):
                         if counts[b]:
                             doc_ids.append(int(doc_id))
                             channels.append(ch)
@@ -996,11 +1004,11 @@ def image_histogram(blobs: DataFrame, n_bins: int = 8) -> DataFrame:
     return blobs.mapInPandas(_hist, schema=HISTOGRAM_SCHEMA)
 
 
-def oracle_image_histogram(n_bins: int = 8) -> str:
+def oracle_image_histogram() -> str:
     """DuckDB twin of :func:`image_histogram` over the P6 blob synthesis —
     the same hex-expanded SHA-256 pixel stream as the decode-features
     oracle, grouped by integer bin."""
-    wpb = 256 // n_bins
+    wpb = 256 // HISTOGRAM_BINS
     return rf"""WITH img AS (
   SELECT doc_id,
          CAST(doc_id % 24 + 8 AS INTEGER) AS w,
@@ -1285,14 +1293,12 @@ def _ahash_bands(ah: DataFrame) -> DataFrame:
     )
 
 
-def image_ahash_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 10
-) -> DataFrame:
+def image_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup pairs by banded Hamming join over the 64-bit aHash:
     the hash splits into four 16-bit bands; documents sharing ANY band
     become candidates (equi-join — never an all-pairs scan) and survive
     iff exact Hamming distance (bit_count of the xor, per 32-bit half)
-    <= ``max_hamming``. Identical images collide on every band at
+    <= ``AHASH_MAX_HAMMING``. Identical images collide on every band at
     distance 0; the banding guarantees recall for any pair with >= 1
     clean band (<= 3 corrupted bands) and trades the far tail for
     sub-quadratic cost — the same LSH contract as the SimHash text leg.
@@ -1332,7 +1338,7 @@ def image_ahash_pairs(
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
         .distinct()
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= AHASH_MAX_HAMMING)
     )
 
 
@@ -1354,9 +1360,7 @@ def _persisted_ahash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def image_ahash_probe(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 10
-) -> DataFrame:
+def image_ahash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental image near-dup: probe an INCOMING image batch
     (doc_id % 10 == 0) against the persisted banded aHash index of the
     existing corpus (:func:`_persisted_ahash_index`) — the probe half
@@ -1403,7 +1407,7 @@ def image_ahash_probe(
         pb.join(idx, ["band_idx", "band_val"])
         .select("doc_id", "match_id", ham.cast("int").alias("hamming"))
         .distinct()
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= AHASH_MAX_HAMMING)
     )
 
 
@@ -1480,7 +1484,7 @@ SELECT doc_id, width, height, hash_hi, hash_lo,
 FROM hashes"""
 
 
-def oracle_image_ahash_pairs(max_hamming: int = 10) -> str:
+def oracle_image_ahash_pairs() -> str:
     """DuckDB twin of :func:`image_ahash_pairs` — identical banding."""
     return f"""WITH {_oracle_ahash_cte()},
 bands AS (
@@ -1498,10 +1502,10 @@ cand AS (
   FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.band_val = b.band_val
    AND a.doc_id < b.doc_id)
-SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= {max_hamming}"""
+SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= {AHASH_MAX_HAMMING}"""
 
 
-def oracle_image_ahash_probe(max_hamming: int = 10) -> str:
+def oracle_image_ahash_probe() -> str:
     """DuckDB twin of :func:`image_ahash_probe` — the banded join with
     the incremental split predicate (incoming probes vs existing
     index)."""
@@ -1521,4 +1525,4 @@ cand AS (
   FROM bands q JOIN bands x
     ON q.band_idx = x.band_idx AND q.band_val = x.band_val
   WHERE q.doc_id % 10 = 0 AND x.doc_id % 10 <> 0)
-SELECT doc_id, match_id, hamming FROM cand WHERE hamming <= {max_hamming}"""
+SELECT doc_id, match_id, hamming FROM cand WHERE hamming <= {AHASH_MAX_HAMMING}"""

@@ -1225,31 +1225,26 @@ BASKET_MIN_SUPPORT = 2
 BASKET_MAX_ITEMS = 1000
 
 
-def basket_part_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    min_support: int = BASKET_MIN_SUPPORT,
-    max_items: int = BASKET_MAX_ITEMS,
-) -> DataFrame:
+def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: part pairs co-purchased in the same order,
     with per-pair support and lift — the first A-priori pass every
     recommender/affinity analysis starts from.
 
     Determinism: pair MEMBERSHIP is integer-decided (co-order count ≥
-    ``min_support``); lift = ``n_pair·N / (n_a·n_b)`` is exact integers
+    ``BASKET_MIN_SUPPORT``); lift = ``n_pair·N / (n_a·n_b)`` is exact integers
     into one dquant'd double expression.
 
     Scale: baskets collapse to DISTINCT (order, part) map-side; the pair
     generator is a self-equi-join keyed by the uniform order key with
     per-order fan-out bounded by basket size squared (TPC-H baskets are
-    ≤13 items; ``max_items`` guards the pathological mega-basket — a
+    ≤13 items; ``BASKET_MAX_ITEMS`` guards the pathological mega-basket — a
     basket over the cap is dropped and at 100 TB would be routed to a
     top-k-per-basket variant instead); support joins carry one row per
     surviving pair side. No cross join, no skew surface beyond basket
     size, which the guard bounds.
 
     Output: (part_a, part_b, n_orders_pair, n_orders_a, n_orders_b,
-    lift) for pairs with support ≥ min_support; part_a < part_b.
+    lift) for pairs with support ≥ BASKET_MIN_SUPPORT; part_a < part_b.
     """
     li = load(spark, sf_dir, "lineitem")
     basket = li.select(
@@ -1257,7 +1252,7 @@ def basket_part_pairs(
     ).distinct()
     sizes = basket.groupBy("ok").agg(F.count("*").alias("sz"))
     basket = basket.join(
-        sizes.where(F.col("sz") <= max_items).select("ok"), "ok", "left_semi"
+        sizes.where(F.col("sz") <= BASKET_MAX_ITEMS).select("ok"), "ok", "left_semi"
     )
     a = basket.alias("a")
     b = basket.alias("b")
@@ -1267,7 +1262,7 @@ def basket_part_pairs(
             F.col("a.pk").alias("part_a"), F.col("b.pk").alias("part_b")
         )
         .agg(F.count("*").alias("n_orders_pair"))
-        .where(F.col("n_orders_pair") >= min_support)
+        .where(F.col("n_orders_pair") >= BASKET_MIN_SUPPORT)
     )
     supp = basket.groupBy(F.col("pk")).agg(F.count("*").alias("n"))
     n_orders = basket.select("ok").distinct().agg(
@@ -1301,9 +1296,7 @@ def basket_part_pairs(
     )
 
 
-def oracle_basket_part_pairs(
-    min_support: int = BASKET_MIN_SUPPORT, max_items: int = BASKET_MAX_ITEMS
-) -> str:
+def oracle_basket_part_pairs() -> str:
     """DuckDB twin of :func:`basket_part_pairs`."""
     from ..functions.numeric import oracle_dquant
 
@@ -1315,11 +1308,11 @@ def oracle_basket_part_pairs(
   SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
 basket AS (
   SELECT * FROM basket0
-  WHERE ok IN (SELECT ok FROM basket0 GROUP BY ok HAVING count(*) <= {max_items})),
+  WHERE ok IN (SELECT ok FROM basket0 GROUP BY ok HAVING count(*) <= {BASKET_MAX_ITEMS})),
 pairs AS (
   SELECT a.pk AS part_a, b.pk AS part_b, count(*) AS n_orders_pair
   FROM basket a JOIN basket b ON b.ok = a.ok AND a.pk < b.pk
-  GROUP BY 1, 2 HAVING count(*) >= {min_support}),
+  GROUP BY 1, 2 HAVING count(*) >= {BASKET_MIN_SUPPORT}),
 supp AS (SELECT pk, count(*) AS n FROM basket GROUP BY 1),
 tot AS (SELECT CAST(count(DISTINCT ok) AS BIGINT) AS n_orders FROM basket),
 j AS (

@@ -27,19 +27,44 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dquant, oracle_dquant, oracle_dsum12
 from ..tables import load, persisted, spread
 
+from .text import BPE_DOC_MOD, BPE_MERGES
+
+#: md5-prefix cut of the ~10% hash sample.
+HASH_SAMPLE_CUT = "1a"
+#: Rows kept per stratum (language) by the per-stratum samplers.
+PER_STRATUM_K = 20
+#: Rows kept by the corpus-wide weighted sample.
+WEIGHTED_SAMPLE_K = 100
+#: Length quantiles outside which :func:`length_clip_filter` drops docs.
+LENGTH_CLIP_LO = 0.05
+LENGTH_CLIP_HI = 0.95
+#: Temperature-sampling exponent of the source mix.
+TEMPERATURE_ALPHA = 0.3
+#: Chunker: characters per chunk and the overlap stride.
+CHUNK_WIDTH = 400
+CHUNK_STRIDE = 300
+#: Token budget of one packed training sequence.
+PACK_MAX_TOKENS = 512
+#: BPE-packed sequence length in tokens.
+PACK_SEQ_LEN = 128
+#: Quality-calibration keep floor and quantile resolution.
+CALIBRATED_KEEP_FLOOR = 0.25
+QUANTILE_RESOLUTION = 4096
+#: Shard planning: tokens per shard and docs per prefix-sum bucket.
+SHARD_TARGET_TOKENS = 4096
+SHARD_BUCKET_DOCS = 256
+
 
 def _hash_bucket(key: F.Column) -> F.Column:
     """First two hex chars of md5(key) — a uniform draw over 256 buckets."""
     return F.substring(F.md5(key.cast("string")), 1, 2)
 
 
-def hash_sample_documents(
-    spark: SparkSession, sf_dir: str, threshold: str = "1a"
-) -> DataFrame:
+def hash_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """~10% deterministic sample of documents by md5(doc_id) prefix."""
     docs = load(spark, sf_dir, "documents")
     return (
-        docs.where(_hash_bucket(F.col("doc_id")) < threshold)
+        docs.where(_hash_bucket(F.col("doc_id")) < HASH_SAMPLE_CUT)
         .select("doc_id", "lang", "source", "n_chars")
     )
 
@@ -57,7 +82,7 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def topk_per_stratum(
-    spark: SparkSession, sf_dir: str, k: int = 20
+    spark: SparkSession, sf_dir: str, k: int = PER_STRATUM_K
 ) -> DataFrame:
     """Exact-k-per-stratum sample: for every language, the ``k`` documents
     with the smallest ``md5(doc_id)`` — a fixed PER-STRATUM BUDGET rather
@@ -83,22 +108,20 @@ def topk_per_stratum(
     )
 
 
-def oracle_topk_per_stratum(k: int = 20) -> str:
+def oracle_topk_per_stratum() -> str:
     return f"""SELECT lang, doc_id, CAST(rk AS INTEGER) AS rk
 FROM (
   SELECT lang, doc_id,
          row_number() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
   FROM documents)
-WHERE rk <= {k}"""
+WHERE rk <= {PER_STRATUM_K}"""
 
 
-def chunk_documents(
-    spark: SparkSession, sf_dir: str, width: int = 400
-) -> DataFrame:
-    """Split each document into fixed ``width``-char chunks (context-window
+def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split each document into fixed ``CHUNK_WIDTH``-char chunks (context-window
     packing). Row expansion is narrow — no shuffle; chunk_idx is 0-based."""
     docs = load(spark, sf_dir, "documents")
-    n_chunks = F.floor((F.col("n_chars") - 1) / F.lit(float(width))).cast("bigint")
+    n_chunks = F.floor((F.col("n_chars") - 1) / F.lit(float(CHUNK_WIDTH))).cast("bigint")
     # empty docs chunk to NOTHING — without the filter, n_chunks = -1 and
     # Spark's sequence(0, -1) generates a DESCENDING sequence, emitting
     # two phantom chunks (idx 0 and -1) the oracle never produces (r7
@@ -113,7 +136,7 @@ def chunk_documents(
         .select(
             "doc_id",
             "chunk_idx",
-            F.expr(f"substr(text, CAST(chunk_idx * {width} + 1 AS INT), {width})").alias(
+            F.expr(f"substr(text, CAST(chunk_idx * {CHUNK_WIDTH} + 1 AS INT), {CHUNK_WIDTH})").alias(
                 "chunk_text"
             ),
         )
@@ -195,7 +218,9 @@ def upsample_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pack_documents(spark: SparkSession, sf_dir: str, max_tokens: int = 512) -> DataFrame:
+def pack_documents(
+    spark: SparkSession, sf_dir: str, max_tokens: int = PACK_MAX_TOKENS
+) -> DataFrame:
     """Sequence packing for LLM pre-training: assign each document to a
     fixed-capacity pack of ~``max_tokens`` whitespace tokens, deterministic
     under any partitioning. A document lands in pack
@@ -234,7 +259,7 @@ def pack_documents(spark: SparkSession, sf_dir: str, max_tokens: int = 512) -> D
 
 
 def pack_documents_boundary(
-    spark: SparkSession, sf_dir: str, max_tokens: int = 512
+    spark: SparkSession, sf_dir: str, max_tokens: int = PACK_MAX_TOKENS
 ) -> DataFrame:
     """Boundary-respecting sequence packing: documents NEVER straddle a
     pack boundary — the packing contract for training recipes that forbid
@@ -294,7 +319,7 @@ def pack_documents_boundary(
     return base.groupBy("lang", "shard").applyInPandas(_nextfit, schema)
 
 
-def oracle_pack_boundary(max_tokens: int = 512) -> str:
+def oracle_pack_boundary() -> str:
     """DuckDB twin of :func:`pack_documents_boundary` — the next-fit walk
     unrolled as a recursive CTE advancing one within-group rank per level
     (depth = largest (lang, shard) group, ~n_docs/80 on the fixtures)."""
@@ -313,14 +338,14 @@ walk AS (
   FROM t WHERE rn = 1
   UNION ALL
   SELECT t.lang, t.shard, t.rn, t.doc_id, t.n_tokens,
-         CASE WHEN w.fill + t.n_tokens > {max_tokens}
+         CASE WHEN w.fill + t.n_tokens > {PACK_MAX_TOKENS}
               THEN w.pack_id + 1 ELSE w.pack_id END,
-         CASE WHEN w.fill + t.n_tokens > {max_tokens}
+         CASE WHEN w.fill + t.n_tokens > {PACK_MAX_TOKENS}
               THEN t.n_tokens ELSE w.fill + t.n_tokens END
   FROM walk w
   JOIN t ON t.lang = w.lang AND t.shard = w.shard AND t.rn = w.rn + 1)
 SELECT doc_id, lang, shard, n_tokens, pack_id,
-       n_tokens > {max_tokens} AS oversize
+       n_tokens > {PACK_MAX_TOKENS} AS oversize
 FROM walk"""
 
 
@@ -338,7 +363,7 @@ def _uniform_01(key: F.Column) -> F.Column:
 
 
 def weighted_sample_documents(
-    spark: SparkSession, sf_dir: str, k: int = 100
+    spark: SparkSession, sf_dir: str, k: int = WEIGHTED_SAMPLE_K
 ) -> DataFrame:
     """Weighted sampling without replacement — ``k`` documents drawn with
     probability proportional to length (``n_chars``), the "sample long/
@@ -368,7 +393,7 @@ def weighted_sample_documents(
     )
 
 
-def oracle_weighted_sample(k: int = 100) -> str:
+def oracle_weighted_sample() -> str:
     """DuckDB twin of :func:`weighted_sample_documents` (same md5 draw;
     hex → bigint via DuckDB's ``'0x…'::BIGINT`` parse)."""
     u = (
@@ -381,11 +406,11 @@ FROM (
          ln({u}) / greatest(n_chars, 1) AS es_key
   FROM documents
   ORDER BY es_key DESC, doc_id
-  LIMIT {k})"""
+  LIMIT {WEIGHTED_SAMPLE_K})"""
 
 
 def weighted_sample_per_language(
-    spark: SparkSession, sf_dir: str, k: int = 20
+    spark: SparkSession, sf_dir: str, k: int = PER_STRATUM_K
 ) -> DataFrame:
     """Per-stratum weighted sampling: for every language, the ``k``
     documents drawn weight-proportionally (Efraimidis–Spirakis keys, same
@@ -408,7 +433,7 @@ def weighted_sample_per_language(
     )
 
 
-def oracle_weighted_sample_per_language(k: int = 20) -> str:
+def oracle_weighted_sample_per_language() -> str:
     """DuckDB twin of :func:`weighted_sample_per_language`."""
     u = (
         f"(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, {_U_HEX})) AS BIGINT)"
@@ -421,12 +446,10 @@ FROM (
            PARTITION BY lang
            ORDER BY ln({u}) / greatest(n_chars, 1) DESC, doc_id) AS rk
   FROM documents)
-WHERE rk <= {k}"""
+WHERE rk <= {PER_STRATUM_K}"""
 
 
-def length_clip_filter(
-    spark: SparkSession, sf_dir: str, lo: float = 0.05, hi: float = 0.95
-) -> DataFrame:
+def length_clip_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-derived quality gate: keep documents whose length sits
     within the per-language [p5, p95] band — the Gopher-style length
     outlier filter with thresholds DERIVED from the corpus rather than
@@ -443,10 +466,10 @@ def length_clip_filter(
     # picked values are actual n_chars data values, so the bigint cast is
     # lossless and keeps both engines' output types identical.
     bounds = docs.groupBy("lang").agg(
-        F.expr(f"percentile_disc({lo}) WITHIN GROUP (ORDER BY n_chars)")
+        F.expr(f"percentile_disc({LENGTH_CLIP_LO}) WITHIN GROUP (ORDER BY n_chars)")
         .cast("bigint")
         .alias("p_lo"),
-        F.expr(f"percentile_disc({hi}) WITHIN GROUP (ORDER BY n_chars)")
+        F.expr(f"percentile_disc({LENGTH_CLIP_HI}) WITHIN GROUP (ORDER BY n_chars)")
         .cast("bigint")
         .alias("p_hi"),
     )
@@ -457,12 +480,12 @@ def length_clip_filter(
     )
 
 
-def oracle_length_clip_filter(lo: float = 0.05, hi: float = 0.95) -> str:
+def oracle_length_clip_filter() -> str:
     """DuckDB twin of :func:`length_clip_filter`."""
     return f"""WITH bounds AS (
   SELECT lang,
-         CAST(quantile_disc(n_chars, {lo}) AS BIGINT) AS p_lo,
-         CAST(quantile_disc(n_chars, {hi}) AS BIGINT) AS p_hi
+         CAST(quantile_disc(n_chars, {LENGTH_CLIP_LO}) AS BIGINT) AS p_lo,
+         CAST(quantile_disc(n_chars, {LENGTH_CLIP_HI}) AS BIGINT) AS p_hi
   FROM documents GROUP BY 1)
 SELECT doc_id, d.lang, n_chars, p_lo, p_hi
 FROM documents d JOIN bounds b ON d.lang = b.lang
@@ -470,7 +493,7 @@ WHERE n_chars BETWEEN p_lo AND p_hi"""
 
 
 def temperature_mix(
-    spark: SparkSession, sf_dir: str, alpha: float = 0.3
+    spark: SparkSession, sf_dir: str, alpha: float = TEMPERATURE_ALPHA
 ) -> DataFrame:
     """Temperature-smoothed language mixture (the mT5/XLM-R sampling rule):
     natural share ``p_l`` = language's fraction of corpus characters;
@@ -512,7 +535,7 @@ def temperature_mix(
     )
 
 
-def oracle_temperature_mix(alpha: float = 0.3) -> str:
+def oracle_temperature_mix() -> str:
     """DuckDB twin of :func:`temperature_mix`."""
     return f"""WITH g AS (
   SELECT lang, count(*) AS n_docs,
@@ -522,7 +545,7 @@ def oracle_temperature_mix(alpha: float = 0.3) -> str:
   SELECT *, total_chars / (SELECT CAST(sum(total_chars) AS DOUBLE) FROM g) AS natural_share
   FROM g
 ), q AS (
-  SELECT *, {oracle_dquant(f"pow(natural_share, {alpha})")} AS pq FROM p
+  SELECT *, {oracle_dquant(f"pow(natural_share, {TEMPERATURE_ALPHA})")} AS pq FROM p
 ), z AS (SELECT {oracle_dsum12("pq")} AS z FROM q)
 SELECT lang, n_docs, total_chars, natural_share,
        pq / z AS smoothed_share,
@@ -559,7 +582,7 @@ FROM documents"""
 
 
 def chunk_documents_overlap(
-    spark: SparkSession, sf_dir: str, width: int = 400, stride: int = 300
+    spark: SparkSession, sf_dir: str, width: int = CHUNK_WIDTH, stride: int = CHUNK_STRIDE
 ) -> DataFrame:
     """Sliding-window chunking with overlap (the retrieval/RAG chunker):
     chunk ``i`` covers characters ``[i*stride, i*stride + width)``, so
@@ -593,15 +616,15 @@ def chunk_documents_overlap(
     )
 
 
-def oracle_chunk_documents_overlap(width: int = 400, stride: int = 300) -> str:
+def oracle_chunk_documents_overlap() -> str:
     return f"""WITH ex AS (
   SELECT doc_id, text,
          unnest(generate_series(0,
-           CAST(ceil(greatest(n_chars - {width}, 0) / {float(stride)}) AS BIGINT))) AS chunk_idx
+           CAST(ceil(greatest(n_chars - {CHUNK_WIDTH}, 0) / {float(CHUNK_STRIDE)}) AS BIGINT))) AS chunk_idx
   FROM documents)
 SELECT doc_id, chunk_idx,
-       substr(text, CAST(chunk_idx*{stride}+1 AS INT), {width}) AS chunk_text,
-       length(substr(text, CAST(chunk_idx*{stride}+1 AS INT), {width})) AS chunk_len
+       substr(text, CAST(chunk_idx*{CHUNK_STRIDE}+1 AS INT), {CHUNK_WIDTH}) AS chunk_text,
+       length(substr(text, CAST(chunk_idx*{CHUNK_STRIDE}+1 AS INT), {CHUNK_WIDTH})) AS chunk_len
 FROM ex"""
 
 
@@ -789,7 +812,7 @@ def apply_corpus_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_pack_cumsum(max_tokens: int = 512) -> str:
+def oracle_pack_cumsum() -> str:
     """DuckDB twin of :func:`pack_documents` (moved verbatim from the
     registry so :func:`oracle_pack_efficiency` can compose it)."""
     from .text import TOKEN_SQL
@@ -801,14 +824,12 @@ def oracle_pack_cumsum(max_tokens: int = 512) -> str:
 SELECT doc_id, lang, shard, n_tokens,
        CAST(floor(coalesce(sum(n_tokens) OVER (
          PARTITION BY lang, shard ORDER BY doc_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / {max_tokens}.0) AS BIGINT)
+         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / {PACK_MAX_TOKENS}.0) AS BIGINT)
          AS pack_id
 FROM t"""
 
 
-def pack_efficiency_report(
-    spark: SparkSession, sf_dir: str, max_tokens: int = 512
-) -> DataFrame:
+def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Side-by-side packing-efficiency audit of the two packers: the
     cumsum approximation (:func:`pack_documents`, capacity in
     expectation, docs may straddle) vs the boundary-respecting next-fit
@@ -824,8 +845,8 @@ def pack_efficiency_report(
     per-language count — the report adds only |langs|-row aggregations
     and one broadcast-sized join.
     """
-    a = pack_documents(spark, sf_dir, max_tokens)
-    b = pack_documents_boundary(spark, sf_dir, max_tokens)
+    a = pack_documents(spark, sf_dir)
+    b = pack_documents_boundary(spark, sf_dir)
     ga = a.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -844,14 +865,14 @@ def pack_efficiency_report(
         "n_oversize",
         (
             F.col("total_tokens").cast("double")
-            / (F.col("n_packs_boundary") * F.lit(max_tokens)).cast("double")
+            / (F.col("n_packs_boundary") * F.lit(PACK_MAX_TOKENS)).cast("double")
         ).alias("fill_boundary"),
     )
 
 
-def oracle_pack_efficiency(max_tokens: int = 512) -> str:
-    return f"""WITH a AS ({oracle_pack_cumsum(max_tokens)}),
-b AS ({oracle_pack_boundary(max_tokens)}),
+def oracle_pack_efficiency() -> str:
+    return f"""WITH a AS ({oracle_pack_cumsum()}),
+b AS ({oracle_pack_boundary()}),
 ga AS (
   SELECT lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
          count(DISTINCT (shard, pack_id)) AS n_packs_cumsum
@@ -862,7 +883,7 @@ gb AS (
   FROM b GROUP BY 1)
 SELECT lang, n_docs, total_tokens, n_packs_cumsum, n_packs_boundary, n_oversize,
        CAST(total_tokens AS DOUBLE)
-         / CAST(n_packs_boundary * {max_tokens} AS DOUBLE) AS fill_boundary
+         / CAST(n_packs_boundary * {PACK_MAX_TOKENS} AS DOUBLE) AS fill_boundary
 FROM ga JOIN gb USING (lang)"""
 
 
@@ -950,10 +971,7 @@ SELECT doc_id, CAST(version AS INTEGER) AS version,
 FROM latest"""
 
 
-def quality_calibrated_by_source(
-    spark: SparkSession, sf_dir: str, keep_floor: float = 0.25,
-    q_resolution: int = 4096,
-) -> DataFrame:
+def quality_calibrated_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality calibration: replace each document's raw
     heuristic quality score with its PERCENTILE RANK within its source,
     then gate on the calibrated rank. A single global threshold over raw
@@ -973,12 +991,12 @@ def quality_calibrated_by_source(
     ~|corpus|/|sources| partition on ONE reducer — the same canonical
     scale killer :func:`shard_assignment`'s docstring calls out. The
     rank decomposes the same way a prefix sum does, because
-    ``floor(quality * q_resolution)`` is monotone in ``quality``:
+    ``floor(quality * QUANTILE_RESOLUTION)`` is monotone in ``quality``:
 
     1. quantize quality into ordered buckets ``qb`` within source;
     2. level 1: per-(source, qb) counts — one small shuffle;
     3. level 2: per-source running sum over the O(|sources| ×
-       q_resolution) bucket frame (trivial for one reducer) gives each
+       QUANTILE_RESOLUTION) bucket frame (trivial for one reducer) gives each
        bucket's starting rank offset; per-source totals give n_src;
     4. offsets and totals broadcast back; a window PARTITIONED BY
        (source, qb) finishes the local row_number — every heavy sort
@@ -987,7 +1005,7 @@ def quality_calibrated_by_source(
     A pathological score distribution (mass concentrated on one exact
     value) re-creates a fat (source, qb) partition; ties must sort
     together for determinism, so the mitigation is resolution (wider
-    ``q_resolution``), not salting.
+    ``QUANTILE_RESOLUTION``), not salting.
 
     Output: (doc_id, source, quality, pct_rank, keep).
     """
@@ -997,7 +1015,7 @@ def quality_calibrated_by_source(
     q = quality_projection(docs).select("doc_id", "quality")
     scored = docs.select("doc_id", "source").join(q, "doc_id")
     base = scored.withColumn(
-        "qb", F.floor(F.col("quality") * q_resolution).cast("bigint")
+        "qb", F.floor(F.col("quality") * QUANTILE_RESOLUTION).cast("bigint")
     )
     # base fans out to the bucket-count aggregation AND the final join,
     # so the (row-local) quality projection runs twice — measured
@@ -1029,12 +1047,12 @@ def quality_calibrated_by_source(
             "source",
             "quality",
             pct.alias("pct_rank"),
-            (pct >= keep_floor).alias("keep"),
+            (pct >= CALIBRATED_KEEP_FLOOR).alias("keep"),
         )
     )
 
 
-def oracle_quality_calibrated(quality_sql: str, keep_floor: float = 0.25) -> str:
+def oracle_quality_calibrated(quality_sql: str) -> str:
     """DuckDB twin of :func:`quality_calibrated_by_source`; ``quality_sql``
     is the shared quality-score oracle (``text.oracle_quality_score``)."""
     return f"""WITH q AS ({quality_sql}),
@@ -1050,7 +1068,7 @@ pct AS (
               THEN CAST(rn - 1 AS DOUBLE) / CAST(n_src - 1 AS DOUBLE)
               ELSE CAST(0 AS DOUBLE) END AS pct_rank
   FROM scored)
-SELECT doc_id, source, quality, pct_rank, pct_rank >= {keep_floor} AS keep
+SELECT doc_id, source, quality, pct_rank, pct_rank >= {CALIBRATED_KEEP_FLOOR} AS keep
 FROM pct"""
 
 
@@ -1111,15 +1129,12 @@ FROM keyed"""
 
 
 def shard_assignment(
-    spark: SparkSession,
-    sf_dir: str,
-    target_tokens: int = 4096,
-    bucket_docs: int = 256,
+    spark: SparkSession, sf_dir: str, bucket_docs: int = SHARD_BUCKET_DOCS
 ) -> DataFrame:
     """Exact order-preserving shard assignment via a distributed parallel
     prefix-sum: every document gets its EXACT global running token count
     (over doc_id order) and the contiguous shard
-    ``tokens_before div target_tokens`` — the layout step that writes a
+    ``tokens_before div SHARD_TARGET_TOKENS`` — the layout step that writes a
     100 TB corpus into fixed-token-budget training shards whose order
     matches the source order (unlike :func:`pack_documents`, whose
     per-(lang, shard) streams trade exactness for locality).
@@ -1176,12 +1191,12 @@ def shard_assignment(
             "doc_id",
             "n_tokens",
             "tokens_before",
-            F.expr(f"tokens_before div {target_tokens}").alias("shard_id"),
+            F.expr(f"tokens_before div {SHARD_TARGET_TOKENS}").alias("shard_id"),
         )
     )
 
 
-def oracle_shard_assignment(target_tokens: int = 4096) -> str:
+def oracle_shard_assignment() -> str:
     """DuckDB twin of :func:`shard_assignment` — the flat global window
     the two-level scan must reproduce exactly."""
     from .text import TOKEN_SQL
@@ -1198,13 +1213,11 @@ scanned AS (
          ), 0) AS BIGINT) AS tokens_before
   FROM base)
 SELECT doc_id, n_tokens, tokens_before,
-       CAST(tokens_before // {target_tokens} AS BIGINT) AS shard_id
+       CAST(tokens_before // {SHARD_TARGET_TOKENS} AS BIGINT) AS shard_id
 FROM scanned"""
 
 
-def _persisted_shard_state(
-    spark: SparkSession, sf_dir: str, bucket_docs: int = 256
-) -> DataFrame:
+def _persisted_shard_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layout-once / append-many state for :func:`shard_assignment_incremental`:
     the per-bucket token sums of the EXISTING corpus (doc_id below the
     arrival watermark), persisted as parquet. At 100 TB this is the
@@ -1224,23 +1237,18 @@ def _persisted_shard_state(
                 F.size(F.split(F.trim(F.col("text")), TOKEN_RE))
                 .cast("bigint")
                 .alias("n_tokens"),
-                F.expr(f"doc_id div {bucket_docs}").alias("bucket"),
+                F.expr(f"doc_id div {SHARD_BUCKET_DOCS}").alias("bucket"),
             )
             .groupBy("bucket")
             .agg(F.sum("n_tokens").alias("bucket_tokens"))
         )
 
     return persisted(
-        spark, "shard_state", f"{sf_dir}/documents.parquet", (bucket_docs,), state
+        spark, "shard_state", f"{sf_dir}/documents.parquet", (SHARD_BUCKET_DOCS,), state
     )
 
 
-def shard_assignment_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    target_tokens: int = 4096,
-    bucket_docs: int = 256,
-) -> DataFrame:
+def shard_assignment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard assignment for an ARRIVAL batch against the persisted
     layout state — :func:`shard_assignment`'s append path. The arrival
     watermark is doc_id >= max(doc_id)*9/10 (the fixture's stand-in for
@@ -1266,7 +1274,7 @@ def shard_assignment_incremental(
     """
     from .text import TOKEN_RE
 
-    state = _persisted_shard_state(spark, sf_dir, bucket_docs=bucket_docs)
+    state = _persisted_shard_state(spark, sf_dir)
     corpus_total = state.agg(
         F.coalesce(F.sum("bucket_tokens"), F.lit(0)).cast("bigint").alias("corpus_total")
     )
@@ -1282,7 +1290,7 @@ def shard_assignment_incremental(
             .alias("n_tokens"),
         )
     )
-    scanned = _two_level_tokens_before(base, bucket_docs=bucket_docs)
+    scanned = _two_level_tokens_before(base)
     return (
         scanned.crossJoin(F.broadcast(corpus_total))
         .select(
@@ -1294,12 +1302,14 @@ def shard_assignment_incremental(
             "doc_id",
             "n_tokens",
             "tokens_before",
-            F.expr(f"tokens_before div {target_tokens}").alias("shard_id"),
+            F.expr(f"tokens_before div {SHARD_TARGET_TOKENS}").alias("shard_id"),
         )
     )
 
 
-def _two_level_tokens_before(base: DataFrame, bucket_docs: int = 256) -> DataFrame:
+def _two_level_tokens_before(
+    base: DataFrame, bucket_docs: int = SHARD_BUCKET_DOCS
+) -> DataFrame:
     """The shared two-level parallel prefix-sum over a (doc_id,
     n_tokens) frame: per-bucket partial sums → tiny global window over
     the bucket frame → broadcast offsets → bucket-local window. Used by
@@ -1329,7 +1339,7 @@ def _two_level_tokens_before(base: DataFrame, bucket_docs: int = 256) -> DataFra
     )
 
 
-def oracle_shard_assignment_incremental(target_tokens: int = 4096) -> str:
+def oracle_shard_assignment_incremental() -> str:
     """DuckDB twin of :func:`shard_assignment_incremental` — because
     prefix sums compose, the appended layout equals the flat global
     window restricted to the arrival tail."""
@@ -1348,60 +1358,53 @@ scanned AS (
          ), 0) AS BIGINT) AS tokens_before
   FROM base)
 SELECT doc_id, n_tokens, tokens_before,
-       CAST(tokens_before // {target_tokens} AS BIGINT) AS shard_id
+       CAST(tokens_before // {SHARD_TARGET_TOKENS} AS BIGINT) AS shard_id
 FROM scanned CROSS JOIN thr WHERE doc_id >= thr"""
 
 
-def shard_manifest(
-    spark: SparkSession,
-    sf_dir: str,
-    target_tokens: int = 4096,
-    bucket_docs: int = 256,
-) -> DataFrame:
+def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard manifest over :func:`shard_assignment`'s layout — the
     writer-side artifact every training job reads before opening a
     shard: doc range (layout is contiguous in doc_id order), document
     and token counts, and fill rate vs the token budget. One
     shard_id-keyed aggregation over the layout frame; the manifest is
-    O(corpus_tokens / target_tokens) rows — tiny relative to the corpus
+    O(corpus_tokens / SHARD_TARGET_TOKENS) rows — tiny relative to the corpus
     at any scale.
 
     Output: (shard_id, n_docs, first_doc, last_doc, shard_tokens, fill).
     """
-    layout = shard_assignment(
-        spark, sf_dir, target_tokens=target_tokens, bucket_docs=bucket_docs
-    )
+    layout = shard_assignment(spark, sf_dir)
     return layout.groupBy("shard_id").agg(
         F.count("*").alias("n_docs"),
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
         F.sum("n_tokens").alias("shard_tokens"),
-        (F.sum("n_tokens").cast("double") / F.lit(float(target_tokens))).alias(
+        (F.sum("n_tokens").cast("double") / F.lit(float(SHARD_TARGET_TOKENS))).alias(
             "fill"
         ),
     )
 
 
-def oracle_shard_manifest(target_tokens: int = 4096) -> str:
+def oracle_shard_manifest() -> str:
     """DuckDB twin of :func:`shard_manifest` — the layout oracle nested
     as a CTE, then the same aggregation (integer sums CAST to BIGINT:
     the r3/r5 HUGEINT lesson)."""
     return f"""WITH layout AS (
-{oracle_shard_assignment(target_tokens=target_tokens)}
+{oracle_shard_assignment()}
 )
 SELECT shard_id, count(*) AS n_docs, min(doc_id) AS first_doc,
        max(doc_id) AS last_doc,
        CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-       CAST(sum(n_tokens) AS DOUBLE) / {float(target_tokens)} AS fill
+       CAST(sum(n_tokens) AS DOUBLE) / {float(SHARD_TARGET_TOKENS)} AS fill
 FROM layout GROUP BY 1"""
 
 
 def pack_bpe_sequences(
     spark: SparkSession,
     sf_dir: str,
-    n_merges: int = 3,
-    doc_mod: int = 10,
-    seq_len: int = 128,
+    n_merges: int = BPE_MERGES,
+    doc_mod: int = BPE_DOC_MOD,
+    seq_len: int = PACK_SEQ_LEN,
 ) -> DataFrame:
     """The final tensor-feed artifact: BPE-encoded token ids packed into
     fixed ``seq_len`` training sequences in exact global order — the
@@ -1448,9 +1451,7 @@ def pack_bpe_sequences(
     )
 
 
-def oracle_pack_bpe_sequences(
-    n_merges: int = 3, doc_mod: int = 10, seq_len: int = 128
-) -> str:
+def oracle_pack_bpe_sequences() -> str:
     """DuckDB twin of :func:`pack_bpe_sequences` — the encode oracle
     nested, per-doc counts, one flat window over the doc frame (the
     restricted frame the two-level scan reproduces), in-doc rank, then
@@ -1458,7 +1459,7 @@ def oracle_pack_bpe_sequences(
     from .text import oracle_bpe_encode
 
     return f"""WITH enc AS (
-{oracle_bpe_encode(n_merges=n_merges, doc_mod=doc_mod)}
+{oracle_bpe_encode()}
 ),
 pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM enc GROUP BY 1),
 offs AS (
@@ -1472,8 +1473,8 @@ pos AS (
          CAST(row_number() OVER (PARTITION BY doc_id ORDER BY wpos, spos) - 1
               AS BIGINT) AS p
   FROM enc)
-SELECT CAST((o.doc_offset + p.p) // {seq_len} AS BIGINT) AS seq_id,
-       CAST((o.doc_offset + p.p) % {seq_len} AS BIGINT) AS pos,
+SELECT CAST((o.doc_offset + p.p) // {PACK_SEQ_LEN} AS BIGINT) AS seq_id,
+       CAST((o.doc_offset + p.p) % {PACK_SEQ_LEN} AS BIGINT) AS pos,
        p.doc_id, p.token_id
 FROM pos p JOIN offs o USING (doc_id)"""
 
@@ -1545,7 +1546,7 @@ FROM classed GROUP BY 1"""
 PSI_BUCKET_WIDTH = 50
 
 
-def corpus_drift_psi(spark: SparkSession, sf_dir: str, width: int = PSI_BUCKET_WIDTH) -> DataFrame:
+def corpus_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability-index drift monitor between corpus versions
     — the MLOps gate that decides whether a refreshed crawl shifted the
     data distribution enough to warrant re-validation before training:
@@ -1567,9 +1568,9 @@ def corpus_drift_psi(spark: SparkSession, sf_dir: str, width: int = PSI_BUCKET_W
     from ..functions.numeric import dquant
 
     docs = spread(load(spark, sf_dir, "documents"))
-    v0 = docs.select(F.expr(f"CAST(length(text) DIV {width} AS BIGINT)").alias("bucket"))
+    v0 = docs.select(F.expr(f"CAST(length(text) DIV {PSI_BUCKET_WIDTH} AS BIGINT)").alias("bucket"))
     v1 = apply_corpus_updates(spark, sf_dir).select(
-        F.expr(f"CAST(n_chars_final DIV {width} AS BIGINT)").alias("bucket")
+        F.expr(f"CAST(n_chars_final DIV {PSI_BUCKET_WIDTH} AS BIGINT)").alias("bucket")
     )
     c0 = v0.groupBy("bucket").agg(F.count("*").alias("c0"))
     c1 = v1.groupBy("bucket").agg(F.count("*").alias("c1"))
@@ -1597,7 +1598,7 @@ def corpus_drift_psi(spark: SparkSession, sf_dir: str, width: int = PSI_BUCKET_W
     )
 
 
-def oracle_corpus_drift_psi(width: int = PSI_BUCKET_WIDTH) -> str:
+def oracle_corpus_drift_psi() -> str:
     """DuckDB twin of :func:`corpus_drift_psi` — latest-wins CTE reused
     from the upsert oracle, identical smoothing arithmetic, dquant'd
     ln term."""
@@ -1608,8 +1609,8 @@ def oracle_corpus_drift_psi(width: int = PSI_BUCKET_WIDTH) -> str:
     p1 = "CAST(c1 + 1 AS DOUBLE) / CAST(n1 + B AS DOUBLE)"
     term = oracle_dquant(f"(({p1}) - ({p0})) * ln(({p1}) / ({p0}))")
     return f"""WITH l AS ({latest}),
-v0 AS (SELECT CAST(length(text) // {width} AS BIGINT) AS bucket FROM documents),
-v1 AS (SELECT CAST(n_chars_final // {width} AS BIGINT) AS bucket FROM l),
+v0 AS (SELECT CAST(length(text) // {PSI_BUCKET_WIDTH} AS BIGINT) AS bucket FROM documents),
+v1 AS (SELECT CAST(n_chars_final // {PSI_BUCKET_WIDTH} AS BIGINT) AS bucket FROM l),
 c0_ AS (SELECT bucket, count(*) AS c0 FROM v0 GROUP BY 1),
 c1_ AS (SELECT bucket, count(*) AS c1 FROM v1 GROUP BY 1),
 j AS (
@@ -1634,7 +1635,6 @@ EPOCH_SHUFFLE_BATCH = 32
 def epoch_shuffle(
     spark: SparkSession,
     sf_dir: str,
-    epochs: int = EPOCH_SHUFFLE_EPOCHS,
     batch_docs: int = EPOCH_SHUFFLE_BATCH,
 ) -> DataFrame:
     """Deterministic per-epoch global shuffle order for training: every
@@ -1657,7 +1657,7 @@ def epoch_shuffle(
     Output: (epoch, doc_id, shuffle_pos, batch_id), all int64.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    eps = spark.range(epochs).select(F.col("id").alias("epoch"))
+    eps = spark.range(EPOCH_SHUFFLE_EPOCHS).select(F.col("id").alias("epoch"))
     keyed = (
         docs.crossJoin(F.broadcast(eps))
         .select(
@@ -1698,12 +1698,10 @@ def epoch_shuffle(
     )
 
 
-def oracle_epoch_shuffle(
-    epochs: int = EPOCH_SHUFFLE_EPOCHS, batch_docs: int = EPOCH_SHUFFLE_BATCH
-) -> str:
+def oracle_epoch_shuffle() -> str:
     """DuckDB twin of :func:`epoch_shuffle` — the flat per-epoch
     ``row_number`` the two-level rank must reproduce bit-exactly."""
-    return f"""WITH e AS (SELECT unnest(range(0, {epochs})) AS epoch),
+    return f"""WITH e AS (SELECT unnest(range(0, {EPOCH_SHUFFLE_EPOCHS})) AS epoch),
 keyed AS (
   SELECT CAST(epoch AS BIGINT) AS epoch, doc_id,
          md5(CAST(doc_id AS VARCHAR) || ':' || CAST(epoch AS VARCHAR)) AS k
@@ -1714,13 +1712,11 @@ ranked AS (
               AS BIGINT) AS shuffle_pos
   FROM keyed)
 SELECT epoch, doc_id, shuffle_pos,
-       CAST(shuffle_pos // {batch_docs} AS BIGINT) AS batch_id
+       CAST(shuffle_pos // {EPOCH_SHUFFLE_BATCH} AS BIGINT) AS batch_id
 FROM ranked"""
 
 
-def quality_quantile_normalized(
-    spark: SparkSession, sf_dir: str, q_resolution: int = 4096
-) -> DataFrame:
+def quality_quantile_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source quantile normalization of the quality score: every
     document's score is REPLACED by the global order statistic at its
     within-source percentile — the standard quantile-mapping calibration
@@ -1760,7 +1756,7 @@ def quality_quantile_normalized(
     # cheapest thing on this plan to persist; at 100 TB this is the
     # scored-corpus intermediate a real pipeline would persist anyway.
     base = scored.withColumn(
-        "qb", F.floor(F.col("quality") * q_resolution).cast("bigint")
+        "qb", F.floor(F.col("quality") * QUANTILE_RESOLUTION).cast("bigint")
     ).localCheckpoint(eager=True)
 
     # within-source exact rank (two-level, as quality_calibrated_by_source)
@@ -1851,7 +1847,7 @@ FROM pos JOIN gstat ON gstat.g = pos.p"""
 
 
 def chunk_documents_sentences(
-    spark: SparkSession, sf_dir: str, width: int = 400
+    spark: SparkSession, sf_dir: str, width: int = CHUNK_WIDTH
 ) -> DataFrame:
     """Sentence-boundary-respecting chunking (the RAG chunker upgrade):
     documents split into sentences (maximal ``[.!?]``-delimited segments
@@ -1909,7 +1905,7 @@ def chunk_documents_sentences(
     )
 
 
-def oracle_chunk_documents_sentences(width: int = 400) -> str:
+def oracle_chunk_documents_sentences() -> str:
     """DuckDB twin of :func:`chunk_documents_sentences` — same
     segmentation, same strictly-prior cumsum binning, same ordered
     reassembly."""
@@ -1926,7 +1922,7 @@ assigned AS (
          CAST(COALESCE(SUM(length(sentence)) OVER (
            PARTITION BY doc_id ORDER BY sidx
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ), 0) AS BIGINT) // {width} AS chunk_id
+         ), 0) AS BIGINT) // {CHUNK_WIDTH} AS chunk_id
   FROM sent)
 SELECT doc_id, chunk_id,
        CAST(count(*) AS BIGINT) AS n_sentences,

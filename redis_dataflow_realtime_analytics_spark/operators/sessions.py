@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 from ..sources import normalize_events, read_events
 
-SESSION_GAP = "30 minutes"
+SESSION_GAP_MINUTES = 30
+SESSION_GAP = f"{SESSION_GAP_MINUTES} minutes"
+#: A gap shorter than this (µs) counts as a rapid repeat.
+RAPID_GAP_US = 1_000_000
+#: Minutes after an exposure within which a conversion counts.
+FUNNEL_HORIZON_MINUTES = 5
 
 
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,10 +72,10 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def user_gap_profile(events: DataFrame, rapid_us: int = 1_000_000) -> DataFrame:
+def user_gap_profile(events: DataFrame) -> DataFrame:
     """Per-user inter-arrival profile in pure Catalyst: exact integer gap
     statistics (min/max/sum microseconds, rapid-fire count under
-    ``rapid_us``) over consecutive same-user events — the bot/burstiness
+    ``RAPID_GAP_US``) over consecutive same-user events — the bot/burstiness
     screen next to :func:`user_event_features`' Arrow median. Everything
     is int64 arithmetic plus one final division, so the profile
     hash-gates exactly and runs entirely inside whole-stage codegen (the
@@ -96,12 +101,12 @@ def user_gap_profile(events: DataFrame, rapid_us: int = 1_000_000) -> DataFrame:
         F.max("gap_us").alias("max_gap_us"),
         (F.sum("gap_us").cast("double") / F.count("gap_us")).alias("avg_gap_us"),
         F.coalesce(
-            F.sum(F.when(F.col("gap_us") < rapid_us, 1)), F.lit(0)
+            F.sum(F.when(F.col("gap_us") < RAPID_GAP_US, 1)), F.lit(0)
         ).cast("bigint").alias("n_rapid"),
     )
 
 
-def oracle_user_gap_profile(ev_cte: str, rapid_us: int = 1_000_000) -> str:
+def oracle_user_gap_profile(ev_cte: str) -> str:
     return f"""{ev_cte}
 , g AS (
   SELECT user_id,
@@ -111,7 +116,7 @@ def oracle_user_gap_profile(ev_cte: str, rapid_us: int = 1_000_000) -> str:
 SELECT user_id, count(*) AS n_events, count(gap_us) AS n_gaps,
        min(gap_us) AS min_gap_us, max(gap_us) AS max_gap_us,
        CAST(sum(gap_us) AS DOUBLE) / count(gap_us) AS avg_gap_us,
-       CAST(coalesce(sum(CASE WHEN gap_us < {rapid_us} THEN 1 END), 0) AS BIGINT)
+       CAST(coalesce(sum(CASE WHEN gap_us < {RAPID_GAP_US} THEN 1 END), 0) AS BIGINT)
          AS n_rapid
 FROM g GROUP BY 1"""
 
@@ -307,7 +312,7 @@ def rolling_week_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Funnel conversion (click → error within a bounded horizon) --------------
 def funnel_conversion_by_experiment(
-    spark: SparkSession, sf_dir: str, horizon_minutes: int = 5
+    spark: SparkSession, sf_dir: str, horizon_minutes: int = FUNNEL_HORIZON_MINUTES
 ) -> DataFrame:
     """Per experiment: how many distinct users clicked, how many of those
     "converted" (an ``error`` event by the same user within
@@ -369,8 +374,8 @@ def funnel_conversion_by_experiment(
     )
 
 
-def oracle_funnel_conversion_by_experiment(ev_cte: str, horizon_minutes: int = 5) -> str:
-    horizon_us = horizon_minutes * 60 * 1_000_000
+def oracle_funnel_conversion_by_experiment(ev_cte: str) -> str:
+    horizon_us = FUNNEL_HORIZON_MINUTES * 60 * 1_000_000
     return f"""{ev_cte},
 x AS (
   SELECT user_id, experiment_id, ts, variant,

@@ -34,6 +34,30 @@ from ..functions import vectors as V
 from ..functions.numeric import oracle_dsum12
 from ..tables import load, persisted, spread
 
+#: Neighbours returned per query by every top-k / ANN key.
+TOP_K = 10
+#: IVF: centroids, k-means training iterations, lists probed per query.
+KMEANS_K = 8
+KMEANS_ITERS = 3
+NPROBE = 3
+#: Iterations of the float-portable k-means.
+FLOAT_KMEANS_ITERS = 2
+#: Power iterations of the top component; rank and iterations of the
+#: top subspace.
+POWER_ITERS = 8
+SUBSPACE_RANK = 4
+SUBSPACE_ITERS = 12
+#: Cosine cut of an embedding near-dup pair.
+EMBED_NEARDUP_THRESHOLD = 0.45
+#: Hyperplane bits of the embedding near-dup LSH.
+NEARDUP_LSH_BITS = 3
+#: Seed of the portable LSH hyperplanes.
+PORTABLE_LSH_SEED = 0xA17E
+#: Hamming shortlist re-ranked by exact cosine.
+HAMMING_SHORTLIST = 50
+#: Reciprocal-rank-fusion constant.
+RRF_C = 60
+
 #: Query set = every QUERY_MOD-th vector (deterministic, data-derived).
 QUERY_MOD = 100
 
@@ -170,7 +194,7 @@ def _ivf_query(emb: DataFrame, cents: DataFrame, k: int, nprobe: int) -> DataFra
     return _probed_topk(_rowlocal_assign(emb, cents), probes, k)
 
 
-def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector: the broadcast
     query set against one streaming pass over the corpus, no shuffle
     until the top-k. O(|corpus|·|queries|).
@@ -180,7 +204,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFr
     return _cosine_topk(_against_queries(_quantized(spark, sf_dir)), k)
 
 
-def ann_topk_int8(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def ann_topk_int8(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Compressed ANN: brute-force cosine top-k over per-vector int8
     scalar-quantized embeddings — the memory-bound scale path (1 byte per
     component, 32× smaller than float64 working form; at 100 TB of
@@ -202,7 +226,9 @@ def ann_topk_int8(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     return _cosine_topk(_against_queries(emb), k, "approx_cosine")
 
 
-def embedding_neardup_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.45) -> DataFrame:
+def embedding_neardup_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float = EMBED_NEARDUP_THRESHOLD
+) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_id_a < vec_id_b,
     cosine ≥ threshold) — the dedup-by-embedding primitive.
 
@@ -249,7 +275,7 @@ LSH_BITS = 5
 LSH_SEED = 7
 
 
-def _lsh_bucket_udf(n_bits: int = LSH_BITS, seed: int = LSH_SEED):
+def _lsh_bucket_udf(n_bits: int = LSH_BITS):
     """Vectorized Arrow UDF: embedding → hyperplane-sign bucket id.
 
     The hyperplane matrix is derived from a fixed seed (no fit step), so
@@ -266,7 +292,7 @@ def _lsh_bucket_udf(n_bits: int = LSH_BITS, seed: int = LSH_SEED):
         if emb.empty:
             return pd.Series([], dtype="int64")
         x = np.vstack(emb.to_numpy())  # (batch, dim) float32
-        planes = np.random.RandomState(seed).standard_normal((x.shape[1], n_bits))
+        planes = np.random.RandomState(LSH_SEED).standard_normal((x.shape[1], n_bits))
         bits = (x @ planes) >= 0.0  # (batch, n_bits) bool
         weights = 1 << np.arange(n_bits, dtype=np.int64)
         return pd.Series(bits @ weights)
@@ -300,12 +326,12 @@ def _lsh_corpus(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
     )
 
 
-def _lsh_topk(emb: DataFrame, k: int, n_bits: int) -> DataFrame:
+def _lsh_topk(emb: DataFrame, k: int) -> DataFrame:
     """Multiprobe LSH top-k over a bucketed corpus: each query probes its
-    own bucket plus every Hamming-1 neighbour (n_bits+1 probes), then the
-    candidates re-rank by exact cosine. Work per query ≈
-    |corpus|·(n_bits+1)/2^n_bits."""
-    probes = F.broadcast(query_set(emb, _hamming1("bucket", n_bits)))
+    own bucket plus every Hamming-1 neighbour (LSH_BITS+1 probes), then
+    the candidates re-rank by exact cosine. Work per query ≈
+    |corpus|·(LSH_BITS+1)/2^LSH_BITS."""
+    probes = F.broadcast(query_set(emb, _hamming1("bucket", LSH_BITS)))
     cand = emb.join(
         probes,
         (F.col("bucket") == F.col("probe_bucket"))
@@ -314,9 +340,7 @@ def _lsh_topk(emb: DataFrame, k: int, n_bits: int) -> DataFrame:
     return _cosine_topk(cand, k)
 
 
-def ann_lsh_topk(
-    spark: SparkSession, sf_dir: str, k: int = 10, n_bits: int = LSH_BITS
-) -> DataFrame:
+def ann_lsh_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Random-hyperplane LSH approximate top-k: corpus vectors hash to a
     2^n_bits bucket via sign bits against fixed float hyperplanes
     (``_lsh_bucket_udf``), then the shared multiprobe search. At scale the
@@ -326,7 +350,7 @@ def ann_lsh_topk(
     Output schema matches :func:`ann_topk_bruteforce`; recall vs the exact
     baseline is asserted in tests/test_similarity.py.
     """
-    return _lsh_topk(_lsh_corpus(spark, sf_dir, n_bits), k, n_bits)
+    return _lsh_topk(_lsh_corpus(spark, sf_dir, LSH_BITS), k)
 
 
 #: Portable LSH: integer hyperplanes in [-1000, 1000] from a constant-seed
@@ -337,16 +361,14 @@ def ann_lsh_topk(
 PORTABLE_LSH_DIM = 64
 
 
-def _portable_planes(
-    n_bits: int = LSH_BITS, dim: int = PORTABLE_LSH_DIM, seed: int = 0xA17E
-) -> list[list[int]]:
-    """n_bits × dim integer hyperplane matrix from the repo's constant-seed
+def _portable_planes() -> list[list[int]]:
+    """LSH_BITS × PORTABLE_LSH_DIM integer hyperplane matrix from the repo's constant-seed
     64-bit LCG (same generator family as ``dedup._portable_coeffs``)."""
-    s = seed
+    s = PORTABLE_LSH_SEED
     planes = []
-    for _ in range(n_bits):
+    for _ in range(LSH_BITS):
         row = []
-        for _ in range(dim):
+        for _ in range(PORTABLE_LSH_DIM):
             s = (s * 6364136223846793005 + 1442695040888963407) % (1 << 64)
             row.append((s >> 33) % 2001 - 1000)
         planes.append(row)
@@ -354,7 +376,7 @@ def _portable_planes(
 
 
 def ann_lsh_portable_topk(
-    spark: SparkSession, sf_dir: str, k: int = 10, n_bits: int = LSH_BITS
+    spark: SparkSession, sf_dir: str, k: int = TOP_K
 ) -> DataFrame:
     """Random-hyperplane LSH top-k under PORTABLE integer hyperplanes —
     the fully SQL-oracled twin of :func:`ann_lsh_topk`, and incidentally
@@ -372,23 +394,23 @@ def ann_lsh_portable_topk(
             f"aggregate(zip_with(qvec, array({', '.join(f'CAST({w} AS BIGINT)' for w in row)}), "
             f"(x, w) -> x * w), CAST(0 AS BIGINT), (s, v) -> s + v)"
         )
-        for row in _portable_planes(n_bits)
+        for row in _portable_planes()
     ]
     bucket = sum(
         F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0)) for p, d in enumerate(dots)
     ).cast("long")
     emb = _quantized(spark, sf_dir).withColumn("bucket", bucket).cache()
-    return _lsh_topk(emb, k, n_bits)
+    return _lsh_topk(emb, k)
 
 
-def oracle_ann_lsh_portable(k: int = 10, n_bits: int = LSH_BITS) -> str:
+def oracle_ann_lsh_portable() -> str:
     """DuckDB twin of :func:`ann_lsh_portable_topk`: the literal plane
     matrix as a VALUES table, per-vector sign-bit buckets via one
     (vec × plane-component) aggregation, Hamming-1 probe expansion, exact
     fixed-point cosine rerank."""
     from ..functions.vectors import oracle_qdot, oracle_quantize
 
-    planes = _portable_planes(n_bits)
+    planes = _portable_planes()
     vals = ", ".join(
         f"({p}, {1 << p}, {d + 1}, {w})"
         for p, row in enumerate(planes)
@@ -399,7 +421,7 @@ def oracle_ann_lsh_portable(k: int = 10, n_bits: int = LSH_BITS) -> str:
          f"{QUERY_MOD} = 0"]
         + [
             f"SELECT vec_id, xor(bucket, {1 << i}) FROM bk WHERE vec_id % {QUERY_MOD} = 0"
-            for i in range(n_bits)
+            for i in range(LSH_BITS)
         ]
     )
     return f"""WITH e AS (
@@ -445,11 +467,11 @@ c AS (
 SELECT query_id, neighbor_id, cosine,
        CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-FROM c QUALIFY rank <= {k}"""
+FROM c QUALIFY rank <= {TOP_K}"""
 
 
 def ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, k: int = 10, nprobe: int = 3
+    spark: SparkSession, sf_dir: str, k: int = TOP_K, nprobe: int = NPROBE
 ) -> DataFrame:
     """IVF approximate top-k over sampled coarse centroids (every
     ``CENTROID_MOD``-th vector): ~nprobe/n_centroids of the corpus is
@@ -468,7 +490,7 @@ def ann_ivf_topk(
 
 
 def embedding_neardup_pairs_lsh(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.45, n_bits: int = 3
+    spark: SparkSession, sf_dir: str, threshold: float = EMBED_NEARDUP_THRESHOLD
 ) -> DataFrame:
     """Embedding near-dup pairs, LSH-bucketed: candidate pairs form only
     within a hyperplane bucket (plus Hamming-1 neighbor buckets), then the
@@ -479,16 +501,17 @@ def embedding_neardup_pairs_lsh(
     bucket id is a plain column, so the corpus can be written partitioned
     by it. Recall vs the brute-force pairs is asserted in tests.
 
-    Default bits are coarser than the ANN top-k path (3 vs 5): pair mining
-    wants recall at mid-range cosines, where the sign-collision probability
-    (1 − θ/π) per hyperplane decays faster than for true near-dups.
+    ``NEARDUP_LSH_BITS`` is coarser than the ANN top-k path's ``LSH_BITS``
+    (3 vs 5): pair mining wants recall at mid-range cosines, where the
+    sign-collision probability (1 − θ/π) per hyperplane decays faster than
+    for true near-dups.
     """
-    emb = _lsh_corpus(spark, sf_dir, n_bits)
+    emb = _lsh_corpus(spark, sf_dir, NEARDUP_LSH_BITS)
     a = emb.select(
         F.col("vec_id").alias("vec_id_a"),
         F.col("qvec").alias("qa"),
         F.col("n2").alias("na"),
-        _hamming1("bucket", n_bits),
+        _hamming1("bucket", NEARDUP_LSH_BITS),
     )
     b = emb.select(
         F.col("vec_id").alias("vec_id_b"),
@@ -513,7 +536,7 @@ EMBED_DIM = 64
 
 
 def kmeans_embedding_centroids(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 5
+    spark: SparkSession, sf_dir: str, k: int = KMEANS_K, iters: int = 5
 ) -> DataFrame:
     """Lloyd's k-means over the embedding corpus — the canonical
     driver-coordinated iterative algorithm: per iteration one broadcast of
@@ -627,13 +650,10 @@ def kmeans_embedding_centroids(
     )
 
 
-def ann_ivf_kmeans_topk(
-    spark: SparkSession, sf_dir: str, k: int = 10, nprobe: int = 3,
-    n_centroids: int | None = None, train_iters: int = 3,
-) -> DataFrame:
+def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with TRAINED coarse centroids: Lloyd's k-means fits the
     codebook (see :func:`kmeans_embedding_centroids`), then the same IVF
-    query as :func:`ann_ivf_topk`; the default codebook size
+    query as :func:`ann_ivf_topk`; the codebook size
     (``corpus // CENTROID_MOD``) keeps the two variants directly
     comparable. Training touches only the k×dim codebook on the driver.
 
@@ -651,11 +671,9 @@ def ann_ivf_kmeans_topk(
     """
 
     def codebook() -> DataFrame:
-        k_cents = n_centroids
-        if k_cents is None:
-            k_cents = max(load(spark, sf_dir, "embeddings").count() // CENTROID_MOD, 2)
+        k_cents = max(load(spark, sf_dir, "embeddings").count() // CENTROID_MOD, 2)
         trained = kmeans_embedding_centroids(
-            spark, sf_dir, k=k_cents, iters=train_iters
+            spark, sf_dir, k=k_cents, iters=KMEANS_ITERS
         ).select("cluster_id", "centroid").collect()
         return spark.createDataFrame(
             [(int(r.cluster_id), V.quantize_py(r.centroid)) for r in trained],
@@ -666,10 +684,10 @@ def ann_ivf_kmeans_topk(
         spark,
         "ivf_kmeans_codebook",
         f"{sf_dir}/embeddings.parquet",
-        (n_centroids, train_iters, CENTROID_MOD),
+        (KMEANS_ITERS, CENTROID_MOD),
         codebook,
     ).withColumn("c_n2", V.qnorm2("c_qvec"))
-    return _ivf_query(_quantized(spark, sf_dir), cents, k, nprobe)
+    return _ivf_query(_quantized(spark, sf_dir), cents, TOP_K, NPROBE)
 
 
 def similar_documents_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -916,7 +934,7 @@ FROM x GROUP BY 1"""
 
 
 def embedding_top_component(
-    spark: SparkSession, sf_dir: str, iters: int = 8
+    spark: SparkSession, sf_dir: str, iters: int = POWER_ITERS
 ) -> DataFrame:
     """Dominant principal direction of the (uncentered) embedding
     second-moment matrix via distributed power iteration — the first step
@@ -983,9 +1001,7 @@ def embedding_top_component(
     )
 
 
-def semantic_components(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.45
-) -> DataFrame:
+def semantic_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic duplicate clusters (the SemDeDup shape: Abbas et al. 2023):
     embedding-cosine near-dup PAIRS → transitive closure → one component
     label per clustered vector — exactly the pairs→clusters step the
@@ -1005,7 +1021,7 @@ def semantic_components(
     """
     from .dedup import connected_components
 
-    edges = embedding_neardup_pairs(spark, sf_dir, threshold=threshold).select(
+    edges = embedding_neardup_pairs(spark, sf_dir).select(
         F.col("vec_id_a").alias("doc_a"), F.col("vec_id_b").alias("doc_b")
     )
     return connected_components(edges).select(
@@ -1014,7 +1030,7 @@ def semantic_components(
 
 
 def embedding_top_subspace(
-    spark: SparkSession, sf_dir: str, r: int = 4, iters: int = 12
+    spark: SparkSession, sf_dir: str, r: int = SUBSPACE_RANK, iters: int = SUBSPACE_ITERS
 ) -> DataFrame:
     """Top-``r`` principal subspace of the uncentered embedding
     second-moment matrix via distributed BLOCK power iteration
@@ -1115,7 +1131,7 @@ def embedding_top_subspace(
 
 
 def embedding_subspace_projection(
-    spark: SparkSession, sf_dir: str, r: int = 4, iters: int = 12
+    spark: SparkSession, sf_dir: str, r: int = SUBSPACE_RANK, iters: int = SUBSPACE_ITERS
 ) -> DataFrame:
     """Rank-r PCA projection of the embedding corpus — the consumer of
     :func:`embedding_top_subspace`: every vector reduced to its r
@@ -1175,7 +1191,7 @@ def _sign_sketch(col: str) -> list[F.Column]:
     ]
 
 
-def ann_topk_hamming(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def ann_topk_hamming(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Binary-compressed ANN: top-k neighbors by Hamming distance between
     1-bit sign sketches of the embeddings — the most aggressive
     compression leg of the ANN family (64 dims → 8 bytes, 32× smaller
@@ -1210,7 +1226,7 @@ def ann_topk_hamming(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame
     )
 
 
-def oracle_ann_topk_hamming(k: int = 10, query_mod: int = QUERY_MOD) -> str:
+def oracle_ann_topk_hamming(k: int = TOP_K) -> str:
     """DuckDB twin of :func:`ann_topk_hamming` — the same two-word sign
     packing via a generate_series unnest + bit_or."""
     sk = """SELECT vec_id,
@@ -1224,7 +1240,7 @@ FROM embeddings, LATERAL unnest(generate_series(1, 32)) t(i)
 GROUP BY vec_id"""
     return f"""WITH sk AS ({sk}),
 q AS (SELECT vec_id AS query_id, sk_lo AS q_lo, sk_hi AS q_hi
-      FROM sk WHERE vec_id % {query_mod} = 0),
+      FROM sk WHERE vec_id % {QUERY_MOD} = 0),
 d AS (
   SELECT query_id, vec_id AS neighbor_id,
          CAST(bit_count(xor(sk_lo, q_lo)) + bit_count(xor(sk_hi, q_hi))
@@ -1237,29 +1253,29 @@ FROM d QUALIFY rank <= {k}"""
 
 
 def ann_hamming_rerank_topk(
-    spark: SparkSession, sf_dir: str, k: int = 10, shortlist: int = 50
+    spark: SparkSession, sf_dir: str, k: int = TOP_K
 ) -> DataFrame:
     """Two-stage ANN: sign-sketch Hamming SHORTLIST → exact-cosine
     re-rank — the production layout of binary-compressed retrieval (the
     ANN analogue of dedup's LSH → exact-verify). Per query the float
-    work drops from |corpus| to ``shortlist`` dot products, while recall
+    work drops from |corpus| to ``HAMMING_SHORTLIST`` dot products, while recall
     vs the exact baseline recovers most of what the 1-bit sketch loses
     (band-tested in tests/test_similarity.py / test_round4e_ops.py).
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
-    cand = ann_topk_hamming(spark, sf_dir, k=shortlist).select(
+    cand = ann_topk_hamming(spark, sf_dir, k=HAMMING_SHORTLIST).select(
         "query_id", F.col("neighbor_id").alias("vec_id")
     )
     return _rerank(_quantized(spark, sf_dir), cand, k)
 
 
-def oracle_ann_hamming_rerank(k: int = 10, shortlist: int = 50) -> str:
+def oracle_ann_hamming_rerank() -> str:
     """DuckDB twin of :func:`ann_hamming_rerank_topk` — the Hamming
     oracle as the shortlist CTE, re-scored with the exact fixed-point
     cosine. ``{norms}`` / ``{qdot}`` / ``{cos}`` are spliced by the
     registry, which owns those shared SQL fragments."""
-    ham = oracle_ann_topk_hamming(k=shortlist)
+    ham = oracle_ann_topk_hamming(k=HAMMING_SHORTLIST)
     return f"""WITH cand AS ({ham}),
 {{norms}},
 p AS (SELECT c.query_id, c.neighbor_id,
@@ -1277,7 +1293,7 @@ SELECT query_id, neighbor_id, cosine,
        CAST(row_number() OVER (PARTITION BY query_id
                                ORDER BY cosine DESC, neighbor_id) AS INTEGER)
          AS rank
-FROM s QUALIFY rank <= {k}"""
+FROM s QUALIFY rank <= {TOP_K}"""
 
 
 # --- Product quantization (PQ) ANN -------------------------------------------
@@ -1345,7 +1361,7 @@ def _adc(pairs: DataFrame) -> DataFrame:
     )
 
 
-def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Product-quantization ANN: each vector is encoded as ``PQ_M`` small
     codes and queries score candidates by ASYMMETRIC DISTANCE — the
     full-precision query against the reconstructed (codeword) vector.
@@ -1363,7 +1379,7 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     return _ranked(_adc(enc.join(F.broadcast(q_sub), "m")), k, "approx_cosine")
 
 
-def oracle_ann_topk_pq(k: int = 10) -> str:
+def oracle_ann_topk_pq() -> str:
     """DuckDB twin of :func:`ann_topk_pq` — identical codebook selection,
     integer argmin encoding, and ADC scoring. ``{norms}`` is the shared
     quantize CTE fragment spliced by the registry."""
@@ -1416,10 +1432,10 @@ SELECT query_id, neighbor_id, approx_cosine,
        CAST(row_number() OVER (PARTITION BY query_id
                                ORDER BY approx_cosine DESC, neighbor_id)
             AS INTEGER) AS rank
-FROM cs QUALIFY rank <= {k}"""
+FROM cs QUALIFY rank <= {TOP_K}"""
 
 
-def retrieval_eval_report(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse-vs-dense retrieval agreement report: for every query doc
     served by BOTH retrievers (vec_id aligns with doc_id in the fixture),
     compare the BM25 shingle top-k against the exact-cosine embedding
@@ -1437,13 +1453,11 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str, k: int = 10) -> Data
     from .text import bm25_topk
 
     sparse = (
-        bm25_topk(spark, sf_dir, k=k)
+        bm25_topk(spark, sf_dir, k=TOP_K)
         .where(F.col("query_id") % QUERY_MOD == 0)
         .select("query_id", F.col("doc_id").alias("neighbor_id"))
     )
-    dense = ann_topk_bruteforce(spark, sf_dir, k=k).select(
-        "query_id", "neighbor_id"
-    )
+    dense = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     ns = sparse.groupBy("query_id").agg(F.count("*").alias("n_sparse"))
     nd = dense.groupBy("query_id").agg(F.count("*").alias("n_dense"))
     nov = (
@@ -1475,14 +1489,14 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str, k: int = 10) -> Data
     )
 
 
-def oracle_retrieval_eval(bm25_sql: str, dense_sql: str, query_mod: int = QUERY_MOD) -> str:
+def oracle_retrieval_eval(bm25_sql: str, dense_sql: str) -> str:
     """DuckDB twin of :func:`retrieval_eval_report` — both retriever
     oracles as CTE inputs, then the identical integer set arithmetic."""
     return f"""WITH sparse_full AS ({bm25_sql}),
 dense AS ({dense_sql}),
 sparse AS (
   SELECT query_id, doc_id AS neighbor_id FROM sparse_full
-  WHERE query_id % {query_mod} = 0),
+  WHERE query_id % {QUERY_MOD} = 0),
 ns AS (SELECT query_id, count(*) AS n_sparse FROM sparse GROUP BY 1),
 nd AS (SELECT query_id, count(*) AS n_dense FROM dense GROUP BY 1),
 nov AS (
@@ -1499,10 +1513,10 @@ FROM ns JOIN nd ON nd.query_id = ns.query_id
 LEFT JOIN nov ON nov.query_id = ns.query_id"""
 
 
-def hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k: int = 10, c: int = 60) -> DataFrame:
+def hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Hybrid retrieval via RECIPROCAL RANK FUSION: merge the BM25
     shingle ranking and the exact-cosine dense ranking with
-    ``score = Σ 1/(c + rank)`` (Cormack et al.'s standard c = 60) and
+    ``score = Σ 1/(RRF_C + rank)`` (Cormack et al.'s standard c = 60) and
     return the fused top-k per shared query. RRF is the production
     default for hybrid search precisely because it never compares raw
     scores across retrievers — only INTEGER ranks enter the formula, so
@@ -1522,7 +1536,7 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k: int = 10, c: int = 60) 
     dense = ann_topk_bruteforce(spark, sf_dir, k=k).select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
-    contrib = F.lit(1.0).cast("double") / (F.lit(c) + F.col("rank")).cast("double")
+    contrib = F.lit(1.0).cast("double") / (F.lit(RRF_C) + F.col("rank")).cast("double")
     fused = sparse.union(dense).groupBy("query_id", "doc_id").agg(
         F.count("*").alias("n_lists"),
         F.sum(contrib.cast("decimal(38,12)")).cast("double").alias("rrf_score"),
@@ -1532,30 +1546,29 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k: int = 10, c: int = 60) 
     )
 
 
-def oracle_hybrid_rrf(bm25_sql: str, dense_sql: str, k: int = 10, c: int = 60,
-                      query_mod: int = QUERY_MOD) -> str:
+def oracle_hybrid_rrf(bm25_sql: str, dense_sql: str) -> str:
     """DuckDB twin of :func:`hybrid_rrf_topk`."""
     return f"""WITH sparse_full AS ({bm25_sql}),
 dense_full AS ({dense_sql}),
 both_lists AS (
   SELECT query_id, doc_id, rank FROM sparse_full
-  WHERE query_id % {query_mod} = 0
+  WHERE query_id % {QUERY_MOD} = 0
   UNION ALL
   SELECT query_id, neighbor_id AS doc_id, rank FROM dense_full),
 fused AS (
   SELECT query_id, doc_id, count(*) AS n_lists,
-         {oracle_dsum12(f"CAST(1 AS DOUBLE) / CAST({c} + rank AS DOUBLE)")}
+         {oracle_dsum12(f"CAST(1 AS DOUBLE) / CAST({RRF_C} + rank AS DOUBLE)")}
            AS rrf_score
   FROM both_lists GROUP BY 1, 2)
 SELECT query_id, doc_id, n_lists, rrf_score,
        CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY rrf_score DESC, n_lists DESC, doc_id) AS INTEGER) AS rank
-FROM fused QUALIFY rank <= {k}"""
+FROM fused QUALIFY rank <= {TOP_K}"""
 
 
 # --- Exact (SQL-oracled) k-means ---------------------------------------------
 def kmeans_exact_centroids(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
+    spark: SparkSession, sf_dir: str, iters: int = KMEANS_ITERS
 ) -> DataFrame:
     """Lloyd's k-means made EXACT — and therefore SQL-oracled, which
     float k-means cannot be: every iteration's state is the integer pair
@@ -1579,7 +1592,7 @@ def kmeans_exact_centroids(
     Output: (cid, pos, mean, n) — the final centroids long-form (pos is
     1-based), driver-hashable scalars only.
     """
-    cent = _kmeans_exact_state(spark, sf_dir, k=k, iters=iters)
+    cent = _kmeans_exact_state(spark, sf_dir, iters=iters)
     return cent.select(
         "cid", "n", F.posexplode("S").alias("pos0", "s")
     ).select(
@@ -1629,7 +1642,7 @@ def _probe(emb: DataFrame, cents_row: DataFrame, nprobe: int) -> DataFrame:
 
 
 def _kmeans_exact_state(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
+    spark: SparkSession, sf_dir: str, iters: int = KMEANS_ITERS
 ) -> DataFrame:
     """The exact k-means fixpoint's internal state: one row per centroid,
     (cid, S = Σx int vector, n, s2 = ‖S‖² decimal) — see
@@ -1637,7 +1650,7 @@ def _kmeans_exact_state(
     emb = _quantized(spark, sf_dir)
     cent = (
         emb.orderBy("vec_id")
-        .limit(k)
+        .limit(KMEANS_K)
         .select(
             F.col("vec_id").alias("cid"),
             F.col("qvec").alias("S"),
@@ -1681,7 +1694,7 @@ def _kmeans_exact_state(
     return cent
 
 
-def oracle_kmeans_exact(k: int = 8, iters: int = 3) -> str:
+def oracle_kmeans_exact() -> str:
     """DuckDB twin of :func:`kmeans_exact_centroids` — the same
     iterations unrolled as chained CTEs with identical integer/decimal
     arithmetic. ``{norms}`` is spliced by the registry."""
@@ -1690,9 +1703,9 @@ def oracle_kmeans_exact(k: int = 8, iters: int = 3) -> str:
   SELECT e.vec_id AS cid, e.qv AS S, CAST(1 AS BIGINT) AS n,
          CAST(n.n2 AS DECIMAL(38,0)) AS s2
   FROM e JOIN n ON n.vec_id = e.vec_id
-  ORDER BY e.vec_id LIMIT {k})"""
+  ORDER BY e.vec_id LIMIT {KMEANS_K})"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, KMEANS_ITERS + 1):
         p = i - 1
         ctes.append(
             f"""p{i} AS (
@@ -1732,11 +1745,11 @@ c{i} AS (
 {body}
 SELECT c.cid, CAST(t.i AS INTEGER) AS pos,
        CAST(c.S[t.i] AS DOUBLE) / c.n AS mean, c.n
-FROM c{iters} c, LATERAL unnest(generate_series(1, len(c.S))) t(i)"""
+FROM c{KMEANS_ITERS} c, LATERAL unnest(generate_series(1, len(c.S))) t(i)"""
 
 
 def kmeans_float_portable_centroids(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 2
+    spark: SparkSession, sf_dir: str, iters: int = FLOAT_KMEANS_ITERS
 ) -> DataFrame:
     """Lloyd's k-means over the FLOAT embeddings, made portable — the
     oracled twin of the float iterative path that
@@ -1780,7 +1793,7 @@ def kmeans_float_portable_centroids(
     )
     cent = (
         emb.orderBy("vec_id")
-        .limit(k)
+        .limit(KMEANS_K)
         .select(
             F.col("vec_id").alias("cid"),
             F.col("v").alias("C"),
@@ -1846,7 +1859,7 @@ def kmeans_float_portable_centroids(
     )
 
 
-def oracle_kmeans_float_portable(k: int = 8, iters: int = 2) -> str:
+def oracle_kmeans_float_portable() -> str:
     """DuckDB twin of :func:`kmeans_float_portable_centroids` — the same
     float iterations unrolled as chained CTEs: double-widened vectors,
     ``list_reduce`` left-fold distances, fixed-point-pinned mean sums."""
@@ -1856,9 +1869,9 @@ def oracle_kmeans_float_portable(k: int = 8, iters: int = 2) -> str:
   FROM embeddings),
 c0 AS (
   SELECT vec_id AS cid, v AS C, CAST(1 AS BIGINT) AS n
-  FROM e ORDER BY vec_id LIMIT {k})"""
+  FROM e ORDER BY vec_id LIMIT {KMEANS_K})"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, FLOAT_KMEANS_ITERS + 1):
         p = i - 1
         ctes.append(
             f"""a{i} AS (
@@ -1888,17 +1901,10 @@ c{i} AS (
     body = ",\n".join(ctes)
     return f"""WITH {body}
 SELECT c.cid, CAST(t.i AS INTEGER) AS pos, c.C[t.i] AS mean, c.n
-FROM c{iters} c, LATERAL unnest(generate_series(1, len(c.C))) t(i)"""
+FROM c{FLOAT_KMEANS_ITERS} c, LATERAL unnest(generate_series(1, len(c.C))) t(i)"""
 
 
-def ann_ivf_exact_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    nprobe: int = 3,
-    km_k: int = 8,
-    iters: int = 3,
-) -> DataFrame:
+def ann_ivf_exact_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """IVF over LEARNED centroids, fully SQL-oracled — the upgrade the
     float-k-means IVF (``ann_ivf_kmeans_topk``, rows-only) cannot have:
     the coarse codebook is the exact k-means fixpoint
@@ -1908,27 +1914,21 @@ def ann_ivf_exact_topk(
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
-    cent = _kmeans_exact_state(spark, sf_dir, k=km_k, iters=iters)
-    return _ivf_exact_query(spark, sf_dir, cent, k=k, nprobe=nprobe)
+    cent = _kmeans_exact_state(spark, sf_dir)
+    return _ivf_exact_query(spark, sf_dir, cent, k=k)
 
 
 def _ivf_exact_query(
-    spark: SparkSession,
-    sf_dir: str,
-    cent: DataFrame,
-    k: int = 10,
-    nprobe: int = 3,
+    spark: SparkSession, sf_dir: str, cent: DataFrame, k: int = TOP_K
 ) -> DataFrame:
     """The IVF query against an exact k-means state frame (cid, S, n,
     s2) — shared by the train-inline and train-once variants."""
     cents_row = _cents_row(cent)
     emb = _quantized(spark, sf_dir)
-    return _probed_topk(_assign(emb, cents_row), _probe(emb, cents_row, nprobe), k)
+    return _probed_topk(_assign(emb, cents_row), _probe(emb, cents_row, NPROBE), k)
 
 
-def _persisted_codebook(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
-) -> DataFrame:
+def _persisted_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-once / read-many coarse codebook: the exact k-means state
     (cid, S, n, s2) persisted as parquet.
 
@@ -1941,19 +1941,12 @@ def _persisted_codebook(
     oracle.
     """
     return persisted(
-        spark, "ivf_codebook", f"{sf_dir}/embeddings.parquet", (k, iters),
-        lambda: _kmeans_exact_state(spark, sf_dir, k=k, iters=iters),
+        spark, "ivf_codebook", f"{sf_dir}/embeddings.parquet", (KMEANS_K, KMEANS_ITERS),
+        lambda: _kmeans_exact_state(spark, sf_dir),
     )
 
 
-def ann_ivf_persisted_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    nprobe: int = 3,
-    km_k: int = 8,
-    iters: int = 3,
-) -> DataFrame:
+def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k over the PERSISTED codebook (:func:`_persisted_codebook`)
     — the serving-path twin of :func:`ann_ivf_exact_topk`, so the
     measured cost is the query path alone. The exact k-means fixpoint is
@@ -1962,24 +1955,22 @@ def ann_ivf_persisted_topk(
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
-    cent = _persisted_codebook(spark, sf_dir, k=km_k, iters=iters)
-    return _ivf_exact_query(spark, sf_dir, cent, k=k, nprobe=nprobe)
+    cent = _persisted_codebook(spark, sf_dir)
+    return _ivf_exact_query(spark, sf_dir, cent)
 
 
-def oracle_ann_ivf_exact(
-    k: int = 10, nprobe: int = 3, km_k: int = 8, iters: int = 3
-) -> str:
+def oracle_ann_ivf_exact() -> str:
     """DuckDB twin of :func:`ann_ivf_exact_topk` — the unrolled exact
     k-means CTE chain, then assignment / probing / candidate cosine with
     identical arithmetic. ``{norms}`` spliced by the registry."""
-    km = oracle_kmeans_exact(k=km_k, iters=iters)
+    km = oracle_kmeans_exact()
     # reuse the kmeans oracle's CTE chain: strip its WITH header + final SELECT
     body = km.split("WITH {norms},\n", 1)[1].rsplit("\nSELECT", 1)[0]
     return f"""WITH {{norms}},
 {body},
 pf AS (
   SELECT v.vec_id, c.cid, c.n, c.s2, unnest(list_zip(v.qv, c.S)) AS z
-  FROM e v CROSS JOIN c{iters} c),
+  FROM e v CROSS JOIN c{KMEANS_ITERS} c),
 df_ AS (
   SELECT vec_id, cid, sum(CAST(z[1] AS DECIMAL(38,0)) * z[2]) AS dot,
          any_value(n) AS n, any_value(s2) AS s2
@@ -1994,7 +1985,7 @@ assign AS (
 probes AS (
   SELECT vec_id AS query_id, cid AS bucket FROM vf
   WHERE vec_id % {QUERY_MOD} = 0
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY v, cid) <= {nprobe}),
+  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY v, cid) <= {NPROBE}),
 cp AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
          unnest(list_zip(eq.qv, en.qv)) AS z
@@ -2017,12 +2008,10 @@ cs AS (
 SELECT query_id, neighbor_id, cosine,
        CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-FROM cs QUALIFY rank <= {k}"""
+FROM cs QUALIFY rank <= {TOP_K}"""
 
 
-def embedding_top_component_exact(
-    spark: SparkSession, sf_dir: str, iters: int = 8
-) -> DataFrame:
+def embedding_top_component_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal direction via power iteration under the EXACT
     discipline — the PCA-training leg of the oracled-iterative family
     (PageRank, exact k-means, and now the spectral step): every
@@ -2045,15 +2034,13 @@ def embedding_top_component_exact(
 
     Output: (pos, component) — the final unit iterate, 1-based dims.
     """
-    v_row = _top_component_exact_row(spark, sf_dir, iters=iters)
+    v_row = _top_component_exact_row(spark, sf_dir)
     return v_row.select(
         F.posexplode("v").alias("pos0", "component")
     ).select((F.col("pos0") + 1).cast("int").alias("pos"), "component")
 
 
-def _top_component_exact_row(
-    spark: SparkSession, sf_dir: str, iters: int = 8
-):
+def _top_component_exact_row(spark: SparkSession, sf_dir: str):
     """The exact power-iteration fixpoint of
     :func:`embedding_top_component_exact`, returned as its internal
     ONE-ROW array frame (column ``v array<double>``) so consumers that
@@ -2076,7 +2063,7 @@ def _top_component_exact_row(
     v_row = spark.createDataFrame([([1.0] * d,)], "v array<double>").localCheckpoint(
         eager=True
     )
-    for _ in range(iters):
+    for _ in range(POWER_ITERS):
         t = emb.crossJoin(F.broadcast(v_row)).select(
             "qvec",
             # DECIMAL(25,12), NOT (38,12): Spark types the fold's
@@ -2128,9 +2115,7 @@ def _top_component_exact_row(
     return v_row
 
 
-def embedding_pc1_scores(
-    spark: SparkSession, sf_dir: str, iters: int = 8
-) -> DataFrame:
+def embedding_pc1_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project every embedding onto the EXACT dominant component — the
     PCA feature a pipeline actually materializes after the spectral step:
     pc1 scores drive diversity-balanced sampling, coverage analysis, and
@@ -2145,7 +2130,7 @@ def embedding_pc1_scores(
     final component broadcast as a one-row frame; the fold is array-local
     (no shuffle) at DECIMAL(25,12) (see the t-leg note).
     """
-    v_row = _top_component_exact_row(spark, sf_dir, iters=iters)
+    v_row = _top_component_exact_row(spark, sf_dir)
     emb = _quantized(spark, sf_dir).select("vec_id", "qvec")
     return emb.crossJoin(F.broadcast(v_row)).select(
         "vec_id",
@@ -2158,11 +2143,11 @@ def embedding_pc1_scores(
     )
 
 
-def oracle_pc1_scores(iters: int = 8, d: int = 64) -> str:
+def oracle_pc1_scores() -> str:
     """DuckDB twin of :func:`embedding_pc1_scores` — the component's
     unrolled CTE chain plus one projection join over the quantized
     vectors. ``{norms}`` spliced by the registry."""
-    base = oracle_top_component_exact(iters=iters, d=d)
+    base = oracle_top_component_exact()
     body = base[len("WITH ") : base.rindex("\nSELECT")]
     return f"""WITH {body},
 px AS MATERIALIZED (
@@ -2170,11 +2155,11 @@ px AS MATERIALIZED (
   FROM e, LATERAL unnest(generate_series(1, len(e.qv))) t(i))
 SELECT px.vec_id,
        {oracle_dsum12("CAST(px.x AS DOUBLE) * vf.val")} AS pc1_score
-FROM px JOIN v{iters} vf ON vf.pos = px.pos
+FROM px JOIN v{POWER_ITERS} vf ON vf.pos = px.pos
 GROUP BY 1"""
 
 
-def oracle_top_component_exact(iters: int = 8, d: int = 64) -> str:
+def oracle_top_component_exact() -> str:
     """DuckDB twin of :func:`embedding_top_component_exact` — the same
     iterations unrolled; per-iterate CTEs MATERIALIZED (each is consumed
     twice; inlining would re-evaluate the chain exponentially).
@@ -2182,9 +2167,9 @@ def oracle_top_component_exact(iters: int = 8, d: int = 64) -> str:
     scale = "CAST(1099511627776 AS DOUBLE)"
     ctes = [
         f"""v0 AS (SELECT CAST(i AS INTEGER) AS pos, CAST(1 AS DOUBLE) AS val
-  FROM unnest(generate_series(1, {d})) t(i))"""
+  FROM unnest(generate_series(1, {EMBED_DIM})) t(i))"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, POWER_ITERS + 1):
         p = i - 1
         ctes.append(
             f"""x{i} AS MATERIALIZED (
@@ -2204,7 +2189,7 @@ n{i} AS (SELECT sqrt({oracle_dsum12("ws * ws")}) AS nrm
 v{i} AS MATERIALIZED (SELECT pos, ws / nrm AS val FROM w{i} CROSS JOIN n{i})"""
         )
     body = ",\n".join(ctes)
-    return f"WITH {{norms}},\n{body}\nSELECT pos, val AS component FROM v{iters}"
+    return f"WITH {{norms}},\n{body}\nSELECT pos, val AS component FROM v{POWER_ITERS}"
 
 
 #: IVFPQ shortlist: candidates kept per query after the ADC stage, before
@@ -2212,76 +2197,58 @@ v{i} AS MATERIALIZED (SELECT pos, ws / nrm AS val FROM w{i} CROSS JOIN n{i})"""
 IVFPQ_SHORTLIST = 50
 
 
-def _ivfpq_codes(spark: SparkSession, sf_dir: str, km_k: int, iters: int) -> DataFrame:
+def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bucket, m, cw, cwn2): every vector's coarse cell under the
     persisted codebook plus its PQ codewords. PQ codes quantize the RAW
     fixed-point vector (no residuals), as in :func:`ann_topk_pq`."""
-    cent = _persisted_codebook(spark, sf_dir, k=km_k, iters=iters)
+    cent = _persisted_codebook(spark, sf_dir)
     emb = _quantized(spark, sf_dir)
     db = _assign(emb, _cents_row(cent))
     return _pq_encode(db, _pq_codebook(emb), "vec_id", "bucket")
 
 
-def _ivfpq_query(
-    spark: SparkSession, sf_dir: str, enc: DataFrame,
-    k: int, nprobe: int, km_k: int, iters: int, shortlist: int,
-) -> DataFrame:
+def _ivfpq_query(spark: SparkSession, sf_dir: str, enc: DataFrame, k: int) -> DataFrame:
     """The IVFADC query over a code table ``enc`` (vec_id, bucket, m, cw,
-    cwn2): probe ``nprobe`` cells, ADC-score only their codes, keep a
-    ``shortlist`` per query, exact-cosine re-rank of the shortlist."""
+    cwn2): probe ``NPROBE`` cells, ADC-score only their codes, keep an
+    ``IVFPQ_SHORTLIST`` per query, exact-cosine re-rank of the shortlist."""
     emb = _quantized(spark, sf_dir)
-    cents_row = _cents_row(_persisted_codebook(spark, sf_dir, k=km_k, iters=iters))
-    probes = _probe(emb, cents_row, nprobe)
+    cents_row = _cents_row(_persisted_codebook(spark, sf_dir))
+    probes = _probe(emb, cents_row, NPROBE)
     q_sub = _subvectors(probes, "q_qvec", "qm", "query_id", "q_n2", "bucket")
     scored = _adc(enc.join(F.broadcast(q_sub), ["bucket", "m"]))
-    return _rerank(emb, _topk(scored, shortlist, F.desc("approx_cosine"), "vec_id"), k)
+    return _rerank(emb, _topk(scored, IVFPQ_SHORTLIST, F.desc("approx_cosine"), "vec_id"), k)
 
 
-def ann_ivfpq_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    nprobe: int = 3,
-    km_k: int = 8,
-    iters: int = 3,
-    shortlist: int = IVFPQ_SHORTLIST,
-) -> DataFrame:
+def ann_ivfpq_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """IVF + PQ + exact re-rank — the ASSEMBLED production ANN pipeline
-    (the FAISS ``IVFPQ`` index shape): coarse-prune to ``nprobe``
+    (the FAISS ``IVFPQ`` index shape): coarse-prune to ``NPROBE``
     learned-centroid posting lists of the persisted exact-k-means
     codebook, ADC-score the survivors' PQ codes, then exact cosine
-    re-rank of a ``shortlist`` per query. Every stage is exact integer
+    re-rank of a ``IVFPQ_SHORTLIST`` per query. Every stage is exact integer
     arithmetic with min-id tie-breaks, so the whole composition
     hash-gates against one DuckDB oracle.
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k — cosine
     is the EXACT fixed-point value for the re-ranked survivors.
     """
-    enc = _ivfpq_codes(spark, sf_dir, km_k, iters)
-    return _ivfpq_query(spark, sf_dir, enc, k, nprobe, km_k, iters, shortlist)
+    return _ivfpq_query(spark, sf_dir, _ivfpq_codes(spark, sf_dir), k)
 
 
-def oracle_ann_ivfpq(
-    k: int = 10,
-    nprobe: int = 3,
-    km_k: int = 8,
-    iters: int = 3,
-    shortlist: int = IVFPQ_SHORTLIST,
-) -> str:
+def oracle_ann_ivfpq() -> str:
     """DuckDB twin of :func:`ann_ivfpq_topk` — the unrolled exact-k-means
     chain + IVF assignment/probing (shared with
     :func:`oracle_ann_ivf_exact`), the PQ codebook/encode/ADC CTEs
     (shared with :func:`oracle_ann_topk_pq`) restricted to the probed
     posting lists, then the exact re-rank of the shortlist. ``{norms}``
     spliced by the registry."""
-    km = oracle_kmeans_exact(k=km_k, iters=iters)
+    km = oracle_kmeans_exact()
     body = km.split("WITH {norms},\n", 1)[1].rsplit("\nSELECT", 1)[0]
     dp = f"(len(qv) // {PQ_M})"
     return f"""WITH {{norms}},
 {body},
 pf AS (
   SELECT v.vec_id, c.cid, c.n, c.s2, unnest(list_zip(v.qv, c.S)) AS z
-  FROM e v CROSS JOIN c{iters} c),
+  FROM e v CROSS JOIN c{KMEANS_ITERS} c),
 df_ AS (
   SELECT vec_id, cid, sum(CAST(z[1] AS DECIMAL(38,0)) * z[2]) AS dot,
          any_value(n) AS n, any_value(s2) AS s2
@@ -2296,7 +2263,7 @@ assign AS (
 probes AS (
   SELECT vec_id AS query_id, cid AS bucket FROM vf
   WHERE vec_id % {QUERY_MOD} = 0
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY v, cid) <= {nprobe}),
+  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY v, cid) <= {NPROBE}),
 ms AS (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m),
 sub AS (
   SELECT e.vec_id, ms.m, e.qv[ms.m * {dp} + 1 : (ms.m + 1) * {dp}] AS xm
@@ -2346,7 +2313,7 @@ sl AS (
               ELSE 0.0 END AS ac
   FROM sc
   QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY ac DESC, vec_id) <= {shortlist}),
+                             ORDER BY ac DESC, vec_id) <= {IVFPQ_SHORTLIST}),
 rp AS (
   SELECT s.query_id, s.vec_id AS neighbor_id,
          unnest(list_zip(eq.qv, en.qv)) AS z
@@ -2368,32 +2335,22 @@ cs AS (
 SELECT query_id, neighbor_id, cosine,
        CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-FROM cs QUALIFY rank <= {k}"""
+FROM cs QUALIFY rank <= {TOP_K}"""
 
 
-def _persisted_ivfpq_index(
-    spark: SparkSession, sf_dir: str, km_k: int = 8, iters: int = 3
-) -> DataFrame:
+def _persisted_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once / serve-many IVFPQ INDEX FILE: :func:`_ivfpq_codes`
     (vec_id, bucket, m, cw, cwn2) persisted as parquet — the FAISS
     ``.index`` analogue an offline index-build job writes (M codes a
     vector); the query path reads codes and never touches raw vectors
     until the re-rank."""
     return persisted(
-        spark, "ivfpq_index", f"{sf_dir}/embeddings.parquet", (km_k, iters),
-        lambda: _ivfpq_codes(spark, sf_dir, km_k, iters),
+        spark, "ivfpq_index", f"{sf_dir}/embeddings.parquet", (KMEANS_K, KMEANS_ITERS),
+        lambda: _ivfpq_codes(spark, sf_dir),
     )
 
 
-def ann_ivfpq_persisted_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    nprobe: int = 3,
-    km_k: int = 8,
-    iters: int = 3,
-    shortlist: int = IVFPQ_SHORTLIST,
-) -> DataFrame:
+def ann_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ over the PERSISTED index file (:func:`_persisted_ivfpq_index`)
     — the serving-path twin of :func:`ann_ivfpq_topk`, so the measured
     cost is the query path alone. Deterministic index build ⇒
@@ -2402,17 +2359,14 @@ def ann_ivfpq_persisted_topk(
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k.
     """
-    enc = _persisted_ivfpq_index(spark, sf_dir, km_k=km_k, iters=iters)
-    return _ivfpq_query(spark, sf_dir, enc, k, nprobe, km_k, iters, shortlist)
+    return _ivfpq_query(spark, sf_dir, _persisted_ivfpq_index(spark, sf_dir), TOP_K)
 
 
 #: Truncation prefixes evaluated by the Matryoshka recall report.
 TRUNC_DIMS = (8, 16, 32)
 
 
-def ann_truncation_recall_report(
-    spark: SparkSession, sf_dir: str, k: int = 10
-) -> DataFrame:
+def ann_truncation_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation evaluation: for each prefix
     length d' in ``TRUNC_DIMS``, run the exact top-k over only the FIRST
     d' components of every embedding and report its recall against the
@@ -2427,7 +2381,7 @@ def ann_truncation_recall_report(
     Output: (trunc_dim, n_queries, recall) ordered small-to-large dims.
     """
     emb = _quantized(spark, sf_dir)
-    full = ann_topk_bruteforce(spark, sf_dir, k=k).select(
+    full = ann_topk_bruteforce(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("full_nb")
     )
     reports = []
@@ -2435,7 +2389,7 @@ def ann_truncation_recall_report(
         t = emb.select(
             "vec_id", F.expr(f"slice(qvec, 1, {d})").alias("qvec")
         ).withColumn("n2", V.qnorm2("qvec"))
-        topk = _cosine_topk(_against_queries(t), k)
+        topk = _cosine_topk(_against_queries(t), TOP_K)
         hits = topk.join(
             full,
             (topk.query_id == full.query_id) & (topk.neighbor_id == full.full_nb),
@@ -2448,7 +2402,7 @@ def ann_truncation_recall_report(
     return reduce(DataFrame.unionByName, reports).select(
         "trunc_dim",
         F.lit(nq).cast("bigint").alias("n_queries"),
-        (F.col("n_hits").cast("double") / F.lit(float(k * nq))).alias("recall"),
+        (F.col("n_hits").cast("double") / F.lit(float(TOP_K * nq))).alias("recall"),
     )
 
 
@@ -2470,7 +2424,7 @@ def _dot(a: str, b: str) -> str:
     )
 
 
-def oracle_ann_truncation_recall(k: int = 10) -> str:
+def oracle_ann_truncation_recall() -> str:
     """DuckDB twin of :func:`ann_truncation_recall_report` — full-dim
     exact top-k CTE + one truncated top-k CTE per dim, recall by
     semi-join counting. ``{norms}`` spliced by the registry."""
@@ -2489,7 +2443,7 @@ def oracle_ann_truncation_recall(k: int = 10) -> str:
              AS cosine
     FROM e v JOIN e q ON q.vec_id % {QUERY_MOD} = 0 AND v.vec_id <> q.vec_id)
   QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY cosine DESC, neighbor_id) <= {k}),
+                             ORDER BY cosine DESC, neighbor_id) <= {TOP_K}),
 h{d} AS (
   SELECT CAST({d} AS INTEGER) AS trunc_dim, count(*) AS n_hits
   FROM t{d} t JOIN fullk f
@@ -2510,10 +2464,10 @@ fullk AS (
     JOIN n nv ON nv.vec_id = v.vec_id
     JOIN n nq ON nq.vec_id = q.vec_id)
   QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY cosine DESC, neighbor_id) <= {k}),
+                             ORDER BY cosine DESC, neighbor_id) <= {TOP_K}),
 nq_ AS (SELECT count(DISTINCT query_id) AS nq FROM fullk),
 {body},
 hh AS ({hs})
 SELECT hh.trunc_dim, CAST(nq_.nq AS BIGINT) AS n_queries,
-       CAST(hh.n_hits AS DOUBLE) / ({k} * nq_.nq) AS recall
+       CAST(hh.n_hits AS DOUBLE) / ({TOP_K} * nq_.nq) AS recall
 FROM hh CROSS JOIN nq_"""

@@ -22,6 +22,20 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dquant, oracle_dquant, oracle_dsum12
 from ..tables import load, persisted, spread
 
+#: Top-k sizes: bigrams / PMI collocations, TF-IDF terms per doc, BM25 hits.
+BIGRAM_TOP_K = 50
+TFIDF_TOP_K = 3
+BM25_K = 5
+#: Min bigram count of a PMI collocation.
+PMI_MIN_COUNT = 5
+#: Vocabulary size of the coverage report.
+VOCAB_SIZE = 1000
+#: Additive smoothing of the bigram language model.
+BIGRAM_ALPHA = 0.5
+#: BPE: merge rounds and the doc sample (every BPE_DOC_MOD-th doc).
+BPE_MERGES = 3
+BPE_DOC_MOD = 10
+
 #: Explicit whitespace class, spelled identically for Java (Spark) and RE2
 #: (DuckDB). Java's ``\s`` is ``[ \t\n\x0B\f\r]`` but RE2's ``\s`` omits
 #: ``\x0B`` (vertical tab), so no pattern here may use bare ``\s`` — the
@@ -256,8 +270,8 @@ FROM toks"""
 
 
 # --- Corpus-wide n-gram statistics -------------------------------------------
-def top_bigrams(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
-    """The ``k`` most frequent lowercased token bigrams across the corpus
+def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``BIGRAM_TOP_K`` most frequent lowercased token bigrams across the corpus
     (count = total occurrences, not distinct-per-doc). Explode → one
     count shuffle keyed by the bigram → TakeOrderedAndProject top-k; at
     any corpus size the shuffle carries per-partition partial counts.
@@ -278,11 +292,11 @@ def top_bigrams(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), "bigram")
-        .limit(k)
+        .limit(BIGRAM_TOP_K)
     )
 
 
-def oracle_top_bigrams(k: int = 50) -> str:
+def oracle_top_bigrams() -> str:
     return f"""WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '{TOKEN_SQL}') AS t FROM documents),
 bg AS (
@@ -290,12 +304,12 @@ bg AS (
   FROM (SELECT t, unnest(generate_series(1, greatest(len(t) - 1, 1))) AS i FROM toks)
   WHERE len(t) >= 2)
 SELECT bigram, count(*) AS n FROM bg
-GROUP BY 1 ORDER BY n DESC, bigram LIMIT {k}"""
+GROUP BY 1 ORDER BY n DESC, bigram LIMIT {BIGRAM_TOP_K}"""
 
 
 # --- TF-IDF ------------------------------------------------------------------
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Top-``k`` characteristic terms per document by tf-idf.
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` characteristic terms per document by tf-idf.
 
     tf = occurrences of the term in the doc; idf = ln(N / df) with df =
     number of docs containing the term. Ranking uses the INTEGER pair
@@ -320,7 +334,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
         tf.join(df_, "term")
         .join(F.broadcast(n_docs))
         .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        .where(F.col("rn") <= TFIDF_TOP_K)
         .select(
             "doc_id",
             "term",
@@ -332,7 +346,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     )
 
 
-def oracle_tfidf_top_terms(k: int = 3) -> str:
+def oracle_tfidf_top_terms() -> str:
     return f"""WITH terms AS (
   SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '{TOKEN_SQL}')) AS term
   FROM documents),
@@ -346,11 +360,13 @@ ranked AS (
 SELECT doc_id, term, tf, df,
        {oracle_dquant("tf * ln(CAST(n_docs AS DOUBLE) / df)")} AS tfidf,
        CAST(rn AS INTEGER) AS rank
-FROM ranked WHERE rn <= {k}"""
+FROM ranked WHERE rn <= {TFIDF_TOP_K}"""
 
 
 # --- Vocabulary building -----------------------------------------------------
-def vocabulary_coverage(spark: SparkSession, sf_dir: str, v: int = 1000) -> DataFrame:
+def vocabulary_coverage(
+    spark: SparkSession, sf_dir: str, v: int = VOCAB_SIZE
+) -> DataFrame:
     """Top-``v`` corpus vocabulary with cumulative token coverage — the
     tokenizer-training precursor (how many types cover what fraction of
     the token stream). Output: (rank, token, freq, cum_coverage).
@@ -387,13 +403,13 @@ def vocabulary_coverage(spark: SparkSession, sf_dir: str, v: int = 1000) -> Data
     )
 
 
-def oracle_vocabulary_coverage(v: int = 1000) -> str:
+def oracle_vocabulary_coverage() -> str:
     return f"""WITH toks AS (
   SELECT unnest(string_split_regex(trim(lower(text)), '{TOKEN_SQL}')) AS token
   FROM documents),
 freq AS (SELECT token, count(*) AS freq FROM toks GROUP BY 1),
 tot AS (SELECT count(*) AS total_tokens FROM toks),
-top AS (SELECT token, freq FROM freq ORDER BY freq DESC, token LIMIT {v})
+top AS (SELECT token, freq FROM freq ORDER BY freq DESC, token LIMIT {VOCAB_SIZE})
 SELECT CAST(row_number() OVER (ORDER BY freq DESC, token) AS INTEGER) AS rank,
        token, freq,
        CAST(SUM(freq) OVER (ORDER BY freq DESC, token
@@ -451,9 +467,7 @@ FROM terms JOIN freq USING (token) CROSS JOIN tot
 GROUP BY doc_id"""
 
 
-def bigram_logprob_scores(
-    spark: SparkSession, sf_dir: str, alpha: float = 0.5
-) -> DataFrame:
+def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     add-α-smoothed bigram LM — the second-order perplexity-proxy filter
     (:func:`unigram_logprob_scores` scores token frequency; this scores
@@ -489,7 +503,7 @@ def bigram_logprob_scores(
         .agg(F.count_distinct("t").alias("v"))
     )
     logp = F.log(
-        (F.col("c12") + F.lit(alpha)) / (F.col("c1") + F.lit(alpha) * F.col("v"))
+        (F.col("c12") + F.lit(BIGRAM_ALPHA)) / (F.col("c1") + F.lit(BIGRAM_ALPHA) * F.col("v"))
     )
     return (
         pairs.join(c12, ["w1", "w2"])
@@ -505,7 +519,7 @@ def bigram_logprob_scores(
     )
 
 
-def oracle_bigram_logprob_scores(alpha: float = 0.5) -> str:
+def oracle_bigram_logprob_scores() -> str:
     return f"""WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '{TOKEN_SQL}') AS t
   FROM documents),
@@ -518,7 +532,7 @@ ctx AS (SELECT w1, count(*) AS c1 FROM pairs GROUP BY 1),
 v AS (SELECT count(DISTINCT token) AS v
       FROM (SELECT unnest(t) AS token FROM toks))
 SELECT doc_id, count(*) AS n_bigrams,
-       {oracle_dsum12(f"ln((c12 + {alpha}) / (c1 + {alpha} * v))")}
+       {oracle_dsum12(f"ln((c12 + {BIGRAM_ALPHA}) / (c1 + {BIGRAM_ALPHA} * v))")}
          / count(*) AS avg_logp
 FROM pairs JOIN c12 USING (w1, w2) JOIN ctx USING (w1) CROSS JOIN v
 GROUP BY doc_id"""
@@ -1024,7 +1038,7 @@ FROM t"""
 
 
 def collocations_pmi(
-    spark: SparkSession, sf_dir: str, k: int = 50, min_count: int = 5
+    spark: SparkSession, sf_dir: str, k: int = BIGRAM_TOP_K, min_count: int = PMI_MIN_COUNT
 ) -> DataFrame:
     """Collocation mining (word2phrase precursor): the ``k`` most frequent
     token bigrams with their pointwise mutual information —
@@ -1096,7 +1110,7 @@ def collocations_pmi(
     )
 
 
-def oracle_collocations_pmi(k: int = 50, min_count: int = 5) -> str:
+def oracle_collocations_pmi() -> str:
     return f"""WITH toks AS (
   SELECT unnest(string_split_regex(trim(lower(text)), '{TOKEN_SQL}')) AS w
   FROM documents),
@@ -1113,8 +1127,8 @@ bg AS (
 n2 AS (SELECT count(*) AS n2 FROM bg),
 top AS (
   SELECT bigram, count(*) AS n FROM bg GROUP BY 1
-  HAVING count(*) >= {min_count}
-  ORDER BY n DESC, bigram LIMIT {k})
+  HAVING count(*) >= {PMI_MIN_COUNT}
+  ORDER BY n DESC, bigram LIMIT {BIGRAM_TOP_K})
 SELECT bigram, n,
        {oracle_dquant("ln((CAST(n AS DOUBLE) / n2) / ((CAST(ua.cw AS DOUBLE) / n1) * (CAST(ub.cw AS DOUBLE) / n1)))")} AS pmi
 FROM top
@@ -1326,10 +1340,7 @@ _BM25_TFNORM = (
 
 
 def bm25_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 5,
-    max_term_df: int | None = None,
+    spark: SparkSession, sf_dir: str, k: int = BM25_K, max_term_df: int | None = None
 ) -> DataFrame:
     """BM25 lexical retrieval: every ``BM25_QMOD``-th document acts as a
     query; candidates are scored by Lucene-style BM25 over shared 3-token
@@ -1421,7 +1432,7 @@ def bm25_topk(
     )
 
 
-def oracle_bm25_topk(k: int = 5, max_term_df: int | None = None) -> str:
+def oracle_bm25_topk(k: int = BM25_K, max_term_df: int | None = None) -> str:
     ksh = BM25_SHINGLE_K
     cap = "" if max_term_df is None else f" WHERE df.df <= {max_term_df}"
     return f"""WITH toks AS (
@@ -1628,7 +1639,7 @@ def _bpe_round(syms: DataFrame) -> tuple[DataFrame, DataFrame]:
     return _bpe_apply(syms, top1, probe_empty=False), rows
 
 
-def bpe_merges(spark: SparkSession, sf_dir: str, n_merges: int = 3) -> DataFrame:
+def bpe_merges(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES) -> DataFrame:
     """The first ``n_merges`` rounds of byte-pair-encoding tokenizer
     training over the corpus — the merge table (merge_rank, lhs, rhs,
     pair_count) a BPE tokenizer is built from, computed fully
@@ -1681,7 +1692,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str, n_merges: int = 3) -> DataFrame
     )
 
 
-def _oracle_bpe_rounds(n_merges: int = 3) -> str:
+def _oracle_bpe_rounds(n_merges: int = BPE_MERGES) -> str:
     """The unrolled BPE round CTEs shared by the training and encoding
     oracles: ``words`` / ``s0`` symbolization, then per round the pair
     count (``p{{i}}``), LIMIT-1 argmax (``m{{i}}``), and window-function
@@ -1732,7 +1743,7 @@ s0 AS (
 {rounds_sql}"""
 
 
-def oracle_bpe_merges(n_merges: int = 3) -> str:
+def oracle_bpe_merges(n_merges: int = BPE_MERGES) -> str:
     """DuckDB twin of :func:`bpe_merges` — the same rounds unrolled as
     chained CTEs (pair count → LIMIT 1 argmax → window-function merge
     application), so the whole merge table hash-gates.
@@ -1753,7 +1764,7 @@ def oracle_bpe_merges(n_merges: int = 3) -> str:
 
 
 def _persisted_bpe_merges(
-    spark: SparkSession, sf_dir: str, n_merges: int = 3
+    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> DataFrame:
     """Train-once / encode-many merge table: :func:`bpe_merges` output
     persisted as parquet. At 100 TB the merge table is a vocabulary-
@@ -1766,7 +1777,7 @@ def _persisted_bpe_merges(
 
 
 def bpe_encode(
-    spark: SparkSession, sf_dir: str, n_merges: int = 3, doc_mod: int = 10
+    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES, doc_mod: int = BPE_DOC_MOD
 ) -> DataFrame:
     """Encode documents into BPE token-id sequences by applying the
     PERSISTED merge table (:func:`_persisted_bpe_merges`) in rank order
@@ -1806,7 +1817,9 @@ def bpe_encode(
     )
 
 
-def _bpe_doc_words(spark: SparkSession, sf_dir: str, doc_mod: int = 10) -> DataFrame:
+def _bpe_doc_words(
+    spark: SparkSession, sf_dir: str, doc_mod: int = BPE_DOC_MOD
+) -> DataFrame:
     """(doc_id, wpos, w) for the encode subset — the one corpus-sized
     frame of the encode path (shared by batch and stream twins)."""
     docs = spread(load(spark, sf_dir, "documents")).where(
@@ -1825,7 +1838,7 @@ def _bpe_doc_words(spark: SparkSession, sf_dir: str, doc_mod: int = 10) -> DataF
 
 
 def _bpe_encoded_vocab(
-    spark: SparkSession, sf_dir: str, words: DataFrame, n_merges: int = 3
+    spark: SparkSession, sf_dir: str, words: DataFrame, n_merges: int = BPE_MERGES
 ) -> DataFrame:
     """The COMPILED tokenizer vocabulary: every distinct word of the
     encode subset walked through the persisted merge table in rank
@@ -1861,9 +1874,7 @@ def _bpe_encoded_vocab(
     return syms.select("w", "pos", "sym").join(F.broadcast(token_ids), "sym")
 
 
-def _persisted_bpe_vocab(
-    spark: SparkSession, sf_dir: str, n_merges: int = 3, doc_mod: int = 10
-) -> DataFrame:
+def _persisted_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-once / serve-many COMPILED VOCABULARY artifact — (w, pos,
     sym, token_id) parquet. At 100 TB this is the tokenizer file every
     encode/serving job broadcasts; an arriving word missing from it
@@ -1872,17 +1883,15 @@ def _persisted_bpe_vocab(
     contain no OOV by construction."""
 
     def vocab() -> DataFrame:
-        words = _bpe_doc_words(spark, sf_dir, doc_mod=doc_mod).localCheckpoint(
-            eager=True
-        )
-        return _bpe_encoded_vocab(spark, sf_dir, words, n_merges=n_merges)
+        words = _bpe_doc_words(spark, sf_dir).localCheckpoint(eager=True)
+        return _bpe_encoded_vocab(spark, sf_dir, words)
 
     return persisted(
-        spark, "bpe_vocab", f"{sf_dir}/documents.parquet", (n_merges, doc_mod), vocab
+        spark, "bpe_vocab", f"{sf_dir}/documents.parquet", (BPE_MERGES, BPE_DOC_MOD), vocab
     )
 
 
-def oracle_bpe_encode(n_merges: int = 3, doc_mod: int = 10) -> str:
+def oracle_bpe_encode(n_merges: int = BPE_MERGES, doc_mod: int = BPE_DOC_MOD) -> str:
     """DuckDB twin of :func:`bpe_encode` — training unrolled inline
     (the oracle's job is semantics, not the train/serve cost split),
     then the encoded-vocabulary join-back over the doc subset."""
@@ -1906,7 +1915,7 @@ JOIN tok t ON t.sym = s.sym"""
 
 
 def bpe_compression(
-    spark: SparkSession, sf_dir: str, n_merges: int = 3, doc_mod: int = 10
+    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> DataFrame:
     """Per-document BPE compression report over :func:`bpe_encode`'s
     output — the tokenizer-efficiency diagnostic a training pipeline
@@ -1917,7 +1926,7 @@ def bpe_compression(
 
     Output: (doc_id, n_words, n_chars, n_tokens, chars_per_token).
     """
-    enc = bpe_encode(spark, sf_dir, n_merges=n_merges, doc_mod=doc_mod)
+    enc = bpe_encode(spark, sf_dir, n_merges=n_merges)
     return enc.groupBy("doc_id").agg(
         F.countDistinct("wpos").alias("n_words"),
         F.sum(F.length("token")).cast("bigint").alias("n_chars"),
@@ -1929,12 +1938,12 @@ def bpe_compression(
     )
 
 
-def oracle_bpe_compression(n_merges: int = 3, doc_mod: int = 10) -> str:
+def oracle_bpe_compression() -> str:
     """DuckDB twin of :func:`bpe_compression` — the encode oracle nested
     as a CTE, then the same per-doc aggregation (integer sums CAST to
     BIGINT: DuckDB types sum(int) HUGEINT — the r3/r5 lesson)."""
     return f"""WITH enc AS (
-{oracle_bpe_encode(n_merges=n_merges, doc_mod=doc_mod)}
+{oracle_bpe_encode()}
 )
 SELECT doc_id, count(DISTINCT wpos) AS n_words,
        CAST(sum(length(token)) AS BIGINT) AS n_chars,
@@ -2048,7 +2057,7 @@ FROM synth"""
 
 
 def bpe_roundtrip_report(
-    spark: SparkSession, sf_dir: str, n_merges: int = 3, doc_mod: int = 10
+    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> DataFrame:
     """Tokenizer round-trip QA — DECODE the encoded corpus and verify it
     reproduces the original words: BPE merges only ever concatenate
@@ -2065,14 +2074,14 @@ def bpe_roundtrip_report(
     Output: (doc_id, n_words, n_ok, roundtrip_ok) — n_ok counts words
     whose decoded form equals the original, roundtrip_ok = all words ok.
     """
-    enc = bpe_encode(spark, sf_dir, n_merges=n_merges, doc_mod=doc_mod)
+    enc = bpe_encode(spark, sf_dir, n_merges=n_merges)
     decoded = enc.groupBy("doc_id", "wpos").agg(
         F.expr(
             "array_join(transform(array_sort(collect_list(struct(spos, token))),"
             " s -> s.token), '')"
         ).alias("decoded")
     )
-    words = _bpe_doc_words(spark, sf_dir, doc_mod=doc_mod)
+    words = _bpe_doc_words(spark, sf_dir)
     per_word = decoded.join(words, ["doc_id", "wpos"])
     return per_word.groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
@@ -2083,10 +2092,10 @@ def bpe_roundtrip_report(
     )
 
 
-def oracle_bpe_roundtrip(n_merges: int = 3, doc_mod: int = 10) -> str:
+def oracle_bpe_roundtrip() -> str:
     """DuckDB twin of :func:`bpe_roundtrip_report` — the encode oracle
     nested, position-ordered string_agg reassembly, per-doc verdict."""
-    return f"""WITH enc AS ({oracle_bpe_encode(n_merges, doc_mod)}),
+    return f"""WITH enc AS ({oracle_bpe_encode()}),
 dec AS (
   SELECT doc_id, wpos, string_agg(token, '' ORDER BY spos) AS decoded
   FROM enc GROUP BY 1, 2),
@@ -2095,7 +2104,7 @@ dw AS (
   FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
         FROM (SELECT doc_id,
                      string_split_regex(trim(lower(text)), '{TOKEN_SQL}') AS t
-              FROM documents WHERE doc_id % {doc_mod} = 0))
+              FROM documents WHERE doc_id % {BPE_DOC_MOD} = 0))
   WHERE t[i] <> '')
 SELECT d.doc_id, count(*) AS n_words,
        count(CASE WHEN dec.decoded = d.w THEN 1 END) AS n_ok,
@@ -2111,13 +2120,7 @@ RAKE_MAX_LEN = 4
 RAKE_MIN_DOCS = 2
 
 
-def rake_keyphrases(
-    spark: SparkSession,
-    sf_dir: str,
-    min_len: int = RAKE_MIN_LEN,
-    max_len: int = RAKE_MAX_LEN,
-    min_docs: int = RAKE_MIN_DOCS,
-) -> DataFrame:
+def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyphrase extraction over the corpus (Rose et al. 2010):
     candidate phrases are maximal runs of non-stopword tokens; each
     word's score is degree/frequency over the phrase co-occurrence
@@ -2126,8 +2129,8 @@ def rake_keyphrases(
     actually about before mixing it in.
 
     Determinism (the tfidf lesson): phrase MEMBERSHIP is decided by
-    integer filters only (run length in [min_len, max_len], appears in
-    ≥ min_docs docs) — the float score is a reported value, never a
+    integer filters only (run length in [RAKE_MIN_LEN, RAKE_MAX_LEN], appears in
+    ≥ RAKE_MIN_DOCS docs) — the float score is a reported value, never a
     membership or ranking key; per-word degree/frequency are exact
     global int64 counts, each word score is one correctly-rounded
     double division, and the phrase score folds through DECIMAL(38,12)
@@ -2168,7 +2171,7 @@ def rake_keyphrases(
             ).alias("phrase"),
             F.count("*").alias("len"),
         )
-        .where(F.col("len").between(min_len, max_len))
+        .where(F.col("len").between(RAKE_MIN_LEN, RAKE_MAX_LEN))
     )
     occ_words = words.join(runs.select("doc_id", "run_id", "len"), ["doc_id", "run_id"])
     wstats = occ_words.groupBy("token").agg(
@@ -2180,7 +2183,7 @@ def rake_keyphrases(
             F.count("*").alias("n_occurrences"),
             F.countDistinct("doc_id").alias("n_docs"),
         )
-        .where(F.col("n_docs") >= min_docs)
+        .where(F.col("n_docs") >= RAKE_MIN_DOCS)
     )
     pw = phrases.select("phrase", F.explode(F.split("phrase", " ")).alias("token"))
     word_score = F.col("deg").cast("double") / F.col("freq")
@@ -2194,11 +2197,7 @@ def rake_keyphrases(
     )
 
 
-def oracle_rake_keyphrases(
-    min_len: int = RAKE_MIN_LEN,
-    max_len: int = RAKE_MAX_LEN,
-    min_docs: int = RAKE_MIN_DOCS,
-) -> str:
+def oracle_rake_keyphrases() -> str:
     """DuckDB twin of :func:`rake_keyphrases` — same run segmentation,
     same integer membership filters, same decimal-folded score."""
     stops = ", ".join(f"'{s}'" for s in QUALITY_STOPWORDS)
@@ -2220,7 +2219,7 @@ runs AS (
          string_agg(token, ' ' ORDER BY pos) AS phrase,
          count(*) AS len
   FROM words GROUP BY 1, 2
-  HAVING count(*) BETWEEN {min_len} AND {max_len}),
+  HAVING count(*) BETWEEN {RAKE_MIN_LEN} AND {RAKE_MAX_LEN}),
 occw AS (
   SELECT w.token, r.len
   FROM words w JOIN runs r USING (doc_id, run_id)),
@@ -2230,7 +2229,7 @@ ph AS (
   SELECT phrase, CAST(count(*) AS BIGINT) AS n_occurrences,
          CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
   FROM runs GROUP BY 1
-  HAVING count(DISTINCT doc_id) >= {min_docs}),
+  HAVING count(DISTINCT doc_id) >= {RAKE_MIN_DOCS}),
 pw AS (SELECT phrase, unnest(string_split(phrase, ' ')) AS token FROM ph),
 sc AS (
   SELECT phrase, {oracle_dsum12("CAST(deg AS DOUBLE) / freq")} AS rake_score

@@ -33,8 +33,15 @@ from pyspark.sql import functions as F
 
 from . import metrics
 
+#: The dashboard's ``lastMinutes`` window.
+LAST_MINUTES = 10
+#: Trailing window (minutes) of the visit-anomaly baseline.
+ANOMALY_WINDOW_MINUTES = 30
 
-def time_axis(events: DataFrame, anchor_now: bool = False, last_minutes: int = 10) -> DataFrame:
+
+def time_axis(
+    events: DataFrame, anchor_now: bool = False, last_minutes: int = LAST_MINUTES
+) -> DataFrame:
     """R1 time-axis generator (TimeseriesMetricsController.java:144-152).
 
     The reference floors now() to the minute and steps back N minutes
@@ -90,18 +97,18 @@ def visits_timeseries(events: DataFrame) -> DataFrame:
     return _axis_join(events, metrics.visits_per_minute(events), "visits")
 
 
-def visits_timeseries_last(events: DataFrame, last_minutes: int = 10) -> DataFrame:
+def visits_timeseries_last(events: DataFrame) -> DataFrame:
     """R2 with the reference's ``lastMinutes=N`` read window
-    (TimeseriesMetricsController.java:43 — default 10): the axis is the N
-    most recent minutes ending at the data's max(ts) minute ("now" in a
-    replay), missing minutes still 0-filled.
+    (TimeseriesMetricsController.java:43 — default 10): the axis is the
+    ``LAST_MINUTES`` most recent minutes ending at the data's max(ts)
+    minute ("now" in a replay), missing minutes still 0-filled.
 
     The window filter lands on the grain's GROUP BY input, so at scale the
-    scan prunes to N minutes of partitions before aggregating.
+    scan prunes to ``LAST_MINUTES`` minutes of partitions before aggregating.
     """
     bounds = events.agg(F.date_trunc("minute", F.max("ts")).alias("t1")).select(
         F.col("t1"),
-        (F.col("t1") - F.expr(f"interval {last_minutes - 1} minutes")).alias("t0"),
+        (F.col("t1") - F.expr(f"interval {LAST_MINUTES - 1} minutes")).alias("t0"),
     )
     axis = bounds.select(
         F.explode(F.sequence("t0", "t1", F.expr("interval 1 minute"))).alias("minute")
@@ -326,9 +333,9 @@ def variant_series_correlation(events: DataFrame) -> DataFrame:
     )
 
 
-def visit_anomalies(events: DataFrame, window_minutes: int = 30) -> DataFrame:
+def visit_anomalies(events: DataFrame) -> DataFrame:
     """Monitoring extension of the reference's dashboard: flag minutes whose
-    visit count deviates ≥3σ from the trailing ``window_minutes`` mean
+    visit count deviates ≥3σ from the trailing ``ANOMALY_WINDOW_MINUTES`` mean
     (strictly-prior frame, so a spike can't mask itself).
 
     Mean/σ come from integer power sums over the ROWS frame (counts are
@@ -343,10 +350,7 @@ def visit_anomalies(events: DataFrame, window_minutes: int = 30) -> DataFrame:
     mv = events.groupBy(
         F.date_trunc("minute", "ts").alias("minute")
     ).agg(F.count("*").alias("visits"))
-    w = (
-        Window.orderBy("minute")
-        .rowsBetween(-window_minutes, -1)
-    )
+    w = Window.orderBy("minute").rowsBetween(-ANOMALY_WINDOW_MINUTES, -1)
     n = F.count("visits").over(w)
     sx = F.sum("visits").over(w)
     sxx = F.sum(F.col("visits") * F.col("visits")).over(w)
@@ -358,7 +362,7 @@ def visit_anomalies(events: DataFrame, window_minutes: int = 30) -> DataFrame:
         n.alias("n_trail"),
         mean.alias("trail_mean"),
         F.sqrt(var).alias("trail_std"),
-    ).where(F.col("n_trail") == window_minutes)
+    ).where(F.col("n_trail") == ANOMALY_WINDOW_MINUTES)
     return out.select(
         "minute",
         "visits",

@@ -13,10 +13,10 @@ import re
 from pyspark.sql import DataFrame
 
 
-def plan_string(df: DataFrame, mode: str = "formatted") -> str:
-    """The ``df.explain(mode)`` text as a string (explain() only prints)."""
+def plan_string(df: DataFrame) -> str:
+    """The ``df.explain("formatted")`` text as a string (explain() only prints)."""
     jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def has_broadcast_join(df: DataFrame) -> bool:

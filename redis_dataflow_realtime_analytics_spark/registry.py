@@ -324,7 +324,7 @@ GROUP BY 1, 2""",
 
 q(
     "r2_visits_timeseries_last10",
-    lambda s, d: timeseries.visits_timeseries_last(_ev(s, d), 10),
+    lambda s, d: timeseries.visits_timeseries_last(_ev(s, d)),
     f"""{EV_CTE},
 b AS (SELECT date_trunc('minute', max(ts)) AS t1 FROM ev),
 axis AS (
@@ -985,7 +985,7 @@ q(
 )
 q(
     "multimodal_decode_features",
-    lambda s, d: multimodal.decode_features(multimodal.with_image_blob(s, d), fake=False)
+    lambda s, d: multimodal.decode_features(multimodal.with_image_blob(s, d))
     .select(
         "doc_id",
         "n_bytes",
@@ -1028,7 +1028,7 @@ FROM b GROUP BY doc_id, w, h, n_pay""",
 # single-channel leg of the Netpbm decoder. SQL-oracled like the P6 key.
 q(
     "multimodal_decode_gray",
-    lambda s, d: multimodal.decode_features(multimodal.with_gray_blob(s, d), fake=False)
+    lambda s, d: multimodal.decode_features(multimodal.with_gray_blob(s, d))
     .select(
         "doc_id",
         "n_bytes",
@@ -1153,7 +1153,7 @@ FROM v GROUP BY doc_id, n_samples, ds""",
 # projected as content_hex for the driver hasher (binary is unhashable).
 q(
     "multimodal_resample_audio",
-    lambda s, d: multimodal.resample_audio(multimodal.with_audio_blob(s, d), factor=2)
+    lambda s, d: multimodal.resample_audio(multimodal.with_audio_blob(s, d))
     .select(
         "doc_id",
         F.hex("content").alias("content_hex"),
@@ -1232,7 +1232,7 @@ q(
 )
 q(
     "multimodal_sample_video_frames",
-    lambda s, d: multimodal.sample_video_frames(multimodal.with_video_blob(s, d), every=2),
+    lambda s, d: multimodal.sample_video_frames(multimodal.with_video_blob(s, d)),
     r"""WITH a AS (
   SELECT doc_id, CAST(doc_id % 8 + 2 AS INTEGER) AS n_frames,
          sha256(CAST(doc_id AS VARCHAR) || text) AS hx
@@ -1666,7 +1666,7 @@ UNION ALL {_oracle_pairs('SADD', f"concat('set_dthr_', {_MINUTE_KEY})", 'user_id
 def _g1_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.generator import generate_events
 
-    return generate_events(spark, n=10_000)
+    return generate_events(spark)
 
 
 # generator distribution is engine-hash-specific → rows-only; invariants
@@ -1708,7 +1708,7 @@ q(
 q(
     "multimodal_resize",
     lambda s, d: multimodal.resize_images(
-        multimodal.with_image_blob(s, d), width=32, height=32, fake=False
+        multimodal.with_image_blob(s, d), width=32, height=32
     ).select(
         "doc_id",
         F.hex("content").alias("content_hex"),

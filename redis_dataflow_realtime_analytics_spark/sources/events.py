@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+#: Files per micro-batch of a parquet stream (one file per trigger).
+FILES_PER_TRIGGER = 1
+
 #: Wire schema of the reference's Pub/Sub JSON messages
 #: (LogEvent.java:36-42; generator loggen/message_generator.py:84-88).
 #: All four fields are required — the AutoValue builder throws on missing
@@ -52,7 +55,7 @@ EVENTS_TABLE_SCHEMA = T.StructType(
 )
 
 
-def parse_wire_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_wire_events(raw: DataFrame) -> DataFrame:
     """JSON wire string → typed event record, dropping malformed rows.
 
     Mirrors ``ParseMessageAsLogElement.java:35-49``: Jackson snake_case
@@ -62,7 +65,7 @@ def parse_wire_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
 
     Works identically on batch and streaming DataFrames.
     """
-    parsed = raw.select(F.from_json(F.col(value_col), EVENT_WIRE_SCHEMA).alias("e"))
+    parsed = raw.select(F.from_json(F.col("value"), EVENT_WIRE_SCHEMA).alias("e"))
     return parsed.where(
         F.col("e").isNotNull()
         & F.col("e.uid").isNotNull()
@@ -72,9 +75,7 @@ def parse_wire_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
     ).select("e.*")
 
 
-def parse_wire_events_with_corrupt(
-    raw: DataFrame, value_col: str = "value"
-) -> DataFrame:
+def parse_wire_events_with_corrupt(raw: DataFrame) -> DataFrame:
     """Parse variant that RETAINS malformed input instead of dropping it.
 
     The reference logs-and-drops (throttled, ``ParseMessageAsLogElement
@@ -85,8 +86,8 @@ def parse_wire_events_with_corrupt(
     null-rejection rule decides validity.
     """
     parsed = raw.select(
-        F.col(value_col).alias("_raw"),
-        F.from_json(F.col(value_col), EVENT_WIRE_SCHEMA).alias("e"),
+        F.col("value").alias("_raw"),
+        F.from_json(F.col("value"), EVENT_WIRE_SCHEMA).alias("e"),
     )
     ok = (
         F.col("e").isNotNull()
@@ -160,7 +161,7 @@ def read_parquet_stream(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int = FILES_PER_TRIGGER,
 ) -> DataFrame:
     """The package's one streaming parquet scan: ``path`` is a directory
     replayed in file modification-time order, ``max_files_per_trigger``
@@ -176,7 +177,9 @@ def read_parquet_stream(
     return reader.parquet(path)
 
 
-def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
+def read_events_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = FILES_PER_TRIGGER
+) -> DataFrame:
     """Streaming scan of events parquet (file source ≙ Pub/Sub source).
 
     The reference's source is ``PubsubIO.readStrings()``

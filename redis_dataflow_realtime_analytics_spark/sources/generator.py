@@ -25,6 +25,9 @@ VARIANTS = ["default", "1", "2", "3"]
 #: window of UID_WINDOW ids whose base drifts every DRIFT_SECONDS.
 UID_WINDOW = 1000
 DRIFT_SECONDS = 600
+#: First event time and event rate of the batch generator.
+START = "2024-01-01 00:00:00"
+EVENTS_PER_SECOND = 10
 
 
 def _wire_columns(id_col: str, ts_col: str) -> list[F.Column]:
@@ -45,12 +48,7 @@ def _wire_columns(id_col: str, ts_col: str) -> list[F.Column]:
     ]
 
 
-def generate_events(
-    spark: SparkSession,
-    n: int = 10_000,
-    start: str = "2024-01-01 00:00:00",
-    events_per_second: int = 10,
-) -> DataFrame:
+def generate_events(spark: SparkSession, n: int = 10_000) -> DataFrame:
     """Deterministic batch generation of n wire-schema events.
 
     Partition-friendly: `spark.range` splits the id space evenly; every
@@ -60,8 +58,8 @@ def generate_events(
     base = spark.range(n).withColumn(
         "ts",
         F.timestamp_seconds(
-            F.unix_timestamp(F.lit(start).cast("timestamp"))
-            + (F.col("id") / events_per_second).cast("long")
+            F.unix_timestamp(F.lit(START).cast("timestamp"))
+            + (F.col("id") / EVENTS_PER_SECOND).cast("long")
         ),
     )
     return base.select(*_wire_columns("id", "ts"))

@@ -56,13 +56,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from ..operators.metrics import CMS_DEPTH, CMS_WIDTH, _cms_pairs, approx_uniques, cms_sketch
+from ..operators.metrics import (
+    CMS_WIDTH,
+    HH_PHI,
+    _cms_heavy_hitters,
+    approx_uniques,
+    cms_sketch,
+    minute,
+)
 from ..sources.events import normalize_events, read_events_stream, read_parquet_stream
 from ..tables import foreach_batch, materialized
+from .state_reader import N_CHUNKS
 
-WATERMARK = "10 minutes"
+WATERMARK_MINUTES = 10
+WATERMARK = f"{WATERMARK_MINUTES} minutes"
 # the only columns any SketchStoreWriter family reads
 STORE_COLUMNS = ("ts", "variant", "user_id")
+#: Files per micro-batch of the multi-file replays (heartbeat-capped
+#: joins and the docs streams): fewer batches, same output.
+REPLAY_FILES_PER_TRIGGER = 2
+#: Share of the source replayed as history before the live chunks.
+HISTORY_FRACTION = 0.5
+#: Which chunk the duplicate-delivery replay delivers twice.
+DUP_CHUNK = 1
 
 
 @contextmanager
@@ -89,10 +105,6 @@ def _state_partitions(spark: SparkSession):
     finally:
         if old is not None:
             spark.conf.set(key, old)
-
-
-def _minute(col: str = "ts") -> F.Column:
-    return F.date_trunc("minute", F.col(col)).alias("minute")
 
 
 def _replay_to_memory(
@@ -131,9 +143,7 @@ def _detach_memory_sink(spark: SparkSession, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Built-in streaming aggregations (stream/batch parity surface)
 # ---------------------------------------------------------------------------
-def stream_visits_per_minute(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_visits_per_minute(spark: SparkSession, events_path: str) -> DataFrame:
     """W1 as a streaming query: replay ``events_path`` with
     ``trigger(availableNow)`` through a watermarked 1-minute windowed count
     into a memory sink; return the final aggregate (minute, visits).
@@ -142,7 +152,7 @@ def stream_visits_per_minute(
     batch ``metrics.visits_per_minute`` on the same data — asserted by the
     driver's oracle (same SQL as w1) and tests/test_streaming.py.
     """
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     agg = (
         ev.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 minute").alias("w"))
@@ -153,10 +163,10 @@ def stream_visits_per_minute(
 
 
 def stream_uniques_per_minute_approx(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
+    spark: SparkSession, events_path: str
 ) -> DataFrame:
     """W11 (HLL leg) as a streaming query: approx distinct users per minute."""
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     agg = (
         ev.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 minute").alias("w"))
@@ -166,15 +176,13 @@ def stream_uniques_per_minute_approx(
     return _replay_to_memory(spark, agg, "uniq")
 
 
-def stream_sliding_visits(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_sliding_visits(spark: SparkSession, events_path: str) -> DataFrame:
     """Sliding (hopping) window in streaming mode: visits per 5-minute
     window hopping every minute — the streaming twin of
     ``operators.sessions.sliding_visits`` (same oracle, stream/batch
     parity). Watermark bounds the open-window state to
     (watermark + window)/hop windows per key-space slice."""
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     agg = (
         ev.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "5 minutes", "1 minute").alias("w"))
@@ -184,16 +192,14 @@ def stream_sliding_visits(
     return _replay_to_memory(spark, agg, "slide")
 
 
-def stream_user_sessions(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_user_sessions(spark: SparkSession, events_path: str) -> DataFrame:
     """Gap-based session windows in streaming mode — the streaming twin of
     ``operators.sessions.user_sessions`` (same oracle). ``session_window``
     keeps one open session per user in state; the watermark closes and
     emits sessions once no on-time event can extend them."""
     from ..operators.sessions import SESSION_GAP
 
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     agg = (
         ev.withWatermark("ts", WATERMARK)
         .groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("w"))
@@ -208,9 +214,7 @@ def stream_user_sessions(
     return _replay_to_memory(spark, agg, "sess")
 
 
-def stream_uniques_per_ev_minute(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_uniques_per_ev_minute(spark: SparkSession, events_path: str) -> DataFrame:
     """W2 (exact leg) as a streaming query: EXACT unique users per
     (experiment, variant, minute). Streaming aggregation cannot hold a
     per-group distinct set, so exactness comes from the standard two-stage
@@ -218,7 +222,7 @@ def stream_uniques_per_ev_minute(
     one row per distinct (window, experiment, variant, user) inside the
     watermark horizon), then an ordinary windowed count. Oracle: the same
     SQL as batch ``w2`` — stream/batch parity for an exact distinct."""
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     agg = (
         ev.withWatermark("ts", WATERMARK)
         .select(
@@ -240,9 +244,7 @@ def stream_uniques_per_ev_minute(
     return _replay_to_memory(spark, agg, "evuniq")
 
 
-def stream_deduped_visits(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_deduped_visits(spark: SparkSession, events_path: str) -> DataFrame:
     """At-least-once delivery repaired by streaming dedup: the source is
     read TWICE and unioned (simulating redelivery of every event — the
     reference's Pub/Sub at-least-once wart that makes its INCRBY legs
@@ -253,8 +255,8 @@ def stream_deduped_visits(
 
     State: one entry per event_id within the watermark horizon — bounded
     by (event rate × watermark), the scalable streaming-dedup contract."""
-    a = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
-    b = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    a = normalize_events(read_events_stream(spark, events_path))
+    b = normalize_events(read_events_stream(spark, events_path))
     ev = a.unionByName(b)
     agg = (
         ev.withWatermark("ts", WATERMARK)
@@ -307,9 +309,7 @@ def _click_error_join(ev: DataFrame, how: str) -> DataFrame:
     )
 
 
-def stream_click_error_join(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def stream_click_error_join(spark: SparkSession, events_path: str) -> DataFrame:
     """Watermarked stream-stream inner join: every (click, error) pair of
     the same user where the error lands within 5 minutes after the click —
     the funnel/attribution join shape.
@@ -325,7 +325,7 @@ def stream_click_error_join(
     Oracle: the identical batch self-join in SQL — stream/batch parity for
     the interval-join semantics.
     """
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     return _replay_to_memory(spark, _click_error_join(ev, "inner"), "ssjoin", "append")
 
 
@@ -333,7 +333,6 @@ def stream_enriched_events(
     spark: SparkSession,
     events_path: str,
     customer: DataFrame,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Stream-static dimension enrichment: the event *stream* left-joined
     to the static ``customer`` dimension — the canonical streaming lookup
@@ -349,7 +348,7 @@ def stream_enriched_events(
     """
     from ..operators.timeseries import events_enriched_with_customer
 
-    ev = normalize_events(read_events_stream(spark, events_path, max_files_per_trigger))
+    ev = normalize_events(read_events_stream(spark, events_path))
     return _replay_to_memory(
         spark, events_enriched_with_customer(ev, customer), "enrich", "append"
     )
@@ -391,8 +390,8 @@ class SketchStoreWriter:
         ev = batch_df.select(*STORE_COLUMNS).cache()
         try:
             families = {
-                "visits": ev.groupBy(_minute()).agg(F.count("*").alias("visits")),
-                "user_sketch_minute": ev.groupBy(_minute()).agg(
+                "visits": ev.groupBy(minute()).agg(F.count("*").alias("visits")),
+                "user_sketch_minute": ev.groupBy(minute()).agg(
                     F.hll_sketch_agg("user_id").alias("sketch")
                 ),
                 "user_sketch_variant": ev.groupBy("variant").agg(
@@ -401,7 +400,7 @@ class SketchStoreWriter:
                 "user_set_variant": ev.select("variant", "user_id").distinct(),
                 # per-batch count-min cells — the frequency-sketch family:
                 # bounded depth×width partial, merged at read by summing
-                "user_cms": cms_sketch(ev, "user_id"),
+                "user_cms": cms_sketch(ev),
             }
 
             @inheritable_thread_target(ev.sparkSession)
@@ -423,7 +422,6 @@ def run_sketch_ingest(
     events_path: str,
     store_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Replay ``events_path`` through the foreachBatch store (availableNow).
 
@@ -431,9 +429,7 @@ def run_sketch_ingest(
     ``writeStream``: the sink receives an already-planned batch, so only a
     projection here prunes the file scan to three columns and drops the
     ``props`` JSON parse from the plan."""
-    ev = normalize_events(
-        read_events_stream(spark, events_path, max_files_per_trigger)
-    ).select(*STORE_COLUMNS)
+    ev = normalize_events(read_events_stream(spark, events_path)).select(*STORE_COLUMNS)
     q = (
         ev.withWatermark("ts", WATERMARK)
         .writeStream.foreachBatch(SketchStoreWriter(store_dir))
@@ -482,9 +478,7 @@ def read_uniques_per_variant_exact(spark: SparkSession, store_dir: str) -> DataF
     )
 
 
-def read_heavy_hitters(
-    spark: SparkSession, store_dir: str, phi: float = 0.0075
-) -> DataFrame:
+def read_heavy_hitters(spark: SparkSession, store_dir: str) -> DataFrame:
     """All-time heavy hitters HH(φ) from the count-min family: sum the
     per-batch cells into the full sketch (the CMS merge IS a per-cell
     sum), probe the candidate keys from the distinct-pairs family with
@@ -504,22 +498,12 @@ def read_heavy_hitters(
         .groupBy("row_idx", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    total = cells.where(F.col("row_idx") == 0).agg(F.sum("cnt").alias("_total"))
-    cands = (
-        spark.read.parquet(f"{store_dir}/user_set_variant")
-        .select("user_id")
-        .distinct()
-    )
-    probes = _cms_pairs(cands, "user_id", CMS_DEPTH, CMS_WIDTH)
-    est = (
-        probes.join(cells, ["row_idx", "bucket"])
-        .groupBy("user_id")
-        .agg(F.min("cnt").alias("est_count"))
-    )
-    return (
-        est.crossJoin(F.broadcast(total))
-        .where(F.col("est_count") >= F.col("_total") * phi)
-        .select("user_id", "est_count")
+    return _cms_heavy_hitters(
+        spark.read.parquet(f"{store_dir}/user_set_variant").select("user_id").distinct(),
+        cells,
+        cells.where(F.col("row_idx") == 0).agg(F.sum("cnt").alias("_total")),
+        CMS_WIDTH,
+        HH_PHI,
     )
 
 
@@ -609,7 +593,7 @@ def _sorted(tbl, *cols: str):
     return tbl.take(pc.sort_indices(tbl, sort_keys=[(c, "ascending") for c in cols]))
 
 
-def _heartbeat_replay_dir(events_path: str, n_chunks: int = 3) -> str:
+def _heartbeat_replay_dir(events_path: str, n_chunks: int = N_CHUNKS) -> str:
     """Materialize the events fixture as a time-ordered multi-file replay
     plus two far-future WATERMARK-HEARTBEAT files.
 
@@ -657,9 +641,7 @@ def _heartbeat_replay_dir(events_path: str, n_chunks: int = 3) -> str:
     return _replay_dir("heartbeat", events_path, (n_chunks,), build)
 
 
-def stream_click_error_left_join(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 2
-) -> DataFrame:
+def stream_click_error_left_join(spark: SparkSession, events_path: str) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER interval join: every click
     paired with each error by the same user within the 5 minutes after it,
     AND every click with no such error as a NULL row — the attribution
@@ -678,7 +660,7 @@ def stream_click_error_left_join(
     Oracle: the identical batch LEFT JOIN — stream/batch parity for the
     outer interval-join semantics.
 
-    ``max_files_per_trigger=2`` (r5): with the 5-file replay (3 data
+    ``REPLAY_FILES_PER_TRIGGER`` = 2 (r5): with the 5-file replay (3 data
     chunks + 2 heartbeats) this schedules 3 micro-batches —
     [c0,c1], [c2,hb0], [hb1] — instead of 5. Mid-replay watermark
     advancement and the heartbeat-flush eviction are both still
@@ -686,12 +668,11 @@ def stream_click_error_left_join(
     applied in batch 3, whose hb1 row triggers the final eviction), and
     the output is byte-identical; the r4 bench showed ~2.4× of the inner
     twin's wall time was pure per-micro-batch harness overhead at
-    mFPT=1 (r4 verdict item 6). The 30 M-event soak keeps mFPT=1 for
-    the long-replay state-drain evidence.
+    mFPT=1 (r4 verdict item 6).
     """
     replay_dir = _heartbeat_replay_dir(events_path)
     ev = normalize_events(
-        read_events_stream(spark, replay_dir, max_files_per_trigger)
+        read_events_stream(spark, replay_dir, REPLAY_FILES_PER_TRIGGER)
     )
     joined = _click_error_join(ev, "leftOuter")
     # The heartbeat filter must run on the MATERIALIZED output, not inside
@@ -729,7 +710,7 @@ def stream_quality_filtered_docs(spark: SparkSession, docs_path: str) -> DataFra
     return _replay_to_memory(spark, filtered, "qualdocs", "append")
 
 
-def _chunked_events_replay_dir(events_path: str, n_chunks: int = 3) -> str:
+def _chunked_events_replay_dir(events_path: str, n_chunks: int = N_CHUNKS) -> str:
     """ts-ordered (stable sort) multi-file replay of the events fixture —
     the single-file fixture otherwise replays as ONE batch, which never
     exercises cross-batch state. Chunk boundaries fall wherever the ts
@@ -745,7 +726,9 @@ def _chunked_events_replay_dir(events_path: str, n_chunks: int = 3) -> str:
 
 
 def _split_replay_dir(
-    events_path: str, history_fraction: float = 0.5, n_live_chunks: int = 3
+    events_path: str,
+    history_fraction: float = HISTORY_FRACTION,
+    n_live_chunks: int = N_CHUNKS,
 ) -> tuple[str, str]:
     """(ts, event_id)-ordered split of the events fixture into a single
     HISTORY parquet (the batch-backfill input) and a LIVE replay
@@ -782,7 +765,7 @@ LATE_DAYS_MOD = 40
 JITTER_MINUTES_MOD = 13
 
 
-def _late_arrival_replay_dir(events_path: str, n_chunks: int = 3) -> str:
+def _late_arrival_replay_dir(events_path: str, n_chunks: int = N_CHUNKS) -> str:
     """Materialize the events fixture ordered by simulated ARRIVAL time
     (event time + deterministic per-event delay, ties by event_id) as an
     n-chunk multi-file replay — the out-of-order delivery the ts-ordered
@@ -813,10 +796,7 @@ def _late_arrival_replay_dir(events_path: str, n_chunks: int = 3) -> str:
 
 
 def stream_late_arrivals_audit(
-    spark: SparkSession,
-    events_path: str,
-    n_chunks: int = 3,
-    delay_minutes: int = 10,
+    spark: SparkSession, events_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """Late-data observability: per-minute count of events that a
     watermarked streaming aggregation WOULD DROP — the measurable face of
@@ -856,8 +836,8 @@ def stream_late_arrivals_audit(
     """
     replay = _late_arrival_replay_dir(events_path, n_chunks)
     # the audit sink reads only ts; project before the foreachBatch barrier
-    stream = read_events_stream(spark, replay, max_files_per_trigger=1).select("ts")
-    delay_us = delay_minutes * 60 * 1_000_000
+    stream = read_events_stream(spark, replay).select("ts")
+    delay_us = WATERMARK_MINUTES * 60 * 1_000_000
     # Sequential micro-batches (availableNow) make this closure-held
     # watermark state exact; a multi-query production deployment would
     # read it from StreamingQueryProgress instead. Two-deep state
@@ -909,7 +889,6 @@ def stream_late_arrivals_audit(
 def stream_visits_with_late_backfill(
     spark: SparkSession,
     events_path: str,
-    n_chunks: int = 3,
 ) -> DataFrame:
     """The production REPAIR of the watermark/late-data delta: a real
     update-mode watermarked per-minute count over the out-of-order
@@ -929,11 +908,11 @@ def stream_visits_with_late_backfill(
 
     Output: (minute, visits).
     """
-    replay = _late_arrival_replay_dir(events_path, n_chunks)
-    late = stream_late_arrivals_audit(spark, events_path, n_chunks)
+    replay = _late_arrival_replay_dir(events_path)
+    late = stream_late_arrivals_audit(spark, events_path)
     agg = (
-        read_events_stream(spark, replay, max_files_per_trigger=1)
-        .withWatermark("ts", "10 minutes")
+        read_events_stream(spark, replay)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("minute"), "n")
@@ -955,7 +934,7 @@ def stream_visits_with_late_backfill(
     )
 
 
-def oracle_stream_late_arrivals(n_chunks: int = 3, delay_minutes: int = 10) -> str:
+def oracle_stream_late_arrivals() -> str:
     """DuckDB twin of :func:`stream_late_arrivals_audit` — same arrival
     order, chunking, drop rule, and the engine's measured enforcement
     lag: chunk N filters against the ms-truncated max event time over
@@ -968,7 +947,7 @@ def oracle_stream_late_arrivals(n_chunks: int = 3, delay_minutes: int = 10) -> s
               END AS arrival
   FROM events
 ),
-n AS (SELECT greatest(1, CAST(ceil(count(*) / {n_chunks}.0) AS BIGINT)) AS step FROM b),
+n AS (SELECT greatest(1, CAST(ceil(count(*) / {N_CHUNKS}.0) AS BIGINT)) AS step FROM b),
 e AS (
   SELECT ts,
          (row_number() OVER (ORDER BY arrival, event_id) - 1)
@@ -980,7 +959,7 @@ wm AS (
   SELECT chunk,
          (max(mus) OVER (ORDER BY chunk
                          ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-            // 1000) * 1000 - {delay_minutes * 60 * 1_000_000} AS wmark_us
+            // 1000) * 1000 - {WATERMARK_MINUTES * 60 * 1_000_000} AS wmark_us
   FROM mx
 )
 SELECT date_trunc('minute', e.ts) AS minute,
@@ -990,7 +969,7 @@ WHERE epoch_us(date_trunc('minute', e.ts)) + 60000000 <= wm.wmark_us
 GROUP BY 1"""
 
 
-def _chunked_docs_replay_dir(docs_path: str, n_chunks: int = 3) -> str:
+def _chunked_docs_replay_dir(docs_path: str, n_chunks: int = N_CHUNKS) -> str:
     """Materialize the documents fixture as a doc_id-ordered multi-file
     replay (one micro-batch per file) — the streaming analogue of a crawl
     landing in an object-store drop folder one shipment at a time."""
@@ -1003,13 +982,13 @@ def _chunked_docs_replay_dir(docs_path: str, n_chunks: int = 3) -> str:
 
 
 def _docs_stream(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3, max_files_per_trigger: int = 2
+    spark: SparkSession, docs_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """The documents fixture as a stream: its :func:`_chunked_docs_replay_dir`
     replay under the source's schema, the front end of every docs-stream
     key.
 
-    mFPT note (r10 optimization): ``maxFilesPerTrigger=2`` gives 2
+    mFPT note (r10 optimization): ``REPLAY_FILES_PER_TRIGGER`` = 2 gives 2
     micro-batches ([c0,c1],[c2]) instead of 3, the r5 click_error
     precedent. Each consumer's output is batching-invariant
     (per-document stateless, probes of persisted/static artifacts, or
@@ -1025,7 +1004,7 @@ def _docs_stream(
         spark,
         _chunked_docs_replay_dir(docs_path, n_chunks),
         spark.read.parquet(docs_path).schema,
-        max_files_per_trigger,
+        REPLAY_FILES_PER_TRIGGER,
     )
 
 
@@ -1057,7 +1036,7 @@ class IngestDedupWriter:
 
 
 def stream_ingest_dedup(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
+    spark: SparkSession, docs_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """Streaming incremental exact dedup — the ingest-side twin of
     ``dedup.incremental_new_docs``: documents arrive in shipments (one
@@ -1111,9 +1090,7 @@ def _contamination_probe(spark: SparkSession, docs_path: str):
     return contaminated
 
 
-def stream_decontamination_gate(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
-) -> DataFrame:
+def stream_decontamination_gate(spark: SparkSession, docs_path: str) -> DataFrame:
     """Streaming decontamination at ingest: each documents shipment is
     checked against the held-out benchmark's k-token shingle set and only
     CLEAN corpus documents flow through — eval-leakage screening moved
@@ -1138,7 +1115,7 @@ def stream_decontamination_gate(
     """
     from ..operators.dedup import DECON_MOD
 
-    stream = _docs_stream(spark, docs_path, n_chunks)
+    stream = _docs_stream(spark, docs_path)
     contaminated = _contamination_probe(spark, docs_path)
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
@@ -1150,12 +1127,7 @@ def stream_decontamination_gate(
     return foreach_batch(stream, ingest, spark.read.parquet)
 
 
-def stream_drop_audit(
-    spark: SparkSession,
-    docs_path: str,
-    n_chunks: int = 3,
-    max_files_per_trigger: int = 2,
-) -> DataFrame:
+def stream_drop_audit(spark: SparkSession, docs_path: str) -> DataFrame:
     """Streaming arrival-path twin of ``dedup.corpus_drop_audit``: each
     documents shipment is pushed through the SAME first-failing-stage
     ladder (benchmark holdout -> quality gate -> exact dedup ->
@@ -1185,7 +1157,7 @@ def stream_drop_audit(
     from ..operators.dedup import DECON_MOD, _norm_text, drop_audit_ladder
     from ..operators.text import quality_gate_frame
 
-    stream = _docs_stream(spark, docs_path, n_chunks, max_files_per_trigger)
+    stream = _docs_stream(spark, docs_path)
     contaminated = _contamination_probe(spark, docs_path)
 
     def audit(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
@@ -1258,10 +1230,8 @@ def stream_drop_audit(
     return foreach_batch(stream, audit, spark.read.parquet)
 
 
-def stream_hierarchical_rollup(
-    spark: SparkSession, events_path: str, max_files_per_trigger: int = 2
-) -> DataFrame:
-    # default mFPT=2 (r10): 2 micro-batches over the 3-chunk replay —
+def stream_hierarchical_rollup(spark: SparkSession, events_path: str) -> DataFrame:
+    # REPLAY_FILES_PER_TRIGGER (r10): 2 micro-batches over the 3-chunk replay —
     # partials are decimal-additive, so the merged hierarchy is
     # bit-identical at any batching (see _docs_stream note).
     """Streaming twin of ``metrics.hierarchical_time_rollup`` — the
@@ -1280,7 +1250,7 @@ def stream_hierarchical_rollup(
     """
     replay = _chunked_events_replay_dir(events_path)
     stream = normalize_events(
-        read_events_stream(spark, replay, max_files_per_trigger)
+        read_events_stream(spark, replay, REPLAY_FILES_PER_TRIGGER)
     )
 
     def ingest(store: str, batch: DataFrame, _batch_id: int) -> None:
@@ -1317,9 +1287,7 @@ def stream_hierarchical_rollup(
     return shape(m, "minute").unionAll(shape(h, "hour")).unionAll(shape(d, "day"))
 
 
-def stream_image_ingest_features(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
-) -> DataFrame:
+def stream_image_ingest_features(spark: SparkSession, docs_path: str) -> DataFrame:
     """Streaming multimodal ingest: image blobs arrive in shipments and
     the per-channel intensity histogram is extracted ON ARRIVAL — the
     blob synthesis (pure Catalyst projection) and the Arrow histogram
@@ -1335,14 +1303,12 @@ def stream_image_ingest_features(
     """
     from ..operators.multimodal import image_blob_projection, image_histogram
 
-    stream = _docs_stream(spark, docs_path, n_chunks)
+    stream = _docs_stream(spark, docs_path)
     hist = image_histogram(image_blob_projection(stream))
     return _replay_to_memory(spark, hist, "imghist", "append")
 
 
-def stream_curated_ingest(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
-) -> DataFrame:
+def stream_curated_ingest(spark: SparkSession, docs_path: str) -> DataFrame:
     """The streaming CURATED ingest: each shipment passes the row-local
     quality prefilter, collapses its own duplicates, anti-joins the
     accumulated content-hash index, and appends — i.e.
@@ -1359,7 +1325,7 @@ def stream_curated_ingest(
     """
     from ..operators.text import GATE_MIN_QUALITY, quality_projection
 
-    stream = _docs_stream(spark, docs_path, n_chunks)
+    stream = _docs_stream(spark, docs_path)
 
     def ingest(index_dir: str, batch: DataFrame, batch_id: int) -> None:
         kept = (
@@ -1499,11 +1465,7 @@ def stream_postings_ingest(spark: SparkSession, docs_path: str) -> DataFrame:
 
 
 def stream_shard_assignment(
-    spark: SparkSession,
-    docs_path: str,
-    n_chunks: int = 3,
-    target_tokens: int = 4096,
-    bucket_docs: int = 256,
+    spark: SparkSession, docs_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """Streaming shard layout for the arrival path: shipments of the
     post-watermark tail (doc_id >= max*9/10, the fixture's high-water
@@ -1525,6 +1487,7 @@ def stream_shard_assignment(
     arrival doc across all shipments.
     """
     from ..operators.sampling import (
+        SHARD_TARGET_TOKENS,
         _persisted_shard_state,
         _two_level_tokens_before,
     )
@@ -1532,7 +1495,7 @@ def stream_shard_assignment(
 
     stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
-    state = _persisted_shard_state(spark, sf_dir, bucket_docs=bucket_docs)
+    state = _persisted_shard_state(spark, sf_dir)
     corpus_total = int(
         state.agg(F.coalesce(F.sum("bucket_tokens"), F.lit(0))).first()[0]
     )
@@ -1558,7 +1521,7 @@ def stream_shard_assignment(
         else:
             stream_total = 0
         offset = corpus_total + stream_total
-        scanned = _two_level_tokens_before(arrivals, bucket_docs=bucket_docs)
+        scanned = _two_level_tokens_before(arrivals)
         out = scanned.select(
             "doc_id",
             "n_tokens",
@@ -1567,7 +1530,7 @@ def stream_shard_assignment(
             "doc_id",
             "n_tokens",
             "tokens_before",
-            F.expr(f"tokens_before div {target_tokens}").alias("shard_id"),
+            F.expr(f"tokens_before div {SHARD_TARGET_TOKENS}").alias("shard_id"),
         )
         out.write.mode("append").parquet(out_dir)
         batch_tokens = arrivals.agg(
@@ -1580,9 +1543,7 @@ def stream_shard_assignment(
     return foreach_batch(stream, ingest, spark.read.parquet)
 
 
-def stream_image_ahash_probe(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
-) -> DataFrame:
+def stream_image_ahash_probe(spark: SparkSession, docs_path: str) -> DataFrame:
     """Streaming image near-dup probe at ingest: each shipment's
     incoming images (doc_id % 10 == 0) are decoded and aHashed ON
     ARRIVAL and probed against the persisted banded index of the
@@ -1604,7 +1565,7 @@ def stream_image_ahash_probe(
         image_ahash,
     )
 
-    stream = _docs_stream(spark, docs_path, n_chunks)
+    stream = _docs_stream(spark, docs_path)
     sf_dir = os.path.dirname(docs_path)
     idx = (
         _persisted_ahash_index(spark, sf_dir)
@@ -1645,7 +1606,7 @@ def stream_image_ahash_probe(
 
 
 def stream_model_scores(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
+    spark: SparkSession, docs_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """Streaming quality-model inference at ingest: each shipment is
     featurized and scored with the PERSISTED perceptron weights AND the
@@ -1680,11 +1641,7 @@ def stream_model_scores(
 
 
 def stream_bpe_encode(
-    spark: SparkSession,
-    docs_path: str,
-    n_chunks: int = 2,
-    n_merges: int = 3,
-    doc_mod: int = 10,
+    spark: SparkSession, docs_path: str, n_chunks: int = 2
 ) -> DataFrame:
     """Streaming tokenizer application at ingest: each arriving shipment
     is encoded into BPE token-id sequences by joining the PERSISTED
@@ -1701,17 +1658,15 @@ def stream_bpe_encode(
     exactly equal to the batch encoder (``text.bpe_encode``), so the
     same unrolled-training oracle gates it.
     """
-    from ..operators.text import TOKEN_RE, _persisted_bpe_vocab
+    from ..operators.text import BPE_DOC_MOD, TOKEN_RE, _persisted_bpe_vocab
 
     stream = _docs_stream(spark, docs_path, n_chunks)
     sf_dir = os.path.dirname(docs_path)
-    vocab = _persisted_bpe_vocab(
-        spark, sf_dir, n_merges=n_merges, doc_mod=doc_mod
-    ).localCheckpoint(eager=True)
+    vocab = _persisted_bpe_vocab(spark, sf_dir).localCheckpoint(eager=True)
 
     def ingest(out_dir: str, batch: DataFrame, _batch_id: int) -> None:
         words = (
-            batch.where(F.expr(f"doc_id % {doc_mod} = 0"))
+            batch.where(F.expr(f"doc_id % {BPE_DOC_MOD} = 0"))
             .select(
                 "doc_id",
                 F.posexplode(
@@ -1738,7 +1693,7 @@ def stream_bpe_encode(
 
 
 def stream_entity_probe(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
+    spark: SparkSession, docs_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """Streaming record linkage at ingest: each shipment's noisy
     registry records are matched against the PERSISTED linkage index of
@@ -1820,9 +1775,7 @@ def stream_entity_probe(
     return foreach_batch(stream, ingest, spark.read.parquet)
 
 
-def stream_neardup_probe(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
-) -> DataFrame:
+def stream_neardup_probe(spark: SparkSession, docs_path: str) -> DataFrame:
     """Streaming near-dup detection at ingest: each shipment's incoming
     documents (``doc_id % 10 = 0``) compute their PORTABLE MinHash
     signatures batch-locally and probe the PERSISTED banded index of the
@@ -1848,7 +1801,7 @@ def stream_neardup_probe(
 
     from ..operators import dedup as dd
 
-    stream = _docs_stream(spark, docs_path, n_chunks)
+    stream = _docs_stream(spark, docs_path)
     sf_dir = os.path.dirname(docs_path)
     banded_ix, sig_ix = (
         ix.localCheckpoint(eager=True)
@@ -1877,7 +1830,7 @@ def stream_neardup_probe(
 
 
 def stream_constraint_report(
-    spark: SparkSession, docs_path: str, n_chunks: int = 3
+    spark: SparkSession, docs_path: str, n_chunks: int = N_CHUNKS
 ) -> DataFrame:
     """Streaming data-validation with MERGEABLE metric state (Deequ's
     incremental-metrics shape): every shipment contributes one row of
@@ -1918,7 +1871,7 @@ def stream_constraint_report(
 # Exactly-once vs INCRBY: the duplicate-delivery audit (SURVEY §4 delta 1)
 # ---------------------------------------------------------------------------
 def _duplicate_delivery_replay_dir(
-    events_path: str, n_chunks: int = 3, dup_chunk: int = 1
+    events_path: str, n_chunks: int = N_CHUNKS, dup_chunk: int = DUP_CHUNK
 ) -> str:
     """(ts, event_id)-ordered chunked replay where chunk ``dup_chunk`` is
     REDELIVERED — written again, byte-identical, as the final file. This
@@ -1943,8 +1896,8 @@ def _duplicate_delivery_replay_dir(
 def stream_duplicate_delivery_audit(
     spark: SparkSession,
     events_path: str,
-    n_chunks: int = 3,
-    dup_chunk: int = 1,
+    n_chunks: int = N_CHUNKS,
+    dup_chunk: int = DUP_CHUNK,
 ) -> DataFrame:
     """Make the exactly-once sink claim MEASURABLE: replay the fixture
     with one chunk redelivered (:func:`_duplicate_delivery_replay_dir`)
@@ -1983,9 +1936,7 @@ def stream_duplicate_delivery_audit(
     """
     replay = _duplicate_delivery_replay_dir(events_path, n_chunks, dup_chunk)
     # the sink reads only event_id and ts; project before the barrier
-    stream = read_events_stream(spark, replay, max_files_per_trigger=1).select(
-        "event_id", "ts"
-    )
+    stream = read_events_stream(spark, replay).select("event_id", "ts")
     read = spark.read.schema("minute timestamp, n bigint").parquet
 
     def sink(store_dir: str, batch: DataFrame, _batch_id: int) -> None:
@@ -2073,7 +2024,7 @@ def stream_duplicate_delivery_audit(
 
 
 def oracle_stream_duplicate_delivery(
-    ev_cte: str, n_chunks: int = 3, dup_chunk: int = 1
+    ev_cte: str, n_chunks: int = N_CHUNKS, dup_chunk: int = DUP_CHUNK
 ) -> str:
     """DuckDB twin of :func:`stream_duplicate_delivery_audit` — re-derives
     chunk membership under the same (ts, event_id) total order and MODELS

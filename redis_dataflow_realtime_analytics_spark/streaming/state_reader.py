@@ -74,9 +74,7 @@ def _ordered_chunked_replay_dir(events_path: str, n_chunks: int = N_CHUNKS) -> s
     )
 
 
-def _checkpointed_run(
-    spark: SparkSession, events_path: str, kind: str, n_chunks: int = N_CHUNKS
-) -> str:
+def _checkpointed_run(spark: SparkSession, events_path: str, kind: str) -> str:
     """Run the ``kind`` uniques op ("legacy" = applyInPandasWithState /
     HDFS provider, "tws" = transformWithStateInPandas MapState /
     RocksDB) over the ordered replay to a content-keyed checkpoint and
@@ -95,9 +93,9 @@ def _checkpointed_run(
     return materialized(
         f"state_reader_ckpt_{kind}",
         events_path,
-        (n_chunks,),
+        (N_CHUNKS,),
         lambda ckpt: run(
-            spark, _ordered_chunked_replay_dir(events_path, n_chunks), checkpoint_dir=ckpt
+            spark, _ordered_chunked_replay_dir(events_path), checkpoint_dir=ckpt
         ).collect(),
     )
 

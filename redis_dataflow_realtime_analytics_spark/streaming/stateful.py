@@ -28,7 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..sources.events import normalize_events, read_events_stream
+from ..operators.sessions import SESSION_GAP_MINUTES
+from ..sources.events import FILES_PER_TRIGGER, normalize_events, read_events_stream
+from .pipeline import HISTORY_FRACTION, WATERMARK
 
 # The stateful processors are nested classes (pickled by value), but
 # cloudpickle serializes their references to module-LEVEL helpers
@@ -48,7 +50,7 @@ STATE_SCHEMA = "uids array<string>"
 
 
 def _fresh_uids(batch: set, count: int, seen) -> list:
-    """The membership step shared by the TWS uniques processors: the
+    """The membership step of the TWS uniques processor: the
     sorted uids of ``batch`` NOT already in the ``seen`` MapState, which
     holds ``count`` uids.
 
@@ -92,7 +94,7 @@ def _fresh_uids(batch: set, count: int, seen) -> list:
 def uniques_updates(
     spark: SparkSession,
     events_path: str,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int = FILES_PER_TRIGGER,
 ) -> DataFrame:
     """The UNSTARTED streaming transform behind
     :func:`stream_exact_uniques_per_variant`: per-micro-batch (variant,
@@ -125,7 +127,6 @@ def uniques_updates(
 def stream_exact_uniques_per_variant(
     spark: SparkSession,
     events_path: str,
-    max_files_per_trigger: int = 1,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Replay ``events_path`` through the stateful operator (availableNow);
@@ -135,7 +136,7 @@ def stream_exact_uniques_per_variant(
     afterwards (default: engine temp checkpoint)."""
     from .pipeline import _replay_to_memory
 
-    updates = uniques_updates(spark, events_path, max_files_per_trigger)
+    updates = uniques_updates(spark, events_path)
     return (
         _replay_to_memory(spark, updates, "state_uniq", "update", checkpoint_dir)
         .groupBy("variant")
@@ -145,13 +146,44 @@ def stream_exact_uniques_per_variant(
 
 SESSION_OUT_SCHEMA = "user_id bigint, start_us bigint, end_us bigint, n_events bigint"
 SESSION_STATE_SCHEMA = "start bigint, last bigint, n bigint"
+SESSION_GAP_US = SESSION_GAP_MINUTES * 60 * 1_000_000
+
+
+def _split_sessions(
+    ts: list[int], open_: tuple[int, int, int]
+) -> tuple[list[tuple[int, int, int]], tuple[int, int, int]]:
+    """Fold the sorted event times ``ts`` (µs) of one user into its open
+    session ``(start, last, n)``: the sessions closed on the way, and the
+    session left open. Shared by the legacy and the TWS session twins.
+
+    STRICT > matches Spark session_window's measured boundary (an event
+    at exactly last+gap stays in the session — the r7 hypothesis sweep
+    caught the >= variant diverging from the batch twin on a planted
+    exact-gap pair). The merge is order-insensitive: a late event
+    admitted by the watermark in a LATER micro-batch may precede the
+    open session's last (or even first) event — min/max instead of blind
+    assignment, so ``last`` never moves backwards and the eviction timer
+    equals the true session end. (An admitted event older than
+    start − gap would need a list of open sessions per key; with
+    watermark delay ≤ gap that case is the session_window merge
+    anyway.)"""
+    cur_s, cur_l, cur_n = open_
+    closed = []
+    for t in ts:
+        if t - cur_l > SESSION_GAP_US and cur_n > 0:
+            closed.append((cur_s, cur_l, cur_n))
+            cur_s, cur_l, cur_n = t, t, 1
+        else:
+            cur_s = min(cur_s, t)
+            cur_l = max(cur_l, t)
+            cur_n += 1
+    return closed, (cur_s, cur_l, cur_n)
 
 
 def sessions_updates(
     spark: SparkSession,
     events_path: str,
-    gap_minutes: int = 30,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int = FILES_PER_TRIGGER,
     prebuilt_replay: bool = False,
 ) -> DataFrame:
     """The UNSTARTED append-mode transform behind
@@ -182,7 +214,6 @@ def sessions_updates(
     Output: (user_id, session_start, session_end, n_events) with
     session_end = last event + gap (session_window semantics).
     """
-    gap_us = gap_minutes * 60 * 1_000_000
 
     def update(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -191,7 +222,7 @@ def sessions_updates(
             return {
                 "user_id": key[0],
                 "start_us": s,
-                "end_us": l + gap_us,
+                "end_us": l + SESSION_GAP_US,
                 "n_events": n,
             }
 
@@ -205,39 +236,17 @@ def sessions_updates(
         )
         if not ts:
             return
-        if state.exists:
-            cur_s, cur_l, cur_n = state.get
-        else:
-            cur_s, cur_l, cur_n = ts[0], ts[0], 0
-            ts = ts  # first event counted in the loop below
-        closed = []
-        for t in ts:
-            # STRICT > matches Spark session_window's measured boundary
-            # (an event at exactly last+gap stays in the session — the
-            # r7 hypothesis sweep caught the >= variant diverging from
-            # the batch twin on a planted exact-gap pair)
-            if t - cur_l > gap_us and cur_n > 0:
-                closed.append(row(cur_s, cur_l, cur_n))
-                cur_s, cur_l, cur_n = t, t, 1
-            else:
-                # order-insensitive merge: a late event admitted by the
-                # watermark in a LATER micro-batch may precede the open
-                # session's last (or even first) event — min/max instead
-                # of blind assignment, so `last` never moves backwards
-                # and the eviction timer equals the true session end.
-                # (An admitted event older than start − gap would need a
-                # list of open sessions per key; with watermark delay ≤
-                # gap that case is the session_window merge anyway.)
-                cur_s = min(cur_s, t)
-                cur_l = max(cur_l, t)
-                cur_n += 1
+        # the first event is counted by the fold
+        closed, (cur_s, cur_l, cur_n) = _split_sessions(
+            ts, state.get if state.exists else (ts[0], ts[0], 0)
+        )
         state.update((cur_s, cur_l, cur_n))
         # evict when the watermark passes the open session's end; +1 ms
         # so an event arriving exactly AT the boundary (which belongs to
         # this session under the strict-> rule) can't race the eviction
-        state.setTimeoutTimestamp((cur_l + gap_us) // 1000 + 1)
+        state.setTimeoutTimestamp((cur_l + SESSION_GAP_US) // 1000 + 1)
         if closed:
-            yield pd.DataFrame(closed)
+            yield pd.DataFrame([row(*c) for c in closed])
 
     from .pipeline import _heartbeat_replay_dir
 
@@ -248,7 +257,7 @@ def sessions_updates(
     replay_dir = events_path if prebuilt_replay else _heartbeat_replay_dir(events_path)
     ev = (
         normalize_events(read_events_stream(spark, replay_dir, max_files_per_trigger))
-        .withWatermark("ts", "10 minutes")
+        .withWatermark("ts", WATERMARK)
         .select("user_id", "ts", F.unix_micros("ts").alias("tus"))
     )
     return ev.groupBy("user_id").applyInPandasWithState(
@@ -263,27 +272,31 @@ def sessions_updates(
 def stream_sessions_ttl(
     spark: SparkSession,
     events_path: str,
-    gap_minutes: int = 30,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int = FILES_PER_TRIGGER,
     prebuilt_replay: bool = False,
 ) -> DataFrame:
     """Run :func:`sessions_updates` availableNow to completion and return
     the closed sessions (user_id, session_start, session_end, n_events) —
     exact parity with the batch ``sessions.user_sessions`` twin."""
     updates = sessions_updates(
-        spark, events_path, gap_minutes, max_files_per_trigger, prebuilt_replay
+        spark,
+        events_path,
+        max_files_per_trigger=max_files_per_trigger,
+        prebuilt_replay=prebuilt_replay,
     )
     from .pipeline import _replay_to_memory
 
-    return (
-        _replay_to_memory(spark, updates, "state_sess", "append")
-        .where(F.col("user_id") >= 0)  # drop heartbeat rows
-        .select(
-            "user_id",
-            F.timestamp_micros("start_us").alias("session_start"),
-            F.timestamp_micros("end_us").alias("session_end"),
-            "n_events",
-        )
+    return _closed_sessions(_replay_to_memory(spark, updates, "state_sess", "append"))
+
+
+def _closed_sessions(out: DataFrame) -> DataFrame:
+    """A session twin's sink rows as (user_id, session_start, session_end,
+    n_events), heartbeat rows dropped."""
+    return out.where(F.col("user_id") >= 0).select(
+        "user_id",
+        F.timestamp_micros("start_us").alias("session_start"),
+        F.timestamp_micros("end_us").alias("session_end"),
+        "n_events",
     )
 
 
@@ -525,10 +538,72 @@ def _tws_session(spark: SparkSession):
                 sys.path.remove(shim)
 
 
+def _unique_users():
+    """The ``transformWithStateInPandas`` processor of both TWS uniques
+    keys: exact all-time distinct users per variant in a ``seen`` MapState
+    (uid → 1-byte placeholder) plus the running count ``n``. Streamed
+    rows add their fresh uids; an ``initialState`` seed, when the query
+    has one, is loaded by ``handleInitialState`` before batch 0. Built on
+    call: the ``stateful_processor`` import needs the protobuf runtime
+    that :func:`_tws_session` provides."""
+    from pyspark.sql.streaming.stateful_processor import (
+        StatefulProcessor,
+        StatefulProcessorHandle,
+    )
+
+    class UniqueUsers(StatefulProcessor):
+        def init(self, handle: StatefulProcessorHandle) -> None:
+            self.seen = handle.getMapState("seen", "uid string", "one byte")
+            self.n = handle.getValueState("n", "n bigint")
+
+        def _count(self) -> int:
+            # get() returns None when absent — one round trip, not the
+            # exists()+get() pair
+            prev = self.n.get()
+            return prev[0] if prev is not None else 0
+
+        def _add(self, fresh: list, count: int) -> int:
+            for u in fresh:
+                self.seen.updateValue((u,), (1,))
+            if fresh:
+                count += len(fresh)
+                self.n.update((count,))
+            return count
+
+        def handleInitialState(self, key, initialState, timerValues) -> None:
+            # ACCUMULATE, never assign: the engine hands the seed to this
+            # hook one Arrow chunk at a time, so a key whose seed exceeds
+            # one batch (~10k rows) sees MULTIPLE invocations — assigning
+            # len(chunk) here left the count at the LAST chunk's size (the
+            # 14960-vs-15000 undercount the sf1 sweep caught; invisible at
+            # sf0.01 where every seed fits one chunk).
+            # No containsKey probe per seed uid: the seed is globally
+            # .distinct(), so a key's chunks are pairwise disjoint, and
+            # state is empty before batch 0 (an uncommitted batch 0
+            # replays from empty state on recovery, with the seed) —
+            # the probe is provably always-False, and each one is a
+            # separate proto round trip to the state server (~|seed|
+            # wasted RTs; halves the seed-path round-trip budget).
+            self._add(sorted(set(initialState["uid"].tolist())), self._count())
+
+        def handleInputRows(self, key, rows, timerValues):
+            count = self._count()
+            batch: set[str] = set()
+            for pdf in rows:
+                batch.update(str(u) for u in pdf["user_id"].tolist())
+            count = self._add(_fresh_uids(batch, count, self.seen), count)
+            yield pd.DataFrame({"variant": [key[0]], "unique_users": [count]})
+
+        def close(self) -> None:
+            pass
+
+    return UniqueUsers()
+
+
 def tws_uniques_updates(
     spark: SparkSession,
     events_path: str,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int = FILES_PER_TRIGGER,
 ) -> DataFrame:
     """The UNSTARTED ``transformWithStateInPandas`` transform behind
     :func:`stream_exact_uniques_per_variant_tws`. MUST be built (and its
@@ -550,49 +625,19 @@ def tws_uniques_updates(
     be materialized in memory (the legacy ``applyInPandasWithState`` op
     rewrites the whole set every batch). Counts are monotone, so the
     final answer is the per-key max over the update-mode sink."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UniqueUsersMap(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.seen = handle.getMapState("seen", "uid string", "one byte")
-            self.n = handle.getValueState("n", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            # get() returns None when absent — one round trip, not the
-            # exists()+get() pair
-            prev = self.n.get()
-            count = prev[0] if prev is not None else 0
-            batch: set[str] = set()
-            for pdf in rows:
-                batch.update(str(u) for u in pdf["user_id"].tolist())
-            fresh = _fresh_uids(batch, count, self.seen)
-            for u in fresh:
-                self.seen.updateValue((u,), (1,))
-            if fresh:
-                count += len(fresh)
-                self.n.update((count,))
-            yield pd.DataFrame({"variant": [key[0]], "unique_users": [count]})
-
-        def close(self) -> None:
-            pass
-
     ev = normalize_events(
         read_events_stream(spark, events_path, max_files_per_trigger)
     )
     return (
         ev.select("variant", "user_id")
         .groupBy("variant")
-        .transformWithStateInPandas(UniqueUsersMap(), OUTPUT_SCHEMA, "Update", "None")
+        .transformWithStateInPandas(_unique_users(), OUTPUT_SCHEMA, "Update", "None")
     )
 
 
 def stream_exact_uniques_per_variant_tws(
     spark: SparkSession,
     events_path: str,
-    max_files_per_trigger: int = 1,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run :func:`tws_uniques_updates` availableNow to completion; final
@@ -600,19 +645,15 @@ def stream_exact_uniques_per_variant_tws(
     from .pipeline import _replay_to_memory
 
     with _tws_session(spark):
-        updates = tws_uniques_updates(spark, events_path, max_files_per_trigger)
+        updates = tws_uniques_updates(spark, events_path)
         out = _replay_to_memory(spark, updates, "tws_uniq", "update", checkpoint_dir)
-    return (
-        out.groupBy("variant")
-        .agg(F.max("unique_users").alias("unique_users"))
-    )
+    return out.groupBy("variant").agg(F.max("unique_users").alias("unique_users"))
 
 
 def stream_uniques_tws_bootstrapped(
     spark: SparkSession,
     events_path: str,
-    max_files_per_trigger: int = 1,
-    history_fraction: float = 0.5,
+    history_fraction: float = HISTORY_FRACTION,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TWS INITIAL-STATE bootstrap — the production migration path for the
@@ -634,11 +675,6 @@ def stream_uniques_tws_bootstrapped(
     pytest additionally pins bootstrapped == replay-from-scratch and
     proves the seed is load-bearing on a planted history-only-user
     fixture."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
     from .pipeline import _replay_to_memory, _split_replay_dir
 
     history_path, live_dir = _split_replay_dir(events_path, history_fraction)
@@ -647,60 +683,13 @@ def stream_uniques_tws_bootstrapped(
         .select("variant", F.col("user_id").cast("string").alias("uid"))
         .distinct()
     )
-
-    class BootstrappedUniques(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.seen = handle.getMapState("seen", "uid string", "one byte")
-            self.n = handle.getValueState("n", "n bigint")
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            # ACCUMULATE, never assign: the engine hands the seed to this
-            # hook one Arrow chunk at a time, so a key whose seed exceeds
-            # one batch (~10k rows) sees MULTIPLE invocations — assigning
-            # len(chunk) here left the count at the LAST chunk's size (the
-            # 14960-vs-15000 undercount the sf1 sweep caught; invisible at
-            # sf0.01 where every seed fits one chunk).
-            prev = self.n.get()
-            count = prev[0] if prev is not None else 0
-            # No containsKey probe per seed uid: the seed is globally
-            # .distinct(), so a key's chunks are pairwise disjoint, and
-            # state is empty before batch 0 (an uncommitted batch 0
-            # replays from empty state on recovery, with the seed) —
-            # the probe is provably always-False, and each one is a
-            # separate proto round trip to the state server (~|seed|
-            # wasted RTs; halves the seed-path round-trip budget).
-            fresh = sorted(set(initialState["uid"].tolist()))
-            for u in fresh:
-                self.seen.updateValue((u,), (1,))
-            if fresh:
-                self.n.update((count + len(fresh),))
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self.n.get()
-            count = prev[0] if prev is not None else 0
-            batch: set[str] = set()
-            for pdf in rows:
-                batch.update(str(u) for u in pdf["user_id"].tolist())
-            fresh = _fresh_uids(batch, count, self.seen)
-            for u in fresh:
-                self.seen.updateValue((u,), (1,))
-            if fresh:
-                count += len(fresh)
-                self.n.update((count,))
-            yield pd.DataFrame({"variant": [key[0]], "unique_users": [count]})
-
-        def close(self) -> None:
-            pass
-
-    ev = normalize_events(
-        read_events_stream(spark, live_dir, max_files_per_trigger)
-    )
+    ev = normalize_events(read_events_stream(spark, live_dir))
     with _tws_session(spark):
         updates = (
             ev.select("variant", "user_id")
             .groupBy("variant")
             .transformWithStateInPandas(
-                BootstrappedUniques(),
+                _unique_users(),
                 OUTPUT_SCHEMA,
                 "Update",
                 "None",
@@ -708,9 +697,7 @@ def stream_uniques_tws_bootstrapped(
             )
         )
         out = _replay_to_memory(spark, updates, "tws_boot", "update", checkpoint_dir)
-    seed_counts = seed.groupBy("variant").agg(
-        F.count("*").alias("unique_users")
-    )
+    seed_counts = seed.groupBy("variant").agg(F.count("*").alias("unique_users"))
     return (
         out.unionByName(seed_counts)
         .groupBy("variant")
@@ -721,8 +708,7 @@ def stream_uniques_tws_bootstrapped(
 def stream_sessions_ttl_tws(
     spark: SparkSession,
     events_path: str,
-    gap_minutes: int = 30,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int = FILES_PER_TRIGGER,
     prebuilt_replay: bool = False,
 ) -> DataFrame:
     """``transformWithStateInPandas`` twin of :func:`stream_sessions_ttl`
@@ -746,16 +732,14 @@ def stream_sessions_ttl_tws(
     groups and the pandas variant pays per-GROUP Arrow/pandas frame
     construction that dwarfs the session arithmetic (r10 interleaved
     A/B: row floor 7.70 s vs pandas 8.96 s at sf0.1, row <= pandas at
-    every rep, byte-identical 95465-row output). The uniques processors
-    above keep the pandas variant — their key is ``variant`` (5 giant
+    every rep, byte-identical 95465-row output). The uniques processor
+    above keeps the pandas variant — its key is ``variant`` (5 giant
     groups), the shape pandas batching is right for."""
     from pyspark.sql import Row
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-
-    gap_us = gap_minutes * 60 * 1_000_000
 
     class Sessions(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -768,7 +752,7 @@ def stream_sessions_ttl_tws(
             return Row(
                 user_id=uid,
                 start_us=s,
-                end_us=l + gap_us,
+                end_us=l + SESSION_GAP_US,
                 n_events=n,
             )
 
@@ -785,25 +769,11 @@ def stream_sessions_ttl_tws(
             # (each call is a separate state-server message).
             st = self.open.get()
             if st is not None:
-                cur_s, cur_l, cur_n = st
-                old_expiry = (cur_l + gap_us) // 1000 + 1
+                old_expiry = (st[1] + SESSION_GAP_US) // 1000 + 1
             else:
-                cur_s, cur_l, cur_n = ts[0], ts[0], 0
+                st = (ts[0], ts[0], 0)
                 old_expiry = None
-            closed = []
-            for t in ts:
-                # strict >: an event at exactly last+gap extends the
-                # session (measured session_window boundary rule, r7)
-                if t - cur_l > gap_us and cur_n > 0:
-                    closed.append(self._row(key[0], cur_s, cur_l, cur_n))
-                    cur_s, cur_l, cur_n = t, t, 1
-                else:
-                    # order-insensitive merge (see the legacy twin): a
-                    # watermark-admitted late event must not move the
-                    # open session's `last` backwards.
-                    cur_s = min(cur_s, t)
-                    cur_l = max(cur_l, t)
-                    cur_n += 1
+            closed, (cur_s, cur_l, cur_n) = _split_sessions(ts, st)
             self.open.update((cur_s, cur_l, cur_n))
             # Each deleteTimer/registerTimer is one proto round trip; when
             # the batch didn't move the open session's end (late/duplicate
@@ -811,13 +781,13 @@ def stream_sessions_ttl_tws(
             # IS the new expiry — re-registering the same millisecond is
             # two wasted round trips. Delete-then-register only when the
             # expiry actually changed.
-            new_expiry = (cur_l + gap_us) // 1000 + 1
+            new_expiry = (cur_l + SESSION_GAP_US) // 1000 + 1
             if old_expiry != new_expiry:
                 if old_expiry is not None:
                     self.handle.deleteTimer(old_expiry)
                 self.handle.registerTimer(new_expiry)
-            for row in closed:
-                yield row
+            for c in closed:
+                yield self._row(key[0], *c)
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             st = self.open.get()
@@ -838,7 +808,7 @@ def stream_sessions_ttl_tws(
         normalize_events(
             read_events_stream(spark, replay_dir, max_files_per_trigger)
         )
-        .withWatermark("ts", "10 minutes")
+        .withWatermark("ts", WATERMARK)
         .select("user_id", "ts", F.unix_micros("ts").alias("tus"))
     )
     with _tws_session(spark):
@@ -846,12 +816,4 @@ def stream_sessions_ttl_tws(
             Sessions(), SESSION_OUT_SCHEMA, "Append", "EventTime"
         )
         out = _replay_to_memory(spark, updates, "tws_sess", "append")
-    return (
-        out.where(F.col("user_id") >= 0)  # drop heartbeat rows
-        .select(
-            "user_id",
-            F.timestamp_micros("start_us").alias("session_start"),
-            F.timestamp_micros("end_us").alias("session_end"),
-            "n_events",
-        )
-    )
+    return _closed_sessions(out)

@@ -4,11 +4,12 @@ availableNow replay of the W1 windowed count and print the per-batch
 durationMs breakdown from the StreamingQuery progress events, plus the
 wall-clock split around the query (start-up, run, detach).
 
-    python scripts/profile_replay.py [events_path]
+    python scripts/profile_replay.py <events_path>
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -29,16 +30,17 @@ from redis_dataflow_realtime_analytics_spark.streaming.pipeline import (
     _state_partitions,
 )
 
-EVENTS = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1/events.parquet"
-
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Per-batch cost of one W1 availableNow replay.")
+    ap.add_argument("events", help="events parquet to replay, e.g. an sf0.1 fixture's")
+    events = ap.parse_args().events
     spark = get_spark(app_name="profile-replay")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     for rep in range(3):
         t0 = time.perf_counter()
-        ev = normalize_events(read_events_stream(spark, EVENTS, 1))
+        ev = normalize_events(read_events_stream(spark, events, 1))
         agg = (
             ev.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 minute").alias("w"))

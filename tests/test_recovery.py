@@ -42,6 +42,7 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from redis_dataflow_realtime_analytics_spark.operators import sessions as sess_ops
+from redis_dataflow_realtime_analytics_spark.operators.metrics import minute
 from redis_dataflow_realtime_analytics_spark.sources.events import (
     normalize_events,
     read_events,
@@ -167,7 +168,7 @@ def test_sketch_store_crash_after_write_is_exactly_once(spark, tmp_path):
     ev_b = normalize_events(read_events(spark, SF))
     want = {
         r["minute"]: r["n"]
-        for r in ev_b.groupBy(sp._minute()).agg(F.count("*").alias("n")).collect()
+        for r in ev_b.groupBy(minute()).agg(F.count("*").alias("n")).collect()
     }
     # replayed batch 1 OVERWROTE its own partition: exact, not doubled
     assert got == want
