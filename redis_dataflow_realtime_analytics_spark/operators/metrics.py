@@ -329,12 +329,22 @@ def hierarchical_time_rollup(events: DataFrame) -> DataFrame:
     Output: (grain ∈ {minute, hour, day}, bucket timestamp, visits,
     value_sum) — one frame, all three levels from ONE raw scan.
     """
-    m = events.groupBy(
-        F.date_trunc("minute", F.col("ts")).alias("bucket")
-    ).agg(
+    return _rollup(_minute_partials(events))
+
+
+def _minute_partials(events: DataFrame) -> DataFrame:
+    """The hierarchy's minute level: (bucket, visits, vsum) with the value
+    sum kept DECIMAL(38,12)."""
+    return events.groupBy(F.date_trunc("minute", F.col("ts")).alias("bucket")).agg(
         F.count("*").alias("visits"),
         F.sum(F.col("value").cast("decimal(38,12)")).alias("vsum"),
     )
+
+
+def _rollup(m: DataFrame) -> DataFrame:
+    """Roll merged minute partials (bucket, visits, vsum) up to hours and
+    days, each level from the level below, and shape all three grains
+    into one (grain, bucket, visits, value_sum) frame."""
     h = m.groupBy(F.date_trunc("hour", F.col("bucket")).alias("bucket")).agg(
         F.sum("visits").alias("visits"), F.sum("vsum").alias("vsum")
     )

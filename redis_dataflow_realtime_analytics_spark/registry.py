@@ -1264,20 +1264,21 @@ FROM b GROUP BY doc_id, f, n_frames""",
 # Structured Streaming (SURVEY §2.5 streaming / Phase 2) — availableNow
 # replays through the real streaming engine; oracles prove stream/batch parity
 # ---------------------------------------------------------------------------
-def _sketch_store_read(spark: SparkSession, sf_dir: str, read) -> DataFrame:
-    """``read(spark, store)`` over a sketch store the events fixture is
-    ingested into, both in one per-call scratch dir."""
+def _sketch_store_read(spark: SparkSession, sf_dir: str, panel: str) -> DataFrame:
+    """``panel``'s merge plan over a sketch store the events fixture is
+    ingested into, both in one per-call scratch dir. The key runs its one
+    panel, not the five-panel snapshot the ``read_*`` functions serve."""
 
     def run(d: str) -> DataFrame:
         store = f"{d}/store"
         pipeline.run_sketch_ingest(spark, f"{sf_dir}/events.parquet", store, f"{d}/checkpoint")
-        return read(spark, store)
+        return pipeline.merge_plan(spark, store, panel)
 
     return pinned(run)
 
 
 def _stream_store_variant_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sketch_store_read(spark, sf_dir, pipeline.read_uniques_per_variant_exact)
+    return _sketch_store_read(spark, sf_dir, "uniques_per_variant_exact")
 
 
 q(
@@ -1428,7 +1429,7 @@ SELECT variant, count(DISTINCT user_id) AS unique_users FROM ev GROUP BY 1""",
 
 
 def _stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sketch_store_read(spark, sf_dir, pipeline.read_heavy_hitters)
+    return _sketch_store_read(spark, sf_dir, "heavy_hitters")
 
 
 # All-time heavy hitters from the streaming count-min family: per-batch

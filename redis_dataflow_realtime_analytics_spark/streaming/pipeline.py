@@ -14,8 +14,9 @@ Spark shape: one ``readStream`` → ``withWatermark`` → either
   stream/batch-parity queries the driver gates; or
 * **foreachBatch partial-aggregate store** (``SketchStoreWriter``) — each
   micro-batch appends *mergeable partials* (counts, DataSketches HLL
-  sketches) under one ``batch_id=<n>`` directory per family; readers
-  merge partials at query time (``read_*``). This is the scale design for
+  sketches) under one ``batch_id=<n>`` directory per family, then commits
+  the batch in one store manifest; readers merge the committed partials
+  at query time (``read_*``). This is the scale design for
   unbounded all-time distincts (SURVEY §4 delta 2): state per
   (grain × batch) is one row with a ≤KB sketch — bounded, idempotently
   re-writable (a replayed batch_id overwrites its own leaf → effective
@@ -28,6 +29,16 @@ Scale notes (100 TB/day ingest):
   versus the reference's 12 Redis commands *per event*.
 * Read-time merge (`hll_union_agg` / sum) touches only store rows: a day
   of 1-minute buckets × batches is tiny regardless of event volume.
+* Reads serve a consistent prefix of committed batches. The manifest
+  ``store/_committed`` names the newest committed batch id; every
+  ``read_*`` is served from one snapshot per manifest version, whose five
+  merge plans run as concurrent Spark jobs on the first read of that
+  version, each over its family's leaves with ``batch_id`` ≤ the id, read
+  with a fixed schema (:data:`STORE_SCHEMAS`, so no inference job). A
+  dashboard refresh costs its slowest panel, and its later reads run no
+  job. The manifest is committed by a local ``os.replace``, atomic on a
+  POSIX file system; on an object store that rename is not atomic, and
+  the commit needs a table format's (Delta/Iceberg) log instead.
 * The five store families are independent write legs, as the reference's
   twelve are parallel Beam branches: they run as concurrent Spark jobs,
   so a micro-batch's sink call costs its slowest family, not the sum of
@@ -48,18 +59,22 @@ Scale notes (100 TB/day ingest):
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.util import inheritable_thread_target
 
 from ..operators.metrics import (
     CMS_WIDTH,
     HH_PHI,
     _cms_heavy_hitters,
+    _minute_partials,
+    _rollup,
     approx_uniques,
     cms_sketch,
     minute,
@@ -357,6 +372,29 @@ def stream_enriched_events(
 # ---------------------------------------------------------------------------
 # foreachBatch mergeable-partials store
 # ---------------------------------------------------------------------------
+#: Each store family's leaf schema with its ``batch_id`` partition column:
+#: what Spark infers from the leaves, nullability included. Readers pass
+#: it, so planning a store read runs no schema-inference job.
+STORE_SCHEMAS = {
+    "visits": "minute timestamp, visits bigint, batch_id int",
+    "user_sketch_minute": "minute timestamp, sketch binary, batch_id int",
+    "user_sketch_variant": "variant string, sketch binary, batch_id int",
+    "user_set_variant": "variant string, user_id bigint, batch_id int",
+    "user_cms": "row_idx int, bucket bigint, cnt bigint, batch_id int",
+}
+#: the store manifest, ``store/_committed``: ``<batch id> <token>``
+COMMITTED = "_committed"
+
+
+def _manifest(store_dir: str) -> str | None:
+    """The store manifest's content; ``None`` before the first commit."""
+    try:
+        with open(os.path.join(store_dir, COMMITTED)) as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
+
+
 class SketchStoreWriter:
     """foreachBatch sink writing mergeable partial aggregates.
 
@@ -376,6 +414,14 @@ class SketchStoreWriter:
     family; each thread inherits the caller's job group (a streaming
     query's run id), so ``query.stop()`` cancels in-flight writes. A
     failed write raises only after every other write has returned.
+
+    After all five writes succeed the call commits the batch: it
+    atomically replaces the manifest :data:`COMMITTED` with
+    ``max(previous id, batch_id)`` and a fresh random token. Readers
+    serve the leaves with ``batch_id`` ≤ that id, so a batch is visible
+    in every family or in none; the id never goes back, so replaying an
+    old batch hides no later one, and the token makes every successful
+    call, replays included, a new store version.
 
     Only :data:`STORE_COLUMNS` are cached. The batch's plan is fixed
     before the sink sees it, so that projection cannot reach the scan:
@@ -415,6 +461,15 @@ class SketchStoreWriter:
                 w.result()
         finally:
             ev.unpersist()
+        committed = batch_id
+        manifest = _manifest(self.store_dir)
+        if manifest is not None:
+            committed = max(committed, int(manifest.split()[0]))
+        path = os.path.join(self.store_dir, COMMITTED)
+        tmp = f"{path}.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(f"{committed} {uuid.uuid4().hex}\n")
+        os.replace(tmp, path)
 
 
 def run_sketch_ingest(
@@ -441,41 +496,124 @@ def run_sketch_ingest(
 
 
 # --- Read-side merges over the partials store --------------------------------
-def read_visits(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Merge visit partials: sum over batches (R2's MGET read, minus Redis)."""
-    return (
-        spark.read.parquet(f"{store_dir}/visits")
-        .groupBy("minute")
-        .agg(F.sum("visits").alias("visits"))
+def _hll_estimate():
+    return F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("unique_users")
+
+
+def _merge_heavy_hitters(family) -> DataFrame:
+    cells = family("user_cms").groupBy("row_idx", "bucket").agg(F.sum("cnt").alias("cnt"))
+    return _cms_heavy_hitters(
+        family("user_set_variant").select("user_id").distinct(),
+        cells,
+        cells.where(F.col("row_idx") == 0).agg(F.sum("cnt").alias("_total")),
+        CMS_WIDTH,
+        HH_PHI,
     )
+
+
+#: each dashboard panel's merge plan over ``family(name)``, the committed
+#: leaves of one family; the ``read_*`` docstrings say what each serves
+_MERGES = {
+    "visits": lambda family: (
+        family("visits").groupBy("minute").agg(F.sum("visits").alias("visits"))
+    ),
+    "uniques_per_minute": lambda family: (
+        family("user_sketch_minute").groupBy("minute").agg(_hll_estimate())
+    ),
+    "uniques_per_variant": lambda family: (
+        family("user_sketch_variant").groupBy("variant").agg(_hll_estimate())
+    ),
+    "uniques_per_variant_exact": lambda family: (
+        family("user_set_variant")
+        .groupBy("variant")
+        .agg(F.count_distinct("user_id").alias("unique_users"))
+    ),
+    "heavy_hitters": _merge_heavy_hitters,
+}
+
+
+def _leaves(spark: SparkSession, store_dir: str, manifest: str | None):
+    """``family(name)``: the family's leaves with ``batch_id`` ≤ the
+    manifest's id, read with its fixed schema; an empty frame of that
+    schema when no batch is committed."""
+
+    def family(name: str) -> DataFrame:
+        if manifest is None:
+            return spark.createDataFrame([], STORE_SCHEMAS[name])
+        return (
+            spark.read.schema(STORE_SCHEMAS[name])
+            .parquet(f"{store_dir}/{name}")
+            .where(F.col("batch_id") <= int(manifest.split()[0]))
+        )
+
+    return family
+
+
+def merge_plan(spark: SparkSession, store_dir: str, panel: str) -> DataFrame:
+    """The unexecuted merge plan that ``read_<panel>`` serves, over the
+    store's committed leaves: for a caller that runs one panel, not the
+    whole snapshot."""
+    return _MERGES[panel](_leaves(spark, store_dir, _manifest(store_dir)))
+
+
+_snapshot_lock = threading.Lock()
+#: the last store read: ``(store_dir, manifest)`` and, per panel, its
+#: merged rows as an Arrow table with their Spark schema
+_snapshot: tuple = (None, {})
+
+
+def _merge_all(spark: SparkSession, store_dir: str, manifest: str | None) -> dict:
+    """Every panel's (Arrow rows, schema) at one store version. The five
+    merge plans run as concurrent Spark jobs in the caller's job group;
+    with no committed batch nothing runs and every table is empty."""
+    family = _leaves(spark, store_dir, manifest)
+
+    @inheritable_thread_target(spark)
+    def merge(panel: str) -> tuple:
+        df = _MERGES[panel](family)
+        if manifest is None:
+            return to_arrow_schema(df.schema).empty_table(), df.schema
+        return df.toArrow(), df.schema
+
+    with ThreadPoolExecutor(len(_MERGES)) as pool:
+        return dict(zip(_MERGES, pool.map(merge, _MERGES)))
+
+
+def _serve(spark: SparkSession, store_dir: str, panel: str) -> DataFrame:
+    """``panel`` from the snapshot of the store's current manifest, merged
+    on a miss (once, under the lock, for all callers). The result is a
+    local relation: collecting it launches no Spark job."""
+    global _snapshot
+    key = (store_dir, _manifest(store_dir))
+    with _snapshot_lock:
+        if _snapshot[0] != key:
+            _snapshot = (key, _merge_all(spark, store_dir, key[1]))
+        table, schema = _snapshot[1][panel]
+    return spark.createDataFrame(table, schema)
+
+
+def read_visits(spark: SparkSession, store_dir: str) -> DataFrame:
+    """Merge visit partials: sum over committed batches (R2's MGET read,
+    minus Redis). Served from the store snapshot, as every ``read_*``
+    is: the first read at a new manifest version merges all five panels
+    concurrently, and later reads at that version run no Spark job."""
+    return _serve(spark, store_dir, "visits")
 
 
 def read_uniques_per_minute(spark: SparkSession, store_dir: str) -> DataFrame:
     """Merge per-minute HLL partials: union sketches, estimate (R3 PFCOUNT)."""
-    return (
-        spark.read.parquet(f"{store_dir}/user_sketch_minute")
-        .groupBy("minute")
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("unique_users"))
-    )
+    return _serve(spark, store_dir, "uniques_per_minute")
 
 
 def read_uniques_per_variant(spark: SparkSession, store_dir: str) -> DataFrame:
     """All-time uniques per variant from bounded sketch state (W3 read)."""
-    return (
-        spark.read.parquet(f"{store_dir}/user_sketch_variant")
-        .groupBy("variant")
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("unique_users"))
-    )
+    return _serve(spark, store_dir, "uniques_per_variant")
 
 
 def read_uniques_per_variant_exact(spark: SparkSession, store_dir: str) -> DataFrame:
     """Exact all-time uniques per variant from the distinct-pairs family
     (W4's SADD/SCARD twin)."""
-    return (
-        spark.read.parquet(f"{store_dir}/user_set_variant")
-        .groupBy("variant")
-        .agg(F.count_distinct("user_id").alias("unique_users"))
-    )
+    return _serve(spark, store_dir, "uniques_per_variant_exact")
 
 
 def read_heavy_hitters(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -493,18 +631,7 @@ def read_heavy_hitters(spark: SparkSession, store_dir: str) -> DataFrame:
     cells equal the batch :func:`~..operators.metrics.cms_sketch` exactly
     (asserted in tests), so estimates inherit the batch twin's bounds.
     """
-    cells = (
-        spark.read.parquet(f"{store_dir}/user_cms")
-        .groupBy("row_idx", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return _cms_heavy_hitters(
-        spark.read.parquet(f"{store_dir}/user_set_variant").select("user_id").distinct(),
-        cells,
-        cells.where(F.col("row_idx") == 0).agg(F.sum("cnt").alias("_total")),
-        CMS_WIDTH,
-        HH_PHI,
-    )
+    return _serve(spark, store_dir, "heavy_hitters")
 
 
 def _ts_micros(tbl):
@@ -1254,37 +1381,13 @@ def stream_hierarchical_rollup(spark: SparkSession, events_path: str) -> DataFra
     )
 
     def ingest(store: str, batch: DataFrame, _batch_id: int) -> None:
-        (
-            batch.groupBy(F.date_trunc("minute", F.col("ts")).alias("bucket"))
-            .agg(
-                F.count("*").alias("visits"),
-                F.sum(F.col("value").cast("decimal(38,12)")).alias("vsum"),
-            )
-            .write.mode("append")
-            .parquet(store)
-        )
+        _minute_partials(batch).write.mode("append").parquet(store)
 
-    m = (
+    return _rollup(
         foreach_batch(stream, ingest, spark.read.parquet)
         .groupBy("bucket")
         .agg(F.sum("visits").alias("visits"), F.sum("vsum").alias("vsum"))
     )
-    h = m.groupBy(F.date_trunc("hour", F.col("bucket")).alias("bucket")).agg(
-        F.sum("visits").alias("visits"), F.sum("vsum").alias("vsum")
-    )
-    d = h.groupBy(F.date_trunc("day", F.col("bucket")).alias("bucket")).agg(
-        F.sum("visits").alias("visits"), F.sum("vsum").alias("vsum")
-    )
-
-    def shape(df: DataFrame, grain: str) -> DataFrame:
-        return df.select(
-            F.lit(grain).alias("grain"),
-            "bucket",
-            F.col("visits").cast("bigint").alias("visits"),
-            F.col("vsum").cast("double").alias("value_sum"),
-        )
-
-    return shape(m, "minute").unionAll(shape(h, "hour")).unionAll(shape(d, "day"))
 
 
 def stream_image_ingest_features(spark: SparkSession, docs_path: str) -> DataFrame:

@@ -90,8 +90,9 @@ def materialized(name: str, src: str, params: tuple, build) -> str:
     the ns mtime makes an in-place rewrite of ``src`` a new version.
     Published dirs are kept while their source exists, so later calls,
     bench reps and later processes reuse one build per source version
-    and shape. Each records its source as the symlink ``<out>.src``;
-    every build first removes the artifacts whose ``.src`` dangles."""
+    and shape. Each records its source as the symlink ``<out>.src``,
+    written before ``<out>`` is published; every build first removes the
+    artifacts whose ``.src`` dangles or is missing."""
     src = os.path.abspath(src)
     key = (name, src, os.stat(src).st_mtime_ns, params)
     if key not in _ARTIFACTS:
@@ -106,32 +107,39 @@ def materialized(name: str, src: str, params: tuple, build) -> str:
             except BaseException:
                 shutil.rmtree(built, ignore_errors=True)
                 raise
+            with suppress(FileExistsError):
+                os.symlink(src, f"{out}.src")
             try:
                 os.symlink(built, out)
             except FileExistsError:  # a concurrent build published first
                 shutil.rmtree(built)
-            with suppress(FileExistsError):
-                os.symlink(src, f"{out}.src")
         _ARTIFACTS[key] = out
     return _ARTIFACTS[key]
 
 
 def _remove_orphans() -> None:
     """Remove every published artifact whose source is gone — its
-    ``.src`` link dangles: the published link first, so no caller
-    resolves a half-removed dir, then its build dirs (``<out>.<rand>``),
-    and the ``.src`` link last, so an interrupted removal is retried."""
-    for link in glob.glob(os.path.join(ARTIFACTS, "*.src")):
-        if os.path.exists(link):
+    ``.src`` link dangles — or was never recorded: a published link with
+    no ``.src`` (every build writes ``.src`` before it publishes). The
+    published link goes first, so no caller resolves a half-removed dir,
+    then its build dirs (``<out>.<rand>``), and the ``.src`` link last,
+    so an interrupted removal is retried."""
+    for entry in glob.glob(os.path.join(ARTIFACTS, "*")):
+        if entry.endswith(".src"):
+            if os.path.exists(entry):
+                continue
+            out = entry[: -len(".src")]
+        elif os.path.islink(entry) and not os.path.lexists(f"{entry}.src"):
+            out = entry
+        else:
             continue
-        out = link[: -len(".src")]
         with suppress(FileNotFoundError):  # a concurrent build removed it
             os.remove(out)
         for built in glob.glob(f"{glob.escape(out)}.*"):
-            if built != link:
+            if not built.endswith(".src"):
                 shutil.rmtree(built, ignore_errors=True)
         with suppress(FileNotFoundError):
-            os.remove(link)
+            os.remove(f"{out}.src")
 
 
 def persisted(

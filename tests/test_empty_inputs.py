@@ -7,6 +7,7 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -268,3 +269,46 @@ def test_docs_stream_keys_empty(spark, tmp_path):
         rows = out.collect()
         assert len(rows) == n, name
         assert all(r.metric is None for r in rows), name
+
+
+#: each sketch-store panel's schema: (column, type, nullable)
+STORE_PANELS = {
+    "read_visits": [("minute", "timestamp", True), ("visits", "bigint", True)],
+    "read_uniques_per_minute": [("minute", "timestamp", True), ("unique_users", "bigint", False)],
+    "read_uniques_per_variant": [("variant", "string", True), ("unique_users", "bigint", False)],
+    "read_uniques_per_variant_exact": [
+        ("variant", "string", True),
+        ("unique_users", "bigint", False),
+    ],
+    "read_heavy_hitters": [("user_id", "bigint", True), ("est_count", "bigint", True)],
+}
+
+
+def test_sketch_store_reads_without_a_committed_batch(spark, tmp_path):
+    """A fresh store dir, and a store holding only a failed batch, have no
+    committed batch: every read returns zero rows with its panel's schema
+    and launches no Spark job."""
+    import uuid
+
+    from py4j.protocol import Py4JJavaError
+
+    from redis_dataflow_realtime_analytics_spark.streaming import pipeline as sp
+
+    failed = tmp_path / "failed"
+    failed.mkdir()
+    (failed / "user_cms").write_text("not a directory")
+    with pytest.raises(Py4JJavaError, match="user_cms"):
+        sp.SketchStoreWriter(str(failed))(normalize_events(read_events(spark, SF_SMOKE)), 0)
+    assert (failed / "visits" / "batch_id=0").exists()
+    sc, group = spark.sparkContext, f"empty-store-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        for store in (tmp_path / "fresh", failed):
+            for name, schema in STORE_PANELS.items():
+                df = getattr(sp, name)(spark, str(store))
+                assert df.collect() == [], (store, name)
+                got = [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema]
+                assert got == schema, (store, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

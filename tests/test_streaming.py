@@ -9,9 +9,12 @@ incremental state, not a single-batch degenerate run.
 from __future__ import annotations
 
 import pathlib
+import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from redis_dataflow_realtime_analytics_spark.operators import metrics
 from redis_dataflow_realtime_analytics_spark.sources import (
@@ -71,10 +74,30 @@ def test_late_data_lands_in_event_time_bucket(spark, shuffled_events):
     assert got == _batch_visits(spark)
 
 
-def test_sketch_store_merges_across_batches(spark, multi_file_events, tmp_path_factory):
+@pytest.fixture(scope="module")
+def store_4(spark, multi_file_events, tmp_path_factory):
+    """The events replayed through the sketch store as 4 batches."""
     store = str(tmp_path_factory.mktemp("store"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt"))
-    sp.run_sketch_ingest(spark, multi_file_events, store, ckpt)
+    sp.run_sketch_ingest(spark, multi_file_events, store, str(tmp_path_factory.mktemp("ckpt")))
+    return store
+
+
+#: each dashboard panel's reader
+READS = {
+    "visits": sp.read_visits,
+    "uniques_per_minute": sp.read_uniques_per_minute,
+    "uniques_per_variant": sp.read_uniques_per_variant,
+    "uniques_per_variant_exact": sp.read_uniques_per_variant_exact,
+    "heavy_hitters": sp.read_heavy_hitters,
+}
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_sketch_store_merges_across_batches(spark, store_4):
+    store = store_4
 
     # multiple batches actually happened
     n_batches = (
@@ -272,6 +295,73 @@ def test_sketch_store_failed_family_raises_after_the_rest(
     )
     with pytest.raises(StreamingQueryException):
         q.awaitTermination()
+
+
+def test_store_schemas_are_the_inferred_leaf_schemas(spark, store_4):
+    """Readers pass ``STORE_SCHEMAS`` instead of inferring: each must be
+    exactly what Spark infers from the leaves, nullability included."""
+    assert set(sp.STORE_SCHEMAS) == {
+        p.name for p in pathlib.Path(store_4).iterdir() if p.is_dir()
+    }
+    for family, ddl in sp.STORE_SCHEMAS.items():
+        inferred = spark.read.parquet(f"{store_4}/{family}").schema
+        assert inferred == StructType.fromDDL(ddl), family
+
+
+def test_each_read_serves_its_merge_plan(spark, store_4):
+    for panel, read in READS.items():
+        want = sp.merge_plan(spark, store_4, panel)
+        got = read(spark, store_4)
+        assert got.schema == want.schema, panel
+        assert _rows(got) == _rows(want), panel
+
+
+def test_reads_at_one_store_version_merge_once(spark, store_4, tmp_path):
+    """The first read of a store version runs the merges in the caller's
+    job group; every later read at that version runs no Spark job."""
+    store = str(shutil.copytree(store_4, tmp_path / "store"))  # no snapshot yet
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    try:
+        for group in (f"first-{tag}", f"again-{tag}"):
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            for read in READS.values():
+                read(spark, store).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    assert st.getJobIdsForGroup(f"first-{tag}")
+    assert st.getJobIdsForGroup(f"again-{tag}") == []
+
+
+def test_read_after_a_new_batch_sees_it(spark, store_4, tmp_path):
+    store = str(shutil.copytree(store_4, tmp_path / "store"))
+    before = {r.minute: r.visits for r in sp.read_visits(spark, store).collect()}
+    sp.SketchStoreWriter(store)(normalize_events(read_events(spark, SF_SMOKE)), 4)
+    after = {r.minute: r.visits for r in sp.read_visits(spark, store).collect()}
+    assert after == {m: 2 * v for m, v in before.items()}
+
+
+def test_sketch_store_failed_batch_is_invisible_to_reads(spark, store_4, tmp_path):
+    """A batch whose ``user_cms`` write fails leaves leaves in the other
+    four families but is never committed: every read returns the rows it
+    returned before the failed call."""
+    from py4j.protocol import Py4JJavaError
+
+    store = tmp_path / "store"
+    shutil.copytree(store_4, store)
+    before = {panel: _rows(read(spark, str(store))) for panel, read in READS.items()}
+    cms, aside = store / "user_cms", tmp_path / "user_cms"
+    cms.rename(aside)
+    cms.write_text("not a directory")
+    with pytest.raises(Py4JJavaError, match="user_cms"):
+        sp.SketchStoreWriter(str(store))(normalize_events(read_events(spark, SF_SMOKE)), 4)
+    cms.unlink()
+    aside.rename(cms)
+    assert (store / "visits" / "batch_id=4" / "_SUCCESS").exists()
+    # a copy has no snapshot yet: its reads merge the leaves on disk
+    fresh = str(shutil.copytree(store, tmp_path / "fresh"))
+    for panel, read in READS.items():
+        assert _rows(read(spark, fresh)) == before[panel], panel
 
 
 def test_stream_static_enrichment_matches_batch(spark, multi_file_events):

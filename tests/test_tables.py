@@ -109,3 +109,23 @@ def test_artifacts_of_a_deleted_source_are_removed_by_the_next_build(store, tmp_
     assert not os.path.lexists(first) and not os.path.lexists(f"{first}.src")
     assert not os.path.exists(built)
     assert pathlib.Path(kept, "data.txt").read_text() == "build 1"
+
+
+def test_published_links_without_src_are_collected(store, monkeypatch):
+    """A build records ``<out>.src`` before it publishes ``<out>``, so a
+    published link without ``.src`` has no recorded source (it predates
+    the rule): the next build removes it with its build dir."""
+    root = pathlib.Path(tables.ARTIFACTS)
+    root.mkdir()
+    built = root / "legacy_0123456789abcdef.a1b2c3"
+    built.mkdir()
+    (root / "legacy_0123456789abcdef").symlink_to(built)
+    links, symlink = [], os.symlink
+    monkeypatch.setattr(
+        os, "symlink", lambda src, dst: (links.append(dst), symlink(src, dst))[1]
+    )
+    out = tables.materialized("thing", str(store), (), _counting_build([]))
+    assert links == [f"{out}.src", out]
+    assert not os.path.lexists(root / "legacy_0123456789abcdef")
+    assert not built.exists()
+    assert pathlib.Path(out, "data.txt").read_text() == "build 1"
